@@ -1,14 +1,22 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (optimization rounds): for each named query, dump
   * `.explain("formatted")` of the returned frame plus an execution
   * profile — job count, stage count, shuffle read/write bytes, task
-  * count — to `plans/<tag>/<query>_<suffix>.txt`. Iterative operators
-  * return eagerly-materialized frames (their final explain is just an
-  * RDD scan), so the listener profile is the load-bearing evidence for
-  * them: fewer jobs/stages/shuffled bytes for identical results.
+  * count — to `plans/<tag>/<query>_<suffix>.txt`. The profile covers
+  * the operator call AND one `count()` of the returned frame. Most
+  * iterative operators return an eagerly checkpointed frame, whose
+  * explain is just an RDD scan; some (g_katz, g_pagerank) return a lazy
+  * frame, whose explain shows the whole pipeline and whose every action
+  * re-runs it. Either way the listener profile is the load-bearing
+  * evidence: fewer jobs/stages/shuffled bytes for identical results.
+  * Counts are exact: each query's profile is read only after
+  * `JobProfile.drain`.
   *
   * Usage: sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>"
   * Not a declared query; not part of the driver surface.
@@ -27,29 +35,8 @@ object PlanDump {
     graft.operators.Similarity.warmShared(spark, sfDir)
     graft.operators.Dedup.warmShared(spark, sfDir)
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0L
-    @volatile var shufWrite = 0L
-    @volatile var shufRead = 0L
-    val stageLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Double, Int, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs += 1
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        tasks += sc.stageInfo.numTasks
-        shufWrite += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shufRead += sc.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead
-        val dur = (for {
-          c <- sc.stageInfo.completionTime; s <- sc.stageInfo.submissionTime
-        } yield (c - s) / 1e3).getOrElse(-1.0)
-        stageLog.add((dur, sc.stageInfo.numTasks,
-          sc.stageInfo.name.takeWhile(_ != '\n').take(120)))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val prof = new JobProfile
+    spark.sparkContext.addSparkListener(prof)
     for (name <- names) {
       // "conf:k=v" pseudo-entry: set a runtime session conf between
       // queries — lets one JVM interleave conf A/B/A/B for paired
@@ -60,35 +47,137 @@ object PlanDump {
         println(s"[plandump] conf $k=$v")
       } else {
       val fn = SparkEntry.queries(name)
-      jobs = 0; stages = 0; tasks = 0; shufWrite = 0; shufRead = 0
-      stageLog.clear()
+      // settle the previous query's events before zeroing
+      prof.drain(spark)
+      prof.reset()
       spark.sparkContext.setJobDescription(s"plandump: $name")
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val nRows = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are posted async; give the bus a moment to drain
-      Thread.sleep(400)
+      val settled = prof.drain(spark)
+      val p = prof.snapshot
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      import scala.jdk.CollectionConverters._
-      val slow = stageLog.asScala.toSeq.sortBy(-_._1).take(15)
+      val slow = p.stageLog.sortBy(-_._1).take(15)
         .map { case (d, t, nm) => f"  $d%7.3fs tasks=$t%-4d $nm" }
         .mkString("\n")
+      val drainNote = if (settled) "" else " (drain timed out)"
       val profile =
         f"""== Execution profile ($name, $sfDir, local[$cpus]) ==
            |wall_s=$wall%.3f rows=$nRows
-           |jobs=$jobs stages=$stages tasks=$tasks
-           |shuffle_write_bytes=$shufWrite shuffle_read_bytes=$shufRead
+           |jobs=${p.jobs} stages=${p.stages} tasks=${p.tasks}$drainNote
+           |shuffle_write_bytes=${p.shufWrite} shuffle_read_bytes=${p.shufRead}
            |slowest stages:
            |$slow
            |""".stripMargin
       java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
         (profile + "\n" + plan).getBytes("UTF-8"))
-      println(s"[plandump] $name: wall=${f"$wall%.2f"}s jobs=$jobs " +
-        s"stages=$stages shufMB=${(shufRead + shufWrite) / 1024 / 1024}")
+      println(s"[plandump] $name: wall=${f"$wall%.2f"}s jobs=${p.jobs} " +
+        s"stages=${p.stages} shufMB=${(p.shufRead + p.shufWrite) / 1024 / 1024}")
       }
     }
     spark.stop()
   }
+}
+
+/** Listener profile of the jobs a caller runs: jobs, stages, tasks,
+  * shuffle bytes and per-stage durations, with an EXACT drain instead
+  * of a sleep. `drain` runs one tagged fence job and waits until the
+  * listener has seen the fence end (the bus delivers in order, so every
+  * earlier event has been handled), every job that started has ended,
+  * and every submitted stage has completed. Fence jobs and their stages
+  * are not counted. A 30 s guard returns false instead of hanging.
+  *
+  * Use: `addSparkListener(p)`, `p.drain(spark); p.reset()`, run the
+  * work, `p.drain(spark)`, then read `p.snapshot`. */
+private[graft] final class JobProfile extends SparkListener {
+  import JobProfile.Snapshot
+
+  private val lock = new Object
+  private var jobStarts = 0
+  private var jobEnds = 0
+  private var stagesSubmitted = 0
+  private var stagesCompleted = 0
+  private var fenceEnded = ""
+  private var fenceJobs = Map.empty[Int, String]
+  private var fenceStages = Set.empty[Int]
+  private var fenceSeq = 0
+  private var cur = Snapshot(0, 0, 0L, 0L, 0L, Vector.empty)
+
+  /** Zero the counters (call after a drain, so nothing earlier lands). */
+  def reset(): Unit = lock.synchronized {
+    cur = Snapshot(0, 0, 0L, 0L, 0L, Vector.empty)
+  }
+
+  def snapshot: Snapshot = lock.synchronized(cur)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
+    jobStarts += 1
+    Option(e.properties).flatMap(p => Option(p.getProperty(JobProfile.FenceKey))) match {
+      case Some(token) =>
+        fenceJobs += e.jobId -> token
+        fenceStages ++= e.stageIds
+      case None => cur = cur.copy(jobs = cur.jobs + 1)
+    }
+    lock.notifyAll()
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = lock.synchronized {
+    jobEnds += 1
+    fenceJobs.get(e.jobId).foreach(t => fenceEnded = t)
+    lock.notifyAll()
+  }
+
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    lock.synchronized { stagesSubmitted += 1; lock.notifyAll() }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    lock.synchronized {
+      stagesCompleted += 1
+      val si = e.stageInfo
+      if (!fenceStages(si.stageId)) {
+        val tm = si.taskMetrics
+        val dur = (for {
+          c <- si.completionTime; s <- si.submissionTime
+        } yield (c - s) / 1e3).getOrElse(-1.0)
+        cur = cur.copy(
+          stages = cur.stages + 1,
+          tasks = cur.tasks + si.numTasks,
+          shufWrite = cur.shufWrite +
+            (if (tm == null) 0L else tm.shuffleWriteMetrics.bytesWritten),
+          shufRead = cur.shufRead +
+            (if (tm == null) 0L else tm.shuffleReadMetrics.totalBytesRead),
+          stageLog = cur.stageLog :+
+            ((dur, si.numTasks, si.name.takeWhile(_ != '\n').take(120))))
+      }
+      lock.notifyAll()
+    }
+
+  /** Block until every event posted before this call has been handled;
+    * false when the 30 s guard expired first. */
+  def drain(spark: SparkSession): Boolean = {
+    val sc = spark.sparkContext
+    val token = lock.synchronized { fenceSeq += 1; s"fence$fenceSeq" }
+    sc.setLocalProperty(JobProfile.FenceKey, token)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(JobProfile.FenceKey, null)
+    val deadline = System.currentTimeMillis() + 30000L
+    lock.synchronized {
+      def settled = fenceEnded == token && jobStarts == jobEnds &&
+        stagesSubmitted == stagesCompleted
+      while (!settled && System.currentTimeMillis() < deadline)
+        lock.wait(math.max(1L, deadline - System.currentTimeMillis()))
+      settled
+    }
+  }
+}
+
+private[graft] object JobProfile {
+  private val FenceKey = "graft.profile.fence"
+
+  /** Counters since the last reset; stageLog = (seconds, tasks, name). */
+  final case class Snapshot(jobs: Int, stages: Int, tasks: Long,
+                            shufWrite: Long, shufRead: Long,
+                            stageLog: Vector[(Double, Int, String)])
 }

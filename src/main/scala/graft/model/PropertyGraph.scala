@@ -315,15 +315,18 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
           .filter(col("b_dist") <= maxDepth - depth)
         case None => e
       }
-      // materialize the LEVEL eagerly (both the done-paths branch and
-      // the next level's frontier read it) via localCheckpoint, NOT
+      // materialize the LEVEL (both the done-paths branch and the next
+      // level's frontier read it) via localCheckpoint, NOT
       // cache(): a cached level keeps the whole deepening lineage in
       // its logical plan, and by level 4 Catalyst re-analyzes and the
       // cache manager re-canonicalizes a plan containing every prior
       // level on each action — measured as most of the first-call
       // latency at sf0.1. Checkpointing truncates each level to a leaf,
       // so per-level analysis/codegen stays constant-depth and nothing
-      // is recomputed by the final result materialization.
+      // is recomputed by the final result materialization. The
+      // checkpoint is lazy: the frontier probe below materializes it in
+      // the job that counts it, and the last level's blocks are written
+      // by the result's own eager checkpoint (the Analytics round rule).
       val step = eStep.join(fr,
           col("a_label") === col("cur_label") &&
           col("a_key") === col("cur_key"))
@@ -339,7 +342,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
           when(col("depth") === 0, col("elabel"))
             .otherwise(concat(col("elabels"), lit(">"), col("elabel")))
             .as("elabels"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = false)
       levels += step
       val done = step.filter(col("cur_label") === dstLabel &&
         col("cur_key") === dstKey)
@@ -347,7 +350,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       results = Some(results.map(_.unionByName(done)).getOrElse(done))
       frontier = step.filter(
         !(col("cur_label") === dstLabel && col("cur_key") === dstKey))
-      frontierRows = frontier.count() // cheap scan of checkpointed blocks
+      if (depth < maxDepth) frontierRows = PropertyGraph.rowCount(frontier)
     }
     // materialize the (path-count-sized, small) result as its OWN
     // checkpoint, then free every intermediate level's blocks — the
@@ -484,17 +487,21 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
           if (total <= broadcastRowCap) broadcast(dist) else dist,
           Seq("b_label", "b_key"), "left_anti")
         .withColumn("b_dist", lit(d))
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = false)
       levels += next
-      frontierRows = next.count()
-      total += frontierRows
+      if (d < lookout - 1) {
+        frontierRows = PropertyGraph.rowCount(next)
+        total += frontierRows
+      }
       dist = dist.unionByName(next)
       frontier = next
     }
     // collapse the per-level union into ONE checkpointed leaf (what the
-    // memo stores and eviction frees); the level blocks release in the
+    // memo stores and eviction frees); its probe is the exact total and
+    // materializes the last level too. The level blocks release in the
     // finally so an exception mid-BFS frees them too
-    (dist.localCheckpoint(eager = true), total)
+    val out = dist.localCheckpoint(eager = false)
+    (out, PropertyGraph.rowCount(out))
     } finally levels.foreach(PropertyGraph.freeLocalCheckpoint)
   }
 
@@ -541,6 +548,16 @@ object PropertyGraph {
         case _ => ()
       }
     } catch { case _: Throwable => () }
+
+  /** Row count of `df` in ONE Spark job: per-partition counts summed on
+    * the driver. `Dataset.count()` under AQE costs two jobs (the
+    * partial-aggregate shuffle, then a one-task final stage). The job
+    * scans every partition, so on a lazily checkpointed frame
+    * (`localCheckpoint(eager = false)`) this same job materializes the
+    * checkpoint and leaves nothing for `doCheckpoint` to recompute —
+    * the fixpoint loops' round rule (Analytics header). */
+  private[graft] def rowCount(df: DataFrame): Long =
+    df.select().queryExecution.toRdd.count()
 
   /** Deterministic graph from the TPC-H star schema (SURVEY.md §4) —
     * pure SQL-expressible construction so every oracle rebuilds the

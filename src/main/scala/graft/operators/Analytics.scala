@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.PropertyGraph
+import graft.model.PropertyGraph.rowCount
 
 /** Graph analytics (SURVEY.md §2 B-block): fixed-iteration DataFrame
   * loops so the DuckDB oracle (programmatically unrolled CTE chain) is
@@ -21,6 +22,24 @@ import graft.model.PropertyGraph
   * nested-broadcast lineage re-executes the broadcast subtrees
   * (measured 0.9 s vs 12.7 s at sf0.1). No driver-side data loops —
   * the only actions are scalar counts.
+  *
+  * ROUND RULE (every driver-side round loop here and in
+  * PropertyGraph.pathsTo): a round's frame is checkpointed LAZILY
+  * (`localCheckpoint(eager = false)`), and ONE `rowCount` probe — the
+  * round's termination test, usually also its broadcast-gate operand —
+  * materializes the checkpoint and counts it in the same Spark job.
+  * - The probe scans every partition; never `limit`, `isEmpty` or
+  *   `take`, which leave partitions for `doCheckpoint` to compute in a
+  *   job of its own.
+  * - The probe runs before any other reader of the frame: two
+  *   concurrent readers of a pending checkpoint (union branches,
+  *   sibling broadcasts) would each compute it.
+  * - In the last permitted round a probe that only decides termination
+  *   is dropped: the result's final eager checkpoint materializes that
+  *   round. A probe whose count is used afterwards (a convergence
+  *   assertion, an audit column, a later gate) stays.
+  * Every other scalar count goes through `rowCount` too:
+  * `Dataset.count()` costs two jobs under AQE, `rowCount` one.
   */
 object Analytics {
   type Q = (SparkSession, String) => DataFrame
@@ -103,7 +122,7 @@ object Analytics {
     // cached node count (one cheap job) — below the cap the explicit
     // hint gives a deterministic iteration plan; above it the hint is
     // dropped and AQE decides from runtime sizes
-    val n = nodes.count()
+    val n = rowCount(nodes)
     var r = nodes.withColumn("r", init)
     for (_ <- 1 to prIters) {
       val src = if (sparse) r.filter(col("r") > 0) else r
@@ -167,7 +186,7 @@ object Analytics {
   }
 
   def pagerank: Q = (s, dir) => {
-    val n = g(s, dir).nodes.count() // scalar action only
+    val n = rowCount(g(s, dir).nodes) // scalar action only
     prFamily(s, dir,
       init = lit(prScale / n),
       base = lit((15L * prScale) / (100L * n)),
@@ -189,7 +208,7 @@ object Analytics {
     * ≈ 10¹⁰ and weights are small multiplicities, checked far below
     * that at any tested SF. */
   def pagerankWeighted: Q = (s, dir) => {
-    val n = g(s, dir).nodes.count()
+    val n = rowCount(g(s, dir).nodes)
     prFamily(s, dir,
       init = lit(prScale / n),
       base = lit((15L * prScale) / (100L * n)),
@@ -250,7 +269,7 @@ object Analytics {
       col("dst_label").as("label"), col("dst_key").as("key"))
     val od = e.groupBy("src_label", "src_key").agg(count(lit(1)).as("outdeg"))
     val eod = e.join(od, Seq("src_label", "src_key")).cache() // shared entry
-    val n = nodes.count()
+    val n = rowCount(nodes)
     var r = nodes.withColumn("r", lit(prScale / n))
     val base = lit((15L * prScale) / (100L * n))
     val rounds = (1 to prIters).map { i =>
@@ -372,15 +391,15 @@ object Analytics {
     * absorbed the entire ~6 s build into its own number. */
   private[graft] def warmShared(s: SparkSession, dir: String): Unit = {
     val (nodes, und) = numericGraph(s, dir)
-    nodes.count(); und.count()
+    rowCount(nodes); rowCount(und)
     simpleUnd(s, dir)
     // the co-purchase projection is shared by the triangle family
     // (triangles / clustering_coef / ktruss / GraphX twin) the same way
-    coProjection(s, dir).count()
+    rowCount(coProjection(s, dir))
     // ... as is its per-edge support frame (ktruss round 1 + bridges)
     coSupport(s, dir): Unit
     // directed shared frame (topo levels + hits)
-    directedNum(s, dir).count(): Unit
+    rowCount(directedNum(s, dir)): Unit
     // ANF sketch rounds (g_anf + g_neighborhood_function) — eager
     // checkpoints, so the build itself materializes them
     anfSketches(s, dir)
@@ -464,7 +483,7 @@ object Analytics {
     .empty[(SparkSession, String), Long]
   private def edgeRows(s: SparkSession, dir: String): Long =
     graft.model.SessionMemo.getOrBuild(edgeRowsCache, (s, dir))(
-      g(s, dir).edges.count())
+      rowCount(g(s, dir).edges))
 
   private[graft] def numericGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     graft.model.SessionMemo.getOrBuild(numericCache, (s, dir)) {
@@ -515,12 +534,11 @@ object Analytics {
       interim: scala.collection.mutable.ArrayBuffer[DataFrame],
       assertConverged: Boolean = false): DataFrame = {
     var comp = ids.select(col("id"), col("id").as("comp"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     interim += comp
     var delta = comp
-    // the termination probe doubles as the broadcast gate input: count
-    // on a checkpointed frame costs what isEmpty cost before
-    var deltaRows = comp.count()
+    // the termination probe doubles as the broadcast gate input
+    var deltaRows = rowCount(comp)
     val nTotal = deltaRows
     // BYTE-DERIVED width for the node-bounded round frames (r16, guide
     // §2 scale-adaptive partitioning): comp/merged are ~24 B/row, and
@@ -538,11 +556,6 @@ object Analytics {
       round += 1
       val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
         .groupBy(col("b").as("id")).agg(min("comp").as("m"))
-      // ONE materialization per round: the checkpoint is LAZY and the
-      // delta count right below is what computes it — an eager
-      // checkpoint would add a second blocking job per round for the
-      // same blocks (kcore's lazy+count discipline). delta/comp are
-      // column-prunes over the materialized frame.
       // cand is node-bounded (one row per touched id) → gate on nTotal.
       val merged = comp.join(gated(cand, nTotal), Seq("id"), "left_outer")
         .select(col("id"),
@@ -552,7 +565,8 @@ object Analytics {
         .localCheckpoint(eager = false)
       interim += merged
       delta = merged.filter(col("chg")).select("id", "comp")
-      deltaRows = delta.count()
+      // the convergence assertion below needs the last round's probe
+      if (round < iters || assertConverged) deltaRows = rowCount(delta)
       comp = merged.select("id", "comp")
       dbgPhase("ccl", s"round $round delta=$deltaRows")
     }
@@ -681,7 +695,7 @@ object Analytics {
       // delta-bounded) half-resolved frame for endpoint b, so the merge
       // never shuffles and stays ∝ delta edges at any graph size — at
       // 100 TB baseL is the table that outgrows the broadcast ceiling.
-      val dRows = deltaE.count() // prune of the eager und checkpoint
+      val dRows = rowCount(deltaE) // prune of the eager und checkpoint
       val halfA = baseL.toDF("a", "ca").join(gated(deltaE, dRows), Seq("a"))
       val dSup = baseL.toDF("b", "cb").join(gated(halfA, dRows), Seq("b"))
         .filter(col("ca") =!= col("cb"))
@@ -979,7 +993,7 @@ object Analytics {
     // Below the cap both joins build broadcast maps and the only
     // shuffle per level is the frontier distinct; above it (100×) the
     // hints drop and AQE plans from runtime sizes as before.
-    val n = nodes.count()
+    val n = rowCount(nodes)
     var dist = nodes
       .filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(0).as("depth"))
@@ -1035,7 +1049,7 @@ object Analytics {
   def mis: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = nodes.count()
+    val n = rowCount(nodes)
     var undecided = nodes.select("id", "label", "key")
       .localCheckpoint(eager = true)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame](undecided)
@@ -1074,9 +1088,9 @@ object Analytics {
           .join(win.select("id"), Seq("id"), "left_anti")
           .join(retired, Seq("id"), "left_anti")
           .coalesce(nodeParts(s, uRows)) // r16 width rule
-          .localCheckpoint(eager = true)
+          .localCheckpoint(eager = false)
         interim += undecided
-        uRows = undecided.count()
+        if (round < misRounds) uRows = rowCount(undecided)
       }
       val misSet = winners.reduceOption(_.unionByName(_)) match {
         case Some(w) => w
@@ -1274,9 +1288,9 @@ object Analytics {
     var dist = nodes
       .filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(0L).as("d"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     var delta = dist
-    var deltaRows = delta.count()
+    var deltaRows = rowCount(delta)
     var round = 0
     // round blocks release in the finally (block-retention discipline)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame](dist)
@@ -1295,12 +1309,10 @@ object Analytics {
           .select(col("id"),
             least(coalesce(col("d"), col("m")), coalesce(col("m"), col("d"))).as("nd"),
             coalesce(col("m") < col("d"), col("d").isNull).as("chg"))
-          // LAZY: the delta count below materializes the checkpoint in
-          // the same job (one blocking job per round, not two)
           .localCheckpoint(eager = false)
         interim += merged
         delta = merged.filter(col("chg")).select(col("id"), col("nd").as("d"))
-        deltaRows = delta.count()
+        if (round < ssspIters) deltaRows = rowCount(delta)
         dist = merged.select(col("id"), col("nd").as("d"))
       }
       nodes.join(dist, Seq("id"))
@@ -1332,9 +1344,9 @@ object Analytics {
     var cap = nodes
       .filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(widestInf).as("c"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     var delta = cap
-    var deltaRows = delta.count()
+    var deltaRows = rowCount(delta)
     var round = 0
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame](cap)
     try {
@@ -1350,7 +1362,7 @@ object Analytics {
           .localCheckpoint(eager = false)
         interim += merged
         delta = merged.filter(col("chg")).select(col("id"), col("nc").as("c"))
-        deltaRows = delta.count()
+        if (round < ssspIters) deltaRows = rowCount(delta)
         cap = merged.select(col("id"), col("nc").as("c"))
       }
       nodes.join(cap, Seq("id"))
@@ -1451,7 +1463,7 @@ object Analytics {
     // label vector and per-round mode are node-bounded — gate on the
     // cached node count; past the cap the joins shuffle (at 100× the
     // label vector is pre-partitioned with und instead of shipped)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     // per-round lazy checkpoints are dead once the final eager frame
     // collapses the chain — free them so the memo pins ONE frame, not
     // lpaIters of them (nationBfs/pathsTo discipline)
@@ -1569,7 +1581,7 @@ object Analytics {
   def modularity: Q = (s, dir) => {
     val (_, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = numericGraph(s, dir)._1.count()
+    val n = rowCount(numericGraph(s, dir)._1)
     val lbl = lpaLabels(s, dir)
     val withA = und.join(gated(lbl.toDF("a", "ca"), n), Seq("a"))
     val dC = withA.groupBy(col("ca").as("comm")).agg(count(lit(1)).as("d_sum"))
@@ -1577,7 +1589,7 @@ object Analytics {
       .filter(col("ca") === col("cb"))
       .groupBy(col("ca").as("comm")).agg(count(lit(1)).as("e2_in"))
     val nNodes = lbl.groupBy(col("lbl").as("comm")).agg(count(lit(1)).as("n_nodes"))
-    val u = und.count()
+    val u = rowCount(und)
     val per = nNodes
       .join(dC, Seq("comm"), "left_outer")
       .join(e2C, Seq("comm"), "left_outer")
@@ -1636,11 +1648,13 @@ object Analytics {
     * Output = survivors with the degree that qualified them in the
     * final round.
     *
-    * Scale shape: the survivor set only shrinks, so each round's two
-    * semi-joins against the edge list broadcast the (node-sized,
-    * shrinking) alive frame; eager per-round materialization caps plan
-    * depth. At 100× node scale, same story as CC: pre-partition edges
-    * and alive on the node key and let the joins reuse it. */
+    * Round shape: ONE checkpointed frame per round, `(id, deg)` over
+    * the nodes alive at the round's start, with their degree among
+    * those same nodes. Its `deg >= k` slice is the alive set; its
+    * `deg < k` slice is the round's removed set, which is both the
+    * termination probe and the next round's (gated broadcast) subtract
+    * side. At 100× node scale, same story as CC: pre-partition edges
+    * and the round frame on the node key and let the joins reuse it. */
   val kcoreK = 3
   val kcoreIters = 4
 
@@ -1655,41 +1669,34 @@ object Analytics {
     // rounds × full edge joins. Identity: deg_i(a) = deg_{i-1}(a) −
     // |nbrs(a) ∩ removed_{i-1}| for surviving a; a round that removes
     // nothing is a provable fixpoint (remaining oracle rounds are
-    // identity) → early exit, the CC delta-drain argument.
+    // identity) → early exit, the CC delta-drain argument. Edge-less
+    // nodes have no row in any round frame: they never qualify and
+    // have no incident edges to subtract.
     var deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= kcoreK)
-      .localCheckpoint(eager = true)
-    // removed_1: everything not surviving round 1 (isolated nodes ride
-    // along harmlessly — they have no incident edges to subtract)
-    var removed = nodes.select("id")
-      .join(deg.select("id"), Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    var removedRows = removed.count()
-    var round = 1
+      .localCheckpoint(eager = false)
+    def removed(f: DataFrame) = f.filter(col("deg") < kcoreK).select("id")
     // round blocks release in the finally (block-retention discipline)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](deg, removed)
+    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](deg)
     try {
+      var removedRows = rowCount(removed(deg))
+      var round = 1
       while (round < kcoreIters && removedRows > 0) {
         round += 1
-        // removed is bounded by the count already materialized for
-        // termination — gate the hint on it (same discipline as SSSP)
+        // removed is bounded by the probe's count — gate the hint on it
+        // (same discipline as SSSP)
         val drops = und
-          .join(gated(removed.withColumnRenamed("id", "b"), removedRows), Seq("b"))
+          .join(gated(removed(deg).withColumnRenamed("id", "b"), removedRows),
+            Seq("b"))
           .groupBy(col("a").as("id")).agg(count(lit(1)).as("drop"))
-        val newDeg = deg.join(drops, Seq("id"), "left_outer")
+        deg = deg.filter(col("deg") >= kcoreK)
+          .join(drops, Seq("id"), "left_outer")
           .select(col("id"),
             (col("deg") - coalesce(col("drop"), lit(0L))).as("deg"))
-          .filter(col("deg") >= kcoreK)
-          .localCheckpoint(eager = true)
-        interim += newDeg
-        removed = deg.select("id")
-          .join(newDeg.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
-        interim += removed
-        removedRows = removed.count()
-        deg = newDeg
+          .localCheckpoint(eager = false)
+        interim += deg
+        if (round < kcoreIters) removedRows = rowCount(removed(deg))
       }
-      nodes.join(deg, Seq("id"))
+      nodes.join(deg.filter(col("deg") >= kcoreK), Seq("id"))
         .select("label", "key", "deg").orderBy("label", "key")
         .localCheckpoint(eager = true)
     } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
@@ -1844,7 +1851,7 @@ object Analytics {
   def hits: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val e = directedNum(s, dir).toDF("src", "dst")
-    hitsOn(nodes.select("id"), e, nodes.count())
+    hitsOn(nodes.select("id"), e, rowCount(nodes))
       .join(nodes, Seq("id"))
       .select("label", "key", "a", "h").orderBy("label", "key")
   }
@@ -1905,7 +1912,7 @@ object Analytics {
   def salsa: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val e = directedNum(s, dir).toDF("src", "dst")
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val outd = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
     val ind = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("indeg"))
     // PURE LINEAGE, no per-half-round checkpoints (the pr_convergence
@@ -1990,7 +1997,7 @@ object Analytics {
   def eigencentrality: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def norm(raw: DataFrame): DataFrame = {
       val r = raw.localCheckpoint(eager = false) // feeds max + values
@@ -2122,7 +2129,7 @@ object Analytics {
 
   def katz: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val ed = directedNum(s, dir)
     // NO per-round checkpoint (r15): each round's vector has exactly
     // one consumer (the next round's gated broadcast), so the whole
@@ -2526,9 +2533,9 @@ object Analytics {
       .filter(col("label") === "nation" && col("key") < betweennessPivots)
       .select(col("id").as("seed"), col("id").as("node"),
         lit(0).as("d"), lit(1L).as("sigma"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     var levels = Vector(seeds)
-    var counts = Vector(seeds.count())
+    var counts = Vector(rowCount(seeds))
     var vis = seeds.select("seed", "node")
     var visRows = counts.last
     val visChain = scala.collection.mutable.Buffer.empty[DataFrame]
@@ -2539,12 +2546,12 @@ object Analytics {
     // forward-pass blocks until driver GC
     try {
       for (i <- 1 to B) {
-        // LAZY: the count below materializes the checkpoint in the same
-        // job (one blocking job per level, not two)
+        // every level's count gates a backward-pass broadcast, so the
+        // last level keeps its probe
         val next = bcForwardStep(levels.last, counts.last, und, vis, visRows, i)
           .localCheckpoint(eager = false)
         levels :+= next
-        counts :+= next.count()
+        counts :+= rowCount(next)
         vis = vis.unionByName(next.select("seed", "node"))
           .localCheckpoint(eager = false)
         visChain += vis
@@ -2685,7 +2692,7 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val m = und
       .join(gated(deg.select(col("id").as("a"), col("deg").as("xd")), n), Seq("a"))
       .join(gated(deg.select(col("id").as("b"), col("deg").as("yd")), n), Seq("b"))
@@ -2743,7 +2750,7 @@ object Analytics {
   def avgNeighborDegree: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     und
       .join(gated(deg.toDF("a", "da"), n), Seq("a"))
@@ -2967,7 +2974,7 @@ object Analytics {
       // always contains exactly one candidate), so the frontier size
       // IS the seed count — a loop-invariant gate operand, no count()
       // per step
-      val nWalks = walk.count()
+      val nWalks = rowCount(walk)
       for (i <- 2 to n2vSteps) {
         // st is consumed TWICE this step (the frontier broadcast and
         // the candidate probe): an eager checkpoint of the one-row-per-
@@ -3067,12 +3074,14 @@ object Analytics {
     * u→v of lvl_{i-1}(u)+1) — monotone, exact BIGINT, and the oracle
     * unrolls the identical rounds. On a CYCLIC graph the fixed round
     * count reports length-capped levels instead of diverging (same
-    * bounded-round contract as CC/SSSP). Scale shape: per round one
-    * edge-keyed join against the node-bounded level vector (gated
-    * broadcast) + one partial-agged max groupBy; each round is eagerly
-    * checkpointed — node-bounded rows — so the per-round broadcast
-    * never re-runs prior rounds' joins (the CC materialization
-    * discipline), blocks freed per call. */
+    * bounded-round contract as CC/SSSP). Round shape: one checkpointed
+    * frame per round, `(id, lvl, lvl2)` — the previous and the merged
+    * level of every node — whose `lvl2 > lvl` slice is the next round's
+    * delta (termination probe and gated broadcast side). Per round one
+    * delta-keyed join against the edge list + one partial-agged max
+    * groupBy + the merge; node-bounded rows, so the per-round
+    * broadcast never re-runs prior rounds' joins, blocks freed per
+    * call. */
   val topoIters = 6
 
   /** One semi-naive max-propagation round — only the DELTA (rows whose
@@ -3080,8 +3089,8 @@ object Analytics {
     * the previous level alongside so the caller can slice the next
     * delta without recomputing. Extracted (like bcForwardStep) so the
     * plan audit can assert the gate behavior directly: the per-round
-    * eager checkpoints truncate lineage and the final plan never shows
-    * these joins. */
+    * checkpoints truncate lineage and the final plan never shows these
+    * joins. */
   private[graft] def topoDeltaStep(lvl: DataFrame, delta: DataFrame,
                                    ed: DataFrame, deltaRows: Long,
                                    nodeCount: Long): DataFrame = {
@@ -3098,7 +3107,7 @@ object Analytics {
     // DIRECTED edges — numericGraph's shared frame is the undirected
     // union, which would make every node reachable from everywhere
     val ed = directedNum(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
       var lvl = nodes.select(col("id"), lit(0L).as("lvl"))
@@ -3118,14 +3127,12 @@ object Analytics {
       var round = 0
       while (round < topoIters && deltaRows > 0) {
         round += 1
-        // LAZY: the delta count below materializes the checkpoint in
-        // the same job (one blocking job per round, not two)
         val merged = topoDeltaStep(lvl, delta, ed, deltaRows, n)
           .localCheckpoint(eager = false)
         ckpts += merged
         delta = merged.filter(col("lvl2") > col("lvl"))
           .select(col("id"), col("lvl2").as("lvl"))
-        deltaRows = delta.count()
+        if (round < topoIters) deltaRows = rowCount(delta)
         lvl = merged.select(col("id"), col("lvl2").as("lvl"))
       }
       nodes.join(lvl, "id").select(col("label"), col("key"), col("lvl"))
@@ -3231,13 +3238,14 @@ object Analytics {
     val ed = directedNum(s, dir) // (a, b): a → b
     val target = nodes.filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(1L).as("np"))
-    var np = target.localCheckpoint(eager = true)
+    var np = target.localCheckpoint(eager = false)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame](np)
     try {
       for (_ <- 1 to pcIters) {
         // recompute from the PREVIOUS vector: base + inbound sums; np is
-        // sparse (reaching nodes only) — broadcast-gated under the cap
-        val sums = ed.join(gated(np.withColumnRenamed("id", "b"), np.count()),
+        // sparse (reaching nodes only) — broadcast-gated under the cap,
+        // and the gate's count is the previous round's probe
+        val sums = ed.join(gated(np.withColumnRenamed("id", "b"), rowCount(np)),
             Seq("b"))
           .groupBy(col("a").as("id")).agg(sum("np").as("s"))
         val next = target.select(col("id"), col("np").as("base"))
@@ -3245,7 +3253,7 @@ object Analytics {
           .select(col("id"),
             (coalesce(col("base"), lit(0L)) + coalesce(col("s"), lit(0L)))
               .as("np"))
-          .localCheckpoint(eager = true)
+          .localCheckpoint(eager = false)
         interim += next
         np = next
       }
@@ -3371,15 +3379,16 @@ object Analytics {
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
       var e = coProjection(s, dir)
-        .select(col("p1"), col("p2")).localCheckpoint(eager = true)
+        .select(col("p1"), col("p2")).localCheckpoint(eager = false)
       interim += e
+      // probed before deg reads it: deg's two union branches would
+      // otherwise both compute the pending checkpoint
+      var m = rowCount(e)
       val rows = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
       var round = 0
       var continue = true
       // r15: carry the edge count across rounds (m_r = m2_{r-1} — e IS
-      // the previous round's e2) and let deg's count be its
-      // materializing action — 2 fewer driver round-trips per round
-      var m = -1L
+      // the previous round's e2)
       while (round < densestRounds && continue) {
         round += 1
         val deg = e.select(col("p1").as("p")).unionByName(
@@ -3387,11 +3396,11 @@ object Analytics {
           .groupBy("p").agg(count(lit(1)).as("d"))
           .localCheckpoint(eager = false)
         interim += deg
-        if (m < 0) m = e.count()
-        val n = deg.count()
-        if (n == 0) { continue = false }
-        else {
-          rows += ((round.toLong, n, m))
+        val n = rowCount(deg)
+        if (n == 0) continue = false
+        else rows += ((round.toLong, n, m))
+        // the last round's peel would feed no further round
+        if (continue && round < densestRounds) {
           // KEEP nodes with d·n·10 > 21·m (the survivors of removing
           // every d ≤ 2(1+ε)·ρ, ε = 1/20) — peeling removes the LOW-
           // degree fringe so the dense core surfaces
@@ -3399,9 +3408,9 @@ object Analytics {
           val e2 = e.join(keep.toDF("p1"), Seq("p1"), "left_semi")
             .join(keep.toDF("p2"), Seq("p2"), "left_semi")
             .select("p1", "p2")
-            .localCheckpoint(eager = true)
+            .localCheckpoint(eager = false)
           interim += e2
-          val m2 = e2.count()
+          val m2 = rowCount(e2)
           // FIXPOINT INVARIANT (cross-engine contract): the Spark loop
           // breaks the moment a round changes nothing, while the oracle
           // runs all densestRounds and DEDUPS repeated (n, m) fixpoint
@@ -3409,7 +3418,7 @@ object Analytics {
           // break fires at exactly the first repeated round. Any future
           // early-exit heuristic (e.g. stopping while rounds still
           // shrink) must change the oracle's dedup in lockstep.
-          if (m2 == m && keep.count() == n) continue = false // fixpoint
+          if (m2 == m && rowCount(keep) == n) continue = false // fixpoint
           e = e2
           m = m2
         }
@@ -3497,15 +3506,10 @@ object Analytics {
   def matching: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     // broadcast bound for `used` (≤ 2·|win| ≤ n matched endpoints)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
-      // canonical free-free edge set with a deterministic priority.
-      // LAZY checkpoint: the count() on the next line is the round
-      // loop's driver scalar anyway, so it doubles as the materializing
-      // action — one job instead of an eager-checkpoint job + a count
-      // job (the r6 verdict's materialization-floor fix; same pattern
-      // per round below)
+      // canonical free-free edge set with a deterministic priority
       var es = undW.select(least(col("a"), col("b")).as("ea"),
         greatest(col("a"), col("b")).as("eb"))
         .distinct()
@@ -3514,7 +3518,7 @@ object Analytics {
             col("eb").cast("string"))), 1, 13))
         .localCheckpoint(eager = false)
       interim += es
-      var esRows = es.count()
+      var esRows = rowCount(es)
       val matched = scala.collection.mutable.ArrayBuffer[DataFrame]()
       var round = 0
       while (round < matchRounds && esRows > 0) {
@@ -3552,22 +3556,25 @@ object Analytics {
         matched += win
         // retire matched endpoints; the candidate set only shrinks.
         // `used` is bounded by 2·|win| ≤ n — broadcast both anti-joins
-        // so es is never shuffled, only scanned and re-checkpointed
-        val used = win.select(col("ea").as("v"))
-          .unionByName(win.select(col("eb").as("v"))).distinct()
-        es = es
-          .join(gated(used.toDF("ea"), n), Seq("ea"), "left_anti")
-          .join(gated(used.toDF("eb"), n), Seq("eb"), "left_anti")
-          .select("ea", "eb", "h")
-          // r16 width rule: es shrinks geometrically but the broadcast
-          // anti-joins are narrow, so without the re-coalesce every
-          // round's checkpoint kept the initial width and each scan
-          // paid a full task wave; width follows the PREVIOUS round's
-          // surviving row count (edgeParts clamp at real scale)
-          .coalesce(edgeParts(s, esRows))
-          .localCheckpoint(eager = false)
-        interim += es
-        esRows = es.count()
+        // so es is never shuffled, only scanned and re-checkpointed.
+        // The last round's survivors feed no further round.
+        if (round < matchRounds) {
+          val used = win.select(col("ea").as("v"))
+            .unionByName(win.select(col("eb").as("v"))).distinct()
+          es = es
+            .join(gated(used.toDF("ea"), n), Seq("ea"), "left_anti")
+            .join(gated(used.toDF("eb"), n), Seq("eb"), "left_anti")
+            .select("ea", "eb", "h")
+            // r16 width rule: es shrinks geometrically but the broadcast
+            // anti-joins are narrow, so without the re-coalesce every
+            // round's checkpoint kept the initial width and each scan
+            // paid a full task wave; width follows the PREVIOUS round's
+            // surviving row count (edgeParts clamp at real scale)
+            .coalesce(edgeParts(s, esRows))
+            .localCheckpoint(eager = false)
+          interim += es
+          esRows = rowCount(es)
+        }
       }
       val seed = s.range(0).select(lit(0L).as("round"), lit(0L).as("ea"),
         lit(0L).as("eb"))
@@ -3709,7 +3716,7 @@ object Analytics {
 
   def coloring: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val (undHp, wait0) = coloringPrio(s, dir)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // AQE OFF for the loop (restored in finally): every per-round frame
@@ -3750,34 +3757,37 @@ object Analytics {
               .select(col("id"), col("c"),
                 when(col("mask").isNull, lit(1L)).otherwise(mex).as("color"))
         }
-        // the round's ONLY blocking job — delta feeds the mask unions
-        // of every later round, the decrement join, and the retire
-        // anti-join (the checkpoint-before-multi-reference rule)
-        val d = delta.localCheckpoint(eager = true)
+        // the round frame — delta feeds the mask unions of every later
+        // round, the decrement join, and the retire anti-join; its probe
+        // runs before those readers (the checkpoint-before-multi-
+        // reference rule)
+        val d = delta.localCheckpoint(eager = false)
         interim += d
         colored += d
-        // decrement rem by edges whose higher-priority endpoint was
-        // just colored — the ONLY rows whose counters change, so the
-        // shuffle is delta-incident-bounded (Σ over rounds = |undHp|);
-        // the lazy wait checkpoint materializes inside the next round's
-        // delta job
-        val decs = undHp
-          .join(gated(d.select(col("id").as("b")), n), "b")
-          .groupBy(col("a").as("id")).agg(count(lit(1)).as("dec"))
-        // ONE update join: the colored set and the decremented set are
-        // provably DISJOINT this round (a winner had no uncolored
-        // higher-priority neighbor left, so it never receives a
-        // decrement), so the anti-join rides the same left_outer as
-        // the decrement via a -1 retire tag — one broadcast, one join
-        val upd = decs.unionByName(
-          d.select(col("id"), lit(-1L).as("dec")))
-        wait = wait.join(gated(upd, n), Seq("id"), "left_outer")
-          .filter(coalesce(col("dec"), lit(0L)) >= 0L)
-          .select(col("id"), col("c"),
-            (col("rem") - coalesce(col("dec"), lit(0L))).as("rem"))
-          .localCheckpoint(eager = false)
-        interim += wait
-        uncRows -= d.count()
+        if (round < colorRounds) {
+          uncRows -= rowCount(d)
+          // decrement rem by edges whose higher-priority endpoint was
+          // just colored — the ONLY rows whose counters change, so the
+          // shuffle is delta-incident-bounded (Σ over rounds = |undHp|);
+          // the lazy wait checkpoint materializes inside the next
+          // round's delta job
+          val decs = undHp
+            .join(gated(d.select(col("id").as("b")), n), "b")
+            .groupBy(col("a").as("id")).agg(count(lit(1)).as("dec"))
+          // ONE update join: the colored set and the decremented set
+          // are provably DISJOINT this round (a winner had no uncolored
+          // higher-priority neighbor left, so it never receives a
+          // decrement), so the anti-join rides the same left_outer as
+          // the decrement via a -1 retire tag — one broadcast, one join
+          val upd = decs.unionByName(
+            d.select(col("id"), lit(-1L).as("dec")))
+          wait = wait.join(gated(upd, n), Seq("id"), "left_outer")
+            .filter(coalesce(col("dec"), lit(0L)) >= 0L)
+            .select(col("id"), col("c"),
+              (col("rem") - coalesce(col("dec"), lit(0L))).as("rem"))
+            .localCheckpoint(eager = false)
+          interim += wait
+        }
       }
       val seed = s.range(0).select(lit(0L).as("id"), lit(0L).as("color"))
       val allColored =
@@ -3916,7 +3926,7 @@ object Analytics {
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
     graft.model.SessionMemo.getOrBuild(lvL1Cache, (s, dir)) {
       val (nodes, und) = numericGraph(s, dir)
-      val n = nodes.count()
+      val n = rowCount(nodes)
       val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
       try {
         val roots = louvainLevel(nodes.select("id"),
@@ -4041,7 +4051,7 @@ object Analytics {
 
   def louvain: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
       // level-1 roots + contracted community graph (self-loops kept):
@@ -4223,7 +4233,7 @@ object Analytics {
   private def louvainHierarchyBuild(
       s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val (nodes, und0) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // per-level maps survive the build (session-pinned with the memo —
     // g_hierarchy_curve reads them); NOT added to interim
@@ -4238,9 +4248,9 @@ object Analytics {
       while (moved && level < louvainMaxLevels) {
         level += 1
         val best = (if (level == 1) louvainBestMoveL1(s, dir)
-          else louvainBestMove(g).localCheckpoint(eager = true))
+          else louvainBestMove(g).localCheckpoint(eager = false))
         if (level > 1) interim += best
-        val nBest = best.count()
+        val nBest = rowCount(best)
         dbgPhase("hier", s"level $level best=$nBest")
         if (nBest == 0) moved = false
         else if (level == 1) {
@@ -4290,7 +4300,7 @@ object Analytics {
           dbgPhase("hier", s"level $level contracted")
         }
       }
-      if (moved && louvainBestMove(g).limit(1).count() > 0)
+      if (moved && !louvainBestMove(g).isEmpty)
         throw new IllegalStateException(
           s"louvainHierarchy: positive-gain moves remain after " +
             s"$louvainMaxLevels levels — raise the cap; refusing to " +
@@ -4417,7 +4427,7 @@ object Analytics {
       try {
         val hl = louvainHierarchy(s, dir) // memoized final labels
         dbgPhase("irm", "hierarchy labels ready")
-        val n = nodes.count()
+        val n = rowCount(nodes)
         val cid = nodes.join(hl, Seq("label", "key"))
           .select(col("id"), col("comm"))
           .localCheckpoint(eager = true)
@@ -4434,15 +4444,15 @@ object Analytics {
           .join(gated(cid.toDF("b", "cb"), n), Seq("b"))
           .filter(col("ca") === col("cb"))
           .select("a", "b")
-          .localCheckpoint(eager = true)
+          .localCheckpoint(eager = false)
         interim += ind
         // byte-derived scan width for the round-invariant edge frame
         // (r16, guide §2): every ccLabels round probes it against the
         // delta broadcast, and at local scale its inherited
         // shuffle.partitions-many blocks made each probe a full task
         // wave; ~16 MB per partition, capped at session parallelism —
-        // the count is one cheap job on the fresh checkpoint.
-        val indParts = nodeParts(s, ind.count())
+        // the count is the job that materializes the checkpoint.
+        val indParts = nodeParts(s, rowCount(ind))
         dbgPhase("irm", s"induced edges checkpointed (parts=$indParts)")
         val comp =
           ccLabels(nodes.select("id"), ind.coalesce(indParts), ccIters,
@@ -4511,7 +4521,7 @@ object Analytics {
   private def communityProfileFrame(s: SparkSession, dir: String): DataFrame = {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val hl = louvainHierarchy(s, dir)
     val cid = nodes.join(hl, Seq("label", "key"))
       .select(col("id"), col("comm"))
@@ -4537,7 +4547,7 @@ object Analytics {
   }
 
   def communityProfile: Q = (s, dir) => {
-    val u = numericGraph(s, dir)._2.count()
+    val u = rowCount(numericGraph(s, dir)._2)
     communityProfileFrame(s, dir)
       .withColumn("phi_ppm", expr(
         s"CASE WHEN least(vol, $u - vol) = 0 THEN CAST(0 AS BIGINT)" +
@@ -4608,8 +4618,8 @@ object Analytics {
     * pass. */
   def partitionQuality: Q = (s, dir) => {
     val und = numericGraph(s, dir)._2.select("a", "b")
-    val u = und.count()
-    val ud = simpleUnd(s, dir).count()
+    val u = rowCount(und)
+    val ud = rowCount(simpleUnd(s, dir))
     communityProfileFrame(s, dir)
       .withColumn("phi_ppm", expr(
         s"CASE WHEN least(vol, $u - vol) = 0 THEN CAST(0 AS BIGINT)" +
@@ -4675,7 +4685,7 @@ object Analytics {
     * level) — the stopping-rule input for a resolution sweep. */
   def hierarchyCurve: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val wtot = undW.agg(sum("w").cast("long").as("wt"))
     // r15 opt (§2.3/§2.4): ONE edge pass scores every level — the six
     // session-pinned level maps join into a wide node-bounded frame
@@ -4774,7 +4784,7 @@ object Analytics {
 
   def resolutionSweep: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
       val kdeg = und.groupBy(col("a").as("id")).agg(sum("w").as("k"))
@@ -5006,7 +5016,7 @@ object Analytics {
     * (the g_louvain_move contract, one notch stricter). */
   def leidenRefine: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val rmap = inducedRefineMap(s, dir)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
@@ -5307,7 +5317,7 @@ object Analytics {
     graft.model.SessionMemo.getOrBuild(anfCache, (s, dir)) {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
-      val n = nodes.count()
+      val n = rowCount(nodes)
       val seed = nodes.select(col("id"), array(
         graft.functions.VectorExprs.hexSlice(md5(col("id").cast("string")), 1, 13))
         .as("hs"))
@@ -5570,7 +5580,7 @@ object Analytics {
 
   def mst: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try {
       // canonical min-weight edge per unordered pair (multi-label pairs
@@ -5585,7 +5595,7 @@ object Analytics {
           nodeIdCol(col("dst_label"), col("dst_key"))).as("eb"),
         col("weight").as("w"))
         .groupBy("ea", "eb").agg(min("w").as("w"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = false) // round 1's probe materializes it
       interim += eset
       var comp = nodes.select(col("id"), col("id").as("c"))
         .localCheckpoint(eager = true)
@@ -5619,17 +5629,16 @@ object Analytics {
               .join(gated(comp.toDF("ea", "ca"), n), "ea")
               .join(gated(comp.toDF("eb", "cb"), n), "eb")
               .filter(col("ca") =!= col("cb"))
-              .localCheckpoint(eager = true)
+              .localCheckpoint(eager = false)
             interim += j
             j
           }
         eset = ec.select("ea", "eb", "w")
         // EARLY EXIT (provable): no inter-component edge ⇒ no picks ⇒
         // hook is the identity ⇒ every remaining oracle round is a
-        // no-op — the CC delta-drain argument. The count reads the
-        // checkpointed blocks (cheap) and ends the loop before paying
-        // a full round of identity contraction jobs.
-        ecRows = ec.count()
+        // no-op — the CC delta-drain argument. The probe ends the loop
+        // before paying a full round of identity contraction jobs.
+        ecRows = rowCount(ec)
         if (ecRows > 0) {
         val cand = ec.select(col("ca").as("c"), col("cb").as("oc"),
           col("w"), col("ea"), col("eb"))
@@ -5818,7 +5827,7 @@ object Analytics {
   def ktruss: Q = (s, dir) => {
     val co = coProjection(s, dir)
     var e = co
-    var nEdges = e.count()
+    var nEdges = rowCount(e)
     var sup = e.limit(0).withColumn("support", lit(0L)) // replaced round 1
     var dropped = 1L
     var round = 0
@@ -5841,11 +5850,13 @@ object Analytics {
               }
         val kept = e.join(sup, Seq("p1", "p2"))
           .filter(col("support") >= trussK - 2)
-          .select("p1", "p2").localCheckpoint(eager = true)
+          .select("p1", "p2").localCheckpoint(eager = false)
         interim += kept
-        val keptRows = kept.count()
-        dropped = nEdges - keptRows
-        nEdges = keptRows
+        if (round < trussIters) {
+          val keptRows = rowCount(kept)
+          dropped = nEdges - keptRows
+          nEdges = keptRows
+        }
         e = kept
       }
       e.join(sup, Seq("p1", "p2")).select("p1", "p2", "support")
@@ -6071,9 +6082,9 @@ object Analytics {
       assigned =
         if (assigned == null) settled else assigned.unionByName(settled)
       val uns = lab.filter(col("f") =!= col("bk")).select("id")
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = false)
       interim += uns
-      remaining = uns.count()
+      remaining = rowCount(uns)
       if (remaining > 0L) {
         eCur = eCur
           .join(gated(uns.toDF("a"), n), Seq("a"), "left_semi")
@@ -6087,7 +6098,7 @@ object Analytics {
 
   def scc: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
-    val n = nodes.count()
+    val n = rowCount(nodes)
     val graph = g(s, dir)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val sccT0 = System.nanoTime()
@@ -6138,9 +6149,9 @@ object Analytics {
       interim += alive
       var dead = alive.filter(col("din") === 0 || col("dout") === 0)
         .select("id")
-        .localCheckpoint(eager = true)
+        .localCheckpoint(eager = false)
       interim += dead
-      var deadRows = dead.count()
+      var deadRows = rowCount(dead)
       dbg(s"init dead=$deadRows")
       // death-propagation frame: a row (src, dst, tag) means "src's
       // death decrements dst's din (tag=i: src→dst edge) or dout
@@ -6196,9 +6207,9 @@ object Analytics {
           interim += alive
           dead = alive.filter(col("din") <= 0 || col("dout") <= 0)
             .select("id")
-            .localCheckpoint(eager = true)
+            .localCheckpoint(eager = false)
           interim += dead
-          deadRows = dead.count()
+          deadRows = rowCount(dead)
           dbg(s"trim round $t (survivor recompute) dead=$deadRows")
         } else {
         val dec = er.join(gated(dead.toDF("src"), n), Seq("src"))
@@ -6219,13 +6230,13 @@ object Analytics {
           .select(col("id"),
             (col("din") - coalesce(col("ci"), lit(0L))).as("din"),
             (col("dout") - coalesce(col("co"), lit(0L))).as("dout"))
-          .localCheckpoint(eager = false) // materializes under dead's job
+          .localCheckpoint(eager = false) // materializes under dead's probe
         interim += alive2
         dead = alive2.filter(col("din") <= 0 || col("dout") <= 0)
           .select("id")
-          .localCheckpoint(eager = true)
+          .localCheckpoint(eager = false)
         interim += dead
-        deadRows = dead.count()
+        deadRows = rowCount(dead)
         dbg(s"trim round $t dead=$deadRows")
         alive = alive2
         }
@@ -6342,7 +6353,7 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     var c = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     val interim = scala.collection.mutable.ArrayBuffer[DataFrame](c)
     var changed = 1L
     var round = 0
@@ -6361,7 +6372,7 @@ object Analytics {
     // which exceeds the full recompute's one aligned pass — kcore's
     // delta pays off because its survivor set shrinks the frame
     // itself; h-iteration's frame never shrinks.
-    val nValues = c.count()
+    val nValues = rowCount(c)
     try {
       while (round < coreRounds && changed > 0) {
         round += 1
@@ -6392,15 +6403,16 @@ object Analytics {
             Window.partitionBy("id").orderBy(col("cb").desc)))
           .groupBy("id")
           .agg(max(least(col("cb"), col("f"))).as("c"))
-          .localCheckpoint(eager = true)
+          .localCheckpoint(eager = false)
         interim += h
         // monotone ⇒ a no-change round is a provable fixpoint; the
-        // count also feeds the n_unstable audit column (gated: both
-        // sides are node-bounded — the ungated join paid two exchanges
-        // per round)
-        changed = h.join(gated(c.withColumnRenamed("c", "cp"), nValues),
-            Seq("id"))
-          .filter(col("c") =!= col("cp")).count()
+        // probe (h streams past the gated broadcast of c, so every
+        // partition of h is scanned) also feeds the n_unstable audit
+        // column, so the last round keeps it (gated: both sides are
+        // node-bounded — the ungated join paid two exchanges per round)
+        changed = rowCount(
+          h.join(gated(c.withColumnRenamed("c", "cp"), nValues), Seq("id"))
+            .filter(col("c") =!= col("cp")))
         if (sys.env.contains("SPARK_GRAFT_DEBUG"))
           System.err.println(s"[core] round $round changed=$changed t=${(System.nanoTime() - t0) / 1e9}")
         c = h
@@ -6542,8 +6554,8 @@ object Analytics {
   def conductance: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = nodes.count()
-    val u = und.count()
+    val n = rowCount(nodes)
+    val u = rowCount(und)
     val lbl = lpaLabels(s, dir)
     val per = und
       .join(gated(lbl.toDF("a", "ca"), n), Seq("a"))

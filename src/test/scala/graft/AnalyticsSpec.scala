@@ -72,6 +72,38 @@ class AnalyticsSpec extends AnyFunSuite {
     }
   }
 
+  test("kcore: matches an in-memory replay of the synchronous peeling rounds") {
+    // exact model of the operator's contract (the oracle's unrolled
+    // CTE): round i keeps the nodes whose degree among round i−1's
+    // survivors is >= k, counting the undirected multigraph edge list
+    // (both directions of every stored edge). The deg >= k check above
+    // would pass a wrong peel; this compares every (label, key, deg).
+    val g = PropertyGraph.load(spark, sf)
+    val und = g.edges
+      .select("src_label", "src_key", "dst_label", "dst_key").collect()
+      .flatMap { r =>
+        val a = (r.getString(0), r.getLong(1))
+        val b = (r.getString(2), r.getLong(3))
+        Seq(a -> b, b -> a)
+      }
+    var alive = g.nodes.select("label", "key").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    var deg = Map.empty[(String, Long), Long]
+    for (_ <- 1 to Analytics.kcoreIters) {
+      deg = und.filter { case (a, b) => alive(a) && alive(b) }
+        .groupBy(_._1).map { case (a, es) => a -> es.length.toLong }
+        .filter(_._2 >= Analytics.kcoreK)
+      alive = deg.keySet
+    }
+    val got = SparkEntry.queries("g_kcore")(spark, sf).collect()
+      .map(r => (r.getAs[String]("label"), r.getAs[Long]("key"),
+        r.getAs[Long]("deg")))
+    val want = deg.toSeq.map { case ((l, k), d) => (l, k, d) }
+    assert(want.nonEmpty, "3-core unexpectedly empty")
+    assert(got.length == got.distinct.length, "duplicate survivor rows")
+    assert(got.sorted.toSeq == want.sorted)
+  }
+
   test("hits: synthetic 1e6-degree hub does not wrap BIGINT") {
     // star graph: 10^6 spokes each pointing at one hub. The round-3
     // unnormalized contract grew ~SCALE·deg⁴ and wrapped negative at
