@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Immutable property-graph snapshot: two DataFrames.
   *
@@ -269,10 +270,6 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     var results: Option[DataFrame] = None
     var depth = 0
     var frontierRows = 1L
-    // per-call level checkpoints, freed after the final result
-    // materializes (see return below) — without this every pathsTo call
-    // pinned its levels' blocks for the session lifetime
-    val levels = scala.collection.mutable.Buffer.empty[DataFrame]
     // ---- ADAPTIVE backward-distance pruning (bidirectional search) --
     // dist(v) = min hops v ⇝ dst over the SAME traversable edge set,
     // from a node-bounded backward BFS (distinct nodes, never paths).
@@ -296,7 +293,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     // maxDepth−1 node-bounded rounds to cut path-count-sized work.
     var pruneDist: Option[DataFrame] = None
     var distRef: Option[DistEntry] = None
-    try {
+    try PropertyGraph.withCheckpoints { ck =>
     while (depth < maxDepth && frontierRows > 0) {
       if (pruneDist.isEmpty && frontierRows > pruneActivationRows) {
         val en = acquireDistances(e, dstLabel, dstKey, nodeLabels,
@@ -327,7 +324,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       // checkpoint is lazy: the frontier probe below materializes it in
       // the job that counts it, and the last level's blocks are written
       // by the result's own eager checkpoint (the Analytics round rule).
-      val step = eStep.join(fr,
+      val step = ck.lazily(eStep.join(fr,
           col("a_label") === col("cur_label") &&
           col("a_key") === col("cur_key"))
         .withColumn("b_id", concat(col("b_label"), lit(":"), col("b_key")))
@@ -341,9 +338,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
           // the edge list, not just node ids (Neo4jGraph.scala:85-95)
           when(col("depth") === 0, col("elabel"))
             .otherwise(concat(col("elabels"), lit(">"), col("elabel")))
-            .as("elabels"))
-        .localCheckpoint(eager = false)
-      levels += step
+            .as("elabels")))
       val done = step.filter(col("cur_label") === dstLabel &&
         col("cur_key") === dstKey)
         .select(col("path"), col("depth"), col("elabels"))
@@ -353,20 +348,12 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       if (depth < maxDepth) frontierRows = PropertyGraph.rowCount(frontier)
     }
     // materialize the (path-count-sized, small) result as its OWN
-    // checkpoint, then free every intermediate level's blocks — the
-    // round-1 release discipline the r4 advisor flagged as lost:
-    // returning filters over the level checkpoints pinned every level
-    // in the block manager until session end. The free runs in the
-    // finally so an exception mid-search (OOM, cancelled job) releases
-    // the levels too — Bench deliberately keeps the session alive past
-    // per-query failures, so an error-path leak would pin every level
-    // for the rest of the run.
+    // checkpoint before the scope frees the levels: returning filters
+    // over the level checkpoints pinned every level in the block
+    // manager until session end
     (if (withEdgeLabels) results.get
      else results.get.drop("elabels")).localCheckpoint(eager = true)
-    } finally {
-      levels.foreach(PropertyGraph.freeLocalCheckpoint)
-      distRef.foreach(releaseDistances)
-    }
+    } finally distRef.foreach(releaseDistances)
   }
 
   /** BOUNDED (LRU, `distMemoCap` entries) memo for backward-distance
@@ -464,15 +451,14 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
                              lookout: Int): (DataFrame, Long) = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    var dist = Seq((dstLabel, dstKey, 0))
+    PropertyGraph.withCheckpoints { ck =>
+    var dist = ck.own(Seq((dstLabel, dstKey, 0))
       .toDF("b_label", "b_key", "b_dist")
-      .localCheckpoint(eager = true)
-    val levels = scala.collection.mutable.Buffer(dist)
+      .localCheckpoint(eager = true))
     var frontier = dist
     var frontierRows = 1L
     var total = 1L
     var d = 0
-    try {
     while (d < lookout - 1 && frontierRows > 0) {
       d += 1
       val fr = if (frontierRows <= broadcastRowCap) broadcast(frontier)
@@ -483,12 +469,10 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       val cand = if (nodeLabels.isEmpty) cand0
                  else cand0.filter(
                    col("b_label").isInCollection(nodeLabels :+ srcLabel))
-      val next = cand.join(
+      val next = ck.lazily(cand.join(
           if (total <= broadcastRowCap) broadcast(dist) else dist,
           Seq("b_label", "b_key"), "left_anti")
-        .withColumn("b_dist", lit(d))
-        .localCheckpoint(eager = false)
-      levels += next
+        .withColumn("b_dist", lit(d)))
       if (d < lookout - 1) {
         frontierRows = PropertyGraph.rowCount(next)
         total += frontierRows
@@ -498,11 +482,10 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     }
     // collapse the per-level union into ONE checkpointed leaf (what the
     // memo stores and eviction frees); its probe is the exact total and
-    // materializes the last level too. The level blocks release in the
-    // finally so an exception mid-BFS frees them too
+    // materializes the last level before the scope frees the levels
     val out = dist.localCheckpoint(eager = false)
     (out, PropertyGraph.rowCount(out))
-    } finally levels.foreach(PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   /** Structured Path view — the reference's `Path` (start node +
@@ -547,7 +530,35 @@ object PropertyGraph {
           lr.rdd.unpersist(blocking = false)
         case _ => ()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
+
+  /** The local checkpoints of one operator call, released together by
+    * `withCheckpoints`. One scope per call; not shared across threads. */
+  private[graft] final class Checkpoints private[PropertyGraph] () {
+    private[PropertyGraph] val held =
+      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `df.localCheckpoint(eager = false)`, released with the scope. */
+    def lazily(df: DataFrame): DataFrame =
+      own(df.localCheckpoint(eager = false))
+
+    /** Registers a frame checkpointed elsewhere (an eager checkpoint, a
+      * helper's result) for release with the scope. */
+    def own(df: DataFrame): DataFrame = { held += df; df }
+  }
+
+  /** Runs `body` with a fresh checkpoint scope and frees every frame
+    * registered in it when the body ends, normally or by exception.
+    * A returned frame must not read a registered one lazily: the
+    * operators materialize their result as its own eager checkpoint
+    * inside the body. Release runs on the error path too (an OOM or a
+    * cancelled job mid-loop) because Bench keeps the session alive past
+    * per-query failures: an error-path leak would pin every round's
+    * blocks for the rest of the run. */
+  private[graft] def withCheckpoints[T](body: Checkpoints => T): T = {
+    val ck = new Checkpoints
+    try body(ck) finally ck.held.foreach(freeLocalCheckpoint)
+  }
 
   /** Row count of `df` in ONE Spark job: per-partition counts summed on
     * the driver. `Dataset.count()` under AQE costs two jobs (the

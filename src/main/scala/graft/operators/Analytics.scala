@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.PropertyGraph
-import graft.model.PropertyGraph.rowCount
+import graft.model.PropertyGraph.{Checkpoints, rowCount, withCheckpoints}
 
 /** Graph analytics (SURVEY.md §2 B-block): fixed-iteration DataFrame
   * loops so the DuckDB oracle (programmatically unrolled CTE chain) is
@@ -40,6 +40,12 @@ import graft.model.PropertyGraph.rowCount
   *   assertion, an audit column, a later gate) stays.
   * Every other scalar count goes through `rowCount` too:
   * `Dataset.count()` costs two jobs under AQE, `rowCount` one.
+  * Where the rule lives: `deltaFixpoint` runs the semi-naive delta
+  * loops (ccLabels, SSSP, widest path, topo levels, k-core) and owns
+  * their round counter, lazy checkpoint, probe and last-round drop;
+  * every loop registers its checkpoints in one
+  * `PropertyGraph.withCheckpoints` scope, which frees them when the
+  * operator returns or throws.
   */
 object Analytics {
   type Q = (SparkSession, String) => DataFrame
@@ -70,6 +76,36 @@ object Analytics {
       System.err.println(
         f"[$tag] t=${(System.nanoTime() - dbgT0.get()) / 1e9}%.2f $msg")
     }
+
+  /** SEMI-NAIVE FIXPOINT: the round mechanics of the delta loops
+    * (ccLabels, SSSP, widest path, topo levels, k-core), written once;
+    * each caller supplies only its step and the two slices of a round
+    * frame. Starting from `state` and its `delta` of `rows` rows, a
+    * round builds `step(state, delta, rows)`, checkpoints it lazily in
+    * `ck`, and slices the next delta (`deltaOf`) and state (`stateOf`)
+    * out of it. The next delta's `rowCount` is the round's one job: it
+    * materializes the checkpoint, ends the loop at zero, and is the next
+    * step's `gated` operand. The last permitted round drops that probe
+    * unless `keepLastProbe` (then the returned count is exact).
+    * `round` is the number of rounds `state` already stands for.
+    * Returns the final state and the last probed delta count. */
+  private def deltaFixpoint(ck: Checkpoints, tag: String, iters: Int,
+      state: DataFrame, delta: DataFrame, rows: Long, round: Int = 0,
+      keepLastProbe: Boolean = false)(
+      step: (DataFrame, DataFrame, Long) => DataFrame,
+      deltaOf: DataFrame => DataFrame,
+      stateOf: DataFrame => DataFrame): (DataFrame, Long) = {
+    var (st, d, n, r) = (state, delta, rows, round)
+    while (r < iters && n > 0) {
+      r += 1
+      val frame = ck.lazily(step(st, d, n))
+      d = deltaOf(frame)
+      if (r < iters || keepLastProbe) n = rowCount(d)
+      st = stateOf(frame)
+      dbgPhase(tag, s"round $r delta=$n")
+    }
+    (st, n)
+  }
 
   /** Exact-moments accumulator type (see g_assortativity / q_corr). */
   private val DecimalType38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -528,18 +564,11 @@ object Analytics {
     * broadcast ceiling — there, pre-partition und and comp on the join
     * key (bucketed tables) so rounds reuse the partitioning; delta
     * still shrinks geometrically, which is what survives 100 TB.
-    * Returns (id, comp); round blocks land in `interim` for the
-    * caller's finally. */
+    * Returns (id, comp); round blocks are released with `ck`. */
   private def ccLabels(ids: DataFrame, und: DataFrame, iters: Int,
-      interim: scala.collection.mutable.ArrayBuffer[DataFrame],
-      assertConverged: Boolean = false): DataFrame = {
-    var comp = ids.select(col("id"), col("id").as("comp"))
-      .localCheckpoint(eager = false)
-    interim += comp
-    var delta = comp
-    // the termination probe doubles as the broadcast gate input
-    var deltaRows = rowCount(comp)
-    val nTotal = deltaRows
+      ck: Checkpoints, assertConverged: Boolean = false): DataFrame = {
+    val seed = ck.lazily(ids.select(col("id"), col("id").as("comp")))
+    val nTotal = rowCount(seed)
     // BYTE-DERIVED width for the node-bounded round frames (r16, guide
     // §2 scale-adaptive partitioning): comp/merged are ~24 B/row, and
     // at local scale they inherited shuffle.partitions-many near-empty
@@ -550,26 +579,22 @@ object Analytics {
     // partition, capped at the session's parallelism, so at real scale
     // the width grows with bytes exactly as before.
     val compParts = nodeParts(ids.sparkSession, nTotal)
-    comp = comp.coalesce(compParts)
-    var round = 0
-    while (round < iters && deltaRows > 0) {
-      round += 1
-      val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
-        .groupBy(col("b").as("id")).agg(min("comp").as("m"))
-      // cand is node-bounded (one row per touched id) → gate on nTotal.
-      val merged = comp.join(gated(cand, nTotal), Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("m"), col("comp"))).as("comp"),
-          (col("m") < col("comp")).as("chg"))
-        .coalesce(compParts)
-        .localCheckpoint(eager = false)
-      interim += merged
-      delta = merged.filter(col("chg")).select("id", "comp")
-      // the convergence assertion below needs the last round's probe
-      if (round < iters || assertConverged) deltaRows = rowCount(delta)
-      comp = merged.select("id", "comp")
-      dbgPhase("ccl", s"round $round delta=$deltaRows")
-    }
+    // the convergence assertion below needs the last round's probe
+    val (comp, deltaRows) = deltaFixpoint(ck, "ccl", iters,
+        seed.coalesce(compParts), seed, nTotal,
+        keepLastProbe = assertConverged)(
+      step = (comp, delta, deltaRows) => {
+        val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
+          .groupBy(col("b").as("id")).agg(min("comp").as("m"))
+        // cand is node-bounded (one row per touched id) → gate on nTotal.
+        comp.join(gated(cand, nTotal), Seq("id"), "left_outer")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("m"), col("comp"))).as("comp"),
+            (col("m") < col("comp")).as("chg"))
+          .coalesce(compParts)
+      },
+      deltaOf = _.filter(col("chg")).select("id", "comp"),
+      stateOf = _.select("id", "comp"))
     // callers whose CONTRACT depends on reaching the true fixpoint
     // (g_cc_incremental's composed-equals-full-CC exactness) must not
     // silently accept a capped, unconverged label table — a long chain
@@ -585,13 +610,12 @@ object Analytics {
   def connectedComponents: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
-      val comp = ccLabels(nodes.select("id"), und, ccIters, interim)
+    withCheckpoints { ck =>
+      val comp = ccLabels(nodes.select("id"), und, ccIters, ck)
       nodes.join(comp, Seq("id"))
         .select("label", "key", "comp").orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val connectedComponentsSql: String = {
@@ -599,13 +623,7 @@ object Analytics {
     b ++= s""", ids AS (
              | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
              |), und AS (
-             | SELECT (CASE WHEN src_label = 'region' THEN 0 WHEN src_label = 'nation' THEN 1 WHEN src_label = 'customer' THEN 2 WHEN src_label = 'supplier' THEN 3 WHEN src_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + src_key AS a,
-             |        (CASE WHEN dst_label = 'region' THEN 0 WHEN dst_label = 'nation' THEN 1 WHEN dst_label = 'customer' THEN 2 WHEN dst_label = 'supplier' THEN 3 WHEN dst_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + dst_key AS b
-             | FROM edges
-             | UNION ALL
-             | SELECT (CASE WHEN dst_label = 'region' THEN 0 WHEN dst_label = 'nation' THEN 1 WHEN dst_label = 'customer' THEN 2 WHEN dst_label = 'supplier' THEN 3 WHEN dst_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + dst_key,
-             |        (CASE WHEN src_label = 'region' THEN 0 WHEN src_label = 'nation' THEN 1 WHEN src_label = 'customer' THEN 2 WHEN src_label = 'supplier' THEN 3 WHEN src_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + src_key
-             | FROM edges
+             | SELECT $undSqlPair
              |), c0 AS (SELECT label, key, id, id AS comp FROM ids)""".stripMargin
     for (i <- 1 to ccIters) {
       b ++= s""", m$i AS (
@@ -665,8 +683,7 @@ object Analytics {
     // stopped sessions' entries)
     graft.model.SessionMemo.getOrBuild(ccIncBaseCache, (s, dir))({
       val (nodes, undW) = numericGraph(s, dir)
-      val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      try {
+      withCheckpoints { ck =>
         // canonical-pair hash splits BOTH directions of an edge together
         val und = undW.select(col("a"), col("b"),
           (graft.functions.VectorExprs.hexSlice(
@@ -675,18 +692,17 @@ object Analytics {
             % ccIncDeltaMod).as("hm"))
           .localCheckpoint(eager = true)
         val base = und.filter(col("hm") =!= 0).select("a", "b")
-        val baseL = ccLabels(nodes.select("id"), base, ccIters, interim,
+        val baseL = ccLabels(nodes.select("id"), base, ccIters, ck,
             assertConverged = true)
           .localCheckpoint(eager = true) // read 3×: both endpoints + final
         (und, baseL) // pinned by the memo (bounded: one per session+dir)
-      } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+      }
     })
 
   def ccIncremental: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val (und, baseL) = ccIncBase(s, dir)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       val deltaE = und.filter(col("hm") === 0).select("a", "b")
       // stage 2: the batch merge — everything below is delta-bounded.
       // Broadcast the DELTA side (row count known small by
@@ -697,14 +713,13 @@ object Analytics {
       // 100 TB baseL is the table that outgrows the broadcast ceiling.
       val dRows = rowCount(deltaE) // prune of the eager und checkpoint
       val halfA = baseL.toDF("a", "ca").join(gated(deltaE, dRows), Seq("a"))
-      val dSup = baseL.toDF("b", "cb").join(gated(halfA, dRows), Seq("b"))
+      val dSup = ck.own(baseL.toDF("b", "cb").join(gated(halfA, dRows), Seq("b"))
         .filter(col("ca") =!= col("cb"))
         .select(col("ca").as("a"), col("cb").as("b"))
         .distinct()
-        .localCheckpoint(eager = true)
-      interim += dSup
+        .localCheckpoint(eager = true))
       val supIds = dSup.select(col("a").as("id")).distinct()
-      val supL = ccLabels(supIds, dSup, ccIncSuperIters, interim,
+      val supL = ccLabels(supIds, dSup, ccIncSuperIters, ck,
         assertConverged = true)
       nodes.join(baseL, Seq("id"))
         .join(gated(supL.toDF("comp", "root"), dRows), Seq("comp"), "left_outer")
@@ -712,7 +727,7 @@ object Analytics {
           coalesce(col("root"), col("comp")).as("comp"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val ccIncrementalSql: String = {
@@ -998,18 +1013,14 @@ object Analytics {
       .filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(0).as("depth"))
     var frontier = dist.select("id")
-    // level blocks release in the finally (block-retention discipline)
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    withCheckpoints { ck =>
       for (i <- 1 to bfsIters) {
-        val next = und.join(gated(frontier.withColumnRenamed("id", "a"), n), Seq("a"))
+        val next = ck.lazily(
+          und.join(gated(frontier.withColumnRenamed("id", "a"), n), Seq("a"))
           .select(col("b").as("id")).distinct()
           .join(gated(dist.select("id"), n), Seq("id"), "left_anti")
-          .withColumn("depth", lit(i))
-          .localCheckpoint(eager = false)
-        dist = dist.unionByName(next).localCheckpoint(eager = false)
-        interim += next
-        interim += dist
+          .withColumn("depth", lit(i)))
+        dist = ck.lazily(dist.unionByName(next))
         frontier = next.select("id")
       }
       val out = nodes.join(dist, Seq("id"))
@@ -1018,7 +1029,7 @@ object Analytics {
       // a checkpoint leaf that hides the join shape)
       bfsAuditPlans.put((s, dir), out.queryExecution.executedPlan.toString)
       out.localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   // --------------------------------------------------------------- g_mis
@@ -1050,11 +1061,10 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     val n = rowCount(nodes)
-    var undecided = nodes.select("id", "label", "key")
-      .localCheckpoint(eager = true)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](undecided)
     val winners = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
+      var undecided = ck.own(nodes.select("id", "label", "key")
+        .localCheckpoint(eager = true))
       var round = 0
       var uRows = n
       while (round < misRounds && uRows > 0) {
@@ -1071,25 +1081,22 @@ object Analytics {
             col("label").as("lb"), col("key").as("kb")), uRows), Seq("b"))
           .groupBy(col("a").as("id"))
           .agg(min(struct(col("hb"), col("lb"), col("kb"))).as("m"))
-        val win = pri.join(gated(nbrMin, uRows), Seq("id"), "left_outer")
+        val win = ck.own(pri.join(gated(nbrMin, uRows), Seq("id"), "left_outer")
           .filter(col("m").isNull ||
             struct(col("h"), col("label"), col("key")) < col("m"))
           .select(col("id"), col("label"), col("key"),
             lit(round.toLong).as("round_joined"))
           .coalesce(nodeParts(s, uRows)) // r16 width rule
-          .localCheckpoint(eager = true)
-        interim += win
+          .localCheckpoint(eager = true))
         winners += win
         val retired = und
           .join(gated(win.select(col("id").as("a")), uRows), Seq("a"),
             "left_semi")
           .select(col("b").as("id")).distinct()
-        undecided = undecided
+        undecided = ck.lazily(undecided
           .join(win.select("id"), Seq("id"), "left_anti")
           .join(retired, Seq("id"), "left_anti")
-          .coalesce(nodeParts(s, uRows)) // r16 width rule
-          .localCheckpoint(eager = false)
-        interim += undecided
+          .coalesce(nodeParts(s, uRows))) // r16 width rule
         if (round < misRounds) uRows = rowCount(undecided)
       }
       val misSet = winners.reduceOption(_.unionByName(_)) match {
@@ -1105,7 +1112,7 @@ object Analytics {
           coalesce(col("round_joined"), lit(0L)).as("round_joined"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val misSql: String = {
@@ -1285,40 +1292,32 @@ object Analytics {
     // against the edge list; the naive shape re-relaxed ALL settled
     // nodes every round (6 full edge joins). Round-identical to the
     // unrolled oracle; delta empty ⇒ all remaining rounds are no-ops.
-    var dist = nodes
-      .filter(col("label") === "region" && col("key") === 0L)
-      .select(col("id"), lit(0L).as("d"))
-      .localCheckpoint(eager = false)
-    var delta = dist
-    var deltaRows = rowCount(delta)
-    var round = 0
-    // round blocks release in the finally (block-retention discipline)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](dist)
-    try {
-      while (round < ssspIters && deltaRows > 0) {
-        round += 1
-        // delta is frontier-bounded (≤ node count, shrinking past the
-        // graph's weighted diameter) — the hint is gated on the count
-        // already materialized for termination; past the cap the join
-        // shuffles (at 100× pre-partition und + dist on the id instead)
-        val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
-          .groupBy(col("b").as("id")).agg(min(col("d") + col("w")).as("m"))
-        // full-outer merge: relaxations can REACH new nodes (no dist row
-        // yet), unlike CC where comp starts with every node
-        val merged = dist.join(cand, Seq("id"), "full_outer")
-          .select(col("id"),
-            least(coalesce(col("d"), col("m")), coalesce(col("m"), col("d"))).as("nd"),
-            coalesce(col("m") < col("d"), col("d").isNull).as("chg"))
-          .localCheckpoint(eager = false)
-        interim += merged
-        delta = merged.filter(col("chg")).select(col("id"), col("nd").as("d"))
-        if (round < ssspIters) deltaRows = rowCount(delta)
-        dist = merged.select(col("id"), col("nd").as("d"))
-      }
+    withCheckpoints { ck =>
+      val seed = ck.lazily(nodes
+        .filter(col("label") === "region" && col("key") === 0L)
+        .select(col("id"), lit(0L).as("d")))
+      val (dist, _) = deltaFixpoint(ck, "sssp", ssspIters,
+          seed, seed, rowCount(seed))(
+        step = (dist, delta, deltaRows) => {
+          // delta is frontier-bounded (≤ node count, shrinking past the
+          // graph's weighted diameter) — the hint is gated on the count
+          // already materialized for termination; past the cap the join
+          // shuffles (at 100× pre-partition und + dist on the id instead)
+          val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
+            .groupBy(col("b").as("id")).agg(min(col("d") + col("w")).as("m"))
+          // full-outer merge: relaxations can REACH new nodes (no dist row
+          // yet), unlike CC where comp starts with every node
+          dist.join(cand, Seq("id"), "full_outer")
+            .select(col("id"),
+              least(coalesce(col("d"), col("m")), coalesce(col("m"), col("d"))).as("nd"),
+              coalesce(col("m") < col("d"), col("d").isNull).as("chg"))
+        },
+        deltaOf = _.filter(col("chg")).select(col("id"), col("nd").as("d")),
+        stateOf = _.select(col("id"), col("nd").as("d")))
       nodes.join(dist, Seq("id"))
         .select("label", "key", "d").orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   // ------------------------------------------------------ g_widest_path
@@ -1341,34 +1340,27 @@ object Analytics {
 
   def widestPath: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    var cap = nodes
-      .filter(col("label") === "region" && col("key") === 0L)
-      .select(col("id"), lit(widestInf).as("c"))
-      .localCheckpoint(eager = false)
-    var delta = cap
-    var deltaRows = rowCount(delta)
-    var round = 0
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](cap)
-    try {
-      while (round < ssspIters && deltaRows > 0) {
-        round += 1
-        val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
-          .groupBy(col("b").as("id")).agg(max(least(col("c"), col("w"))).as("m"))
-        val merged = cap.join(cand, Seq("id"), "full_outer")
-          .select(col("id"),
-            greatest(coalesce(col("c"), col("m")),
-              coalesce(col("m"), col("c"))).as("nc"),
-            coalesce(col("m") > col("c"), col("c").isNull).as("chg"))
-          .localCheckpoint(eager = false)
-        interim += merged
-        delta = merged.filter(col("chg")).select(col("id"), col("nc").as("c"))
-        if (round < ssspIters) deltaRows = rowCount(delta)
-        cap = merged.select(col("id"), col("nc").as("c"))
-      }
+    withCheckpoints { ck =>
+      val seed = ck.lazily(nodes
+        .filter(col("label") === "region" && col("key") === 0L)
+        .select(col("id"), lit(widestInf).as("c")))
+      val (cap, _) = deltaFixpoint(ck, "widest", ssspIters,
+          seed, seed, rowCount(seed))(
+        step = (cap, delta, deltaRows) => {
+          val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
+            .groupBy(col("b").as("id")).agg(max(least(col("c"), col("w"))).as("m"))
+          cap.join(cand, Seq("id"), "full_outer")
+            .select(col("id"),
+              greatest(coalesce(col("c"), col("m")),
+                coalesce(col("m"), col("c"))).as("nc"),
+              coalesce(col("m") > col("c"), col("c").isNull).as("chg"))
+        },
+        deltaOf = _.filter(col("chg")).select(col("id"), col("nc").as("c")),
+        stateOf = _.select(col("id"), col("nc").as("c")))
       nodes.join(cap, Seq("id"))
         .select("label", "key", "c").orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val widestPathSql: String = {
@@ -1404,15 +1396,7 @@ object Analytics {
     b ++= s""", ids AS (
              | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
              |), undw AS (
-             | SELECT (CASE WHEN src_label = 'region' THEN 0 WHEN src_label = 'nation' THEN 1 WHEN src_label = 'customer' THEN 2 WHEN src_label = 'supplier' THEN 3 WHEN src_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + src_key AS a,
-             |        (CASE WHEN dst_label = 'region' THEN 0 WHEN dst_label = 'nation' THEN 1 WHEN dst_label = 'customer' THEN 2 WHEN dst_label = 'supplier' THEN 3 WHEN dst_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + dst_key AS b,
-             |        weight AS w
-             | FROM edges
-             | UNION ALL
-             | SELECT (CASE WHEN dst_label = 'region' THEN 0 WHEN dst_label = 'nation' THEN 1 WHEN dst_label = 'customer' THEN 2 WHEN dst_label = 'supplier' THEN 3 WHEN dst_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + dst_key,
-             |        (CASE WHEN src_label = 'region' THEN 0 WHEN src_label = 'nation' THEN 1 WHEN src_label = 'customer' THEN 2 WHEN src_label = 'supplier' THEN 3 WHEN src_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + src_key,
-             |        weight
-             | FROM edges
+             | SELECT $undSqlPairW
              |), s0 AS (
              | SELECT id, CAST(0 AS BIGINT) AS d FROM ids
              | WHERE label = 'region' AND key = 0
@@ -1467,8 +1451,7 @@ object Analytics {
     // per-round lazy checkpoints are dead once the final eager frame
     // collapses the chain — free them so the memo pins ONE frame, not
     // lpaIters of them (nationBfs/pathsTo discipline)
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    withCheckpoints { ck =>
     for (_ <- 1 to lpaIters) {
       val counts = und.join(gated(lbl.withColumnRenamed("id", "a"), n), Seq("a"))
         .groupBy(col("b").as("id"), col("lbl")).agg(count(lit(1)).as("n"))
@@ -1488,13 +1471,11 @@ object Analytics {
       // reference reads the stored blocks — no re-execution, no extra
       // job. The memoized final frame is eager so sharers (modularity)
       // never trigger a build mid-query.
-      lbl = lbl.join(gated(mode, n), Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("m"), col("lbl")).as("lbl"))
-        .localCheckpoint(eager = false)
-      rounds += lbl
+      lbl = ck.lazily(lbl.join(gated(mode, n), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("m"), col("lbl")).as("lbl")))
     }
     lbl.localCheckpoint(eager = true)
-    } finally rounds.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   def labelPropagation: Q = (s, dir) => {
@@ -1538,13 +1519,7 @@ object Analytics {
     b ++= s""", ids AS (
              | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
              |), und AS (
-             | SELECT (CASE WHEN src_label = 'region' THEN 0 WHEN src_label = 'nation' THEN 1 WHEN src_label = 'customer' THEN 2 WHEN src_label = 'supplier' THEN 3 WHEN src_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + src_key AS a,
-             |        (CASE WHEN dst_label = 'region' THEN 0 WHEN dst_label = 'nation' THEN 1 WHEN dst_label = 'customer' THEN 2 WHEN dst_label = 'supplier' THEN 3 WHEN dst_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + dst_key AS b
-             | FROM edges
-             | UNION ALL
-             | SELECT (CASE WHEN dst_label = 'region' THEN 0 WHEN dst_label = 'nation' THEN 1 WHEN dst_label = 'customer' THEN 2 WHEN dst_label = 'supplier' THEN 3 WHEN dst_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + dst_key,
-             |        (CASE WHEN src_label = 'region' THEN 0 WHEN src_label = 'nation' THEN 1 WHEN src_label = 'customer' THEN 2 WHEN src_label = 'supplier' THEN 3 WHEN src_label = 'part' THEN 4 ELSE 5 END) * 10000000000000 + src_key
-             | FROM edges
+             | SELECT $undSqlPair
              |)""".stripMargin
     b ++= lpaSqlChainOn("ids", "und", "")
     b.toString
@@ -1672,34 +1647,31 @@ object Analytics {
     // identity) → early exit, the CC delta-drain argument. Edge-less
     // nodes have no row in any round frame: they never qualify and
     // have no incident edges to subtract.
-    var deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
     def removed(f: DataFrame) = f.filter(col("deg") < kcoreK).select("id")
-    // round blocks release in the finally (block-retention discipline)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](deg)
-    try {
-      var removedRows = rowCount(removed(deg))
-      var round = 1
-      while (round < kcoreIters && removedRows > 0) {
-        round += 1
-        // removed is bounded by the probe's count — gate the hint on it
-        // (same discipline as SSSP)
-        val drops = und
-          .join(gated(removed(deg).withColumnRenamed("id", "b"), removedRows),
-            Seq("b"))
-          .groupBy(col("a").as("id")).agg(count(lit(1)).as("drop"))
-        deg = deg.filter(col("deg") >= kcoreK)
-          .join(drops, Seq("id"), "left_outer")
-          .select(col("id"),
-            (col("deg") - coalesce(col("drop"), lit(0L))).as("deg"))
-          .localCheckpoint(eager = false)
-        interim += deg
-        if (round < kcoreIters) removedRows = rowCount(removed(deg))
-      }
+    withCheckpoints { ck =>
+      // the full-edge degree pass is round 1
+      val deg1 = ck.lazily(
+        und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg")))
+      val (deg, _) = deltaFixpoint(ck, "kcore", kcoreIters,
+          deg1, removed(deg1), rowCount(removed(deg1)), round = 1)(
+        step = (deg, removedIds, removedRows) => {
+          // removed is bounded by the probe's count — gate the hint on it
+          // (same discipline as SSSP)
+          val drops = und
+            .join(gated(removedIds.withColumnRenamed("id", "b"), removedRows),
+              Seq("b"))
+            .groupBy(col("a").as("id")).agg(count(lit(1)).as("drop"))
+          deg.filter(col("deg") >= kcoreK)
+            .join(drops, Seq("id"), "left_outer")
+            .select(col("id"),
+              (col("deg") - coalesce(col("drop"), lit(0L))).as("deg"))
+        },
+        deltaOf = removed,
+        stateOf = identity)
       nodes.join(deg.filter(col("deg") >= kcoreK), Seq("id"))
         .select("label", "key", "deg").orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val kcoreSql: String = {
@@ -1808,22 +1780,17 @@ object Analytics {
   private[graft] def hitsOn(nodes: DataFrame, e: DataFrame, n: Long): DataFrame = {
     var h = nodes.withColumn("h", lit(hitsScale))
     var a = nodes.withColumn("a", lit(0L)) // replaced round 1
-    // half-round checkpoints release in the finally (the block-
-    // retention discipline); the returned frame is its own eager
-    // checkpoint so nothing it references is freed
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    withCheckpoints { ck =>
     def norm(raw: DataFrame): DataFrame = {
       // LAZY checkpoint: r feeds both the scalar max and the rescaled
       // values — lazy materializes on the max's broadcast build and the
       // value side reads the stored blocks, without the blocking job an
       // eager checkpoint adds per half-round (4 of them per query)
-      val r = raw.localCheckpoint(eager = false)
-      interim += r
+      val r = ck.lazily(raw)
       r.crossJoin(broadcast(r.agg(max("s").as("mx"))))
         .select(col("id"),
           expr(s"s div greatest(1, mx div $hitsScale)").as("s"))
     }
-    try {
     // Rounds carry SPARSE score vectors: a node absent from the
     // aggregate holds score 0, and 0 contributes nothing to the next
     // half-round's sum — so the dense fill-with-zeros join is deferred
@@ -1845,7 +1812,7 @@ object Analytics {
       .select(col("id"), coalesce(col("a"), lit(0L)).as("a"),
         coalesce(col("h"), lit(0L)).as("h"))
       .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   def hits: Q = (s, dir) => {
@@ -1998,14 +1965,12 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     val n = rowCount(nodes)
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def norm(raw: DataFrame): DataFrame = {
-      val r = raw.localCheckpoint(eager = false) // feeds max + values
-      interim += r
-      r.crossJoin(broadcast(r.agg(max("s").as("mx"))))
-        .select(col("id"), expr(s"s div greatest(1, mx div $hitsScale)").as("x"))
-    }
-    try {
+    withCheckpoints { ck =>
+      def norm(raw: DataFrame): DataFrame = {
+        val r = ck.lazily(raw) // feeds max + values
+        r.crossJoin(broadcast(r.agg(max("s").as("mx"))))
+          .select(col("id"), expr(s"s div greatest(1, mx div $hitsScale)").as("x"))
+      }
       var x = nodes.select(col("id")).withColumn("x", lit(hitsScale))
       for (_ <- 1 to eigenIters)
         x = norm(und
@@ -2016,7 +1981,7 @@ object Analytics {
           coalesce(col("x"), lit(0L)).as("x"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val eigencentralitySql: String = {
@@ -2071,31 +2036,25 @@ object Analytics {
     graft.model.SessionMemo.getOrBuild(nationBfsCache, (s, dir)) {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
-      val seeds = nodes.filter(col("label") === "nation")
-        .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
-        .localCheckpoint(eager = true)
-      var vis = seeds
-      var frontier = seeds
       // per-level frames are only needed until the final eager
       // checkpoint collapses the chain — free their blocks after
       // (pathsTo discipline; the memo pins ONLY the collapsed frame)
-      val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      try {
+      withCheckpoints { ck =>
+        val seeds = ck.own(nodes.filter(col("label") === "nation")
+          .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
+          .localCheckpoint(eager = true))
+        var vis = seeds
+        var frontier = seeds
         for (i <- 1 to closenessHops) {
-          val next = und.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
+          val next = ck.lazily(
+            und.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
             .select(col("seed"), col("b").as("node")).distinct()
             .join(vis.select("seed", "node"), Seq("seed", "node"), "left_anti")
-            .withColumn("d", lit(i))
-            .localCheckpoint(eager = false)
-          vis = vis.unionByName(next).localCheckpoint(eager = false)
-          levels += next
-          levels += vis
+            .withColumn("d", lit(i)))
+          vis = ck.lazily(vis.unionByName(next))
           frontier = next
         }
         vis.localCheckpoint(eager = true)
-      } finally {
-        levels.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
-        graft.model.PropertyGraph.freeLocalCheckpoint(seeds)
       }
     }
 
@@ -2205,30 +2164,27 @@ object Analytics {
     // re-ran the per-edge md5 coin over the full cached edge frame at
     // every hop — icHops string-concat+md5 passes for one surviving
     // ~icP% subset
-    val live = undW.select("a", "b")
-      .filter(graft.functions.VectorExprs.hexSlice(
-        md5(concat(lit(icSalt + ":"),
-          least(col("a"), col("b")).cast("string"), lit(":"),
-          greatest(col("a"), col("b")).cast("string"))), 1, 8)
-        % 100 < icP)
-      .localCheckpoint(eager = true)
-    val seeds = nodes.filter(col("label") === "nation" &&
-        col("key") < icSeeds)
-      .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
-      .localCheckpoint(eager = true)
-    var vis = seeds
-    var frontier = seeds
-    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    withCheckpoints { ck =>
+      val live = ck.own(undW.select("a", "b")
+        .filter(graft.functions.VectorExprs.hexSlice(
+          md5(concat(lit(icSalt + ":"),
+            least(col("a"), col("b")).cast("string"), lit(":"),
+            greatest(col("a"), col("b")).cast("string"))), 1, 8)
+          % 100 < icP)
+        .localCheckpoint(eager = true))
+      val seeds = ck.own(nodes.filter(col("label") === "nation" &&
+          col("key") < icSeeds)
+        .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
+        .localCheckpoint(eager = true))
+      var vis = seeds
+      var frontier = seeds
       for (i <- 1 to icHops) {
-        val next = live.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
+        val next = ck.lazily(
+          live.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
           .select(col("seed"), col("b").as("node")).distinct()
           .join(vis.select("seed", "node"), Seq("seed", "node"), "left_anti")
-          .withColumn("d", lit(i))
-          .localCheckpoint(eager = false)
-        vis = vis.unionByName(next).localCheckpoint(eager = false)
-        levels += next
-        levels += vis
+          .withColumn("d", lit(i)))
+        vis = ck.lazily(vis.unionByName(next))
         frontier = next
       }
       val out = vis.filter(col("d") > 0)
@@ -2238,10 +2194,6 @@ object Analytics {
         .select(col("key").as("seed_key"), col("hop"), col("n_new"))
         .orderBy("seed_key", "hop")
         .localCheckpoint(eager = true)
-    } finally {
-      levels.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
-      graft.model.PropertyGraph.freeLocalCheckpoint(seeds)
-      graft.model.PropertyGraph.freeLocalCheckpoint(live)
     }
   }
 
@@ -2529,32 +2481,27 @@ object Analytics {
     val B = betweennessHops
     val (nodes, _) = numericGraph(s, dir)
     val und = simpleUnd(s, dir)
-    val seeds = nodes
-      .filter(col("label") === "nation" && col("key") < betweennessPivots)
-      .select(col("id").as("seed"), col("id").as("node"),
-        lit(0).as("d"), lit(1L).as("sigma"))
-      .localCheckpoint(eager = false)
-    var levels = Vector(seeds)
-    var counts = Vector(rowCount(seeds))
-    var vis = seeds.select("seed", "node")
-    var visRows = counts.last
-    val visChain = scala.collection.mutable.Buffer.empty[DataFrame]
-    var deltas = Map.empty[Int, DataFrame]
-    // per-call parameterized checkpoints → checkpoint the final result,
-    // free every intermediate in finally (error path included) — the
-    // pathsTo discipline; without it each bench run pins the dead
-    // forward-pass blocks until driver GC
-    try {
+    // per-call parameterized checkpoints → checkpoint the final result
+    // and free every intermediate with the scope; without it each bench
+    // run pins the dead forward-pass blocks until driver GC
+    withCheckpoints { ck =>
+      val seeds = ck.lazily(nodes
+        .filter(col("label") === "nation" && col("key") < betweennessPivots)
+        .select(col("id").as("seed"), col("id").as("node"),
+          lit(0).as("d"), lit(1L).as("sigma")))
+      var levels = Vector(seeds)
+      var counts = Vector(rowCount(seeds))
+      var vis = seeds.select("seed", "node")
+      var visRows = counts.last
+      var deltas = Map.empty[Int, DataFrame]
       for (i <- 1 to B) {
         // every level's count gates a backward-pass broadcast, so the
         // last level keeps its probe
-        val next = bcForwardStep(levels.last, counts.last, und, vis, visRows, i)
-          .localCheckpoint(eager = false)
+        val next = ck.lazily(
+          bcForwardStep(levels.last, counts.last, und, vis, visRows, i))
         levels :+= next
         counts :+= rowCount(next)
-        vis = vis.unionByName(next.select("seed", "node"))
-          .localCheckpoint(eager = false)
-        visChain += vis
+        vis = ck.lazily(vis.unionByName(next.select("seed", "node")))
         visRows += counts.last
       }
       // backward pass: deepest level has δ = 0 (pure targets); a node
@@ -2572,8 +2519,9 @@ object Analytics {
         }
         val cur = levels(i)
           .select(col("seed"), col("node").as("a"), col("sigma").as("sigma_v"))
-        deltas += i -> bcBackwardStep(cur, counts(i), und, nxt, counts(i + 1))
-          .localCheckpoint(eager = true)
+        deltas += i -> ck.own(
+          bcBackwardStep(cur, counts(i), und, nxt, counts(i + 1))
+            .localCheckpoint(eager = true))
       }
       val bc = (1 to B - 1).map(deltas(_)).reduce(_.unionByName(_))
         .groupBy("node").agg(sum(col("delta")).as("bc_ppm"))
@@ -2582,9 +2530,6 @@ object Analytics {
         .select(col("label"), col("key"), col("bc_ppm"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally {
-      (levels ++ visChain ++ deltas.values)
-        .foreach(PropertyGraph.freeLocalCheckpoint)
     }
   }
 
@@ -2844,7 +2789,7 @@ object Analytics {
   /** Id-ranked adjacency view (rank + degree per source node), lazily
     * checkpointed because every walk step re-reads it — the shared
     * neighbor-selection substrate of g_random_walk and g_node2vec_walk
-    * (caller frees it in finally, pathsTo discipline). */
+    * (the caller frees it, pathsTo discipline). */
   private def rankedAdj(und: DataFrame): DataFrame = {
     val byA = Window.partitionBy("a")
     und
@@ -2957,9 +2902,8 @@ object Analytics {
   def node2vecWalk: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val und = simpleUnd(s, dir)
-    val adj = rankedAdj(und)
-    val stepCkpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    withCheckpoints { ck =>
+      val adj = ck.own(rankedAdj(und))
       val walk = nodes
         .filter(col("label") === "nation" && col("key") < 10)
         .select(col("id").as("start"), col("id").as("cur"),
@@ -2980,9 +2924,8 @@ object Analytics {
         // the candidate probe): an eager checkpoint of the one-row-per-
         // walk frame keeps the broadcast job from re-running the whole
         // walk-so-far lineage (measured 2× slowdown without it) and
-        // truncates the per-step window lineage; blocks freed below
-        st = st.localCheckpoint(eager = true)
-        stepCkpts += st
+        // truncates the per-step window lineage; blocks freed with the scope
+        st = ck.own(st.localCheckpoint(eager = true))
         val w = Window.partitionBy("start")
         val triStep = tri.join(gated(st.select(col("prev").as("ta")).distinct(),
           nWalks), Seq("ta"), "left_semi")
@@ -3007,9 +2950,6 @@ object Analytics {
           col("cur").as("end_id"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally {
-      PropertyGraph.freeLocalCheckpoint(adj)
-      stepCkpts.foreach(PropertyGraph.freeLocalCheckpoint)
     }
   }
 
@@ -3108,9 +3048,8 @@ object Analytics {
     // union, which would make every node reachable from everywhere
     val ed = directedNum(s, dir)
     val n = rowCount(nodes)
-    val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var lvl = nodes.select(col("id"), lit(0L).as("lvl"))
+    withCheckpoints { ck =>
+      val lvl0 = nodes.select(col("id"), lit(0L).as("lvl"))
       // SEMI-NAIVE delta rounds, round-identical to topoStep's full
       // unrolling (the CC argument, max instead of min): max-propagation
       // is monotone and idempotent, so a source whose level did NOT
@@ -3122,23 +3061,16 @@ object Analytics {
       // a shrinking sliver of the edge table instead of re-aggregating
       // all of it 6×. Delta-empty ⇒ every remaining round is a no-op ⇒
       // early exit with the oracle's exact fixed-iteration result.
-      var delta = lvl
-      var deltaRows = n
-      var round = 0
-      while (round < topoIters && deltaRows > 0) {
-        round += 1
-        val merged = topoDeltaStep(lvl, delta, ed, deltaRows, n)
-          .localCheckpoint(eager = false)
-        ckpts += merged
-        delta = merged.filter(col("lvl2") > col("lvl"))
-          .select(col("id"), col("lvl2").as("lvl"))
-        if (round < topoIters) deltaRows = rowCount(delta)
-        lvl = merged.select(col("id"), col("lvl2").as("lvl"))
-      }
+      // Every node is in round 1's delta: its count is the node count.
+      val (lvl, _) = deltaFixpoint(ck, "topo", topoIters, lvl0, lvl0, n)(
+        step = topoDeltaStep(_, _, ed, _, n),
+        deltaOf = _.filter(col("lvl2") > col("lvl"))
+          .select(col("id"), col("lvl2").as("lvl")),
+        stateOf = _.select(col("id"), col("lvl2").as("lvl")))
       nodes.join(lvl, "id").select(col("label"), col("key"), col("lvl"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally ckpts.foreach(PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val topoLevelsSql: String = {
@@ -3238,9 +3170,8 @@ object Analytics {
     val ed = directedNum(s, dir) // (a, b): a → b
     val target = nodes.filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(1L).as("np"))
-    var np = target.localCheckpoint(eager = false)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](np)
-    try {
+    withCheckpoints { ck =>
+      var np = ck.lazily(target)
       for (_ <- 1 to pcIters) {
         // recompute from the PREVIOUS vector: base + inbound sums; np is
         // sparse (reaching nodes only) — broadcast-gated under the cap,
@@ -3248,19 +3179,16 @@ object Analytics {
         val sums = ed.join(gated(np.withColumnRenamed("id", "b"), rowCount(np)),
             Seq("b"))
           .groupBy(col("a").as("id")).agg(sum("np").as("s"))
-        val next = target.select(col("id"), col("np").as("base"))
+        np = ck.lazily(target.select(col("id"), col("np").as("base"))
           .join(sums, Seq("id"), "full_outer")
           .select(col("id"),
             (coalesce(col("base"), lit(0L)) + coalesce(col("s"), lit(0L)))
-              .as("np"))
-          .localCheckpoint(eager = false)
-        interim += next
-        np = next
+              .as("np")))
       }
       nodes.join(np, Seq("id"))
         .select("label", "key", "np").orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val pathCountSql: String = {
@@ -3376,11 +3304,8 @@ object Analytics {
   val densestRounds = 8
 
   def densest: Q = (s, dir) => {
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
-      var e = coProjection(s, dir)
-        .select(col("p1"), col("p2")).localCheckpoint(eager = false)
-      interim += e
+    withCheckpoints { ck =>
+      var e = ck.lazily(coProjection(s, dir).select(col("p1"), col("p2")))
       // probed before deg reads it: deg's two union branches would
       // otherwise both compute the pending checkpoint
       var m = rowCount(e)
@@ -3391,11 +3316,9 @@ object Analytics {
       // the previous round's e2)
       while (round < densestRounds && continue) {
         round += 1
-        val deg = e.select(col("p1").as("p")).unionByName(
+        val deg = ck.lazily(e.select(col("p1").as("p")).unionByName(
           e.select(col("p2").as("p")))
-          .groupBy("p").agg(count(lit(1)).as("d"))
-          .localCheckpoint(eager = false)
-        interim += deg
+          .groupBy("p").agg(count(lit(1)).as("d")))
         val n = rowCount(deg)
         if (n == 0) continue = false
         else rows += ((round.toLong, n, m))
@@ -3405,11 +3328,9 @@ object Analytics {
           // every d ≤ 2(1+ε)·ρ, ε = 1/20) — peeling removes the LOW-
           // degree fringe so the dense core surfaces
           val keep = deg.filter(col("d") * n * 10L > 21L * m).select("p")
-          val e2 = e.join(keep.toDF("p1"), Seq("p1"), "left_semi")
+          val e2 = ck.lazily(e.join(keep.toDF("p1"), Seq("p1"), "left_semi")
             .join(keep.toDF("p2"), Seq("p2"), "left_semi")
-            .select("p1", "p2")
-            .localCheckpoint(eager = false)
-          interim += e2
+            .select("p1", "p2"))
           val m2 = rowCount(e2)
           // FIXPOINT INVARIANT (cross-engine contract): the Spark loop
           // breaks the moment a round changes nothing, while the oracle
@@ -3434,7 +3355,7 @@ object Analytics {
             .as("is_peak"))
         .orderBy("round")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val densestSql: String = {
@@ -3507,17 +3428,14 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     // broadcast bound for `used` (≤ 2·|win| ≤ n matched endpoints)
     val n = rowCount(nodes)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       // canonical free-free edge set with a deterministic priority
-      var es = undW.select(least(col("a"), col("b")).as("ea"),
+      var es = ck.lazily(undW.select(least(col("a"), col("b")).as("ea"),
         greatest(col("a"), col("b")).as("eb"))
         .distinct()
         .withColumn("h", graft.functions.VectorExprs.hexSlice(
           md5(concat(col("ea").cast("string"), lit(">"),
-            col("eb").cast("string"))), 1, 13))
-        .localCheckpoint(eager = false)
-      interim += es
+            col("eb").cast("string"))), 1, 13)))
       var esRows = rowCount(es)
       val matched = scala.collection.mutable.ArrayBuffer[DataFrame]()
       var round = 0
@@ -3547,12 +3465,11 @@ object Analytics {
         // two es ⋈ vmax shuffle joins the r6 plan paid per round
         // (value-identical: both select exactly the locally-dominant
         // edges; the oracle keeps the two-join formulation)
-        val win = vmax.groupBy("m").agg(count(lit(1)).as("k"))
+        val win = ck.own(vmax.groupBy("m").agg(count(lit(1)).as("k"))
           .filter(col("k") === 2)
           .select(lit(round.toLong).as("round"), col("m.ea").as("ea"),
             col("m.eb").as("eb"))
-          .localCheckpoint(eager = true)
-        interim += win
+          .localCheckpoint(eager = true))
         matched += win
         // retire matched endpoints; the candidate set only shrinks.
         // `used` is bounded by 2·|win| ≤ n — broadcast both anti-joins
@@ -3561,7 +3478,7 @@ object Analytics {
         if (round < matchRounds) {
           val used = win.select(col("ea").as("v"))
             .unionByName(win.select(col("eb").as("v"))).distinct()
-          es = es
+          es = ck.lazily(es
             .join(gated(used.toDF("ea"), n), Seq("ea"), "left_anti")
             .join(gated(used.toDF("eb"), n), Seq("eb"), "left_anti")
             .select("ea", "eb", "h")
@@ -3570,9 +3487,7 @@ object Analytics {
             // round's checkpoint kept the initial width and each scan
             // paid a full task wave; width follows the PREVIOUS round's
             // surviving row count (edgeParts clamp at real scale)
-            .coalesce(edgeParts(s, esRows))
-            .localCheckpoint(eager = false)
-          interim += es
+            .coalesce(edgeParts(s, esRows)))
           esRows = rowCount(es)
         }
       }
@@ -3581,7 +3496,7 @@ object Analytics {
       (seed +: matched.toSeq).reduce(_.unionByName(_))
         .orderBy("round", "ea", "eb")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val matchingSql: String = {
@@ -3694,38 +3609,38 @@ object Analytics {
       // the wait seed) and each re-derivation re-runs the full-edge
       // degree aggregation (~0.6 s ×2 measured inside the undHp job);
       // freed once both checkpointed consumers are materialized
-      val pr = nodes.join(deg, Seq("id"), "left_outer")
-        .select(col("id"),
-          (least(coalesce(col("deg"), lit(0L)), lit(65535L))
-            * 100000000000000L + col("id")).as("c"))
-        .localCheckpoint(eager = true)
-      val undHp = und
-        .join(broadcast(pr.toDF("a", "ca")), "a")
-        .join(broadcast(pr.toDF("b", "cb")), "b")
-        .filter(col("cb") > col("ca"))
-        .select("a", "b")
-        .localCheckpoint(eager = true)
-      val hp = undHp.groupBy(col("a").as("id")).agg(count(lit(1)).as("rem"))
-      val wait0 = pr.join(hp, Seq("id"), "left_outer")
-        .select(col("id"), col("c"),
-          coalesce(col("rem"), lit(0L)).as("rem"))
-        .localCheckpoint(eager = true)
-      graft.model.PropertyGraph.freeLocalCheckpoint(pr)
-      (undHp, wait0)
+      withCheckpoints { ck =>
+        val pr = ck.own(nodes.join(deg, Seq("id"), "left_outer")
+          .select(col("id"),
+            (least(coalesce(col("deg"), lit(0L)), lit(65535L))
+              * 100000000000000L + col("id")).as("c"))
+          .localCheckpoint(eager = true))
+        val undHp = und
+          .join(broadcast(pr.toDF("a", "ca")), "a")
+          .join(broadcast(pr.toDF("b", "cb")), "b")
+          .filter(col("cb") > col("ca"))
+          .select("a", "b")
+          .localCheckpoint(eager = true)
+        val hp = undHp.groupBy(col("a").as("id")).agg(count(lit(1)).as("rem"))
+        val wait0 = pr.join(hp, Seq("id"), "left_outer")
+          .select(col("id"), col("c"),
+            coalesce(col("rem"), lit(0L)).as("rem"))
+          .localCheckpoint(eager = true)
+        (undHp, wait0)
+      }
     }
 
   def coloring: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val n = rowCount(nodes)
     val (undHp, wait0) = coloringPrio(s, dir)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // AQE OFF for the loop (restored in finally): every per-round frame
     // is either checkpointed or broadcast-gated already, and AQE's
     // per-shuffle query-stage barriers added ~0.15 s of driver latency
     // per round here (measured 9.4 → 8.5 s over 7 rounds at sf0.1)
     val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try withCheckpoints { ck =>
       var wait = wait0
       val colored = scala.collection.mutable.ArrayBuffer[DataFrame]()
       var uncRows = n
@@ -3761,8 +3676,7 @@ object Analytics {
         // round, the decrement join, and the retire anti-join; its probe
         // runs before those readers (the checkpoint-before-multi-
         // reference rule)
-        val d = delta.localCheckpoint(eager = false)
-        interim += d
+        val d = ck.lazily(delta)
         colored += d
         if (round < colorRounds) {
           uncRows -= rowCount(d)
@@ -3781,12 +3695,10 @@ object Analytics {
           // the decrement via a -1 retire tag — one broadcast, one join
           val upd = decs.unionByName(
             d.select(col("id"), lit(-1L).as("dec")))
-          wait = wait.join(gated(upd, n), Seq("id"), "left_outer")
+          wait = ck.lazily(wait.join(gated(upd, n), Seq("id"), "left_outer")
             .filter(coalesce(col("dec"), lit(0L)) >= 0L)
             .select(col("id"), col("c"),
-              (col("rem") - coalesce(col("dec"), lit(0L))).as("rem"))
-            .localCheckpoint(eager = false)
-          interim += wait
+              (col("rem") - coalesce(col("dec"), lit(0L))).as("rem")))
         }
       }
       val seed = s.range(0).select(lit(0L).as("id"), lit(0L).as("color"))
@@ -3798,10 +3710,7 @@ object Analytics {
           coalesce(col("color"), lit(0L)).as("color"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally {
-      s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
-    }
+    } finally s.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 
   val coloringSql: String = {
@@ -3927,11 +3836,10 @@ object Analytics {
     graft.model.SessionMemo.getOrBuild(lvL1Cache, (s, dir)) {
       val (nodes, und) = numericGraph(s, dir)
       val n = rowCount(nodes)
-      val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      try {
+      withCheckpoints { ck =>
+        // roots stay unregistered: session-pinned with the memo
         val roots = louvainLevel(nodes.select("id"),
-          louvainBestMoveL1(s, dir), n, interim)
-        interim -= roots // session-pinned with the memo
+          louvainBestMoveL1(s, dir), n, ck)
         val comm1 = roots.toDF("id", "c1")
         val und2 = und
           .join(gated(comm1.toDF("a", "ca"), n), "a")
@@ -3940,7 +3848,7 @@ object Analytics {
           .agg(sum("w").as("w"))
           .localCheckpoint(eager = true)
         (comm1, und2)
-      } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+      }
     }
 
   def louvainMove: Q = (s, dir) => {
@@ -4020,14 +3928,15 @@ object Analytics {
 
   /** One Louvain level: the (id, c) best positive-gain moves, hooked
     * and pointer-jumped into community roots. `ids` is the one-column
-    * frame of member ids. Returns (id, ptr = community root). */
+    * frame of member ids. Returns (id, ptr = community root) as an
+    * eager checkpoint the caller owns; the hook frame is released with
+    * `ck`. */
   private def louvainLevel(ids: DataFrame, best: DataFrame, n: Long,
-      interim: scala.collection.mutable.ArrayBuffer[DataFrame]): DataFrame = {
-    val hook = ids
+      ck: Checkpoints): DataFrame = {
+    val hook = ck.own(ids
       .join(gated(best, n), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("c"), col("id")).as("ptr"))
-      .localCheckpoint(eager = true)
-    interim += hook
+      .localCheckpoint(eager = true))
     // 2-cycle resolution: mutual best pairs root at the lower id.
     // r15 opt: the resolve chain stays LAZY and checkpoints ONCE — the
     // joins are gated broadcasts over node-bounded frames, so the whole
@@ -4044,16 +3953,13 @@ object Analytics {
       ptr = ptr.join(gated(ptr.toDF("ptr", "ptrn"), n), "ptr")
         .select(col("id"), col("ptrn").as("ptr"))
     }
-    val out = ptr.localCheckpoint(eager = true)
-    interim += out
-    out
+    ptr.localCheckpoint(eager = true)
   }
 
   def louvain: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
     val n = rowCount(nodes)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       // level-1 roots + contracted community graph (self-loops kept):
       // the session-memoized pair shared with louvainHierarchyBuild
       // (louvainLevel1 — one resolve + one full-edge-frame contraction
@@ -4064,7 +3970,7 @@ object Analytics {
       // stage reuse does not dedupe the separately-built plans).
       val (comm1, und2) = louvainLevel1(s, dir)
       val supers = comm1.select(col("c1").as("id")).distinct()
-      val comm2 = louvainLevel(supers, louvainBestMove(und2), n, interim)
+      val comm2 = ck.own(louvainLevel(supers, louvainBestMove(und2), n, ck))
         .toDF("c1", "c2")
       nodes.join(comm1, Seq("id"))
         .join(gated(comm2, n), Seq("c1"), "left_outer")
@@ -4072,7 +3978,7 @@ object Analytics {
           coalesce(col("c2"), col("c1")).as("comm"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val louvainSql: String = {
@@ -4234,11 +4140,10 @@ object Analytics {
       s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val (nodes, und0) = numericGraph(s, dir)
     val n = rowCount(nodes)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
     // per-level maps survive the build (session-pinned with the memo —
-    // g_hierarchy_curve reads them); NOT added to interim
+    // g_hierarchy_curve reads them); NOT registered in the scope
     val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       var comm = nodes.select(col("id"), col("id").as("comm"))
         .localCheckpoint(eager = true)
       kept += comm
@@ -4248,8 +4153,7 @@ object Analytics {
       while (moved && level < louvainMaxLevels) {
         level += 1
         val best = (if (level == 1) louvainBestMoveL1(s, dir)
-          else louvainBestMove(g).localCheckpoint(eager = false))
-        if (level > 1) interim += best
+          else ck.lazily(louvainBestMove(g)))
         val nBest = rowCount(best)
         dbgPhase("hier", s"level $level best=$nBest")
         if (nBest == 0) moved = false
@@ -4263,12 +4167,12 @@ object Analytics {
           val commCp = comm1.toDF("id", "comm")
           kept += commCp
           comm = resetStats(commCp)
-          g = resetStats(und2) // session-pinned: NOT interim-freed
+          g = resetStats(und2) // session-pinned: NOT freed with the scope
           dbgPhase("hier", s"level $level contracted (memo)")
         }
         else {
           val ids = comm.select(col("comm").as("id")).distinct()
-          val roots = louvainLevel(ids, best, n, interim).toDF("cid", "root")
+          val roots = ck.own(louvainLevel(ids, best, n, ck)).toDF("cid", "root")
           val commCp = comm
             .join(gated(roots, n), comm("comm") === roots("cid"), "left_outer")
             .select(col("id"), coalesce(col("root"), col("comm")).as("comm"))
@@ -4289,13 +4193,13 @@ object Analytics {
           // 149 → 417 MB when tried lazy in r15). resetStats because g
           // now feeds back into the next level's checkpointed plan
           // (the multiplicative-stats lesson at louvainMaxLevels).
-          val gCp = g
+          // free the CHECKPOINT, not the stats wrapper
+          val gCp = ck.own(g
             .join(gated(roots.toDF("a", "ra"), n), "a")
             .join(gated(roots.toDF("b", "rb"), n), "b")
             .groupBy(col("ra").as("a"), col("rb").as("b"))
             .agg(sum("w").as("w"))
-            .localCheckpoint(eager = true)
-          interim += gCp // free the CHECKPOINT, not the stats wrapper
+            .localCheckpoint(eager = true))
           g = resetStats(gCp)
           dbgPhase("hier", s"level $level contracted")
         }
@@ -4310,7 +4214,7 @@ object Analytics {
         .orderBy("label", "key")
         .localCheckpoint(eager = true),
         kept.toSeq)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   /** The hierarchy's full CTE chain (through hc$louvainMaxLevels),
@@ -4423,15 +4327,13 @@ object Analytics {
   private def inducedRefineMap(s: SparkSession, dir: String): DataFrame =
     graft.model.SessionMemo.getOrBuild(inducedRefineCache, (s, dir)) {
       val (nodes, undW) = numericGraph(s, dir)
-      val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      try {
+      withCheckpoints { ck =>
         val hl = louvainHierarchy(s, dir) // memoized final labels
         dbgPhase("irm", "hierarchy labels ready")
         val n = rowCount(nodes)
-        val cid = nodes.join(hl, Seq("label", "key"))
+        val cid = ck.own(nodes.join(hl, Seq("label", "key"))
           .select(col("id"), col("comm"))
-          .localCheckpoint(eager = true)
-        interim += cid
+          .localCheckpoint(eager = true))
         dbgPhase("irm", "cid checkpointed")
         // r15 opt: materialize the induced edge frame ONCE — it feeds
         // every ccLabels round, and lazily it re-ran its two broadcast
@@ -4439,13 +4341,11 @@ object Analytics {
         // pay the loop-invariant once). Partitioning by `a` is
         // preserved from the cached und through the broadcast joins,
         // so rounds keep their exchange-free edge side.
-        val ind = undW
+        val ind = ck.lazily(undW
           .join(gated(cid.toDF("a", "ca"), n), Seq("a"))
           .join(gated(cid.toDF("b", "cb"), n), Seq("b"))
           .filter(col("ca") === col("cb"))
-          .select("a", "b")
-          .localCheckpoint(eager = false)
-        interim += ind
+          .select("a", "b"))
         // byte-derived scan width for the round-invariant edge frame
         // (r16, guide §2): every ccLabels round probes it against the
         // delta broadcast, and at local scale its inherited
@@ -4455,13 +4355,12 @@ object Analytics {
         val indParts = nodeParts(s, rowCount(ind))
         dbgPhase("irm", s"induced edges checkpointed (parts=$indParts)")
         val comp =
-          ccLabels(nodes.select("id"), ind.coalesce(indParts), ccIters,
-            interim)
+          ccLabels(nodes.select("id"), ind.coalesce(indParts), ccIters, ck)
         dbgPhase("irm", "induced cc fixpoint done")
         cid.join(comp, Seq("id"))
           .select(col("id"), col("comm"), col("comp").as("rid"))
           .localCheckpoint(eager = true)
-      } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+      }
     }
 
   def communityConnectivity: Q = (s, dir) => {
@@ -4785,8 +4684,7 @@ object Analytics {
   def resolutionSweep: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
     val n = rowCount(nodes)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       val kdeg = und.groupBy(col("a").as("id")).agg(sum("w").as("k"))
       val m2 = und.agg(sum("w").as("m2"))
       val wtot = und.agg(sum("w").cast("long").as("wt"))
@@ -4807,13 +4705,12 @@ object Analytics {
       }
       // kdeg is node-bounded — gate-broadcast both sides so kin (edge-
       // scale) is never re-shuffled for the gain lookups (§3.1)
-      val bests = kin
+      val bests = ck.own(kin
         .join(gated(kdeg.toDF("a", "ka"), n), "a")
         .join(gated(kdeg.toDF("b", "kc"), n), "b")
         .crossJoin(broadcast(m2))
         .groupBy("a").agg(bestAggs.head, bestAggs.tail: _*)
-        .localCheckpoint(eager = true) // one argmax base, five rungs read it
-      interim += bests
+        .localCheckpoint(eager = true)) // one argmax base, five rungs read it
       // the hook + 2-cycle + jump resolution runs ONCE on a rung-keyed
       // frame carrying all five ladders (5n rows) — one recurrence,
       // six materializations total, instead of five sequential
@@ -4832,14 +4729,13 @@ object Analytics {
       // Per-rung formulas are IDENTICAL — p_i evolves exactly as the
       // rung-i long rows did, so the final partition is unchanged.
       val idx = resolutionLadder.indices
-      val hooksW = nodes.select("id")
+      val hooksW = ck.own(nodes.select("id")
         .join(gated(bests.withColumnRenamed("a", "id"), n),
           Seq("id"), "left_outer")
         .select(col("id") +: idx.map(i =>
           coalesce(when(col(s"s$i.g") > 0, -col(s"s$i.nc")),
             col("id")).as(s"p$i")): _*)
-        .localCheckpoint(eager = true)
-      interim += hooksW
+        .localCheckpoint(eager = true))
       // 2-cycle resolution: mutual best pairs root at the lower id
       var w = hooksW
       for (i <- idx) {
@@ -4849,8 +4745,7 @@ object Analytics {
             least(col("id"), col(s"p$i"))).otherwise(col(s"p$i")))
           .drop("_j", "_pp")
       }
-      w = w.localCheckpoint(eager = true)
-      interim += w
+      w = ck.own(w.localCheckpoint(eager = true))
       for (_ <- 1 to louvainJumps) {
         var w2 = w
         for (i <- idx) {
@@ -4858,8 +4753,7 @@ object Analytics {
               col(s"p$i").as("_pn")), n), col(s"p$i") === col("_j"))
             .withColumn(s"p$i", col("_pn")).drop("_j", "_pn")
         }
-        w = w2.localCheckpoint(eager = true)
-        interim += w
+        w = ck.own(w2.localCheckpoint(eager = true))
       }
       // long view only where the shape needs it (per-rung countDistinct)
       val comm = w.select(col("id"), explode(array(
@@ -4904,7 +4798,7 @@ object Analytics {
           expr("(e2s * 1000000) div wt2 - dmix div wt2").as("q_ppm"))
         .orderBy("gamma_ppm")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val resolutionSweepSql: String = {
@@ -5018,8 +4912,7 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val n = rowCount(nodes)
     val rmap = inducedRefineMap(s, dir)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       val m2 = undW.agg(sum("w").as("m2"))
       val kdeg = undW.groupBy(col("a").as("id")).agg(sum("w").as("k"))
       val rtot = rmap.join(kdeg, Seq("id"))
@@ -5041,11 +4934,10 @@ object Analytics {
             lit(2).cast(dec38) * col("ta") * col("tb")).as("gain"))
         .filter(col("gain") > 0)
       val w = Window.partitionBy("ra").orderBy(col("gain").desc, col("rb"))
-      val best = cand.withColumn("rn", row_number().over(w))
+      val best = ck.own(cand.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("ra").as("rid"), col("rb").as("c"))
-        .localCheckpoint(eager = true)
-      interim += best
+        .localCheckpoint(eager = true))
       val root = rmap.select("rid").distinct()
         .join(best, Seq("rid"), "left_outer")
         .join(best.toDF("cid", "c2"), col("c") === col("cid"), "left_outer")
@@ -5058,7 +4950,7 @@ object Analytics {
           col("root").as("rcomm"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val leidenRefineSql: String = {
@@ -5318,22 +5210,21 @@ object Analytics {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
       val n = rowCount(nodes)
-      val seed = nodes.select(col("id"), array(
-        graft.functions.VectorExprs.hexSlice(md5(col("id").cast("string")), 1, 13))
-        .as("hs"))
-        .localCheckpoint(eager = true)
-      var sk = seed
-      val rounds = (1 to anfRounds).map { _ =>
-        val nbr = und.join(gated(sk.withColumnRenamed("id", "a"), n), "a")
-          .select(col("b").as("id"), col("hs"))
-        sk = sk.unionByName(nbr).groupBy("id")
-          .agg(slice(array_sort(array_distinct(flatten(collect_list(col("hs"))))),
-            1, anfK).as("hs"))
-          .localCheckpoint(eager = true)
-        sk
+      withCheckpoints { ck =>
+        var sk = ck.own(nodes.select(col("id"), array(
+          graft.functions.VectorExprs.hexSlice(md5(col("id").cast("string")), 1, 13))
+          .as("hs"))
+          .localCheckpoint(eager = true))
+        (1 to anfRounds).map { _ =>
+          val nbr = und.join(gated(sk.withColumnRenamed("id", "a"), n), "a")
+            .select(col("b").as("id"), col("hs"))
+          sk = sk.unionByName(nbr).groupBy("id")
+            .agg(slice(array_sort(array_distinct(flatten(collect_list(col("hs"))))),
+              1, anfK).as("hs"))
+            .localCheckpoint(eager = true)
+          sk
+        }
       }
-      graft.model.PropertyGraph.freeLocalCheckpoint(seed)
-      rounds
     }
 
   /** KMV estimate columns from a sketch frame: |B| < k ⇒ exact count,
@@ -5581,25 +5472,22 @@ object Analytics {
   def mst: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
     val n = rowCount(nodes)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try {
+    withCheckpoints { ck =>
       // canonical min-weight edge per unordered pair (multi-label pairs
       // collapse to their lightest edge — the standard simple-graph prep)
       // canonical pairs from the DIRECTED edge list (half the rows of
       // und — the union's second half canonicalizes to the same pairs)
       val graph = g(s, dir)
-      var eset = graph.edges.select(
+      // round 1's probe materializes eset
+      var eset = ck.lazily(graph.edges.select(
         least(nodeIdCol(col("src_label"), col("src_key")),
           nodeIdCol(col("dst_label"), col("dst_key"))).as("ea"),
         greatest(nodeIdCol(col("src_label"), col("src_key")),
           nodeIdCol(col("dst_label"), col("dst_key"))).as("eb"),
         col("weight").as("w"))
-        .groupBy("ea", "eb").agg(min("w").as("w"))
-        .localCheckpoint(eager = false) // round 1's probe materializes it
-      interim += eset
-      var comp = nodes.select(col("id"), col("id").as("c"))
-        .localCheckpoint(eager = true)
-      interim += comp
+        .groupBy("ea", "eb").agg(min("w").as("w")))
+      var comp = ck.own(nodes.select(col("id"), col("id").as("c"))
+        .localCheckpoint(eager = true))
       val chosen = scala.collection.mutable.ArrayBuffer[DataFrame]()
       var round = 0
       var ecRows = 1L
@@ -5624,15 +5512,11 @@ object Analytics {
             eset.filter(col("ea") =!= col("eb"))
               .select(col("ea"), col("eb"), col("w"),
                 col("ea").as("ca"), col("eb").as("cb"))
-          else {
-            val j = eset
+          else
+            ck.lazily(eset
               .join(gated(comp.toDF("ea", "ca"), n), "ea")
               .join(gated(comp.toDF("eb", "cb"), n), "eb")
-              .filter(col("ca") =!= col("cb"))
-              .localCheckpoint(eager = false)
-            interim += j
-            j
-          }
+              .filter(col("ca") =!= col("cb")))
         eset = ec.select("ea", "eb", "w")
         // EARLY EXIT (provable): no inter-component edge ⇒ no picks ⇒
         // hook is the identity ⇒ every remaining oracle round is a
@@ -5647,19 +5531,17 @@ object Analytics {
         // per-component argmin as a PARTIAL-AGGREGABLE min(struct) —
         // (w, ea, eb) is unique within c (an edge meets a component
         // once per side), so this picks exactly the oracle's rn=1 row
-        val pick = cand.groupBy("c")
+        val pick = ck.own(cand.groupBy("c")
           .agg(min(struct(col("w"), col("ea"), col("eb"), col("oc"))).as("m"))
           .select(col("c"), col("m.oc").as("oc"), col("m.w").as("w"),
             col("m.ea").as("ea"), col("m.eb").as("eb"))
-          .localCheckpoint(eager = true)
-        interim += pick
+          .localCheckpoint(eager = true))
         chosen += pick.select("ea", "eb", "w").distinct()
           .select(lit(r.toLong).as("round"), col("ea"), col("eb"), col("w"))
-        val hook = comp.select(col("c")).distinct()
+        val hook = ck.own(comp.select(col("c")).distinct()
           .join(pick.select(col("c"), col("oc")), Seq("c"), "left_outer")
           .select(col("c"), coalesce(col("oc"), col("c")).as("ptr"))
-          .localCheckpoint(eager = true)
-        interim += hook
+          .localCheckpoint(eager = true))
         // 2-cycle resolution: mutual picks root at the lower comp id.
         // r15 opt: the resolve chain is LAZY and gated-broadcast (the
         // louvainLevel discipline) — the whole r1→jump² recurrence
@@ -5680,10 +5562,9 @@ object Analytics {
           ptr = ptr.join(gated(ptr.toDF("ptr", "ptrn"), n), "ptr")
             .select(col("c"), col("ptrn").as("ptr"))
         }
-        comp = comp.join(gated(ptr, n), "c")
+        comp = ck.own(comp.join(gated(ptr, n), "c")
           .select(col("id"), col("ptr").as("c"))
-          .localCheckpoint(eager = true)
-        interim += comp
+          .localCheckpoint(eager = true))
         }
       }
       // empty-schema seed: a graph with no edges picks nothing in round
@@ -5694,7 +5575,7 @@ object Analytics {
       (seed +: chosen.toSeq).reduce(_.unionByName(_))
         .orderBy("round", "ea", "eb")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val mstSql: String = {
@@ -5831,27 +5712,16 @@ object Analytics {
     var sup = e.limit(0).withColumn("support", lit(0L)) // replaced round 1
     var dropped = 1L
     var round = 0
-    // per-round checkpoints release in the finally (the LPA/closeness
-    // discipline — the r4 advisor's pathsTo finding applies to any
-    // iterative op whose result would otherwise pin every round's
-    // blocks for the session); the returned frame is its own eager
-    // checkpoint, so nothing it references is freed. Round 1's support
-    // is the session MEMO (shared with g_local_bridges) — owned by the
-    // memo, never freed here.
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
+    // Round 1's support is the session MEMO (shared with
+    // g_local_bridges) — owned by the memo, never freed here.
+    withCheckpoints { ck =>
       while (round < trussIters && dropped > 0) {
         round += 1
         sup = if (round == 1) coSupport(s, dir)
-              else {
-                val sc = edgeSupport(e).localCheckpoint(eager = true)
-                interim += sc
-                sc
-              }
-        val kept = e.join(sup, Seq("p1", "p2"))
+              else ck.own(edgeSupport(e).localCheckpoint(eager = true))
+        val kept = ck.lazily(e.join(sup, Seq("p1", "p2"))
           .filter(col("support") >= trussK - 2)
-          .select("p1", "p2").localCheckpoint(eager = false)
-        interim += kept
+          .select("p1", "p2"))
         if (round < trussIters) {
           val keptRows = rowCount(kept)
           dropped = nEdges - keptRows
@@ -5862,7 +5732,7 @@ object Analytics {
       e.join(sup, Seq("p1", "p2")).select("p1", "p2", "support")
         .orderBy("p1", "p2")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val ktrussSql: String = {
@@ -6062,10 +5932,9 @@ object Analytics {
     * (id, scc) row per node that settles; nodes isolated mid-recursion
     * are omitted (proven singletons — callers coalesce to own id). See
     * the g_scc scaladoc step 3 for the algorithm and its proof
-    * obligations. Interim checkpoints are registered on `interim` for
-    * the caller's cleanup. */
+    * obligations. Interim checkpoints are released with `ck`. */
   private[graft] def sccSettle(s: SparkSession, e0: DataFrame, n: Long,
-      interim: scala.collection.mutable.ArrayBuffer[DataFrame]): DataFrame = {
+      ck: Checkpoints): DataFrame = {
     var eCur = e0
     var assigned: DataFrame = null
     var depth = 0
@@ -6075,22 +5944,18 @@ object Analytics {
       if (depth > sccFwbwDepth) throw new IllegalStateException(
         s"g_scc: FW-BW recursion deeper than $sccFwbwDepth — SCC " +
           "condensation chain exceeds the cap; raise sccFwbwDepth")
-      val lab = GraphXAnalytics.sccCoreLabels(s, eCur, sccLabelCap)
-      interim += lab
+      val lab = ck.own(GraphXAnalytics.sccCoreLabels(s, eCur, sccLabelCap))
       val settled = lab.filter(col("f") === col("bk"))
         .select(col("id"), col("f").as("scc"))
       assigned =
         if (assigned == null) settled else assigned.unionByName(settled)
-      val uns = lab.filter(col("f") =!= col("bk")).select("id")
-        .localCheckpoint(eager = false)
-      interim += uns
+      val uns = ck.lazily(lab.filter(col("f") =!= col("bk")).select("id"))
       remaining = rowCount(uns)
       if (remaining > 0L) {
-        eCur = eCur
+        eCur = ck.own(eCur
           .join(gated(uns.toDF("a"), n), Seq("a"), "left_semi")
           .join(gated(uns.toDF("b"), n), Seq("b"), "left_semi")
-          .localCheckpoint(eager = true)
-        interim += eCur
+          .localCheckpoint(eager = true))
       }
     }
     assigned
@@ -6100,11 +5965,8 @@ object Analytics {
     val (nodes, _) = numericGraph(s, dir)
     val n = rowCount(nodes)
     val graph = g(s, dir)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val sccT0 = System.nanoTime()
-    def dbg(msg: => String): Unit = if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(f"[scc] t=${(System.nanoTime() - sccT0) / 1e9}%.2f $msg")
-    try {
+    def dbg(msg: => String): Unit = dbgPhase("scc", msg)
+    withCheckpoints { ck =>
       val hp = graph.edges
         .filter(col("elabel") === "HAS_PART" &&
           col("src_key") % sccRingMod === 0)
@@ -6118,15 +5980,14 @@ object Analytics {
       // re-run the per-order window; the BIG union below deliberately
       // stays lineage (directedNum is already cached — checkpointing
       // the 1.2M-row union would only add a second copy's write)
-      val ringE = hp
+      val ringE = ck.own(hp
         .withColumn("np", lead("p", 1).over(w))
         .withColumn("fp", first("p").over(w))
         .select(nodeIdCol(lit("part"), col("p")).as("a"),
           nodeIdCol(lit("part"), coalesce(col("np"), col("fp"))).as("b"))
         .filter(col("a") =!= col("b"))
         .distinct()
-        .localCheckpoint(eager = true)
-      interim += ringE
+        .localCheckpoint(eager = true))
       val e0 = directedNum(s, dir).unionByName(ringE)
       // COUNTER-PEELED trim (the g_coloring decrement discipline):
       // materializing a shrinking edge copy per synchronous round cost
@@ -6140,17 +6001,14 @@ object Analytics {
       // synchronous form (post-fixpoint stages are identity).
       // ONE tagged pass for both degree tables (two separate groupBys
       // cost a second full-edge stage)
-      var alive = e0
+      var alive = ck.own(e0
         .select(col("b").as("id"), lit(1L).as("i"), lit(0L).as("o"))
         .unionByName(e0.select(col("a").as("id"), lit(0L).as("i"),
           lit(1L).as("o")))
         .groupBy("id").agg(sum("i").as("din"), sum("o").as("dout"))
-        .localCheckpoint(eager = true)
-      interim += alive
-      var dead = alive.filter(col("din") === 0 || col("dout") === 0)
-        .select("id")
-        .localCheckpoint(eager = false)
-      interim += dead
+        .localCheckpoint(eager = true))
+      var dead = ck.lazily(alive.filter(col("din") === 0 || col("dout") === 0)
+        .select("id"))
       var deadRows = rowCount(dead)
       dbg(s"init dead=$deadRows")
       // death-propagation frame: a row (src, dst, tag) means "src's
@@ -6186,29 +6044,24 @@ object Analytics {
         t += 1
         if (!restricted && deadRows * 4L >= n) {
           restricted = true
-          val surv = alive.join(gated(dead, n), Seq("id"), "left_anti")
+          val surv = ck.own(alive.join(gated(dead, n), Seq("id"), "left_anti")
             .select("id")
-            .localCheckpoint(eager = true)
-          interim += surv
-          eAlive = eAlive
+            .localCheckpoint(eager = true))
+          eAlive = ck.own(eAlive
             .join(gated(surv.select(col("id").as("a")), n), Seq("a"),
               "left_semi")
             .join(gated(surv.select(col("id").as("b")), n), Seq("b"),
               "left_semi")
-            .localCheckpoint(eager = true)
-          interim += eAlive
+            .localCheckpoint(eager = true))
           er = erOf(eAlive)
-          alive = eAlive
+          alive = ck.own(eAlive
             .select(col("b").as("id"), lit(1L).as("i"), lit(0L).as("o"))
             .unionByName(eAlive.select(col("a").as("id"), lit(0L).as("i"),
               lit(1L).as("o")))
             .groupBy("id").agg(sum("i").as("din"), sum("o").as("dout"))
-            .localCheckpoint(eager = true)
-          interim += alive
-          dead = alive.filter(col("din") <= 0 || col("dout") <= 0)
-            .select("id")
-            .localCheckpoint(eager = false)
-          interim += dead
+            .localCheckpoint(eager = true))
+          dead = ck.lazily(alive.filter(col("din") <= 0 || col("dout") <= 0)
+            .select("id"))
           deadRows = rowCount(dead)
           dbg(s"trim round $t (survivor recompute) dead=$deadRows")
         } else {
@@ -6224,18 +6077,15 @@ object Analytics {
             col("co")))
           .groupBy("id").agg(max("dd").as("dd"), sum("ci").as("ci"),
             sum("co").as("co"))
-        val alive2 = alive
+        // materializes under dead's probe
+        val alive2 = ck.lazily(alive
           .join(gated(upd, n), Seq("id"), "left_outer")
           .filter(coalesce(col("dd"), lit(0L)) === 0L)
           .select(col("id"),
             (col("din") - coalesce(col("ci"), lit(0L))).as("din"),
-            (col("dout") - coalesce(col("co"), lit(0L))).as("dout"))
-          .localCheckpoint(eager = false) // materializes under dead's probe
-        interim += alive2
-        dead = alive2.filter(col("din") <= 0 || col("dout") <= 0)
-          .select("id")
-          .localCheckpoint(eager = false)
-        interim += dead
+            (col("dout") - coalesce(col("co"), lit(0L))).as("dout")))
+        dead = ck.lazily(alive2.filter(col("din") <= 0 || col("dout") <= 0)
+          .select("id"))
         deadRows = rowCount(dead)
         dbg(s"trim round $t dead=$deadRows")
         alive = alive2
@@ -6244,11 +6094,10 @@ object Analytics {
       if (deadRows > 0) throw new IllegalStateException(
         s"g_scc: trim not stable after $sccTrimRounds rounds — cap too " +
           "low for this graph; singleton soundness unproven")
-      val e = eAlive
+      val e = ck.own(eAlive
         .join(gated(alive.select(col("id").as("a")), n), Seq("a"), "left_semi")
         .join(gated(alive.select(col("id").as("b")), n), Seq("b"), "left_semi")
-        .localCheckpoint(eager = true)
-      interim += e
+        .localCheckpoint(eager = true))
       // deep-diameter fixpoint on the tiny trimmed core → the Pregel
       // path (GraphXAnalytics.sccCoreLabels): a DataFrame round here
       // costs a plan/broadcast/checkpoint trip (23+ rounds made the op
@@ -6256,14 +6105,14 @@ object Analytics {
       // — measured, see sccCoreLabels doc), a Pregel superstep costs
       // milliseconds and the fixpoint is verified post-hoc
       dbg(s"trimmed core built")
-      val assigned = sccSettle(s, e, n, interim)
+      val assigned = sccSettle(s, e, n, ck)
       dbg(s"settled")
       nodes.join(gated(assigned, n), Seq("id"), "left_outer")
         .select(col("label"), col("key"),
           coalesce(col("scc"), col("id")).as("scc"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val sccSql: String = {
@@ -6352,31 +6201,28 @@ object Analytics {
   def coreDecomposition: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    var c = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
-    val interim = scala.collection.mutable.ArrayBuffer[DataFrame](c)
-    var changed = 1L
-    var round = 0
-    // Per-round plan (measured — see the perf note below): neighbor
-    // values arrive by a GATED BROADCAST of the n-row value frame onto
-    // the a-partitioned cached edge list (the hint is load-bearing: a
-    // localCheckpoint'd frame has no stats, so the planner falls back
-    // to a SortMergeJoin that exchanges the 2m frame on b EVERY round
-    // — measured 8.9 s; with the counted-gate broadcast the window and
-    // the per-node aggregate run on the cached layout with zero
-    // exchanges of the edge frame). Past the row cap the gate drops
-    // the hint and both sides co-partition on the join key — the
-    // open-world fallback. A semi-naive delta variant (recompute only
-    // neighbors-of-changed) was measured SLOWER here: deriving +
-    // gating the candidate set re-scans the cached 2m frame twice,
-    // which exceeds the full recompute's one aligned pass — kcore's
-    // delta pays off because its survivor set shrinks the frame
-    // itself; h-iteration's frame never shrinks.
-    val nValues = rowCount(c)
-    try {
+    withCheckpoints { ck =>
+      var c = ck.lazily(und.groupBy(col("a").as("id")).agg(count(lit(1)).as("c")))
+      var changed = 1L
+      var round = 0
+      // Per-round plan (measured — see the perf note below): neighbor
+      // values arrive by a GATED BROADCAST of the n-row value frame onto
+      // the a-partitioned cached edge list (the hint is load-bearing: a
+      // localCheckpoint'd frame has no stats, so the planner falls back
+      // to a SortMergeJoin that exchanges the 2m frame on b EVERY round
+      // — measured 8.9 s; with the counted-gate broadcast the window and
+      // the per-node aggregate run on the cached layout with zero
+      // exchanges of the edge frame). Past the row cap the gate drops
+      // the hint and both sides co-partition on the join key — the
+      // open-world fallback. A semi-naive delta variant (recompute only
+      // neighbors-of-changed) was measured SLOWER here: deriving +
+      // gating the candidate set re-scans the cached 2m frame twice,
+      // which exceeds the full recompute's one aligned pass — kcore's
+      // delta pays off because its survivor set shrinks the frame
+      // itself; h-iteration's frame never shrinks.
+      val nValues = rowCount(c)
       while (round < coreRounds && changed > 0) {
         round += 1
-        val t0 = System.nanoTime()
         // h-index per node — r16 (replaces r15's collect_list array,
         // whose aggregation buffer was O(degree) per node: a 100 TB
         // hub's degree-sized array concentrated one round's memory in
@@ -6394,7 +6240,7 @@ object Analytics {
         // the current max core, which only falls), the first aggregate
         // still runs partial on the cached a-partitioned layout, and
         // the two exchanges it adds carry only the tiny histogram.
-        val h = und
+        val h = ck.lazily(und
           .join(gated(c.withColumnRenamed("id", "b")
             .withColumnRenamed("c", "cb"), nValues), Seq("b"))
           .groupBy(col("a").as("id"), col("cb"))
@@ -6402,9 +6248,7 @@ object Analytics {
           .withColumn("f", sum(col("cnt")).over(
             Window.partitionBy("id").orderBy(col("cb").desc)))
           .groupBy("id")
-          .agg(max(least(col("cb"), col("f"))).as("c"))
-          .localCheckpoint(eager = false)
-        interim += h
+          .agg(max(least(col("cb"), col("f"))).as("c")))
         // monotone ⇒ a no-change round is a provable fixpoint; the
         // probe (h streams past the gated broadcast of c, so every
         // partition of h is scanned) also feeds the n_unstable audit
@@ -6413,13 +6257,12 @@ object Analytics {
         changed = rowCount(
           h.join(gated(c.withColumnRenamed("c", "cp"), nValues), Seq("id"))
             .filter(col("c") =!= col("cp")))
-        if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-          System.err.println(s"[core] round $round changed=$changed t=${(System.nanoTime() - t0) / 1e9}")
+        dbgPhase("core", s"round $round changed=$changed")
         c = h
       }
       val unstable =
         if (round == coreRounds) changed else 0L
-      // materialize BEFORE the finally frees the round blocks the
+      // materialize BEFORE the scope frees the round blocks the
       // lazy plan would still reference (the kcore discipline)
       nodes.join(c, Seq("id"), "left_outer")
         .select(col("label"), col("key"),
@@ -6427,7 +6270,7 @@ object Analytics {
           lit(unstable).as("n_unstable"))
         .orderBy("label", "key")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val coreDecompositionSql: String = {

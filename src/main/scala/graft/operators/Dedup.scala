@@ -1371,15 +1371,13 @@ object Dedup {
   val shEvalHam = 3
 
   def simhashEval: Q = (s, dir) => {
-    val pred = simhashPairs(s, dir)
-      .filter(col("hamming") <= shEvalHam)
-      .select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    val truth = jaccardPairs(s, dir).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
     // per-call checkpoints → checkpoint the single result row, free the
-    // pair sets in finally (the dedupEval discipline)
-    try {
+    // pair sets with the scope (the dedupEval discipline)
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val pred = ck.lazily(simhashPairs(s, dir)
+        .filter(col("hamming") <= shEvalHam)
+        .select("doc_a", "doc_b"))
+      val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
       val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
       pred.agg(count(lit(1)).as("n_pred"))
         .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
@@ -1390,9 +1388,6 @@ object Dedup {
           expr("CASE WHEN n_truth = 0 THEN 0 ELSE (n_tp * 1000000) div n_truth END")
             .as("recall_ppm"))
         .localCheckpoint(eager = true)
-    } finally {
-      graft.model.PropertyGraph.freeLocalCheckpoint(pred)
-      graft.model.PropertyGraph.freeLocalCheckpoint(truth)
     }
   }
 
@@ -1701,10 +1696,9 @@ object Dedup {
   val mhCurveTs: Seq[Int] = Seq(5, 6, 7, 8, 9)
 
   def dedupThresholdCurve: Q = (s, dir) => {
-    val scored = dedupMinhashRaw(s, dir)._1.localCheckpoint(eager = false)
-    val truth = jaccardPairs(s, dir).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val scored = ck.lazily(dedupMinhashRaw(s, dir)._1)
+      val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       mhCurveTs.map { t =>
         val pred = scored.filter(col("n_match") >= t).select("doc_a", "doc_b")
@@ -1720,9 +1714,6 @@ object Dedup {
               .as("recall_ppm"))
       }.reduce(_.unionByName(_)).orderBy("threshold")
         .localCheckpoint(eager = true)
-    } finally {
-      graft.model.PropertyGraph.freeLocalCheckpoint(scored)
-      graft.model.PropertyGraph.freeLocalCheckpoint(truth)
     }
   }
 
@@ -1748,17 +1739,15 @@ object Dedup {
   def dedupEval: Q = (s, dir) => {
     // both pair sets are read twice (their count agg + the semi-join);
     // the candidate joins behind them are NOT covered by the upstream
-    // sig/shingle caches, so without a checkpoint each runs twice
-    val pred = dedupMinhashRaw(s, dir)._1
-      .filter(col("n_match") >= mhEvalMatch)
-      .select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    val truth = jaccardPairs(s, dir).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
+    // sig/shingle caches, so without a checkpoint each runs twice.
     // per-call checkpoints → checkpoint the single result row, free the
-    // pair sets in finally (repeated eval calls would otherwise pin a
-    // pred/truth copy per invocation)
-    try {
+    // pair sets with the scope (repeated eval calls would otherwise pin
+    // a pred/truth copy per invocation)
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val pred = ck.lazily(dedupMinhashRaw(s, dir)._1
+        .filter(col("n_match") >= mhEvalMatch)
+        .select("doc_a", "doc_b"))
+      val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
       val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
       pred.agg(count(lit(1)).as("n_pred"))
         .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
@@ -1769,9 +1758,6 @@ object Dedup {
           expr("CASE WHEN n_truth = 0 THEN 0 ELSE (n_tp * 1000000) div n_truth END")
             .as("recall_ppm"))
         .localCheckpoint(eager = true)
-    } finally {
-      graft.model.PropertyGraph.freeLocalCheckpoint(pred)
-      graft.model.PropertyGraph.freeLocalCheckpoint(truth)
     }
   }
 
@@ -1866,38 +1852,37 @@ object Dedup {
 
   def lshTuning: Q = (s, dir) => {
     val sig = signatures(s, dir).cache()
-    val truth = jaccardPairs(s, dir).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    // ONE pass over the signature table for all three configs: each
-    // config's band rows carry the config name inside a single
-    // explode, so the bucket cap, the band self-join, and the truth
-    // semi-join each run ONCE grouped by config instead of once per
-    // config (the r6 verdict's 3×-duplicated-scan item). The self-join
-    // stays capped and banded — the config column only widens the band
-    // key, it never crosses configs.
-    val bandRows = sig.select(col("doc_id"), explode(array(
-      lshConfigs.flatMap { case (name, rows) =>
-        val nB = mhSeeds / rows
-        (0 until nB).map { b =>
-          struct(lit(name).as("cfg"), lit(b).as("c"), concat_ws(",",
-            (0 until rows).map(j => col(s"mh${b * rows + j}")): _*).as("key"))
-        }
-      }: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.cfg").as("cfg"), col("bs.c").as("c"),
-        col("bs.key").as("key"))
-    val keep = bandRows.groupBy("cfg", "c", "key")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= mhBucketCap).select("cfg", "c", "key")
-    val capped = bandRows.join(keep, Seq("cfg", "c", "key"), "left_semi")
-    val pred = capped.alias("x").join(capped.alias("y"),
-        col("x.cfg") === col("y.cfg") && col("x.c") === col("y.c") &&
-          col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.cfg").as("cfg"), col("x.doc_id").as("doc_a"),
-        col("y.doc_id").as("doc_b"))
-      .distinct()
-      // read twice (n_pred count + the tp semi-join) — checkpoint once
-      .localCheckpoint(eager = true)
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
+      // ONE pass over the signature table for all three configs: each
+      // config's band rows carry the config name inside a single
+      // explode, so the bucket cap, the band self-join, and the truth
+      // semi-join each run ONCE grouped by config instead of once per
+      // config (the r6 verdict's 3×-duplicated-scan item). The self-join
+      // stays capped and banded — the config column only widens the band
+      // key, it never crosses configs.
+      val bandRows = sig.select(col("doc_id"), explode(array(
+        lshConfigs.flatMap { case (name, rows) =>
+          val nB = mhSeeds / rows
+          (0 until nB).map { b =>
+            struct(lit(name).as("cfg"), lit(b).as("c"), concat_ws(",",
+              (0 until rows).map(j => col(s"mh${b * rows + j}")): _*).as("key"))
+          }
+        }: _*)).as("bs"))
+        .select(col("doc_id"), col("bs.cfg").as("cfg"), col("bs.c").as("c"),
+          col("bs.key").as("key"))
+      val keep = bandRows.groupBy("cfg", "c", "key")
+        .agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz") <= mhBucketCap).select("cfg", "c", "key")
+      val capped = bandRows.join(keep, Seq("cfg", "c", "key"), "left_semi")
+      val pred = ck.own(capped.alias("x").join(capped.alias("y"),
+          col("x.cfg") === col("y.cfg") && col("x.c") === col("y.c") &&
+            col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.cfg").as("cfg"), col("x.doc_id").as("doc_a"),
+          col("y.doc_id").as("doc_b"))
+        .distinct()
+        // read twice (n_pred count + the tp semi-join) — checkpoint once
+        .localCheckpoint(eager = true))
       val nPred = pred.groupBy("cfg").agg(count(lit(1)).as("n_pred"))
       val nTp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
         .groupBy("cfg").agg(count(lit(1)).as("n_tp"))
@@ -1920,9 +1905,6 @@ object Dedup {
             " ELSE (n_tp * 1000000) div n_truth END").as("recall_ppm"))
         .orderBy("config")
         .localCheckpoint(eager = true)
-    } finally {
-      graft.model.PropertyGraph.freeLocalCheckpoint(truth)
-      graft.model.PropertyGraph.freeLocalCheckpoint(pred)
     }
   }
 

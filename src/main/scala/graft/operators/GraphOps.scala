@@ -600,13 +600,13 @@ object GraphOps {
       und.join(f.withColumnRenamed("label", "al").withColumnRenamed("key", "ak"),
           Seq("al", "ak"))
         .select(col("bl").as("label"), col("bk").as("key")).distinct()
-    val h1 = expand(start).localCheckpoint(eager = true)
-    val ego = start.unionByName(h1).unionByName(expand(h1))
-      .distinct().localCheckpoint(eager = true)
     // per-call checkpoints → checkpoint the induced edge list, free the
-    // frontier/ego sets in finally (the pathsTo discipline — repeated
-    // calls would otherwise pin an ego set per invocation)
-    try {
+    // frontier/ego sets with the scope (the pathsTo discipline —
+    // repeated calls would otherwise pin an ego set per invocation)
+    PropertyGraph.withCheckpoints { ck =>
+      val h1 = ck.own(expand(start).localCheckpoint(eager = true))
+      val ego = ck.own(start.unionByName(h1).unionByName(expand(h1))
+        .distinct().localCheckpoint(eager = true))
       // gate like every forced hint here: a 2-hop ego of a hub node can
       // be huge at 100× — past the cap the hints drop and the semi-joins
       // shuffle (the count is a cheap scan of the checkpointed set)
@@ -621,9 +621,6 @@ object GraphOps {
         .select("elabel", "src_label", "src_key", "dst_label", "dst_key")
         .orderBy("elabel", "src_label", "src_key", "dst_label", "dst_key")
         .localCheckpoint(eager = true)
-    } finally {
-      PropertyGraph.freeLocalCheckpoint(h1)
-      PropertyGraph.freeLocalCheckpoint(ego)
     }
   }
 

@@ -562,11 +562,9 @@ object Multimodal {
     * set — the prefilter contract); the number says what the prefilter
     * alone would miss. Oracle composes both full CTE chains. */
   def phashEval: Q = (s, dir) => {
-    val pred = phashDedup(s, dir).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    val truth = Dedup.jaccardPairs(s, dir).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val pred = ck.lazily(phashDedup(s, dir).select("doc_a", "doc_b"))
+      val truth = ck.lazily(Dedup.jaccardPairs(s, dir).select("doc_a", "doc_b"))
       val tp = pred.join(truth, Seq("doc_a", "doc_b"), "left_semi")
       pred.agg(count(lit(1)).as("n_pred"))
         .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
@@ -577,9 +575,6 @@ object Multimodal {
           expr("CASE WHEN n_truth = 0 THEN 0 ELSE (n_tp * 1000000) div n_truth END")
             .as("recall_ppm"))
         .localCheckpoint(eager = true)
-    } finally {
-      graft.model.PropertyGraph.freeLocalCheckpoint(pred)
-      graft.model.PropertyGraph.freeLocalCheckpoint(truth)
     }
   }
 

@@ -1510,12 +1510,11 @@ object Similarity {
         expr(scoreCase).as("rel"))
     val w = Window.partitionBy("probe_id")
       .orderBy(col("rel").desc, col("cand_id"))
-    val cand = rels.withColumn("rn0", row_number().over(w))
-      .filter(col("rn0") <= mmrCand)
-      .localCheckpoint(eager = true)
-    val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val sims = cand.select(col("probe_id"), col("cand_id").as("sel_id"),
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val cand = ck.own(rels.withColumn("rn0", row_number().over(w))
+        .filter(col("rn0") <= mmrCand)
+        .localCheckpoint(eager = true))
+      val sims = ck.own(cand.select(col("probe_id"), col("cand_id").as("sel_id"),
         col("qc").as("qa"))
         .join(cand.select(col("probe_id"), col("cand_id"), col("qc"),
           col("nb")), Seq("probe_id"))
@@ -1524,13 +1523,11 @@ object Similarity {
           dot(col("qa"), col("qc")).as("dp"), col("nb"))
         .select(col("probe_id"), col("sel_id"), col("cand_id"),
           expr(scoreCase).as("sim"))
-        .localCheckpoint(eager = true)
-      ckpts += sims
-      var sel = cand.filter(col("rn0") === 1)
+        .localCheckpoint(eager = true))
+      var sel = ck.own(cand.filter(col("rn0") === 1)
         .select(col("probe_id"), col("cand_id"),
           (lit(7L) * col("rel")).as("mmr"), lit(1).as("rn"))
-        .localCheckpoint(eager = true)
-      ckpts += sel
+        .localCheckpoint(eager = true))
       for (t <- 2 to mmrK) {
         val picked = sel.select("probe_id", "cand_id")
         val ms = sims
@@ -1548,15 +1545,11 @@ object Similarity {
           .filter(col("r") === 1)
           .select(col("probe_id"), col("cand_id"), col("mmr"),
             lit(t).as("rn"))
-        sel = sel.unionByName(pick).localCheckpoint(eager = true)
-        ckpts += sel
+        sel = ck.own(sel.unionByName(pick).localCheckpoint(eager = true))
       }
       sel.orderBy("probe_id", "rn")
         .select("probe_id", "rn", "cand_id", "mmr")
         .localCheckpoint(eager = true)
-    } finally {
-      ckpts.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
-      graft.model.PropertyGraph.freeLocalCheckpoint(cand)
     }
   }
 
@@ -2540,11 +2533,9 @@ object Similarity {
     // the chain (the nationBfs discipline). (r15: lazy pins were
     // measured 4.7 → 6.8 s here — the next round's broadcast-build
     // racers recompute a lazy pin; eager stays.)
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint(eager = true); steps += p; p
-    }
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      def pin(df: DataFrame): DataFrame =
+        ck.own(df.localCheckpoint(eager = true))
       // greedy = beam width 1: keep only the best-so-far each hop (it
       // rides the union, so the walk is monotone in score)
       def greedy(start: DataFrame, adj: DataFrame): DataFrame = {
@@ -2590,9 +2581,9 @@ object Similarity {
         .filter(col("rn") <= annK)
         .select("probe_id", "rn", "cand_id", "score")
         .orderBy("probe_id", "rn")
-        // materialize before the per-step blocks are freed below
+        // materialize before the scope frees the per-step blocks
         .localCheckpoint(eager = true)
-    } finally steps.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   val hnswSql: String = {
@@ -2836,11 +2827,9 @@ object Similarity {
         dot(col("qp"), col("qc")).as("dp"), col("nb"))
       .select(col("beam"), col("probe_id"), col("cand_id"),
         expr(scoreExpr).as("score"))
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val p = df.localCheckpoint(eager = true); steps += p; p
-    }
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      def pin(df: DataFrame): DataFrame =
+        ck.own(df.localCheckpoint(eager = true))
       // seed: probes × configs via explode (never a multi-row join)
       val seed = probes.select(col("probe_id"),
           explode(array(beamSweep.map(b => lit(b.toLong)): _*)).as("beam"))
@@ -2865,14 +2854,14 @@ object Similarity {
         .filter(col("rn") <= annK)
         .select("beam", "probe_id", "cand_id")
         .localCheckpoint(eager = true)
-    } finally steps.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   def beamCurve: Q = (s, dir) => {
-    val ex = annTopk(s, dir).select(col("probe_id"), col("cand_id"))
-      .localCheckpoint(eager = true)
-    val walk = nswWalkAllBeams(s, dir)
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val ex = ck.own(annTopk(s, dir).select(col("probe_id"), col("cand_id"))
+        .localCheckpoint(eager = true))
+      val walk = ck.own(nswWalkAllBeams(s, dir))
       val hits = walk
         .join(ex, Seq("probe_id", "cand_id"), "left_semi")
         .groupBy("beam").agg(count(lit(1)).as("hits"))
@@ -2886,9 +2875,8 @@ object Similarity {
         .select(col("beam"), col("n_exact"),
           coalesce(col("hits"), lit(0L)).as("hits"))
         .orderBy("beam")
-        .localCheckpoint(eager = true) // materialize before frees below
-    } finally Seq(walk, ex)
-      .foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+        .localCheckpoint(eager = true) // materialize before the scope frees
+    }
   }
 
   val beamCurveSql: String = {

@@ -943,10 +943,10 @@ object TextOps {
     * BOTH t_bpe_train (reads the per-round bests) and t_bpe_apply
     * (reads the final merged vocabulary) run, so train and apply can
     * never disagree by construction. `wd` (the original word) rides
-    * along for the apply side's vocab join; callers pass their interim
-    * buffer so round frames release under their `finally`. */
+    * along for the apply side's vocab join; round frames are released
+    * with the caller's `ck`. */
   private def bpeMergeRounds(s: SparkSession, dir: String,
-      interim: scala.collection.mutable.ArrayBuffer[DataFrame])
+      ck: graft.model.PropertyGraph.Checkpoints)
       : (Seq[DataFrame], DataFrame) = {
     var words = docs(s, dir)
       .select(explode(split(col("text"), " ")).as("wd"))
@@ -965,16 +965,14 @@ object TextOps {
         .groupBy("pair").agg(sum(col("cnt")).as("freq"))
       // deterministic argmax: global sort-limit (TakeOrderedAndProject
       // — vocabulary-pair-sized input, 1 row out)
-      val best = pairs.orderBy(col("freq").desc, col("pair")).limit(1)
-        .localCheckpoint(eager = true)
-      interim += best
+      val best = ck.own(pairs.orderBy(col("freq").desc, col("pair")).limit(1)
+        .localCheckpoint(eager = true))
       // apply the merge; checkpoint caps the per-round lineage
-      words = words.crossJoin(broadcast(best.select(col("pair"))))
+      words = ck.own(words.crossJoin(broadcast(best.select(col("pair"))))
         .select(col("wd"),
           expr("replace(w, pair, replace(pair, ' ', ''))").as("w"),
           col("cnt"))
-        .localCheckpoint(eager = true)
-      interim += words
+        .localCheckpoint(eager = true))
       best
     }
     (bests, words)
@@ -1012,15 +1010,14 @@ object TextOps {
   }
 
   def bpeTrain: Q = (s, dir) => {
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val (bests, _) = bpeMergeRounds(s, dir, interim)
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val (bests, _) = bpeMergeRounds(s, dir, ck)
       bests.zipWithIndex.map { case (best, i) =>
         best.select(lit(i + 1).cast("int").as("round"), col("pair"),
           col("freq"))
       }.reduce(_.unionByName(_)).orderBy("round")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   lazy val bpeTrainSql: String =
@@ -1048,9 +1045,8 @@ object TextOps {
     * Single-char words (excluded from training, 1 symbol either way)
     * fall out of the left join's coalesce. */
   def bpeApply: Q = (s, dir) => {
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val (_, words) = bpeMergeRounds(s, dir, interim)
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val (_, words) = bpeMergeRounds(s, dir, ck)
       val vocab = words.select(col("wd"),
         size(split(col("w"), " ")).cast("long").as("n_sym"))
       docs(s, dir)
@@ -1064,7 +1060,7 @@ object TextOps {
           expr("((n_chars - n_bpe_tokens) * 1000000) div n_chars"))
         .orderBy("source")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   lazy val bpeApplySql: String = {
@@ -1101,9 +1097,8 @@ object TextOps {
     * char-per-symbol exactly as the apply op does. One explode +
     * vocab join + lang-keyed partial-agged groupBy. */
   def bpeFertility: Q = (s, dir) => {
-    val interim = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      val (_, words) = bpeMergeRounds(s, dir, interim)
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val (_, words) = bpeMergeRounds(s, dir, ck)
       val vocab = words.select(col("wd"),
         size(split(col("w"), " ")).cast("long").as("n_sym"))
       docs(s, dir)
@@ -1119,7 +1114,7 @@ object TextOps {
             .as("chars_per_token_ppm"))
         .orderBy("lang")
         .localCheckpoint(eager = true)
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   lazy val bpeFertilitySql: String = {
@@ -2198,32 +2193,33 @@ object TextOps {
     val perDoc = occ.join(broadcast(scored), Seq("b"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_feat"),
         expr("sum(score_b) div count(1)").as("dsir_ppm"))
-    val full = docs(s, dir).select("doc_id")
-      .join(perDoc, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("n_feat"), lit(0L)).as("n_feat"),
-        coalesce(col("dsir_ppm"), lit(0L)).as("dsir_ppm"))
-      // materialized ONCE: three consumers (histogram, boundary slice,
-      // final output) otherwise each re-run the explode→perDoc chain —
-      // measured 2.24 s vs 0.25 s pre-rewrite at sf0.1, mostly this
-      // recomputation. Eager (not lazy) checkpoint: the frame is one
-      // row per doc, and the g_matching cadence audit showed lazy
-      // persist racing concurrent broadcast builds into recomputes.
-      .localCheckpoint()
-    // selection (r12 — was a 3-job histogram-cut + boundary-tie
-    // machinery, itself the r10 fix for a corpus-wide un-partitioned
-    // row_number): the exact top-dsirKeep set under the total order
-    // (dsir_ppm desc, doc_id) is ONE TakeOrderedAndProject — each task
-    // keeps its local top-k, the driver merges k·p rows — the
-    // distributive rank-select shape that is scale-safe at any corpus
-    // size and costs one job instead of three. The ≤ dsirKeep-row
-    // result broadcasts back over the checkpointed frame; the oracle
-    // keeps its row_number formulation (identical set by the shared
-    // total order).
-    val out = dsirSelect(full)
-      .localCheckpoint(eager = true) // the memoized frame
-    occ.unpersist(blocking = false)
-    graft.model.PropertyGraph.freeLocalCheckpoint(full)
-    out
+    graft.model.PropertyGraph.withCheckpoints { ck =>
+      val full = ck.own(docs(s, dir).select("doc_id")
+        .join(perDoc, Seq("doc_id"), "left_outer")
+        .select(col("doc_id"), coalesce(col("n_feat"), lit(0L)).as("n_feat"),
+          coalesce(col("dsir_ppm"), lit(0L)).as("dsir_ppm"))
+        // materialized ONCE: three consumers (histogram, boundary slice,
+        // final output) otherwise each re-run the explode→perDoc chain —
+        // measured 2.24 s vs 0.25 s pre-rewrite at sf0.1, mostly this
+        // recomputation. Eager (not lazy) checkpoint: the frame is one
+        // row per doc, and the g_matching cadence audit showed lazy
+        // persist racing concurrent broadcast builds into recomputes.
+        .localCheckpoint())
+      // selection (r12 — was a 3-job histogram-cut + boundary-tie
+      // machinery, itself the r10 fix for a corpus-wide un-partitioned
+      // row_number): the exact top-dsirKeep set under the total order
+      // (dsir_ppm desc, doc_id) is ONE TakeOrderedAndProject — each task
+      // keeps its local top-k, the driver merges k·p rows — the
+      // distributive rank-select shape that is scale-safe at any corpus
+      // size and costs one job instead of three. The ≤ dsirKeep-row
+      // result broadcasts back over the checkpointed frame; the oracle
+      // keeps its row_number formulation (identical set by the shared
+      // total order).
+      val out = dsirSelect(full)
+        .localCheckpoint(eager = true) // the memoized frame
+      occ.unpersist(blocking = false)
+      out
+    }
   }
 
   /** The selection step on its own (PlanAuditSpec asserts its

@@ -1155,9 +1155,8 @@ object Streams {
     // (the r13 advisor leak — LRU eviction saves you from failure,
     // not from growing memory pressure)
     val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val cps = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
+    try graft.model.PropertyGraph.withCheckpoints { ck =>
       // the store in its two pieces: composed deltas (delta-bounded —
       // the ONLY label frame that ever enters an exchange this batch)
       // and the bucket-partitioned snapshot (probed via partition
@@ -1239,12 +1238,10 @@ object Streams {
         round += 1
         val m = und.join(comp.withColumnRenamed("id", "a"), Seq("a"))
           .groupBy(col("b").as("id")).agg(min("comp").as("m"))
-        val merged = comp.join(m, Seq("id"), "left_outer")
+        val merged = ck.lazily(comp.join(m, Seq("id"), "left_outer")
           .select(col("id"),
             least(col("comp"), coalesce(col("m"), col("comp"))).as("comp"),
-            (col("m") < col("comp")).as("chg"))
-          .localCheckpoint(eager = false)
-        cps += merged
+            (col("m") < col("comp")).as("chg")))
         changed = merged.filter(col("chg")).count()
         comp = resetStats(merged.select("id", "comp"))
       }
@@ -1313,10 +1310,7 @@ object Streams {
            ivmManifestFiles(outDir, batchId - 1, "labels")
              .map(f => s"labels|$f") ++
            fresh("labels")))
-    } finally {
-      cached.foreach(_.unpersist(false))
-      cps.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
-    }
+    } finally cached.foreach(_.unpersist(false))
   }
 
   /** The component-label table AT a published version: the composed

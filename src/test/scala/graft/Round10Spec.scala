@@ -59,15 +59,14 @@ class Round10Spec extends AnyFunSuite {
   private def settle(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     val e = edges.toDF("a", "b")
-    val interim = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
-    try {
+    graft.model.PropertyGraph.withCheckpoints { ck =>
       val assigned = graft.operators.Analytics
-        .sccSettle(spark, e, 1000000L, interim)
+        .sccSettle(spark, e, 1000000L, ck)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // nodes isolated mid-recursion are omitted = proven singletons
       val nodes = edges.flatMap(p => Seq(p._1, p._2)).distinct
       nodes.map(v => v -> assigned.getOrElse(v, v)).toMap
-    } finally interim.foreach(graft.model.PropertyGraph.freeLocalCheckpoint)
+    }
   }
 
   private def check(edges: Seq[(Long, Long)]): Unit = {
