@@ -4,11 +4,15 @@
     python3 scripts/ab_pairs.py --parent HEAD~1 --workload graph_iterative --seeds 501-510
 
 Run from the root of a checkout. The parent revision is checked out with
-`git worktree add` into a temporary directory under /tmp (removed at the
-end), or taken as is from --parent-dir. Each seed is one pair: one
-untraced `perfbench/run.py` run of the parent checkout and one of this
-checkout, with the same workload, seed and run length (BENCHMARK.json's
-run_seconds). The side that runs first alternates from pair to pair, so a
+`git worktree add` into a temporary directory under /tmp, or taken as is
+from --parent-dir. The change side is a fresh copy of this checkout's
+working tree (its tracked and untracked, non-ignored files, as listed by
+`git ls-files -co --exclude-standard`) in the same temporary directory,
+so neither side reads build outputs or run records left in a long-used
+checkout; the benchmark itself runs each side as a fresh copy. Both are
+removed at the end. Each seed is one pair: one untraced
+`perfbench/run.py` run of the parent checkout and one of the copy, with
+the same workload, seed and run length (BENCHMARK.json's run_seconds). The side that runs first alternates from pair to pair, so a
 drift in host load falls on both sides.
 
 For every end-to-end metric in BENCHMARK.json it prints each side's median
@@ -44,6 +48,19 @@ def quartiles(values):
         return values[0], values[0], values[0]
     q1, med, q3 = statistics.quantiles(values, n=4, method="inclusive")
     return q1, med, q3
+
+
+def copy_tree(dst):
+    """Copy this checkout's tracked and untracked, non-ignored files to dst."""
+    listed = subprocess.run(["git", "ls-files", "-co", "--exclude-standard", "-z"],
+                            cwd=ROOT, check=True, capture_output=True).stdout
+    for rel in filter(None, listed.decode().split("\0")):
+        src = os.path.join(ROOT, rel)
+        if not os.path.isfile(src):  # tracked but deleted in the working tree
+            continue
+        out = os.path.join(dst, rel)
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        shutil.copy2(src, out)
 
 
 def run_side(checkout, workload, seed, seconds):
@@ -94,14 +111,15 @@ def main():
     metrics = [(m["name"], m["better"]) for m in bench["end_to_end"]]
     seeds = parse_seeds(a.seeds)
 
-    tmp = None
+    tmp = tempfile.mkdtemp(prefix="ab_pairs-", dir="/tmp")
+    change_dir = os.path.join(tmp, "change")
+    copy_tree(change_dir)
     parent_dir = a.parent_dir
     if parent_dir is None:
-        tmp = tempfile.mkdtemp(prefix="ab_pairs-", dir="/tmp")
         parent_dir = os.path.join(tmp, "parent")
         subprocess.run(["git", "worktree", "add", "--detach", parent_dir, a.parent],
                        cwd=ROOT, check=True, capture_output=True)
-    sides = {"parent": parent_dir, "change": ROOT}
+    sides = {"parent": parent_dir, "change": change_dir}
     got = {"parent": [], "change": []}
     try:
         for i, seed in enumerate(seeds):
@@ -120,13 +138,13 @@ def main():
                 "%s %.4f -> %.4f" % (m, pair["parent"][m], pair["change"][m])
                 for m, _ in metrics), flush=True)
     finally:
-        if tmp is not None:
+        if a.parent_dir is None:
             subprocess.run(["git", "worktree", "remove", "--force", parent_dir],
                            cwd=ROOT, capture_output=True)
-            shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     n = len(got["parent"])
-    print("\n%s: %d complete pairs of %d, parent %s vs this checkout, %g s steady" % (
+    print("\n%s: %d complete pairs of %d, parent %s vs a copy of this checkout, %g s steady" % (
         a.workload, n, len(seeds), a.parent, seconds))
     if n == 0:
         sys.exit(1)

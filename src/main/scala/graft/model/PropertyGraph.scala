@@ -214,12 +214,14 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     * are finite); `maxDepth` is a safety cap only.
     *
     * Scale shape: the frontier is broadcast only while it is provably
-    * small (size known from the per-level materialization) — past
-    * `broadcastRowCap` rows the hint is dropped and the join shuffles,
-    * because a mid-BFS frontier is O(N) and a blind broadcast hint dies
-    * at the 8 GB ceiling on a big graph. Per-level caches are released
-    * before returning; the result is materialized first so nothing is
-    * recomputed after the unpersist.
+    * small (size known from the per-level probe) through
+    * `PropertyGraph.gated`, the one broadcast gate — past its cap the
+    * hint is dropped and the join shuffles, because a mid-BFS frontier
+    * is O(N) and a blind broadcast hint dies at the 8 GB ceiling on a
+    * big graph. Every per-level checkpoint, and the backward-distance
+    * frame when the prune runs, is freed with the call's checkpoint
+    * scope; the result is materialized first so nothing is recomputed
+    * after the release.
     *
     * @param directed   true restores the round-1 directed contract
     *                   (g_paths_to keeps it for oracle continuity)
@@ -292,19 +294,16 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     // heading into combinatorial blowup (the 100 TB failure mode) pays
     // maxDepth−1 node-bounded rounds to cut path-count-sized work.
     var pruneDist: Option[DataFrame] = None
-    var distRef: Option[DistEntry] = None
-    try PropertyGraph.withCheckpoints { ck =>
+    PropertyGraph.withCheckpoints { ck =>
     while (depth < maxDepth && frontierRows > 0) {
       if (pruneDist.isEmpty && frontierRows > pruneActivationRows) {
-        val en = acquireDistances(e, dstLabel, dstKey, nodeLabels,
-          edgeLabels, directed, srcLabel, lookout = maxDepth - depth)
-        distRef = Some(en)
-        pruneDist = Some(
-          if (en.rows <= broadcastRowCap) broadcast(en.df) else en.df)
+        // one backward BFS per call; its frame is freed with the scope
+        val (d, rows) = distancesToDst(e, dstLabel, dstKey, nodeLabels,
+          srcLabel, lookout = maxDepth - depth)
+        pruneDist = Some(PropertyGraph.gated(ck.own(d), rows))
       }
       depth += 1
-      val fr = if (frontierRows <= broadcastRowCap) broadcast(frontier)
-               else frontier
+      val fr = PropertyGraph.gated(frontier, frontierRows)
       // once pruning is active, expansion targets must still be able
       // to reach dst in the budget left after stepping onto them
       val eStep = pruneDist match {
@@ -353,84 +352,8 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     // manager until session end
     (if (withEdgeLabels) results.get
      else results.get.drop("elabels")).localCheckpoint(eager = true)
-    } finally distRef.foreach(releaseDistances)
-  }
-
-  /** BOUNDED (LRU, `distMemoCap` entries) memo for backward-distance
-    * frames, keyed by the full parameter tuple that determines the
-    * traversable edge set and the sink. The stored frame is ONE
-    * checkpointed node-bounded leaf and its distances are TRUE min-hop
-    * values merely truncated at `lookout`, so an entry computed with a
-    * larger lookout serves any smaller one (the prune's own
-    * `b_dist <= budget` filter discards the extra rows); a request with
-    * a larger lookout recomputes and replaces, freeing the old frame's
-    * blocks. Eviction (least-recently-used past the cap) unpersists the
-    * evicted frame's blocks — the r4 advisor's fix for the memo growing
-    * without bound over a session's distinct query matrix.
-    * PropertyGraph.load memoizes snapshots per (session, dir), so
-    * `this`-scoped state IS session-keyed. localCheckpoint blocks are
-    * unrecoverable on executor loss; a lost block simply re-runs the
-    * backward BFS on the next call (the memo entry dies with the job
-    * that would have read it). */
-  private val distMemoCap = 32
-  private type DistKey = (String, Long, Seq[String], Seq[String], Boolean, String)
-
-  /** Memo entry with a REFERENCE COUNT: an in-flight pathsTo holds the
-    * frame across its whole forward loop (outside the memo lock), so
-    * LRU eviction or a lookout upgrade must not unpersist blocks a
-    * concurrent search is still reading — localCheckpoints are
-    * non-recomputable, the job would die. Eviction/replacement calls
-    * `retire`, which frees immediately only when unreferenced and
-    * otherwise marks the entry dead; the LAST releaser frees it. */
-  private final class DistEntry(val df: DataFrame, val rows: Long,
-                                val lookout: Int) {
-    var refs: Int = 0
-    var dead: Boolean = false
-  }
-
-  /** Caller must hold the distMemo lock. */
-  private def retire(en: DistEntry): Unit =
-    if (en.refs == 0) PropertyGraph.freeLocalCheckpoint(en.df)
-    else en.dead = true
-
-  private val distMemo =
-    new java.util.LinkedHashMap[DistKey, DistEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DistKey, DistEntry]): Boolean =
-        if (size > distMemoCap) { retire(e.getValue); true } else false
-    }
-
-  /** Fetch-or-build with the ref count already incremented; pair every
-    * call with `releaseDistances` (pathsTo does, in its finally). The
-    * build runs inside the lock — coarse, but a backward BFS is rare
-    * (prune activation only) and correctness of concurrent eviction
-    * beats overlap here. */
-  private def acquireDistances(e: DataFrame, dstLabel: String, dstKey: Long,
-                               nodeLabels: Seq[String], edgeLabels: Seq[String],
-                               directed: Boolean, srcLabel: String,
-                               lookout: Int): DistEntry = {
-    val k = (dstLabel, dstKey, nodeLabels, edgeLabels, directed, srcLabel)
-    distMemo.synchronized {
-      Option(distMemo.get(k)) match {
-        case Some(en) if en.lookout >= lookout =>
-          en.refs += 1; en
-        case stale =>
-          val (d, rows) = distancesToDst(e, dstLabel, dstKey, nodeLabels,
-            srcLabel, lookout)
-          stale.foreach(retire)
-          val en = new DistEntry(d, rows, lookout)
-          en.refs = 1
-          distMemo.put(k, en)
-          en
-      }
     }
   }
-
-  private def releaseDistances(en: DistEntry): Unit =
-    distMemo.synchronized {
-      en.refs -= 1
-      if (en.dead && en.refs == 0) PropertyGraph.freeLocalCheckpoint(en.df)
-    }
 
   /** Backward BFS: minimum hop count from every node to (dstLabel,
     * dstKey) over the traversable edge set `e` (rows a_*→b_*), looking
@@ -439,7 +362,9 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     * the forward prune, whose loosest remaining budget for an expansion
     * target is lookout − 1). Returns (label, key, dist) keyed as b_*
     * for a direct join against `e`'s target side, plus the total row
-    * count so the caller can gate its broadcast hint. The BFS carries
+    * count so the caller can gate its broadcast hint; the frame is one
+    * lazily checkpointed leaf, already materialized by that count, and
+    * the caller frees it. The BFS carries
     * DISTINCT nodes — node-bounded, never path-enumerating — with
     * per-level eager materialization and size-gated broadcast, the same
     * shape as the forward loop. Backward candidates keep only labels a
@@ -461,16 +386,14 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
     var d = 0
     while (d < lookout - 1 && frontierRows > 0) {
       d += 1
-      val fr = if (frontierRows <= broadcastRowCap) broadcast(frontier)
-               else frontier
+      val fr = PropertyGraph.gated(frontier, frontierRows)
       val cand0 = e.join(fr.select("b_label", "b_key"), Seq("b_label", "b_key"))
         .select(col("a_label").as("b_label"), col("a_key").as("b_key"))
         .distinct()
       val cand = if (nodeLabels.isEmpty) cand0
                  else cand0.filter(
                    col("b_label").isInCollection(nodeLabels :+ srcLabel))
-      val next = ck.lazily(cand.join(
-          if (total <= broadcastRowCap) broadcast(dist) else dist,
+      val next = ck.lazily(cand.join(PropertyGraph.gated(dist, total),
           Seq("b_label", "b_key"), "left_anti")
         .withColumn("b_dist", lit(d)))
       if (d < lookout - 1) {
@@ -480,9 +403,9 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
       dist = dist.unionByName(next)
       frontier = next
     }
-    // collapse the per-level union into ONE checkpointed leaf (what the
-    // memo stores and eviction frees); its probe is the exact total and
-    // materializes the last level before the scope frees the levels
+    // collapse the per-level union into ONE checkpointed leaf; its probe
+    // is the exact total and materializes the last level before the
+    // scope frees the levels
     val out = dist.localCheckpoint(eager = false)
     (out, PropertyGraph.rowCount(out))
     }
@@ -499,9 +422,6 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
         // label i with the node ARRIVED AT, so skip element 1
         slice(split(col("path"), ">"), 2, 1000000).as("node")))
 
-  /** Frontier-size gate for broadcast hints in iterative traversals. */
-  private val broadcastRowCap = 500000L
-
   /** Frontier size past which pathsTo computes backward distances and
     * prunes (see the loop comment). Package-visible so specs can force
     * activation on small data and assert result equality. */
@@ -514,8 +434,7 @@ object PropertyGraph {
   // plan-identical copies (correct either way via the cache manager's
   // canonicalized-plan lookup, but re-deriving spammed an "already
   // cached" warning per query in the bench)
-  private val loaded =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), PropertyGraph]
+  private val loaded = new SessionMemo[PropertyGraph]
 
   /** Release the block-manager storage behind a localCheckpoint-ed
     * frame. A checkpointed Dataset's analyzed plan is a LogicalRDD
@@ -570,12 +489,48 @@ object PropertyGraph {
   private[graft] def rowCount(df: DataFrame): Long =
     df.select().queryExecution.toRdd.count()
 
+  /** THE broadcast size gate: hint a broadcast of `df` only when its
+    * counted size `rows` is at most `cap`. Below the cap the hint pins
+    * the known-small side deterministically; above it the hint is
+    * DROPPED — a forced broadcast past the 8 GB ceiling fails the query
+    * outright, it does not degrade — and the join falls back to a
+    * shuffle, where AQE can still convert at runtime from observed
+    * sizes. `rows` is a real count, never a guess: a loop probe or a
+    * cached node count where one exists, else one `rowCount`. */
+  private[graft] def gated(df: DataFrame, rows: Long,
+                           cap: Long = 500000L): DataFrame =
+    if (rows <= cap) broadcast(df) else df
+
+  /** Rows per partition for edge-bounded frames: their width derives
+    * from ROW COUNT, clamped at the session's parallelism, instead of
+    * inheriting spark.sql.shuffle.partitions. At local scale the
+    * shuffle width left 32 near-empty blocks, and every scan — dozens
+    * per iterative operator round — paid a 32-task wave of pure
+    * scheduling; at real scale rows/250k exceeds the clamp and the
+    * width is the parallelism. Env-overridable for cluster tuning and
+    * A/B without a code change. */
+  private lazy val edgeRowsPerPart: Long = sys.env
+    .get("SPARK_GRAFT_EDGE_ROWS_PER_PART").map(_.toLong)
+    .getOrElse(250000L)
+
+  /** Width for an edge-bounded frame of `rows` rows. */
+  private[graft] def edgeParts(s: SparkSession, rows: Long): Int =
+    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
+      rows / edgeRowsPerPart)).toInt
+
+  /** Width for node-bounded per-round frames (~24 B/row, ~16 MB per
+    * partition): 1 partition at local SFs, parallelism-capped growth at
+    * real scale. */
+  private[graft] def nodeParts(s: SparkSession, rows: Long): Int =
+    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
+      rows * 24L / (16L << 20))).toInt
+
   /** Deterministic graph from the TPC-H star schema (SURVEY.md §4) —
     * pure SQL-expressible construction so every oracle rebuilds the
     * identical graph in its CTEs.
     */
   def load(spark: SparkSession, dir: String): PropertyGraph =
-    SessionMemo.getOrBuild(loaded, (spark, dir))(build(spark, dir))
+    loaded(spark, dir)(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): PropertyGraph = {
     def t(n: String) = Tables(spark, dir, n)

@@ -4,36 +4,41 @@ import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 
-/** Session-keyed memoization for values with EAGER side effects
-  * (cache() registration, localCheckpoint block pinning).
+/** Session-keyed memo for values with EAGER side effects (cache()
+  * registration, localCheckpoint block pinning): one value per
+  * (session, dir), built at most once. Declare one per shared frame and
+  * read it as `memo(s, dir)(build)`.
   *
   * `TrieMap.getOrElseUpdate` alone may evaluate the value thunk more
   * than once under concurrent first access — the LOSING build's
   * cached/checkpointed blocks would then sit in the block manager with
-  * no owner for the rest of the session (r5 advisor finding on
-  * coSupport). Serializing the build under the map's monitor closes
-  * that: at most one build per (session, dir) ever runs. The lock is
-  * coarse but builds happen once per session and the steady-state hit
-  * is a lock-acquire around a map read.
+  * no owner for the rest of the session. Serializing the build under
+  * this memo's own monitor closes that: at most one build per
+  * (session, dir) ever runs. The lock is per memo, so a hit on one memo
+  * never waits on another memo's build; builds happen once per session
+  * and the steady-state hit is a lock-acquire around a map read.
   *
   * Also evicts entries of stopped sessions on every access — the memos
   * are JVM-global, and a driver cycling sessions (notebook, test
   * matrix) would otherwise pin one dead entry per (session, dir)
   * forever.
   */
+final class SessionMemo[V] {
+  private val cache = TrieMap.empty[(SparkSession, String), V]
+
+  def apply(s: SparkSession, dir: String)(build: => V): V =
+    synchronized {
+      cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
+      cache.getOrElseUpdate((s, dir),
+        { SessionMemo.buildCount.incrementAndGet(); build })
+    }
+}
+
 object SessionMemo {
   /** Count of memo BUILDS actually executed (reads don't count).
     * Bench samples the delta around each query to tell a FIRST-TOUCHER
     * sample (absorbs a shared family build) from a steady-state one:
     * publishing the min wall across the two would erase the build cost
-    * from the per-query number AND from the family sum — the r14
-    * advisor finding on the unconditional top-K re-measure. */
+    * from the per-query number AND from the family sum. */
   val buildCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def getOrBuild[V](cache: TrieMap[(SparkSession, String), V],
-                    key: (SparkSession, String))(build: => V): V =
-    cache.synchronized {
-      cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      cache.getOrElseUpdate(key, { buildCount.incrementAndGet(); build })
-    }
 }

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.PropertyGraph
-import graft.model.PropertyGraph.{Checkpoints, rowCount, withCheckpoints}
+import graft.model.{PropertyGraph, SessionMemo}
+import graft.model.PropertyGraph.{Checkpoints, edgeParts, gated, nodeParts,
+  rowCount, withCheckpoints}
 
 /** Graph analytics (SURVEY.md §2 B-block): fixed-iteration DataFrame
   * loops so the DuckDB oracle (programmatically unrolled CTE chain) is
@@ -46,6 +47,14 @@ import graft.model.PropertyGraph.{Checkpoints, rowCount, withCheckpoints}
   * every loop registers its checkpoints in one
   * `PropertyGraph.withCheckpoints` scope, which frees them when the
   * operator returns or throws.
+  *
+  * BROADCAST GATE: every forced broadcast hint goes through
+  * `PropertyGraph.gated(df, rows)`, the one gate for the codebase: the
+  * hint rides only on a frame counted anyway (a round probe, a cached
+  * node count) and drops past the cap (500k rows; betweenness passes
+  * its own 1M/2M caps). Frame widths come from
+  * `PropertyGraph.edgeParts`/`nodeParts`, and every session-shared frame
+  * is a `SessionMemo`.
   */
 object Analytics {
   type Q = (SparkSession, String) => DataFrame
@@ -53,19 +62,6 @@ object Analytics {
   private def g(s: SparkSession, dir: String): PropertyGraph =
     PropertyGraph.load(s, dir)
   private val cte = PropertyGraph.oracleCte
-
-  /** Size gate for the forced broadcast hints in iterative loops: below
-    * the cap the hint pins the (known-small) side deterministically;
-    * above it the hint is DROPPED — a forced broadcast past the 8 GB
-    * ceiling fails the query outright, it does not degrade — and the
-    * join falls back to shuffle, where AQE can still convert at runtime
-    * from observed sizes. Every caller passes a row count that is
-    * already materialized for loop termination (delta/alive counts) or
-    * a cached-node count, so the gate adds no extra jobs. Mirrors
-    * PropertyGraph.pathsTo's frontier gate. */
-  private val bcastRowCap = 500000L
-  private def gated(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= bcastRowCap) broadcast(df) else df
 
   /** Opt-in phase timing for the iterative builds (SPARK_GRAFT_DEBUG):
     * wall is driver-side, tags are stable grep anchors. */
@@ -417,8 +413,7 @@ object Analytics {
     * BIGINT keys (hashing/shuffling one long beats a (string, long)
     * composite every round) and the edge materialization is paid once
     * per session instead of once per operator. */
-  private val numericCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val numericCache = new SessionMemo[(DataFrame, DataFrame)]
 
   /** Populate the session-shared caches (PropertyGraph nodes/edges +
     * the numeric edge list) eagerly. Bench calls this in its warmup
@@ -462,11 +457,10 @@ object Analytics {
     * the 2m-row distinct shuffle is paid once per session, not once per
     * operator. Eager localCheckpoint: multiple consumers, and the
     * distinct would otherwise re-execute per reference. */
-  private val simpleUndCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val simpleUndCache = new SessionMemo[DataFrame]
 
   private def simpleUnd(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(simpleUndCache, (s, dir))(
+    simpleUndCache(s, dir)(
       // repartition AFTER the distinct (which shuffles on both columns)
       // so the checkpointed layout is keyed on the frontier-join key —
       // betweenness/random-walk rounds then reuse it (the und story)
@@ -479,50 +473,25 @@ object Analytics {
     * g_topo_levels loops 6 delta rounds over it and g_hits 8
     * half-rounds; both were rebuilding a per-call plan with scan-width
     * partitioning, paying task-scheduling overhead every iteration. */
-  private val directedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val directedCache = new SessionMemo[DataFrame]
 
   private def directedNum(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(directedCache, (s, dir))(
+    directedCache(s, dir)(
       g(s, dir).edges.select(
         nodeIdCol(col("src_label"), col("src_key")).as("a"),
         nodeIdCol(col("dst_label"), col("dst_key")).as("b"))
         .repartition(edgeParts(s, edgeRows(s, dir)), col("a"))
         .cache())
 
-  /** Rows per partition for the shared cached edge frames (r16): their
-    * width now derives from ROW COUNT, clamped at the session's
-    * parallelism, instead of inheriting spark.sql.shuffle.partitions.
-    * At local scale the old width left 32 near-empty blocks, and every
-    * scan of the cache — dozens per iterative operator round — paid a
-    * 32-task wave of pure scheduling (the r15 32-core inverse-scaling
-    * pathology); at real scale rows/250k exceeds the clamp and the
-    * width is the parallelism exactly as before. Env-overridable for
-    * cluster tuning and A/B without a code change. */
-  private lazy val edgeRowsPerPart: Long = sys.env
-    .get("SPARK_GRAFT_EDGE_ROWS_PER_PART").map(_.toLong)
-    .getOrElse(250000L)
-  private def edgeParts(s: SparkSession, rows: Long): Int =
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      rows / edgeRowsPerPart)).toInt
-
-  /** Width for node-bounded per-round frames (~24 B/row, ~16 MB per
-    * partition — the ccLabels compParts rule, shared): 1 partition at
-    * local SFs, parallelism-capped growth at real scale. */
-  private def nodeParts(s: SparkSession, rows: Long): Int =
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      rows * 24L / (16L << 20))).toInt
-
   /** Session-memoized base edge-table row count (parquet metadata
     * scan) — feeds edgeParts for every shared cache. */
-  private val edgeRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
+  private val edgeRowsCache = new SessionMemo[Long]
   private def edgeRows(s: SparkSession, dir: String): Long =
-    graft.model.SessionMemo.getOrBuild(edgeRowsCache, (s, dir))(
+    edgeRowsCache(s, dir)(
       rowCount(g(s, dir).edges))
 
   private[graft] def numericGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.model.SessionMemo.getOrBuild(numericCache, (s, dir)) {
+    numericCache(s, dir) {
       val graph = g(s, dir)
       val sid = nodeIdCol(col("src_label"), col("src_key"))
       val did = nodeIdCol(col("dst_label"), col("dst_key"))
@@ -668,20 +637,14 @@ object Analytics {
   val ccIncDeltaMod = 10L
   val ccIncSuperIters = 6
 
-  private val ccIncBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val ccIncBaseCache = new SessionMemo[(DataFrame, DataFrame)]
 
   /** (hm-tagged undirected edges, base-graph labels) — the stored state
     * of g_cc_incremental. assertConverged: the EXACTLY-equals-full-CC
     * contract depends on the label loop reaching the true fixpoint,
     * not the iteration cap — enforce it loudly. */
   private[graft] def ccIncBase(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    // SessionMemo, not raw TrieMap.getOrElseUpdate: the raw form can
-    // run the thunk twice under concurrent first calls, and the losing
-    // build's eagerly-checkpointed und/baseL blocks would never be
-    // freed (SessionMemo serializes first construction and evicts
-    // stopped sessions' entries)
-    graft.model.SessionMemo.getOrBuild(ccIncBaseCache, (s, dir))({
+    ccIncBaseCache(s, dir)({
       val (nodes, undW) = numericGraph(s, dir)
       withCheckpoints { ck =>
         // canonical-pair hash splits BOTH directions of an edge together
@@ -982,11 +945,10 @@ object Analytics {
     * discipline; the memoized frame is an eager localCheckpoint, so
     * the second consumer reads materialized rows, not a replayed
     * lineage. */
-  private val bfsDepthCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val bfsDepthCache = new SessionMemo[DataFrame]
 
   def bfsDepth: Q = (s, dir) =>
-    graft.model.SessionMemo.getOrBuild(bfsDepthCache, (s, dir)) {
+    bfsDepthCache(s, dir) {
       bfsDepthBuild(s, dir)
     }
 
@@ -994,20 +956,15 @@ object Analytics {
     // Frontier-driven in NUMERIC-ID space: each level joins only the
     // NEW nodes against the shared edge cache (total work ≈ Σ frontier
     // sizes ≈ N); per-level distinct + visited anti-join hash a single
-    // BIGINT instead of a (string, long) composite. NO broadcast hint:
-    // a mid-BFS frontier is O(N) and a blind hint dies at the broadcast
-    // ceiling at 100× — AQE sees actual frontier sizes at runtime and
-    // converts small ones on its own (eagerly counting each level to
-    // gate a manual hint measured 2.7× slower than trusting AQE).
+    // BIGINT instead of a (string, long) composite.
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     // frontier and visited set are both NODE-bounded, so one cached
-    // node count gates every hint below — no per-level eager counting
-    // (the round-2 finding that blind per-level count-then-hint was
-    // 2.7× slower applied to counting each frontier, not to this).
-    // Below the cap both joins build broadcast maps and the only
-    // shuffle per level is the frontier distinct; above it (100×) the
-    // hints drop and AQE plans from runtime sizes as before.
+    // node count gates every hint — no per-level eager counting (which
+    // measured 2.7× slower than trusting AQE). Below the cap both joins
+    // build broadcast maps and the only shuffle per level is the
+    // frontier distinct; above it (100×) the hints drop and AQE plans
+    // from runtime sizes.
     val n = rowCount(nodes)
     var dist = nodes
       .filter(col("label") === "region" && col("key") === 0L)
@@ -1015,22 +972,27 @@ object Analytics {
     var frontier = dist.select("id")
     withCheckpoints { ck =>
       for (i <- 1 to bfsIters) {
-        val next = ck.lazily(
-          und.join(gated(frontier.withColumnRenamed("id", "a"), n), Seq("a"))
-          .select(col("b").as("id")).distinct()
-          .join(gated(dist.select("id"), n), Seq("id"), "left_anti")
-          .withColumn("depth", lit(i)))
+        val next = ck.lazily(bfsLevelStep(und, frontier, dist, n, i))
         dist = ck.lazily(dist.unionByName(next))
         frontier = next.select("id")
       }
-      val out = nodes.join(dist, Seq("id"))
+      nodes.join(dist, Seq("id"))
         .select("label", "key", "depth").orderBy("label", "key")
-      // plan audits read the PRE-checkpoint plan (the returned frame is
-      // a checkpoint leaf that hides the join shape)
-      bfsAuditPlans.put((s, dir), out.queryExecution.executedPlan.toString)
-      out.localCheckpoint(eager = true)
+        .localCheckpoint(eager = true)
     }
   }
+
+  /** One BFS depth level (un-checkpointed) — extracted, like
+    * `bcForwardStep`, so specs can audit the gate's join strategy: the
+    * loop checkpoints every level, so the returned frame never shows
+    * these joins. frontier(id), dist(id, depth); `n` is the node count
+    * that gates both hints. */
+  private[graft] def bfsLevelStep(und: DataFrame, frontier: DataFrame,
+      dist: DataFrame, n: Long, i: Int): DataFrame =
+    und.join(gated(frontier.withColumnRenamed("id", "a"), n), Seq("a"))
+      .select(col("b").as("id")).distinct()
+      .join(gated(dist.select("id"), n), Seq("id"), "left_anti")
+      .withColumn("depth", lit(i))
 
   // --------------------------------------------------------------- g_mis
   /** MAXIMAL INDEPENDENT SET — Luby's algorithm (1986), THE distributed
@@ -1236,15 +1198,6 @@ object Analytics {
     b.toString
   }
 
-  /** Last bfsDepth physical plan BEFORE result materialization, per
-    * (session, dir) — keyed like the other session memos so concurrent
-    * runs can't clobber each other's audit (the r5 advisor's nit on the
-    * previous single global). */
-  private val bfsAuditPlans = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private[graft] def bfsAuditPlan(s: SparkSession, dir: String): String =
-    bfsAuditPlans.getOrElse((s, dir), "")
-
   val bfsDepthSql: String = {
     val b = new StringBuilder(cte)
     b ++= """, und AS (
@@ -1434,11 +1387,10 @@ object Analytics {
     * node-bounded localCheckpoint, and without the memo g_modularity
     * re-ran the full 2-round propagation (~5 s at sf0.1) that
     * g_label_propagation had already computed in the same session. */
-  private val lpaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val lpaCache = new SessionMemo[DataFrame]
 
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(lpaCache, (s, dir))(lpaLabelsBuild(s, dir))
+    lpaCache(s, dir)(lpaLabelsBuild(s, dir))
 
   private def lpaLabelsBuild(s: SparkSession, dir: String): DataFrame = {
     val (nodes, undW) = numericGraph(s, dir)
@@ -2029,11 +1981,10 @@ object Analytics {
     * g_closeness and g_eccentricity (memo pattern of lpaLabels: the
     * second consumer reads the checkpointed frame instead of re-running
     * the k distinct-frontier rounds). */
-  private val nationBfsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val nationBfsCache = new SessionMemo[DataFrame]
 
   private def nationBfs(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(nationBfsCache, (s, dir)) {
+    nationBfsCache(s, dir) {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
       // per-level frames are only needed until the final eager
@@ -2043,20 +1994,33 @@ object Analytics {
         val seeds = ck.own(nodes.filter(col("label") === "nation")
           .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
           .localCheckpoint(eager = true))
-        var vis = seeds
-        var frontier = seeds
-        for (i <- 1 to closenessHops) {
-          val next = ck.lazily(
-            und.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
-            .select(col("seed"), col("b").as("node")).distinct()
-            .join(vis.select("seed", "node"), Seq("seed", "node"), "left_anti")
-            .withColumn("d", lit(i)))
-          vis = ck.lazily(vis.unionByName(next))
-          frontier = next
-        }
-        vis.localCheckpoint(eager = true)
+        multiSourceBfs(ck, und, seeds, closenessHops)
+          .localCheckpoint(eager = true)
       }
     }
+
+  /** Multi-source bounded BFS: from `seeds(seed, node, d = 0)` over the
+    * edge frame `edges(a, b)`, `hops` levels of (seed, node) DISTINCT
+    * pairs — frontier join, distinct, anti-join against the visited
+    * set — with every level and visited union checkpointed lazily in
+    * `ck`. No gate and no probe. Returns the visited frame
+    * `(seed, node, d)`; the caller materializes it (computing every
+    * level) before the scope ends. */
+  private def multiSourceBfs(ck: Checkpoints, edges: DataFrame,
+      seeds: DataFrame, hops: Int): DataFrame = {
+    var vis = seeds
+    var frontier = seeds
+    for (i <- 1 to hops) {
+      val next = ck.lazily(
+        edges.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
+        .select(col("seed"), col("b").as("node")).distinct()
+        .join(vis.select("seed", "node"), Seq("seed", "node"), "left_anti")
+        .withColumn("d", lit(i)))
+      vis = ck.lazily(vis.unionByName(next))
+      frontier = next
+    }
+    vis
+  }
 
   def closeness: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
@@ -2176,18 +2140,7 @@ object Analytics {
           col("key") < icSeeds)
         .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
         .localCheckpoint(eager = true))
-      var vis = seeds
-      var frontier = seeds
-      for (i <- 1 to icHops) {
-        val next = ck.lazily(
-          live.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
-          .select(col("seed"), col("b").as("node")).distinct()
-          .join(vis.select("seed", "node"), Seq("seed", "node"), "left_anti")
-          .withColumn("d", lit(i)))
-        vis = ck.lazily(vis.unionByName(next))
-        frontier = next
-      }
-      val out = vis.filter(col("d") > 0)
+      val out = multiSourceBfs(ck, live, seeds, icHops).filter(col("d") > 0)
         .groupBy(col("seed"), col("d").cast("long").as("hop"))
         .agg(count(lit(1)).as("n_new"))
       nodes.join(out, col("id") === col("seed"))
@@ -2442,37 +2395,33 @@ object Analytics {
   val betweennessHops = 3
   val betweennessPivots = 10
 
-  // broadcast gate (codebase convention: hint only on a COUNTED small
-  // frame, never blind): the (seed, node, σ) frames are 3 longs/row,
-  // so a million rows is ~24 MB — comfortably broadcastable, and
-  // broadcasting them turns every expansion join map-side with ONE
-  // partial-aggregated shuffle (the groupBy output), instead of
-  // shuffling the 2m-row edge list per level. Past the caps the hints
-  // drop and the joins shuffle — the correct shape at 100× frontier
-  // size. Counts are cheap scans of eager-checkpointed frames.
-  private def bcGated(df: DataFrame, rows: Long,
-                      cap: Long = 1000000L): DataFrame =
-    if (rows <= cap) broadcast(df) else df
-
+  // betweenness passes wider caps to `gated` (1M rows for the frontier
+  // sides, 2M for the visited/successor sides): the (seed, node, σ)
+  // frames are 3 longs/row, so a million rows is ~24 MB — comfortably
+  // broadcastable, and broadcasting them turns every expansion join
+  // map-side with ONE partial-aggregated shuffle (the groupBy output),
+  // instead of shuffling the 2m-row edge list per level. Past the caps
+  // the hints drop and the joins shuffle — the correct shape at 100×
+  // frontier size. Counts are cheap scans of eager-checkpointed frames.
   /** One forward betweenness level (un-checkpointed) — extracted so
     * PlanAuditSpec can audit the gate's join strategy directly (the
     * loop's eager checkpoints truncate lineage, so the final plan never
     * shows these joins). frontier(seed, node, d, σ); vis(seed, node). */
   private[graft] def bcForwardStep(frontier: DataFrame, frontierRows: Long,
       und: DataFrame, vis: DataFrame, visRows: Long, i: Int): DataFrame =
-    bcGated(frontier.withColumnRenamed("node", "a"), frontierRows)
+    gated(frontier.withColumnRenamed("node", "a"), frontierRows, 1000000L)
       .join(und, Seq("a"))
       .groupBy(col("seed"), col("b").as("node"))
       .agg(sum(col("sigma")).as("sigma"))
-      .join(bcGated(vis, visRows, 2000000L), Seq("seed", "node"), "left_anti")
+      .join(gated(vis, visRows, 2000000L), Seq("seed", "node"), "left_anti")
       .select(col("seed"), col("node"), lit(i).as("d"), col("sigma"))
 
   /** One backward dependency level (un-checkpointed) —
     * cur(seed, a, sigma_v); nxt(seed, b, sigma_w, delta_w). */
   private[graft] def bcBackwardStep(cur: DataFrame, curRows: Long,
       und: DataFrame, nxt: DataFrame, nxtRows: Long): DataFrame =
-    bcGated(cur, curRows).join(und, Seq("a"))
-      .join(bcGated(nxt, nxtRows, 2000000L), Seq("seed", "b"))
+    gated(cur, curRows, 1000000L).join(und, Seq("a"))
+      .join(gated(nxt, nxtRows, 2000000L), Seq("seed", "b"))
       .select(col("seed"), col("a").as("node"),
         expr("sigma_v * (1000000 + delta_w) div sigma_w").as("term"))
       .groupBy("seed", "node").agg(sum(col("term")).as("delta"))
@@ -2890,7 +2839,7 @@ object Analytics {
     * left-outer join to a broadcast join from observed sizes —
     * without the semi-filter this was a full edge-set sort-merge
     * shuffle per step and the whole query's dominant cost. Walk count
-    * scales with seeds, not graph size; past `bcastRowCap` concurrent
+    * scales with seeds, not graph size; past the `gated` cap concurrent
     * walks the gate drops the hint and the probe degrades to the
     * shuffle (run walk batches, not one mega-batch). The candidate
     * frame is Σ deg(cur) per step. */
@@ -3596,11 +3545,10 @@ object Analytics {
     * priority(a) — each undirected pair contributes exactly one
     * direction; wait0 = (id, c, rem) where rem = #higher-priority
     * neighbor edges (the Jones–Plassmann counter seed). */
-  private val coloringPrioCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val coloringPrioCache = new SessionMemo[(DataFrame, DataFrame)]
 
   private def coloringPrio(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.model.SessionMemo.getOrBuild(coloringPrioCache, (s, dir)) {
+    coloringPrioCache(s, dir) {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
       val deg = und.groupBy(col("a").as("id"))
@@ -3812,11 +3760,10 @@ object Analytics {
     * memoized as one eager localCheckpoint (the jaccardPairs pattern)
     * and pre-built in warmShared so neither consumer absorbs the
     * argmax-window build. */
-  private val lbmMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val lbmMemo = new SessionMemo[DataFrame]
 
   private def louvainBestMoveL1(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(lbmMemo, (s, dir))(
+    lbmMemo(s, dir)(
       louvainBestMove(numericGraph(s, dir)._2).localCheckpoint(eager = true))
 
   /** Level-1 (roots, contracted graph) pair — g_louvain and
@@ -3828,12 +3775,11 @@ object Analytics {
     * louvainBestMoveL1 memo one stage downstream). Returns
     * ((id, c1) total over nodes, (a, b, w) community-scale graph with
     * self-loop rows) — both session-pinned eager checkpoints. */
-  private val lvL1Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  private val lvL1Cache = new SessionMemo[(DataFrame, DataFrame)]
 
   private def louvainLevel1(
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.model.SessionMemo.getOrBuild(lvL1Cache, (s, dir)) {
+    lvL1Cache(s, dir) {
       val (nodes, und) = numericGraph(s, dir)
       val n = rowCount(nodes)
       withCheckpoints { ck =>
@@ -4117,11 +4063,10 @@ object Analytics {
     * (g_louvain_hierarchy itself and g_community_connectivity's audit).
     * NOT prewarmed — the ~14 s build lands on whichever runs first (the
     * Bench memo-attribution caveat; family sum is the stable number). */
-  private val louvainHierCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Seq[DataFrame])]
+  private val louvainHierCache = new SessionMemo[(DataFrame, Seq[DataFrame])]
 
   def louvainHierarchy: Q = (s, dir) =>
-    graft.model.SessionMemo.getOrBuild(louvainHierCache, (s, dir))(
+    louvainHierCache(s, dir)(
       louvainHierarchyBuild(s, dir))._1
 
   /** Per-level (id, comm) maps, levels 0..louvainMaxLevels — padded by
@@ -4131,8 +4076,7 @@ object Analytics {
     * node-count frames, the price of making the per-level curve a
     * driver-checked table instead of a spec-internal replay. */
   private def louvainLevelMaps(s: SparkSession, dir: String): Seq[DataFrame] = {
-    val levels = graft.model.SessionMemo.getOrBuild(
-      louvainHierCache, (s, dir))(louvainHierarchyBuild(s, dir))._2
+    val levels = louvainHierCache(s, dir)(louvainHierarchyBuild(s, dir))._2
     levels ++ Seq.fill(louvainMaxLevels + 1 - levels.size)(levels.last)
   }
 
@@ -4321,11 +4265,10 @@ object Analytics {
     * audit) and g_leiden_refine (the refinement the audit guards).
     * Session-pinned (one induced CC fixpoint serves both consumers —
     * the Bench memo-attribution caveat applies: compare family sums). */
-  private val inducedRefineCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val inducedRefineCache = new SessionMemo[DataFrame]
 
   private def inducedRefineMap(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(inducedRefineCache, (s, dir)) {
+    inducedRefineCache(s, dir) {
       val (nodes, undW) = numericGraph(s, dir)
       withCheckpoints { ck =>
         val hl = louvainHierarchy(s, dir) // memoized final labels
@@ -5202,11 +5145,10 @@ object Analytics {
     * through every exchange, with union + distinct + bottom-k all
     * inside one codegen'd array projection per group. The round-0 seed
     * frame frees once the rounds are materialized. */
-  private val anfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[DataFrame]]
+  private val anfCache = new SessionMemo[Seq[DataFrame]]
 
   private def anfSketches(s: SparkSession, dir: String): Seq[DataFrame] =
-    graft.model.SessionMemo.getOrBuild(anfCache, (s, dir)) {
+    anfCache(s, dir) {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
       val n = rowCount(nodes)
@@ -5672,11 +5614,10 @@ object Analytics {
     * pass; one eager checkpoint feeds both (the lpaLabels discipline).
     * Later truss rounds operate on shrinking survivor sets and compute
     * their own (different edge set — not memoizable). */
-  private val coSupportCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val coSupportCache = new SessionMemo[DataFrame]
 
   private def coSupport(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(coSupportCache, (s, dir))(
+    coSupportCache(s, dir)(
       edgeSupport(coProjection(s, dir)).localCheckpoint(eager = true))
 
   /** Per-edge triangle support of an undirected (p1 < p2) edge set via

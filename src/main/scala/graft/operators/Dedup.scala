@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.Tables
+import graft.model.{PropertyGraph, SessionMemo, Tables}
 
 /** Document deduplication family (SURVEY.md §2 D-block).
   *
@@ -570,11 +570,10 @@ object Dedup {
     * cache()d their own copy, so reuse hung on CacheManager
     * plan-matching — any plan drift between the construction paths
     * would silently double the sketch build and the memory). */
-  private val wTfMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val wTfMemo = new SessionMemo[DataFrame]
 
   private def docShingleTf(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(wTfMemo, (s, dir))(
+    wTfMemo(s, dir)(
       docShingleTfRaw(s, dir).cache())
 
   /** Weighted signatures — same column names as the flat `signatures`
@@ -597,11 +596,10 @@ object Dedup {
   /** Signature memo — feeds the band explode + both score sides here
     * AND the eval op in the same session; one build per (session, dir)
     * by construction, not by plan-cache coincidence. */
-  private val wSigMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val wSigMemo = new SessionMemo[DataFrame]
 
   private def wSignatures(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(wSigMemo, (s, dir))(
+    wSigMemo(s, dir)(
       wSignaturesRaw(s, dir).cache())
 
   def weightedMinhash: Q = (s, dir) => {
@@ -786,11 +784,10 @@ object Dedup {
     * pattern): the pair set is tiny by definition (near-dups only), and
     * every consumer after the first reads the collapsed frame instead
     * of re-running the join. */
-  private val jpMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val jpMemo = new SessionMemo[DataFrame]
 
   private[operators] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(jpMemo, (s, dir))(
+    jpMemo(s, dir)(
       jaccardPairsRaw(s, dir)._1.localCheckpoint(eager = true))
 
   /** Populate the dedup family's session-shared frames (the
@@ -1247,11 +1244,10 @@ object Dedup {
     * sums + chunk self-join — otherwise re-ran per consumer (r6
     * artifact: 6.5 s for d_dedup_simhash where the quiet-host number
     * was 2.4 s — the rebuild made the op contention-sensitive). */
-  private val shpMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val shpMemo = new SessionMemo[DataFrame]
 
   private def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(shpMemo, (s, dir))(
+    shpMemo(s, dir)(
       simhashPairsRaw(s, dir).localCheckpoint(eager = true))
 
   private def simhashPairsRaw(s: SparkSession, dir: String): DataFrame = {
@@ -1642,7 +1638,7 @@ object Dedup {
     // shuffle pair join and let AQE pick (the count is on the cached
     // frame, so the probe costs one cheap job)
     val bRaw = q.toDF("vec_b", "qb", "nb")
-    val b = if (q.count() <= 500000L) broadcast(bRaw) else bRaw
+    val b = PropertyGraph.gated(bRaw, PropertyGraph.rowCount(q))
     a.join(b, col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"), dot(col("qa"), col("qb")).as("dp"),
         col("na"), col("nb"))

@@ -610,13 +610,11 @@ object GraphOps {
       // gate like every forced hint here: a 2-hop ego of a hub node can
       // be huge at 100× — past the cap the hints drop and the semi-joins
       // shuffle (the count is a cheap scan of the checkpointed set)
-      val egoRows = ego.count()
-      def gated(df: DataFrame): DataFrame =
-        if (egoRows <= 500000L) broadcast(df) else df
+      val egoRows = PropertyGraph.rowCount(ego)
       graph.edges
-        .join(gated(ego.toDF("src_label", "src_key")),
+        .join(PropertyGraph.gated(ego.toDF("src_label", "src_key"), egoRows),
           Seq("src_label", "src_key"), "left_semi")
-        .join(gated(ego.toDF("dst_label", "dst_key")),
+        .join(PropertyGraph.gated(ego.toDF("dst_label", "dst_key"), egoRows),
           Seq("dst_label", "dst_key"), "left_semi")
         .select("elabel", "src_label", "src_key", "dst_label", "dst_key")
         .orderBy("elabel", "src_label", "src_key", "dst_label", "dst_key")

@@ -43,14 +43,12 @@ object GraphXAnalytics {
     * Pregel-side caches are unpersisted here after materialization. */
   def sccCoreLabels(s: SparkSession, core: DataFrame, cap: Int): DataFrame = {
     import s.implicits._
-    // partition count SCALED TO THE CORE, not the session default: a
-    // superstep schedules a task wave per partition, and 24+ rounds x
-    // 32 near-empty partitions cost ~1 s/round in pure scheduling
-    // (measured 23 s for the whole fixpoint at sf0.1's 23 k-edge core;
-    // ~1 partition per 250 k edges keeps waves dense at any scale)
-    val coreRows = core.count()
-    val parts = math.max(1L, math.min(
-      s.sparkContext.defaultParallelism.toLong, coreRows / 250000L)).toInt
+    // partition count SCALED TO THE CORE (the edge width rule), not the
+    // session default: a superstep schedules a task wave per partition,
+    // and 24+ rounds x 32 near-empty partitions cost ~1 s/round in pure
+    // scheduling (measured 23 s for the whole fixpoint at sf0.1's
+    // 23 k-edge core)
+    val parts = PropertyGraph.edgeParts(s, PropertyGraph.rowCount(core))
     val verts = core.select(col("a").as("id"))
       .union(core.select(col("b").as("id"))).distinct()
       .coalesce(parts)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
-import graft.model.Tables
+import graft.model.{SessionMemo, Tables}
 
 /** Relational / OLAP operator pack (SURVEY.md §2 C-block).
   *
@@ -797,11 +797,10 @@ object Relational {
     * so the divisor is never 0). A derived dimension like this is
     * itself a standard warehouse pattern (the "observed catalog").
     * Session-memoized: four consumers, one |pairs|-row build. */
-  private val partsuppCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val partsuppCache = new SessionMemo[DataFrame]
 
   private def partsupp(s: SparkSession, dir: String): DataFrame =
-    graft.model.SessionMemo.getOrBuild(partsuppCache, (s, dir)) {
+    partsuppCache(s, dir) {
       t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"),
           (dec(col("l_quantity")) * 100).cast("long").as("qc"),

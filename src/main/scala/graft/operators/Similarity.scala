@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.Tables
+import graft.model.{PropertyGraph, SessionMemo, Tables}
 
 /** Approximate-nearest-neighbor search over the embedding column
   * (SURVEY.md §2 D-block, `s_ann_topk`).
@@ -92,7 +92,7 @@ object Similarity {
     * dimension-truncation eval scores TRUNCATED probes against
     * truncated candidates through the identical expression. */
   private def bruteTopkFrom(pRaw: DataFrame, cands: DataFrame): DataFrame = {
-    val probes = if (pRaw.count() <= 500000L) broadcast(pRaw) else pRaw
+    val probes = PropertyGraph.gated(pRaw, PropertyGraph.rowCount(pRaw))
     val scored = probes
       .crossJoin(cands)
       .filter(col("probe_id") =!= col("cand_id"))
@@ -2504,12 +2504,11 @@ object Similarity {
     * (measured 38 s at sf0.1; collapsed, the walk costs what the flat
     * NSW walk costs) — and s_hnsw_recall reads the same memo instead
     * of re-walking. */
-  private val hnswMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val hnswMemo = new SessionMemo[DataFrame]
 
   def hnsw: Q = (s, dir) =>
     // hnswBuild's return is already the eager checkpoint
-    graft.model.SessionMemo.getOrBuild(hnswMemo, (s, dir))(hnswBuild(s, dir))
+    hnswMemo(s, dir)(hnswBuild(s, dir))
 
   private def hnswBuild(s: SparkSession, dir: String): DataFrame = {
     val probes = broadcast(quantized(s, dir)

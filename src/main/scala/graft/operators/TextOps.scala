@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.Tables
+import graft.model.{SessionMemo, Tables}
 
 /** Text analysis operators (SURVEY.md §2 D-block): language id, quality
   * scoring, token counting, fingerprinting — all per-document linear
@@ -2151,11 +2151,10 @@ object TextOps {
     * whole frame again — without the memo each consumer re-runs the
     * explode→model→score chain (~1.4 s of pure job latency at sf0.1;
     * the data itself is small). */
-  private val dsirMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val dsirMemo = new SessionMemo[DataFrame]
 
   def dsir: Q = (s, dir) =>
-    graft.model.SessionMemo.getOrBuild(dsirMemo, (s, dir))(dsirBuild(s, dir))
+    dsirMemo(s, dir)(dsirBuild(s, dir))
       .orderBy("doc_id")
 
   private def dsirBuild(s: SparkSession, dir: String): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.model.PropertyGraph
 
 /** Structured Streaming operators (SURVEY.md §2 E-block).
   *
@@ -1104,6 +1105,12 @@ object Streams {
     * touched slices of the snapshot, never the whole store. */
   val ccIncSnapBuckets = 32
 
+  /** Row cap of the delta-side broadcast gate (`PropertyGraph.gated`)
+    * in the cc sink and reader: deltas are small by contract, so the
+    * cap is wider than the analytics default and drops only after a
+    * bulk load (see the sink). */
+  private val ccIncBcastCap = 5000000L
+
   /** Last-writer-wins composition of label DELTA files — and ONLY
     * delta files (the r14 verdict weak: the old read path windowed the
     * full label store — snapshot included — every micro-batch, a
@@ -1156,7 +1163,7 @@ object Streams {
     // not from growing memory pressure)
     val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try graft.model.PropertyGraph.withCheckpoints { ck =>
+    try PropertyGraph.withCheckpoints { ck =>
       // the store in its two pieces: composed deltas (delta-bounded —
       // the ONLY label frame that ever enters an exchange this batch)
       // and the bucket-partitioned snapshot (probed via partition
@@ -1174,9 +1181,7 @@ object Streams {
       // "snapshot never enters an exchange" degrades exactly and only
       // when the input violated the delta assumption (it restores
       // itself at the next compaction).
-      val dcRows = dc.count()
-      def dcGate(df: DataFrame): DataFrame =
-        if (dcRows <= 5000000L) broadcast(df) else df
+      val dcRows = PropertyGraph.rowCount(dc)
       val dcSlim = dc.select(col("id"), col("comp").as("dcomp"))
       val dE = keep(batch.select(col("a"), col("b")).distinct())
       // contract: endpoints not yet labeled are their own component (a
@@ -1196,14 +1201,12 @@ object Streams {
             lit(ccIncSnapBuckets.toLong)).cast("int")))
         .head()
       val ndRows = ndStats.getLong(0)
-      def ndGate(df: DataFrame): DataFrame =
-        if (ndRows <= 5000000L) broadcast(df) else df
       // partition-pruned snapshot probe: the scan reads only touched
       // bucket dirs; the join broadcasts the delta-bounded endpoint
       // set, so surviving snapshot rows (≤ |endpoints|) never shuffle
       val bkts = ndStats.getSeq[Int](1)
       val snapHit = snap.filter(col("bkt").isInCollection(bkts))
-        .join(ndGate(nodesD), Seq("id"))
+        .join(PropertyGraph.gated(nodesD, ndRows, ccIncBcastCap), Seq("id"))
         .select(col("id"), col("comp").as("scomp"))
       // endpoint labels: post-snapshot delta wins over snapshot wins
       // over self (first seen); fs0 marks ids in NEITHER piece
@@ -1265,10 +1268,12 @@ object Streams {
       // enter an exchange; only the ≤|touched-components| join image
       // continues downstream
       val overlay = snap
-        .join(dcGate(dcSlim), Seq("id"), "left_outer")
+        .join(PropertyGraph.gated(dcSlim, dcRows, ccIncBcastCap), Seq("id"),
+          "left_outer")
         .select(col("id"), coalesce(col("dcomp"), col("comp")).as("comp"))
         .unionByName(dc.filter(col("snap_absent")).select("id", "comp"))
-      val relabeled = overlay.join(ndGate(rootMap), Seq("comp"), "inner")
+      val relabeled = overlay.join(
+        PropertyGraph.gated(rootMap, ndRows, ccIncBcastCap), Seq("comp"), "inner")
         .select(col("id"), col("root").as("comp"))
       val delta = firstSeen.withColumn("fs", lit(true))
         .unionByName(relabeled.withColumn("fs", lit(false)))
@@ -1284,7 +1289,8 @@ object Streams {
         // write (the amortized O(|V|) pass that keeps reads shallow
         // and gives the next period's lookups their pruning dirs); the
         // manifest then lists ONLY the snapshot for the label store
-        overlay.join(ndGate(rootMap), Seq("comp"), "left_outer")
+        overlay.join(PropertyGraph.gated(rootMap, ndRows, ccIncBcastCap),
+          Seq("comp"), "left_outer")
           .select(col("id"), coalesce(col("root"), col("comp")).as("comp"))
           .unionByName(firstSeen)
           .withColumn("bkt",
@@ -1326,7 +1332,8 @@ object Streams {
     // a cache from a read API; a post-bulk-load version's deltas may
     // exceed the build-side limit until compaction absorbs them)
     val overlayDc = dc.select(col("id"), col("comp").as("dcomp"))
-    val dcB = if (dc.count() <= 5000000L) broadcast(overlayDc) else overlayDc
+    val dcB = PropertyGraph.gated(overlayDc, PropertyGraph.rowCount(dc),
+      ccIncBcastCap)
     snap
       .join(dcB, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("dcomp"), col("comp")).as("comp"))

@@ -46,11 +46,18 @@ class CheckpointScopeSpec extends AnyFunSuite {
   test("converted fixpoint operators return storage to the post-warm baseline plus their result") {
     graft.operators.Analytics.warmShared(spark, sf)
     val baseline = persisted
+    val g = PropertyGraph.load(spark, sf)
     val ops = Seq("g_connected_components", "g_cc_incremental",
       "g_sssp_weighted", "g_widest_path", "g_topo_levels", "g_kcore",
-      "g_paths_to")
-    for (name <- ops; run <- 1 to 2) {
-      val out = SparkEntry.queries(name)(spark, sf)
+      "g_paths_to").map(n => n -> (() => SparkEntry.queries(n)(spark, sf))) :+
+      // the backward-distance prune forced on: its frame is per call too
+      ("pathsTo with the prune on" -> (() => g.pathsTo("customer", 1L,
+        "nation", 19L, maxDepth = 4,
+        nodeLabels = graft.operators.GraphOps.plNodeLabels,
+        edgeLabels = graft.operators.GraphOps.plEdgeLabels,
+        withEdgeLabels = true, pruneActivationRows = 0L)))
+    for ((name, op) <- ops; run <- 1 to 2) {
+      val out = op()
       assert(out.count() > 0, s"$name run $run")
       val result = leafRdds(out)
       assert(result.nonEmpty, s"$name run $run returns no checkpoint")

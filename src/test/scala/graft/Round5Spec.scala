@@ -280,10 +280,19 @@ class Round5Spec extends AnyFunSuite {
 
   test("g_bfs_depth: level joins broadcast below the gate (hint survives)") {
     // the op returns an eager checkpoint (block-retention discipline),
-    // so audit the captured pre-materialization plan instead
-    Analytics.bfsDepth(spark, sf)
-    val plan = Analytics.bfsAuditPlan(spark, sf)
+    // so audit the EXTRACTED level step the loop runs: under the cap
+    // its joins must plan as broadcasts; past it the hints must drop
+    import spark.implicits._
+    val und = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    val dist = Seq((1L, 0)).toDF("id", "depth")
+    val frontier = dist.select("id")
+    val plan = Analytics.bfsLevelStep(und, frontier, dist, 1L, 1)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"gated frontier broadcast missing at small scale:\n$plan")
+    val ungated = Analytics.bfsLevelStep(und, frontier, dist, 500001L, 1)
+      .queryExecution.optimizedPlan.toString
+    assert(!ungated.toLowerCase.contains("broadcast"),
+      s"level step past the cap still hints broadcast:\n$ungated")
   }
 }

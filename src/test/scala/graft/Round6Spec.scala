@@ -200,15 +200,14 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("SessionMemo: concurrent first access builds the value exactly once") {
-    val cache = scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), String]
+    val memo = new graft.model.SessionMemo[String]
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val tasks = (1 to 8).map { _ =>
         pool.submit(new java.util.concurrent.Callable[String] {
           def call(): String =
-            graft.model.SessionMemo.getOrBuild(cache, (spark, "k")) {
+            memo(spark, "k") {
               builds.incrementAndGet(); Thread.sleep(50); "v"
             }
         })
