@@ -495,8 +495,10 @@ object PropertyGraph {
     * DROPPED — a forced broadcast past the 8 GB ceiling fails the query
     * outright, it does not degrade — and the join falls back to a
     * shuffle, where AQE can still convert at runtime from observed
-    * sizes. `rows` is a real count, never a guess: a loop probe or a
-    * cached node count where one exists, else one `rowCount`. */
+    * sizes. `rows` is a real upper bound, never a guess: a loop probe,
+    * the session's node count for a node-keyed frame, or a bound the
+    * frame has by construction (at most 10 rows for `vec_id < 10`),
+    * else one `rowCount`. */
   private[graft] def gated(df: DataFrame, rows: Long,
                            cap: Long = 500000L): DataFrame =
     if (rows <= cap) broadcast(df) else df

@@ -26,9 +26,14 @@ import graft.model.PropertyGraph.{Checkpoints, edgeParts, gated, nodeParts,
   *
   * ROUND RULE (every driver-side round loop here and in
   * PropertyGraph.pathsTo): a round's frame is checkpointed LAZILY
-  * (`localCheckpoint(eager = false)`), and ONE `rowCount` probe — the
+  * (`localCheckpoint(eager = false)`), and a `rowCount` probe — the
   * round's termination test, usually also its broadcast-gate operand —
-  * materializes the checkpoint and counts it in the same Spark job.
+  * materializes the checkpoint and counts it.
+  * - What a round costs: under AQE the probe's action first runs every
+  *   broadcast and shuffle stage of the round's plan as a job of its
+  *   own, then the counting job. A round is its exchanges plus its
+  *   probe, so the cheap rounds are those with few exchanges (a gated
+  *   broadcast instead of a sort-merge join) and no probe.
   * - The probe scans every partition; never `limit`, `isEmpty` or
   *   `take`, which leave partitions for `doCheckpoint` to compute in a
   *   job of its own.
@@ -40,21 +45,26 @@ import graft.model.PropertyGraph.{Checkpoints, edgeParts, gated, nodeParts,
   *   round. A probe whose count is used afterwards (a convergence
   *   assertion, an audit column, a later gate) stays.
   * Every other scalar count goes through `rowCount` too:
-  * `Dataset.count()` costs two jobs under AQE, `rowCount` one.
+  * `Dataset.count()` costs two jobs under AQE, `rowCount` one. The
+  * node count is one memo per session, `nodeRows`.
   * Where the rule lives: `deltaFixpoint` runs the semi-naive delta
   * loops (ccLabels, SSSP, widest path, topo levels, k-core) and owns
-  * their round counter, lazy checkpoint, probe and last-round drop;
-  * every loop registers its checkpoints in one
+  * their round counter, lazy checkpoint, probe schedule and last-round
+  * drop. Their deltas are keyed by node id, so the node count bounds
+  * every one of them and is the gate operand of an unprobed round; the
+  * probe runs on even rounds only (see `deltaFixpoint`).
+  * Every loop registers its checkpoints in one
   * `PropertyGraph.withCheckpoints` scope, which frees them when the
   * operator returns or throws.
   *
   * BROADCAST GATE: every forced broadcast hint goes through
   * `PropertyGraph.gated(df, rows)`, the one gate for the codebase: the
-  * hint rides only on a frame counted anyway (a round probe, a cached
-  * node count) and drops past the cap (500k rows; betweenness passes
-  * its own 1M/2M caps). Frame widths come from
-  * `PropertyGraph.edgeParts`/`nodeParts`, and every session-shared frame
-  * is a `SessionMemo`.
+  * hint rides only on a real bound (a round probe, the session's node
+  * count for a node-keyed frame) and drops past the cap (500k rows;
+  * betweenness passes its own 1M/2M caps). Frame widths come from
+  * `PropertyGraph.edgeParts`/`nodeParts`; the node-keyed result of a
+  * delta loop is `byNodeKey`, one `nodeParts` wide, and every
+  * session-shared frame is a `SessionMemo`.
   */
 object Analytics {
   type Q = (SparkSession, String) => DataFrame
@@ -76,29 +86,41 @@ object Analytics {
   /** SEMI-NAIVE FIXPOINT: the round mechanics of the delta loops
     * (ccLabels, SSSP, widest path, topo levels, k-core), written once;
     * each caller supplies only its step and the two slices of a round
-    * frame. Starting from `state` and its `delta` of `rows` rows, a
-    * round builds `step(state, delta, rows)`, checkpoints it lazily in
-    * `ck`, and slices the next delta (`deltaOf`) and state (`stateOf`)
-    * out of it. The next delta's `rowCount` is the round's one job: it
-    * materializes the checkpoint, ends the loop at zero, and is the next
-    * step's `gated` operand. The last permitted round drops that probe
-    * unless `keepLastProbe` (then the returned count is exact).
+    * frame. Starting from `state` and its `delta`, a round builds
+    * `step(state, delta, rows)`, checkpoints it lazily in `ck`, and
+    * slices the next delta (`deltaOf`) and state (`stateOf`) out of it.
+    * `rows` is the delta's `gated` operand: its probed count, or
+    * `bound`.
+    *
+    * `bound` is an upper bound on every delta's row count (a node count:
+    * each delta is keyed by node id). The probe — the next delta's
+    * `rowCount`, which materializes the checkpoint and ends the loop at
+    * zero — runs on even rounds only; the first delta is never
+    * counted. An unprobed round passes `bound` on: within the gate cap
+    * the gate broadcasts whatever the real count, past it the hint drops
+    * and AQE decides from runtime sizes. The steps are min, max or peel
+    * rounds, idempotent once the delta is empty, so the loop runs at
+    * most one round past convergence and that round's delta is empty.
+    * The last permitted round drops its probe unless `keepLastProbe`.
     * `round` is the number of rounds `state` already stands for.
-    * Returns the final state and the last probed delta count. */
-  private def deltaFixpoint(ck: Checkpoints, tag: String, iters: Int,
-      state: DataFrame, delta: DataFrame, rows: Long, round: Int = 0,
-      keepLastProbe: Boolean = false)(
+    * Returns the final state and the last delta's count: exact when
+    * that round was probed (always under `keepLastProbe`), else
+    * `bound`. */
+  private[graft] def deltaFixpoint(ck: Checkpoints, tag: String,
+      iters: Int, state: DataFrame, delta: DataFrame, bound: Long,
+      round: Int = 0, keepLastProbe: Boolean = false)(
       step: (DataFrame, DataFrame, Long) => DataFrame,
       deltaOf: DataFrame => DataFrame,
       stateOf: DataFrame => DataFrame): (DataFrame, Long) = {
-    var (st, d, n, r) = (state, delta, rows, round)
+    var (st, d, n, r) = (state, delta, bound, round)
     while (r < iters && n > 0) {
       r += 1
       val frame = ck.lazily(step(st, d, n))
       d = deltaOf(frame)
-      if (r < iters || keepLastProbe) n = rowCount(d)
+      val probed = if (r == iters) keepLastProbe else r % 2 == 0
+      n = if (probed) rowCount(d) else bound
       st = stateOf(frame)
-      dbgPhase(tag, s"round $r delta=$n")
+      dbgPhase(tag, s"round $r delta=${if (probed) n.toString else "?"}")
     }
     (st, n)
   }
@@ -154,7 +176,7 @@ object Analytics {
     // cached node count (one cheap job) — below the cap the explicit
     // hint gives a deterministic iteration plan; above it the hint is
     // dropped and AQE decides from runtime sizes
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     var r = nodes.withColumn("r", init)
     for (_ <- 1 to prIters) {
       val src = if (sparse) r.filter(col("r") > 0) else r
@@ -218,7 +240,7 @@ object Analytics {
   }
 
   def pagerank: Q = (s, dir) => {
-    val n = rowCount(g(s, dir).nodes) // scalar action only
+    val n = nodeRows(s, dir)
     prFamily(s, dir,
       init = lit(prScale / n),
       base = lit((15L * prScale) / (100L * n)),
@@ -240,7 +262,7 @@ object Analytics {
     * ≈ 10¹⁰ and weights are small multiplicities, checked far below
     * that at any tested SF. */
   def pagerankWeighted: Q = (s, dir) => {
-    val n = rowCount(g(s, dir).nodes)
+    val n = nodeRows(s, dir)
     prFamily(s, dir,
       init = lit(prScale / n),
       base = lit((15L * prScale) / (100L * n)),
@@ -301,7 +323,7 @@ object Analytics {
       col("dst_label").as("label"), col("dst_key").as("key"))
     val od = e.groupBy("src_label", "src_key").agg(count(lit(1)).as("outdeg"))
     val eod = e.join(od, Seq("src_label", "src_key")).cache() // shared entry
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     var r = nodes.withColumn("r", lit(prScale / n))
     val base = lit((15L * prScale) / (100L * n))
     val rounds = (1 to prIters).map { i =>
@@ -421,8 +443,7 @@ object Analytics {
     * without prewarming whichever graph query happened to run first
     * absorbed the entire ~6 s build into its own number. */
   private[graft] def warmShared(s: SparkSession, dir: String): Unit = {
-    val (nodes, und) = numericGraph(s, dir)
-    rowCount(nodes); rowCount(und)
+    nodeRows(s, dir); rowCount(numericGraph(s, dir)._2)
     simpleUnd(s, dir)
     // the co-purchase projection is shared by the triangle family
     // (triangles / clustering_coef / ktruss / GraphX twin) the same way
@@ -489,6 +510,26 @@ object Analytics {
   private def edgeRows(s: SparkSession, dir: String): Long =
     edgeRowsCache(s, dir)(
       rowCount(g(s, dir).edges))
+
+  /** Session-memoized node count (one scan of the cached numeric node
+    * frame, which the first count also materializes) — the gate operand
+    * of every node-bounded frame and the `deltaFixpoint` bound. */
+  private val nodeRowsCache = new SessionMemo[Long]
+  private def nodeRows(s: SparkSession, dir: String): Long =
+    nodeRowsCache(s, dir)(
+      rowCount(numericGraph(s, dir)._1))
+
+  /** The result tail of the delta operators: the node-keyed `(id, v)`
+    * frame `x` labelled with the node keys and sorted by them, one
+    * `nodeParts` wide. At local scale that is one partition, which the
+    * sort orders with no range-partition sample job and no shuffle; at
+    * scale the width is the parallelism and the range exchange is
+    * back. */
+  private def byNodeKey(s: SparkSession, dir: String, x: DataFrame,
+                        v: String): DataFrame =
+    numericGraph(s, dir)._1.join(x, "id").select("label", "key", v)
+      .coalesce(nodeParts(s, nodeRows(s, dir))).orderBy("label", "key")
+      .localCheckpoint(eager = true)
 
   private[graft] def numericGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     numericCache(s, dir) {
@@ -580,10 +621,7 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     withCheckpoints { ck =>
-      val comp = ccLabels(nodes.select("id"), und, ccIters, ck)
-      nodes.join(comp, Seq("id"))
-        .select("label", "key", "comp").orderBy("label", "key")
-        .localCheckpoint(eager = true)
+      byNodeKey(s, dir, ccLabels(nodes.select("id"), und, ccIters, ck), "comp")
     }
   }
 
@@ -965,7 +1003,7 @@ object Analytics {
     // build broadcast maps and the only shuffle per level is the
     // frontier distinct; above it (100×) the hints drop and AQE plans
     // from runtime sizes.
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     var dist = nodes
       .filter(col("label") === "region" && col("key") === 0L)
       .select(col("id"), lit(0).as("depth"))
@@ -1022,7 +1060,7 @@ object Analytics {
   def mis: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val winners = scala.collection.mutable.ArrayBuffer[DataFrame]()
     withCheckpoints { ck =>
       var undecided = ck.own(nodes.select("id", "label", "key")
@@ -1250,12 +1288,13 @@ object Analytics {
         .filter(col("label") === "region" && col("key") === 0L)
         .select(col("id"), lit(0L).as("d")))
       val (dist, _) = deltaFixpoint(ck, "sssp", ssspIters,
-          seed, seed, rowCount(seed))(
+          seed, seed, nodeRows(s, dir))(
         step = (dist, delta, deltaRows) => {
           // delta is frontier-bounded (≤ node count, shrinking past the
-          // graph's weighted diameter) — the hint is gated on the count
-          // already materialized for termination; past the cap the join
-          // shuffles (at 100× pre-partition und + dist on the id instead)
+          // graph's weighted diameter) — the hint is gated on the round's
+          // gate operand, the probed delta count or the node-count bound;
+          // past the cap the join shuffles (at 100× pre-partition und +
+          // dist on the id instead)
           val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
             .groupBy(col("b").as("id")).agg(min(col("d") + col("w")).as("m"))
           // full-outer merge: relaxations can REACH new nodes (no dist row
@@ -1267,9 +1306,7 @@ object Analytics {
         },
         deltaOf = _.filter(col("chg")).select(col("id"), col("nd").as("d")),
         stateOf = _.select(col("id"), col("nd").as("d")))
-      nodes.join(dist, Seq("id"))
-        .select("label", "key", "d").orderBy("label", "key")
-        .localCheckpoint(eager = true)
+      byNodeKey(s, dir, dist, "d")
     }
   }
 
@@ -1298,7 +1335,7 @@ object Analytics {
         .filter(col("label") === "region" && col("key") === 0L)
         .select(col("id"), lit(widestInf).as("c")))
       val (cap, _) = deltaFixpoint(ck, "widest", ssspIters,
-          seed, seed, rowCount(seed))(
+          seed, seed, nodeRows(s, dir))(
         step = (cap, delta, deltaRows) => {
           val cand = und.join(gated(delta.withColumnRenamed("id", "a"), deltaRows), Seq("a"))
             .groupBy(col("b").as("id")).agg(max(least(col("c"), col("w"))).as("m"))
@@ -1310,9 +1347,7 @@ object Analytics {
         },
         deltaOf = _.filter(col("chg")).select(col("id"), col("nc").as("c")),
         stateOf = _.select(col("id"), col("nc").as("c")))
-      nodes.join(cap, Seq("id"))
-        .select("label", "key", "c").orderBy("label", "key")
-        .localCheckpoint(eager = true)
+      byNodeKey(s, dir, cap, "c")
     }
   }
 
@@ -1399,7 +1434,7 @@ object Analytics {
     // label vector and per-round mode are node-bounded — gate on the
     // cached node count; past the cap the joins shuffle (at 100× the
     // label vector is pre-partitioned with und instead of shipped)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     // per-round lazy checkpoints are dead once the final eager frame
     // collapses the chain — free them so the memo pins ONE frame, not
     // lpaIters of them (nationBfs/pathsTo discipline)
@@ -1508,7 +1543,7 @@ object Analytics {
   def modularity: Q = (s, dir) => {
     val (_, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = rowCount(numericGraph(s, dir)._1)
+    val n = nodeRows(s, dir)
     val lbl = lpaLabels(s, dir)
     val withA = und.join(gated(lbl.toDF("a", "ca"), n), Seq("a"))
     val dC = withA.groupBy(col("ca").as("comm")).agg(count(lit(1)).as("d_sum"))
@@ -1586,8 +1621,7 @@ object Analytics {
   val kcoreIters = 4
 
   def kcore: Q = (s, dir) => {
-    val (nodes, undW) = numericGraph(s, dir)
-    val und = undW.select("a", "b")
+    val und = numericGraph(s, dir)._2.select("a", "b")
     // DELTA PEELING (round-identical to the oracle's full recompute):
     // degree among the alive set changes ONLY by the neighbors a node
     // lost, so after one full-edge degree pass (round 1) each round
@@ -1600,29 +1634,30 @@ object Analytics {
     // nodes have no row in any round frame: they never qualify and
     // have no incident edges to subtract.
     def removed(f: DataFrame) = f.filter(col("deg") < kcoreK).select("id")
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
       // the full-edge degree pass is round 1
       val deg1 = ck.lazily(
         und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg")))
       val (deg, _) = deltaFixpoint(ck, "kcore", kcoreIters,
-          deg1, removed(deg1), rowCount(removed(deg1)), round = 1)(
+          deg1, removed(deg1), n, round = 1)(
         step = (deg, removedIds, removedRows) => {
-          // removed is bounded by the probe's count — gate the hint on it
-          // (same discipline as SSSP)
+          // removed is bounded by the round's gate operand (same
+          // discipline as SSSP); drops is node-keyed, so the node count
+          // bounds it and the merge broadcasts it instead of shuffling
+          // both sides
           val drops = und
             .join(gated(removedIds.withColumnRenamed("id", "b"), removedRows),
               Seq("b"))
             .groupBy(col("a").as("id")).agg(count(lit(1)).as("drop"))
           deg.filter(col("deg") >= kcoreK)
-            .join(drops, Seq("id"), "left_outer")
+            .join(gated(drops, n), Seq("id"), "left_outer")
             .select(col("id"),
               (col("deg") - coalesce(col("drop"), lit(0L))).as("deg"))
         },
         deltaOf = removed,
         stateOf = identity)
-      nodes.join(deg.filter(col("deg") >= kcoreK), Seq("id"))
-        .select("label", "key", "deg").orderBy("label", "key")
-        .localCheckpoint(eager = true)
+      byNodeKey(s, dir, deg.filter(col("deg") >= kcoreK), "deg")
     }
   }
 
@@ -1770,7 +1805,7 @@ object Analytics {
   def hits: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val e = directedNum(s, dir).toDF("src", "dst")
-    hitsOn(nodes.select("id"), e, rowCount(nodes))
+    hitsOn(nodes.select("id"), e, nodeRows(s, dir))
       .join(nodes, Seq("id"))
       .select("label", "key", "a", "h").orderBy("label", "key")
   }
@@ -1831,7 +1866,7 @@ object Analytics {
   def salsa: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
     val e = directedNum(s, dir).toDF("src", "dst")
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val outd = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
     val ind = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("indeg"))
     // PURE LINEAGE, no per-half-round checkpoints (the pr_convergence
@@ -1916,7 +1951,7 @@ object Analytics {
   def eigencentrality: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
       def norm(raw: DataFrame): DataFrame = {
         val r = ck.lazily(raw) // feeds max + values
@@ -2052,7 +2087,7 @@ object Analytics {
 
   def katz: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val ed = directedNum(s, dir)
     // NO per-round checkpoint (r15): each round's vector has exactly
     // one consumer (the next round's gated broadcast), so the whole
@@ -2586,7 +2621,7 @@ object Analytics {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val m = und
       .join(gated(deg.select(col("id").as("a"), col("deg").as("xd")), n), Seq("a"))
       .join(gated(deg.select(col("id").as("b"), col("deg").as("yd")), n), Seq("b"))
@@ -2644,7 +2679,7 @@ object Analytics {
   def avgNeighborDegree: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
     und
       .join(gated(deg.toDF("a", "da"), n), Seq("a"))
@@ -2996,9 +3031,12 @@ object Analytics {
     // DIRECTED edges — numericGraph's shared frame is the undirected
     // union, which would make every node reachable from everywhere
     val ed = directedNum(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
+      // node-bounded rounds one nodeParts wide (ccLabels' seed rule), not
+      // the node cache's scan width
       val lvl0 = nodes.select(col("id"), lit(0L).as("lvl"))
+        .coalesce(nodeParts(s, n))
       // SEMI-NAIVE delta rounds, round-identical to topoStep's full
       // unrolling (the CC argument, max instead of min): max-propagation
       // is monotone and idempotent, so a source whose level did NOT
@@ -3016,9 +3054,7 @@ object Analytics {
         deltaOf = _.filter(col("lvl2") > col("lvl"))
           .select(col("id"), col("lvl2").as("lvl")),
         stateOf = _.select(col("id"), col("lvl2").as("lvl")))
-      nodes.join(lvl, "id").select(col("label"), col("key"), col("lvl"))
-        .orderBy("label", "key")
-        .localCheckpoint(eager = true)
+      byNodeKey(s, dir, lvl, "lvl")
     }
   }
 
@@ -3376,7 +3412,7 @@ object Analytics {
   def matching: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     // broadcast bound for `used` (≤ 2·|win| ≤ n matched endpoints)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
       // canonical free-free edge set with a deterministic priority
       var es = ck.lazily(undW.select(least(col("a"), col("b")).as("ea"),
@@ -3580,7 +3616,7 @@ object Analytics {
 
   def coloring: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val (undHp, wait0) = coloringPrio(s, dir)
     // AQE OFF for the loop (restored in finally): every per-round frame
     // is either checkpointed or broadcast-gated already, and AQE's
@@ -3781,7 +3817,7 @@ object Analytics {
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
     lvL1Cache(s, dir) {
       val (nodes, und) = numericGraph(s, dir)
-      val n = rowCount(nodes)
+      val n = nodeRows(s, dir)
       withCheckpoints { ck =>
         // roots stay unregistered: session-pinned with the memo
         val roots = louvainLevel(nodes.select("id"),
@@ -3904,7 +3940,7 @@ object Analytics {
 
   def louvain: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
       // level-1 roots + contracted community graph (self-loops kept):
       // the session-memoized pair shared with louvainHierarchyBuild
@@ -4083,7 +4119,7 @@ object Analytics {
   private def louvainHierarchyBuild(
       s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
     val (nodes, und0) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     // per-level maps survive the build (session-pinned with the memo —
     // g_hierarchy_curve reads them); NOT registered in the scope
     val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -4273,7 +4309,7 @@ object Analytics {
       withCheckpoints { ck =>
         val hl = louvainHierarchy(s, dir) // memoized final labels
         dbgPhase("irm", "hierarchy labels ready")
-        val n = rowCount(nodes)
+        val n = nodeRows(s, dir)
         val cid = ck.own(nodes.join(hl, Seq("label", "key"))
           .select(col("id"), col("comm"))
           .localCheckpoint(eager = true))
@@ -4363,7 +4399,7 @@ object Analytics {
   private def communityProfileFrame(s: SparkSession, dir: String): DataFrame = {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val hl = louvainHierarchy(s, dir)
     val cid = nodes.join(hl, Seq("label", "key"))
       .select(col("id"), col("comm"))
@@ -4527,7 +4563,7 @@ object Analytics {
     * level) — the stopping-rule input for a resolution sweep. */
   def hierarchyCurve: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val wtot = undW.agg(sum("w").cast("long").as("wt"))
     // r15 opt (§2.3/§2.4): ONE edge pass scores every level — the six
     // session-pinned level maps join into a wide node-bounded frame
@@ -4626,7 +4662,7 @@ object Analytics {
 
   def resolutionSweep: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
       val kdeg = und.groupBy(col("a").as("id")).agg(sum("w").as("k"))
       val m2 = und.agg(sum("w").as("m2"))
@@ -4853,7 +4889,7 @@ object Analytics {
     * (the g_louvain_move contract, one notch stricter). */
   def leidenRefine: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val rmap = inducedRefineMap(s, dir)
     withCheckpoints { ck =>
       val m2 = undW.agg(sum("w").as("m2"))
@@ -5151,7 +5187,7 @@ object Analytics {
     anfCache(s, dir) {
       val (nodes, undW) = numericGraph(s, dir)
       val und = undW.select("a", "b")
-      val n = rowCount(nodes)
+      val n = nodeRows(s, dir)
       withCheckpoints { ck =>
         var sk = ck.own(nodes.select(col("id"), array(
           graft.functions.VectorExprs.hexSlice(md5(col("id").cast("string")), 1, 13))
@@ -5413,7 +5449,7 @@ object Analytics {
 
   def mst: Q = (s, dir) => {
     val (nodes, und) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     withCheckpoints { ck =>
       // canonical min-weight edge per unordered pair (multi-label pairs
       // collapse to their lightest edge — the standard simple-graph prep)
@@ -5904,7 +5940,7 @@ object Analytics {
 
   def scc: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val graph = g(s, dir)
     def dbg(msg: => String): Unit = dbgPhase("scc", msg)
     withCheckpoints { ck =>
@@ -6338,7 +6374,7 @@ object Analytics {
   def conductance: Q = (s, dir) => {
     val (nodes, undW) = numericGraph(s, dir)
     val und = undW.select("a", "b")
-    val n = rowCount(nodes)
+    val n = nodeRows(s, dir)
     val u = rowCount(und)
     val lbl = lpaLabels(s, dir)
     val per = und

@@ -77,22 +77,23 @@ object Similarity {
     * the exact-parity score expression can never diverge between the
     * unfiltered and filtered baselines.
     *
-    * Probe gate: the predicate bounds this side by construction, but if
-    * a caller widens it past the cap the forced broadcast must NOT ride
-    * to the 8 GB ceiling — drop the hint and let AQE decide.
+    * Probe gate: the predicate `vec_id < 10` bounds this side to 10
+    * rows by construction, so the gate takes that bound and no count
+    * job runs.
     * `div`, not `/`: Spark `/` on BIGINTs is DOUBLE division and the
     * cast-back truncation only matches DuckDB's exact integer `//`
     * below 2^53 — dp²·1000 reaches ~4×10¹⁸. `div` is exact BIGINT
     * floor division in both engines (same fix as pagerank). */
   private def bruteTopk(s: SparkSession, dir: String, cands: DataFrame): DataFrame =
-    bruteTopkFrom(quantized(s, dir)
-      .filter(col("vec_id") < 10).toDF("probe_id", "qp"), cands)
+    bruteTopkFrom(quantized(s, dir), cands)
 
-  /** Same stage with an explicit probe frame `(probe_id, qp)` — the
-    * dimension-truncation eval scores TRUNCATED probes against
-    * truncated candidates through the identical expression. */
-  private def bruteTopkFrom(pRaw: DataFrame, cands: DataFrame): DataFrame = {
-    val probes = PropertyGraph.gated(pRaw, PropertyGraph.rowCount(pRaw))
+  /** Same stage with an explicit vector frame `(vec_id, qe)` whose
+    * `vec_id < 10` rows are the probes — the dimension-truncation eval
+    * scores TRUNCATED probes against truncated candidates through the
+    * identical expression. */
+  private def bruteTopkFrom(q: DataFrame, cands: DataFrame): DataFrame = {
+    val probes = PropertyGraph.gated(
+      q.filter(col("vec_id") < 10).toDF("probe_id", "qp"), 10)
     val scored = probes
       .crossJoin(cands)
       .filter(col("probe_id") =!= col("cand_id"))
@@ -1156,8 +1157,7 @@ object Similarity {
   private[graft] def truncTopk(s: SparkSession, dir: String, d: Int): DataFrame = {
     val q = quantized(s, dir)
       .select(col("vec_id"), slice(col("qe"), 1, d).as("qe"))
-    bruteTopkFrom(
-      q.filter(col("vec_id") < 10).toDF("probe_id", "qp"),
+    bruteTopkFrom(q,
       q.select(col("vec_id").as("cand_id"), col("qe").as("qc"),
         greatest(dot(col("qe"), col("qe")), lit(1L)).as("nb")))
   }
