@@ -575,7 +575,7 @@ object Analytics {
     * key (bucketed tables) so rounds reuse the partitioning; delta
     * still shrinks geometrically, which is what survives 100 TB.
     * Returns (id, comp); round blocks are released with `ck`. */
-  private def ccLabels(ids: DataFrame, und: DataFrame, iters: Int,
+  private[graft] def ccLabels(ids: DataFrame, und: DataFrame, iters: Int,
       ck: Checkpoints, assertConverged: Boolean = false): DataFrame = {
     val seed = ck.lazily(ids.select(col("id"), col("id").as("comp")))
     val nTotal = rowCount(seed)
@@ -701,7 +701,6 @@ object Analytics {
     })
 
   def ccIncremental: Q = (s, dir) => {
-    val (nodes, _) = numericGraph(s, dir)
     val (und, baseL) = ccIncBase(s, dir)
     withCheckpoints { ck =>
       val deltaE = und.filter(col("hm") === 0).select("a", "b")
@@ -722,12 +721,10 @@ object Analytics {
       val supIds = dSup.select(col("a").as("id")).distinct()
       val supL = ccLabels(supIds, dSup, ccIncSuperIters, ck,
         assertConverged = true)
-      nodes.join(baseL, Seq("id"))
+      byNodeKey(s, dir, baseL
         .join(gated(supL.toDF("comp", "root"), dRows), Seq("comp"), "left_outer")
-        .select(col("label"), col("key"),
-          coalesce(col("root"), col("comp")).as("comp"))
-        .orderBy("label", "key")
-        .localCheckpoint(eager = true)
+        .select(col("id"), coalesce(col("root"), col("comp")).as("comp")),
+        "comp")
     }
   }
 

@@ -1284,7 +1284,6 @@ object TextOps {
     * false-positive rate. Scale shape: the position set broadcasts
     * (≤ m rows regardless of build size); the probe side is one
     * map-side hash join — no shuffle of either corpus. */
-  val bloomBits = 1 << 20
   val bloomK = 3
 
   private def shingleSet(s: SparkSession, dir: String, langV: String): DataFrame = {

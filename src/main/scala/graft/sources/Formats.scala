@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Tables
+import graft.streaming.Streams
 
 /** Source/sink format coverage (SURVEY.md §2 F-block): the engine's
   * interchange boundary. Parquet is the production storage format
@@ -411,16 +412,12 @@ object Formats {
     val d = Tables(s, dir, "documents")
     d.filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$path/gen1")
-    def dataFiles(gen: String): Seq[String] =
-      new java.io.File(s"$path/$gen").listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
-        .sorted.toSeq
     // manifests are METADATA — tiny, immutable, published through the
     // optimistic-concurrency CAS (single lineage here ⇒ versions 1, 2)
-    publishManifest(path, dataFiles("gen1"))
+    publishManifest(path, Streams.parquetFiles(s"$path/gen1"))
     d.filter(col("doc_id") % 2 === 1)
       .write.mode("overwrite").parquet(s"$path/gen2")
-    publishManifest(path, dataFiles("gen2"))
+    publishManifest(path, Streams.parquetFiles(s"$path/gen2"))
     def stats(v: Int): DataFrame =
       s.read.parquet(readManifestFiles(path, v): _*)
         .agg(count(lit(1)).as("n_docs"),
@@ -455,15 +452,12 @@ object Formats {
     // run's chain and shift the version numbers
     deleteRecursively(new java.io.File(path))
     val d = Tables(s, dir, "documents")
-    def dataFiles(gen: String): Seq[String] =
-      Option(new java.io.File(s"$path/$gen").listFiles()).toSeq.flatten
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
     d.filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$path/gen1")
-    publishManifest(path, dataFiles("gen1"))
+    publishManifest(path, Streams.parquetFiles(s"$path/gen1"))
     d.filter(col("doc_id") % 2 === 1)
       .write.mode("overwrite").parquet(s"$path/gen2")
-    publishManifest(path, dataFiles("gen2"))
+    publishManifest(path, Streams.parquetFiles(s"$path/gen2"))
     // the aborted writer: data landed, manifest never published
     d.filter(col("doc_id") % 7 === 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/gen3_aborted")
@@ -1073,26 +1067,22 @@ object Formats {
       .filter(_.getName.startsWith("manifest-"))
       .foreach(f => java.nio.file.Files.delete(f.toPath))
     val d = Tables(s, dir, "documents")
-    def dataFiles(gen: String): Seq[String] =
-      new java.io.File(s"$path/$gen").listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
-        .sorted.toSeq
     d.filter(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$path/gen1")
-    publishManifest(path, dataFiles("gen1")) // main v1
+    publishManifest(path, Streams.parquetFiles(s"$path/gen1")) // main v1
     d.filter(col("doc_id") % 4 === 1)
       .write.mode("overwrite").parquet(s"$path/gen2")
-    publishManifest(path, dataFiles("gen2")) // main v2
+    publishManifest(path, Streams.parquetFiles(s"$path/gen2")) // main v2
     // branch 'audit' forked at main v2; branch writer lands gen3 —
     // main's chain has no reference to it until the fast-forward
     d.filter(col("doc_id") % 4 === 3)
       .write.mode("overwrite").parquet(s"$path/gen3")
     java.nio.file.Files.write(branchManifestPath(path, "audit", 1),
-      (readManifestFiles(path, 2) ++ dataFiles("gen3"))
+      (readManifestFiles(path, 2) ++ Streams.parquetFiles(s"$path/gen3"))
         .mkString("\n").getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE_NEW)
     // WAP publish: fast-forward main to the audited branch tip
-    publishManifest(path, dataFiles("gen3")) // main v3
+    publishManifest(path, Streams.parquetFiles(s"$path/gen3")) // main v3
     def branchFiles(name: String, v: Int): Seq[String] =
       new String(java.nio.file.Files.readAllBytes(
         branchManifestPath(path, name, v)), "UTF-8")
@@ -1147,7 +1137,6 @@ object Formats {
     * into mod-50 hubs by every 7th order, so later batches RELABEL
     * earlier nodes (the delta-publication path, not just appends). */
   def manifestTimeTravel: Q = (s, dir) => {
-    val St = graft.streaming.Streams
     val ivmPath = scratch(s, dir, "tt_ivm")
     val ccPath = scratch(s, dir, "tt_cc")
     val o = Tables(s, dir, "orders")
@@ -1168,19 +1157,19 @@ object Formats {
     (0L to 2L).foreach { b =>
       // the sinks are plain idempotent functions (manifest = commit
       // marker): a warm re-run finds the manifests and only re-reads
-      St.ivmJoinSink(ivmPath)(
+      Streams.ivmJoinSink(ivmPath)(
         oD.filter(col("b") === b).unionByName(lD.filter(col("b") === b))
           .drop("b"), b)
-      St.ccIncSink(ccPath)(
+      Streams.ccIncSink(ccPath)(
         ccD.filter(col("b") === b).select(col("a"), col("bn").as("b")), b)
     }
     (0 to 2).map { v =>
-      St.ivmViewRead(s, ivmPath, v.toLong)
+      Streams.ivmViewRead(s, ivmPath, v.toLong)
         .agg(count(lit(1)).as("n_rows"), sum("rev_cents").as("m1"),
           sum("n_pairs").as("m2"))
         .select(lit("ivm").as("sink"), lit(v.toLong).as("version"),
           col("n_rows"), col("m1"), col("m2"))
-        .unionByName(St.ccLabelsRead(s, ccPath, v.toLong)
+        .unionByName(Streams.ccLabelsRead(s, ccPath, v.toLong)
           .agg(count(lit(1)).as("n_rows"), sum("comp").as("m1"),
             countDistinct("comp").as("m2"))
           .select(lit("cc").as("sink"), lit(v.toLong).as("version"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.PropertyGraph
+import graft.operators.Analytics
 
 /** Structured Streaming operators (SURVEY.md §2 E-block).
   *
@@ -755,64 +756,85 @@ object Streams {
     * and hard-linked into place (link(2) fails on an existing target,
     * giving both no-clobber AND no-torn-read) — a reader either sees a
     * complete manifest or the previous one, never a torn file list.
-    * Replay of batch k
-    * rewrites byte-identical files and a byte-identical manifest ⇒
     * The manifest IS the commit marker: a replayed batch that finds
     * its manifest already published SKIPS entirely — the transaction-
-    * log idempotence real table formats implement (rewriting the files
-    * instead would change the UUID'd part names and orphan every later
-    * manifest that listed the old ones). Readers pin a manifest VERSION
+    * log idempotence real table formats implement (the `manifestSink`
+    * frame every manifest sink shares). Readers pin a manifest VERSION
     * and are isolated from later batches (the spec proves both:
-    * replay-is-a-no-op and version isolation). Local-filesystem
-    * rename here; on an object store the manifest publish is a
+    * replay-is-a-no-op and version isolation). Local-filesystem hard
+    * link here; on an object store the manifest publish is a
     * conditional PUT — same protocol, documented at src_binary_files. */
-  def manifestCommitSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    // new manifest = PREVIOUS MANIFEST + this batch's files: prior
-    // batches' contents come from the immutable manifest chain, never
-    // from re-listing their directories (a stray file landing in an
-    // old batch dir must NOT get committed into future versions — the
-    // same readers-plan-from-manifests principle, applied to the
-    // writer), and the per-commit cost stays O(new files + manifest
-    // read), not O(all files ever written)
-    val prev = java.nio.file.Paths.get(s"$outDir/manifest-${batchId - 1}")
-    val base =
-      if (batchId > 0 && java.nio.file.Files.exists(prev))
-        new String(java.nio.file.Files.readAllBytes(prev), "UTF-8")
-          .split("\n").filter(_.nonEmpty).toSeq
-      else Seq.empty[String]
-    val fresh = new java.io.File(s"$outDir/batch_id=$batchId").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
-    // Publish = write the complete bytes to a tmp name, then HARD-LINK
-    // it to the manifest name. link(2) is the true create-if-absent
-    // commit (it FAILS with EEXIST when the target exists — unlike
-    // rename(2), which under ATOMIC_MOVE silently REPLACES an existing
-    // target on POSIX, so the previous tmp+rename shape never actually
-    // delivered the no-clobber CAS it claimed), and because the tmp
-    // file is fully written before the link, a reader still never
-    // observes a torn manifest. A racer that slipped past the
-    // exists-check above loses the link race and treats "already
-    // committed" as a no-op — safe because a batch id's content is
-    // deterministic (byte-identical replay). On an object store this
-    // publish becomes a conditional PUT (if-none-match), same protocol.
-    // the tmp name is UNIQUE PER ATTEMPT (UUID suffix): with a shared
-    // tmp path, one racer's CREATE+TRUNCATE could tear the bytes
-    // another racer was about to link (publishing a torn manifest),
-    // and the winner's finally-delete could yank a racer's tmp out
-    // from under its createLink. With unique tmps each attempt links
-    // its own complete file; exactly one link wins, the rest observe
-    // EEXIST. Any other FileSystemException is treated as "already
-    // committed" ONLY if the manifest verifiably exists — batch content
-    // is deterministic so that case is a safe no-op; otherwise the
-    // publish truly failed and the batch must fail (rethrown) so the
-    // stream retries instead of silently committing its offsets.
+  def manifestCommitSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { _ =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+      // new manifest = PREVIOUS MANIFEST + this batch's files: prior
+      // batches' contents come from the immutable manifest chain, never
+      // from re-listing their directories (a stray file landing in an
+      // old batch dir must NOT get committed into future versions — the
+      // same readers-plan-from-manifests principle, applied to the
+      // writer), and the per-commit cost stays O(new files + manifest
+      // read), not O(all files ever written)
+      manifestLines(outDir, batchId - 1) ++
+        parquetFiles(s"$outDir/batch_id=$batchId")
+    }
+
+  /** Read the table AT a published manifest version. */
+  def manifestVersionRead(s: SparkSession, outDir: String, version: Long): DataFrame =
+    s.read.parquet(manifestLines(outDir, version): _*)
+
+  // ------------------------------------------------ manifest sink frame
+  /** The commit frame every manifest-versioned sink runs in. A batch
+    * whose `manifest-<batchId>` is already published is a replay and
+    * returns at once: the manifest IS the commit marker, so a replay
+    * never rewrites files (new UUID'd part names would orphan every
+    * later manifest that lists the old ones). Otherwise `body` runs
+    * with one cache scope: each frame it passes to `keep` is cached and
+    * unpersisted when the body returns or throws, so neither a
+    * long-running stream nor a failed batch leaves cached blocks behind.
+    * The manifest lines the body returns are published through
+    * `publishManifest`; a body that throws publishes nothing, and the
+    * stream retries the batch. */
+  private def manifestSink(outDir: String, batchId: Long)(
+      body: (DataFrame => DataFrame) => Seq[String]): Unit =
+    if (!java.nio.file.Files.exists(manifestPath(outDir, batchId))) {
+      val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      try publishManifest(outDir, batchId,
+        body { df => cached += df; df.cache() })
+      finally cached.foreach(_.unpersist(false))
+    }
+
+  private def manifestPath(outDir: String, version: Long): java.nio.file.Path =
+    java.nio.file.Paths.get(s"$outDir/manifest-$version")
+
+  /** Hard-link CAS publish of `manifest-<batchId>`: write the complete
+    * bytes to a tmp name, then HARD-LINK it to the manifest name.
+    * link(2) is the true create-if-absent commit: it FAILS with EEXIST
+    * when the target exists, unlike rename(2), which under ATOMIC_MOVE
+    * silently REPLACES an existing target on POSIX. Because the tmp
+    * file is fully written before the link, a reader never observes a
+    * torn manifest: it sees the complete manifest or the previous one.
+    * A racer that slipped past the frame's exists-check loses the link
+    * race and treats "already committed" as a no-op, which is safe
+    * because a batch id's content is deterministic (byte-identical
+    * replay).
+    *
+    * The tmp name is UNIQUE PER ATTEMPT (UUID suffix). With a shared
+    * tmp path, one racer's CREATE+TRUNCATE could tear the bytes another
+    * racer was about to link, and the winner's finally-delete could
+    * yank a racer's tmp out from under its createLink. With unique tmps
+    * each attempt links its own complete file; exactly one link wins,
+    * the rest observe EEXIST. Any other FileSystemException counts as
+    * "already committed" ONLY if the manifest verifiably exists;
+    * otherwise the publish truly failed and is rethrown, so the batch
+    * fails and the stream retries instead of silently committing its
+    * offsets. On an object store this publish becomes a conditional
+    * PUT (if-none-match), the same protocol. */
+  private def publishManifest(outDir: String, batchId: Long,
+      lines: Seq[String]): Unit = {
     val tmp = java.nio.file.Paths.get(
       s"$outDir/.manifest-$batchId.${java.util.UUID.randomUUID()}.tmp")
-    java.nio.file.Files.write(tmp,
-      (base ++ fresh).mkString("\n").getBytes("UTF-8"))
-    val target = java.nio.file.Paths.get(s"$outDir/manifest-$batchId")
+    java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
+    val target = manifestPath(outDir, batchId)
     try java.nio.file.Files.createLink(target, tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException => ()
@@ -822,13 +844,46 @@ object Streams {
       java.nio.file.Files.deleteIfExists(tmp): Unit
   }
 
-  /** Read the table AT a published manifest version. */
-  def manifestVersionRead(s: SparkSession, outDir: String, version: Long): DataFrame = {
-    val files = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$outDir/manifest-$version")), "UTF-8")
+  /** The non-empty lines of `manifest-<version>`; empty when that
+    * version was never published. */
+  private def manifestLines(outDir: String, version: Long): Seq[String] = {
+    val p = manifestPath(outDir, version)
+    if (!java.nio.file.Files.exists(p)) Seq.empty
+    else new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
       .split("\n").filter(_.nonEmpty).toSeq
-    s.read.parquet(files: _*)
   }
+
+  /** The files a section-tagged manifest lists for `section` (its
+    * `section|path` lines); empty when the version was never published. */
+  private def manifestFiles(outDir: String, version: Long,
+      section: String): Seq[String] =
+    manifestLines(outDir, version).filter(_.startsWith(s"$section|"))
+      .map(_.substring(section.length + 1))
+
+  /** Every `.parquet` file under `dir`, partition subdirectories
+    * included, sorted. Bucket ids (`ebkt=`/`kbkt=`) ride in the path,
+    * which is what manifest-level pruning filters on. */
+  private[graft] def parquetFiles(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try st.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet"))
+      .toList.sorted
+    finally st.close()
+  }
+
+  /** Manifest lines (`section|path`) for this batch's files of `section`. */
+  private def sectionLines(outDir: String, batchId: Long,
+      section: String): Seq[String] =
+    parquetFiles(s"$outDir/batch_id=$batchId/$section").map(p => s"$section|$p")
+
+  /** The parquet `files`, or an empty frame of `schema` when there are none. */
+  private def readOrEmpty(s: SparkSession, files: Seq[String],
+      schema: String): DataFrame =
+    if (files.nonEmpty) s.read.parquet(files: _*) else emptyDf(s, schema)
+
+  private def emptyDf(s: SparkSession, schema: String): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
 
   // -------------------------------------------------------- st_ivm_join
   /** st_ivm_join: STREAMING incremental maintenance of a join-aggregate
@@ -879,24 +934,9 @@ object Streams {
     * algebra); the changelog here is insert-only by contract. */
   final case class IvmDelta(side: String, key: Long, pri: String, cents: Long)
 
-  private def ivmManifestFiles(outDir: String, version: Long,
-      section: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(s"$outDir/manifest-$version")
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      .split("\n").filter(_.startsWith(s"$section|"))
-      .map(_.substring(section.length + 1)).toSeq
-  }
-
-  def ivmJoinSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
-      def readOrEmpty(files: Seq[String], schema: String): DataFrame =
-        if (files.nonEmpty) s.read.parquet(files: _*) else emptyDf(s, schema)
+  def ivmJoinSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { keep =>
+      val s = batch.sparkSession
       val dA = keep(batch.filter(col("side") === "o")
         .select(col("key").as("o_orderkey"), col("pri").as("o_orderpriority")))
       val dB = keep(batch.filter(col("side") === "l")
@@ -909,15 +949,15 @@ object Streams {
       // BROADCAST — stored rows flow scan → broadcast-join and never
       // enter an exchange; per-batch read ∝ |store|·touched/buckets,
       // exchange ∝ |Δ ⋈|, never |A| + |B|
-      val a0 = readOrEmpty(
+      val a0 = readOrEmpty(s,
         prunedManifestFiles(outDir, batchId - 1, "o",
           keyBuckets(dB, "l_orderkey")),
         "o_orderkey BIGINT, o_orderpriority STRING")
-      val b0 = readOrEmpty(
+      val b0 = readOrEmpty(s,
         prunedManifestFiles(outDir, batchId - 1, "l",
           keyBuckets(dA, "o_orderkey")),
         "l_orderkey BIGINT, cents BIGINT")
-      val v0 = readOrEmpty(ivmManifestFiles(outDir, batchId - 1, "view"),
+      val v0 = readOrEmpty(s, manifestFiles(outDir, batchId - 1, "view"),
         "o_orderpriority STRING, rev_cents BIGINT, n_pairs BIGINT")
       def pairs(a: DataFrame, b: DataFrame): DataFrame =
         a.join(b, a("o_orderkey") === b("l_orderkey"))
@@ -940,33 +980,13 @@ object Streams {
         .parquet(s"$outDir/batch_id=$batchId/view")
       // o/l sections accumulate (they are the base for batch k+1); the
       // view section is REPLACED (v1 already folds v0)
-      publishManifest(outDir, batchId,
-        oLines ++ lLines ++ freshRec(outDir, batchId, "view"))
-    } finally cached.foreach(_.unpersist(false))
-  }
+      oLines ++ lLines ++ sectionLines(outDir, batchId, "view")
+    }
 
   /** The maintained view AT a published version (pinned, isolated). */
   def ivmViewRead(s: SparkSession, outDir: String, version: Long): DataFrame = {
-    val files = ivmManifestFiles(outDir, version, "view")
+    val files = manifestFiles(outDir, version, "view")
     s.read.parquet(files: _*)
-  }
-
-  /** Hard-link CAS manifest publish — the manifestCommitSink protocol
-    * (unique tmp per attempt; exactly one link wins; EEXIST = already
-    * committed, safe because batch content is deterministic). */
-  private def publishManifest(outDir: String, batchId: Long,
-      lines: Seq[String]): Unit = {
-    val tmp = java.nio.file.Paths.get(
-      s"$outDir/.manifest-$batchId.${java.util.UUID.randomUUID()}.tmp")
-    java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    val target = java.nio.file.Paths.get(s"$outDir/manifest-$batchId")
-    try java.nio.file.Files.createLink(target, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => ()
-      case e: java.nio.file.FileSystemException =>
-        if (!java.nio.file.Files.exists(target)) throw e
-    } finally
-      java.nio.file.Files.deleteIfExists(tmp): Unit
   }
 
   // ------------------------------------------------------ st_ivm_signed
@@ -990,15 +1010,9 @@ object Streams {
   final case class IvmSDelta(side: String, key: Long, pri: String,
                              cents: Long, sign: Long)
 
-  def ivmSignedSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
-      def readOrEmpty(files: Seq[String], schema: String): DataFrame =
-        if (files.nonEmpty) s.read.parquet(files: _*) else emptyDf(s, schema)
+  def ivmSignedSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { keep =>
+      val s = batch.sparkSession
       val dA = keep(batch.filter(col("side") === "o")
         .select(col("key").as("o_orderkey"), col("pri").as("o_orderpriority"),
           col("sign").as("sa")))
@@ -1008,15 +1022,15 @@ object Streams {
       // stored sides: bucket-pruned scan + broadcast delta — the
       // ivmJoinSink read posture, unchanged by signs (a −1 row prunes
       // and probes exactly like its +1 twin)
-      val a0 = readOrEmpty(
+      val a0 = readOrEmpty(s,
         prunedManifestFiles(outDir, batchId - 1, "o",
           keyBuckets(dB, "l_orderkey")),
         "o_orderkey BIGINT, o_orderpriority STRING, sa BIGINT")
-      val b0 = readOrEmpty(
+      val b0 = readOrEmpty(s,
         prunedManifestFiles(outDir, batchId - 1, "l",
           keyBuckets(dA, "o_orderkey")),
         "l_orderkey BIGINT, cents BIGINT, sb BIGINT")
-      val v0 = readOrEmpty(ivmManifestFiles(outDir, batchId - 1, "view"),
+      val v0 = readOrEmpty(s, manifestFiles(outDir, batchId - 1, "view"),
         "o_orderpriority STRING, rev_cents BIGINT, n_pairs BIGINT")
       def pairs(a: DataFrame, b: DataFrame): DataFrame =
         a.join(b, a("o_orderkey") === b("l_orderkey"))
@@ -1039,10 +1053,8 @@ object Streams {
         dB, "kbkt", keyBktCol("l_orderkey"))
       v1.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/batch_id=$batchId/view")
-      publishManifest(outDir, batchId,
-        oLines ++ lLines ++ freshRec(outDir, batchId, "view"))
-    } finally cached.foreach(_.unpersist(false))
-  }
+      oLines ++ lLines ++ sectionLines(outDir, batchId, "view")
+    }
 
   // ------------------------------------------------- st_cc_incremental
   /** st_cc_incremental: STREAMING incremental connected components — the
@@ -1098,6 +1110,10 @@ object Streams {
     * at most `ccIncCompactEvery` delta files over one snapshot. */
   val ccIncCompactEvery = 4L
 
+  /** Whether version `batchId` is a compaction version. */
+  private def compacting(batchId: Long): Boolean =
+    batchId > 0 && batchId % ccIncCompactEvery == 0
+
   /** Hash-bucket count for the compaction snapshot's directory
     * partitioning: lookups collect the (≤ this many, a CONSTANT)
     * distinct buckets of their probe ids and push `bkt IN (...)` down
@@ -1129,10 +1145,6 @@ object Streams {
       .filter(col("rn") === 1).select("id", "comp", "snap_absent")
   }
 
-  private def emptyDf(s: SparkSession, schema: String): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
-
   /** The label store AT a version, in its two physical pieces: the
     * bucket-partitioned compaction snapshot (id, comp, bkt — possibly
     * empty) and the composed post-snapshot deltas (id, comp,
@@ -1141,11 +1153,10 @@ object Streams {
     * enter an exchange. */
   private[graft] def ccStore(s: SparkSession, outDir: String,
       version: Long): (DataFrame, DataFrame) = {
-    val deltaFiles = ivmManifestFiles(outDir, version, "labels")
-    val dc = composeLabels(
-      if (deltaFiles.nonEmpty) s.read.parquet(deltaFiles: _*)
-      else emptyDf(s, "id BIGINT, comp BIGINT, fs BOOLEAN, v BIGINT"))
-    val snapDirs = ivmManifestFiles(outDir, version, "labsnap")
+    val deltaFiles = manifestFiles(outDir, version, "labels")
+    val dc = composeLabels(readOrEmpty(s, deltaFiles,
+      "id BIGINT, comp BIGINT, fs BOOLEAN, v BIGINT"))
+    val snapDirs = manifestFiles(outDir, version, "labsnap")
     val snap =
       if (snapDirs.nonEmpty)
         s.read.option("basePath", snapDirs.head).parquet(snapDirs.head)
@@ -1153,17 +1164,9 @@ object Streams {
     (snap, dc)
   }
 
-  def ccIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    // every cached frame is released at batch end (try/finally): a
-    // long-running stream must not accumulate per-batch cached RDDs
-    // (the r13 advisor leak — LRU eviction saves you from failure,
-    // not from growing memory pressure)
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try PropertyGraph.withCheckpoints { ck =>
+  def ccIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { keep => PropertyGraph.withCheckpoints { ck =>
+      val s = batch.sparkSession
       // the store in its two pieces: composed deltas (delta-bounded —
       // the ONLY label frame that ever enters an exchange this batch)
       // and the bucket-partitioned snapshot (probed via partition
@@ -1224,33 +1227,10 @@ object Streams {
       val und = keep(supE.union(
         supE.select(col("b").as("a"), col("a").as("b"))))
       // min-label fixpoint on the super-graph — delta-bounded (≤ 2·|ΔE|
-      // nodes), so each round is a small join. Each round ends in a
-      // localCheckpoint + STATS reset (createDataFrame over the pinned
-      // blocks): without the checkpoint the logical plan DOUBLES per
-      // round (comp appears twice in merged — stringifying round 16's
-      // cache name alone OOMs the driver), and without the reset the
-      // checkpointed stats compound multiplicatively round over round
-      // (the g_louvain_hierarchy planner-stall lesson).
-      def resetStats(df: DataFrame): DataFrame =
-        s.createDataFrame(df.rdd, df.schema)
-      var comp = keep(und.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")))
-      var changed = 1L
-      var round = 0
-      while (changed > 0 && round < ccIncStreamIters) {
-        round += 1
-        val m = und.join(comp.withColumnRenamed("id", "a"), Seq("a"))
-          .groupBy(col("b").as("id")).agg(min("comp").as("m"))
-        val merged = ck.lazily(comp.join(m, Seq("id"), "left_outer")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("m"), col("comp"))).as("comp"),
-            (col("m") < col("comp")).as("chg")))
-        changed = merged.filter(col("chg")).count()
-        comp = resetStats(merged.select("id", "comp"))
-      }
-      if (changed > 0) throw new IllegalStateException(
-        s"ccIncSink batch $batchId: super-graph fixpoint not reached in " +
-          s"$ccIncStreamIters rounds — refusing to publish approximate components")
+      // nodes), so each round is a small join of the one CC kernel;
+      // labels still changing after round ccIncStreamIters abort the batch
+      val comp = Analytics.ccLabels(und.select(col("a").as("id")).distinct(),
+        und, ccIncStreamIters, ck, assertConverged = true)
       // super-root map restricted to REAL moves (root != comp): its
       // inner-join image against the stored labels is exactly the set
       // of nodes whose component changed this version
@@ -1278,7 +1258,7 @@ object Streams {
       val delta = firstSeen.withColumn("fs", lit(true))
         .unionByName(relabeled.withColumn("fs", lit(false)))
         .withColumn("v", lit(batchId))
-      val compact = batchId > 0 && batchId % ccIncCompactEvery == 0
+      val compact = compacting(batchId)
       // edges changelog (audit / recovery content, non-collapsing):
       // log-structured segment fold — bounded file list, O(log
       // batches) rewrites per row (st_changelog_compact)
@@ -1303,21 +1283,14 @@ object Streams {
         delta.write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId/labels")
       }
-      def fresh(section: String): Seq[String] = {
-        val d = new java.io.File(s"$outDir/batch_id=$batchId/$section")
-        d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => s"$section|${f.getPath}").sorted.toSeq
-      }
-      publishManifest(outDir, batchId,
-        edgeLines ++
+      edgeLines ++
         (if (compact) Seq(s"labsnap|$outDir/batch_id=$batchId/labsnap")
-         else ivmManifestFiles(outDir, batchId - 1, "labsnap")
+         else manifestFiles(outDir, batchId - 1, "labsnap")
              .map(d => s"labsnap|$d") ++
-           ivmManifestFiles(outDir, batchId - 1, "labels")
+           manifestFiles(outDir, batchId - 1, "labels")
              .map(f => s"labels|$f") ++
-           fresh("labels")))
-    } finally cached.foreach(_.unpersist(false))
-  }
+           sectionLines(outDir, batchId, "labels"))
+    }}
 
   /** The component-label table AT a published version: the composed
     * post-snapshot deltas (last-writer-wins, ≤ ccIncCompactEvery
@@ -1386,10 +1359,9 @@ object Streams {
       batchId: Long, pairs: DataFrame,
       keep: DataFrame => DataFrame): DupProbe = {
     val dP = keep(pairs)
-    val bloomFiles = ivmManifestFiles(outDir, batchId - 1, "bloom")
+    val bloomFiles = manifestFiles(outDir, batchId - 1, "bloom")
     val bloom = keep(
-      (if (bloomFiles.nonEmpty) s.read.parquet(bloomFiles: _*)
-       else emptyDf(s, "pos BIGINT")).select("pos").distinct())
+      readOrEmpty(s, bloomFiles, "pos BIGINT").select("pos").distinct())
     val posed = keep(dP.withColumn("ph", pairPosArr))
     val hits = posed.select(col("a"), col("b"), explode(col("ph")).as("pos"))
       .join(bloom, Seq("pos"), "left_semi")
@@ -1415,8 +1387,7 @@ object Streams {
         val bkts = fStats.getSeq[Int](2)
         val files = prunedManifestFiles(outDir, batchId - 1, "edges", bkts)
         val e0p = keep(
-          if (files.nonEmpty) s.read.parquet(files: _*).select("a", "b")
-          else emptyDf(s, "a BIGINT, b BIGINT"))
+          readOrEmpty(s, files, "a BIGINT, b BIGINT").select("a", "b"))
         (maybeDup.join(e0p, Seq("a", "b"), "left_anti"), e0p.count())
       }
     val dE = keep(flagged.filter(!col("maybe")).select("a", "b")
@@ -1437,7 +1408,7 @@ object Streams {
     * manifest lines for the edges + bloom + probe sections. */
   private def writeEdgeChangelog(s: SparkSession, outDir: String,
       batchId: Long, dE: DataFrame, probe: DupProbe): Seq[String] = {
-    val compact = batchId > 0 && batchId % ccIncCompactEvery == 0
+    val compact = compacting(batchId)
     // edges: NON-collapsing (every row lives forever) → log-structured
     // segment fold, O(log batches) rewrites per row
     val edgeLines = appendLogStructured(s, outDir, batchId, "edges",
@@ -1445,7 +1416,7 @@ object Streams {
     // bloom: COLLAPSING (bounded by the m-bit space) → the periodic
     // full fold is a bounded-state checkpoint, not history rewriting
     val newPos = dE.select(explode(pairPosArr).as("pos")).distinct()
-    val bloomFiles = ivmManifestFiles(outDir, batchId - 1, "bloom")
+    val bloomFiles = manifestFiles(outDir, batchId - 1, "bloom")
     (if (compact && bloomFiles.nonEmpty)
        s.read.parquet(bloomFiles: _*).select("pos").unionByName(newPos)
          .distinct()
@@ -1458,29 +1429,8 @@ object Streams {
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId/probe")
     edgeLines ++
       (if (compact) Seq.empty else bloomFiles.map(f => s"bloom|$f")) ++
-      freshRec(outDir, batchId, "bloom") ++ freshRec(outDir, batchId, "probe")
-  }
-
-  /** Manifest lines for this batch's files under a section dir,
-    * recursing into partition subdirectories (`ebkt=`/`kbkt=` buckets
-    * land as key=value dirs — the bucket id rides in the PATH, which
-    * is what manifest-level pruning filters on). */
-  private def freshRec(outDir: String, batchId: Long,
-      section: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(s"$outDir/batch_id=$batchId/$section")
-    val st = java.nio.file.Files.walk(root)
-    try st.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-      .map(p => s"$section|$p").toList.sorted
-    finally st.close()
-  }
-
-  private def walkFiles(dir: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try st.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-      .map(_.toString).toList.sorted
-    finally st.close()
+      sectionLines(outDir, batchId, "bloom") ++
+      sectionLines(outDir, batchId, "probe")
   }
 
   /** LOG-STRUCTURED segment fold (Bentley–Saxe binary-counter merging)
@@ -1501,7 +1451,7 @@ object Streams {
     * merge, so manifest-level probe pruning works identically on
     * merged segments. Segment bookkeeping rides the manifest as
     * `<section>seg|<dir>|<batch-count>` meta lines (the prefix filter
-    * in ivmManifestFiles cannot confuse them with `<section>|` file
+    * in manifestFiles cannot confuse them with `<section>|` file
     * lines); rows live in exactly ONE segment at any version, so
     * readers just take the section's file lines as before. Returns
     * the full manifest line set for the section. */
@@ -1509,12 +1459,12 @@ object Streams {
       batchId: Long, section: String, fresh: DataFrame,
       bktName: String, bkt: org.apache.spark.sql.Column): Seq[String] = {
     val metaTag = s"${section}seg"
-    val priorMeta = ivmManifestFiles(outDir, batchId - 1, metaTag)
+    val priorMeta = manifestFiles(outDir, batchId - 1, metaTag)
       .map { m =>
         val i = m.lastIndexOf('|')
         (m.substring(0, i), m.substring(i + 1).toLong)
       }
-    val priorFiles = ivmManifestFiles(outDir, batchId - 1, section)
+    val priorFiles = manifestFiles(outDir, batchId - 1, section)
     def filesOf(dir: String): Seq[String] =
       priorFiles.filter(_.startsWith(dir + "/"))
     val d0 = s"$outDir/batch_id=$batchId/$section"
@@ -1527,7 +1477,7 @@ object Streams {
       .write.mode("overwrite").partitionBy(bktName).parquet(d0)
     var stack: List[(String, Long, Seq[String])] =
       priorMeta.map { case (d, c) => (d, c, filesOf(d)) }.toList :+
-        ((d0, 1L, walkFiles(d0)))
+        ((d0, 1L, parquetFiles(d0)))
     var k = 0
     while (stack.size >= 2 &&
         stack(stack.size - 1)._2 == stack(stack.size - 2)._2) {
@@ -1540,7 +1490,7 @@ object Streams {
        else fresh.limit(0))
         .withColumn(bktName, bkt).repartition(col(bktName))
         .write.mode("overwrite").partitionBy(bktName).parquet(md)
-      stack = stack.dropRight(2) :+ ((md, c1 + c2, walkFiles(md)))
+      stack = stack.dropRight(2) :+ ((md, c1 + c2, parquetFiles(md)))
     }
     stack.map { case (d, c, _) => s"$metaTag|$d|$c" } ++
       stack.flatMap { case (_, _, fs) => fs.map(f => s"$section|$f") }
@@ -1555,7 +1505,7 @@ object Streams {
       section: String, bkts: Seq[Int]): Seq[String] = {
     val re = "[ek]bkt=(\\d+)".r
     val set = bkts.toSet
-    ivmManifestFiles(outDir, version, section)
+    manifestFiles(outDir, version, section)
       .filter(f => re.findFirstMatchIn(f).exists(m => set(m.group(1).toInt)))
   }
 
@@ -1599,21 +1549,12 @@ object Streams {
     * gold: brute-force triangle census over edges-so-far at every
     * version + replay/isolation (Round14Spec); probe-cost bounds in
     * Round15Spec. */
-  def triIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
-      def readOrEmpty(files: Seq[String], schema: String): DataFrame =
-        if (files.nonEmpty) s.read.parquet(files: _*)
-        else s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-      val e0 = readOrEmpty(ivmManifestFiles(outDir, batchId - 1, "edges"),
+  def triIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { keep =>
+      val s = batch.sparkSession
+      val e0 = readOrEmpty(s, manifestFiles(outDir, batchId - 1, "edges"),
         "a BIGINT, b BIGINT").select("a", "b")
-      val c0 = readOrEmpty(ivmManifestFiles(outDir, batchId - 1, "census"),
+      val c0 = readOrEmpty(s, manifestFiles(outDir, batchId - 1, "census"),
         "n_triangles BIGINT")
       // canonical (a < b), self-loops dropped, within-batch dupes and
       // already-stored edges removed — only GENUINELY new edges close
@@ -1649,18 +1590,12 @@ object Streams {
       // aggregate class (like the ivm view), not a table write
       c1.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/batch_id=$batchId/census")
-      def fresh(section: String): Seq[String] = {
-        val d = new java.io.File(s"$outDir/batch_id=$batchId/$section")
-        d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => s"$section|${f.getPath}").sorted.toSeq
-      }
-      publishManifest(outDir, batchId, changelogLines ++ fresh("census"))
-    } finally cached.foreach(_.unpersist(false))
-  }
+      changelogLines ++ sectionLines(outDir, batchId, "census")
+    }
 
   /** The triangle census AT a published version (pinned, isolated). */
   def triCensusRead(s: SparkSession, outDir: String, version: Long): DataFrame =
-    s.read.parquet(ivmManifestFiles(outDir, version, "census"): _*)
+    s.read.parquet(manifestFiles(outDir, version, "census"): _*)
 
   // ----------------------------------------------- st_degree_incremental
   /** st_degree_incremental: STREAMING degree view under SUM-merge
@@ -1681,19 +1616,10 @@ object Streams {
     * because addition is associative, compaction is provably just
     * pre-aggregation, not a semantic step). Top-k-by-degree, degree
     * histograms, and join-skew monitors all read this view. */
-  def degIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
-      def readOrEmpty(files: Seq[String], schema: String): DataFrame =
-        if (files.nonEmpty) s.read.parquet(files: _*)
-        else s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
-      val degFiles = ivmManifestFiles(outDir, batchId - 1, "deg")
+  def degIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { keep =>
+      val s = batch.sparkSession
+      val degFiles = manifestFiles(outDir, batchId - 1, "deg")
       // genuinely-new canonical edges via the bloom + bucket-pruned
       // changelog front (probe cost ∝ |Δ|, never |E| — r14 verdict)
       val probe = dedupAgainstChangelog(s, outDir, batchId,
@@ -1706,31 +1632,24 @@ object Streams {
         .unionByName(dE.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       val changelogLines = writeEdgeChangelog(s, outDir, batchId, dE, probe)
-      val compact = batchId > 0 && batchId % ccIncCompactEvery == 0
+      val compact = compacting(batchId)
       if (compact) {
-        readOrEmpty(degFiles, "id BIGINT, d BIGINT").unionByName(delta)
+        readOrEmpty(s, degFiles, "id BIGINT, d BIGINT").unionByName(delta)
           .groupBy("id").agg(sum("d").as("d"))
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId/deg")
       } else {
         delta.write.mode("overwrite")
           .parquet(s"$outDir/batch_id=$batchId/deg")
       }
-      def fresh(section: String): Seq[String] = {
-        val d = new java.io.File(s"$outDir/batch_id=$batchId/$section")
-        d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => s"$section|${f.getPath}").sorted.toSeq
-      }
-      publishManifest(outDir, batchId,
-        changelogLines ++
+      changelogLines ++
         (if (compact) Seq.empty else degFiles.map(f => s"deg|$f")) ++
-        fresh("deg"))
-    } finally cached.foreach(_.unpersist(false))
-  }
+        sectionLines(outDir, batchId, "deg")
+    }
 
   /** The degree table AT a published version — associative SUM over
     * the manifest's delta files (no version ordering needed). */
   def degreesRead(s: SparkSession, outDir: String, version: Long): DataFrame =
-    s.read.parquet(ivmManifestFiles(outDir, version, "deg"): _*)
+    s.read.parquet(manifestFiles(outDir, version, "deg"): _*)
       .groupBy("id").agg(sum("d").as("d"))
 
   // ------------------------------------------------- st_hll_incremental
@@ -1757,47 +1676,39 @@ object Streams {
     * md5(key) mod 64, rho = 41 − bitlength(40-bit suffix). */
   final case class HllKey(key: Long)
 
-  def hllIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    val h = md5(col("key").cast("string"))
-    val bregs = batch.select(
-        (graft.functions.VectorExprs.hexSlice(h, 1, 2) % 64).as("j"),
-        graft.functions.VectorExprs.hexSlice(h, 3, 10).as("w"))
-      .select(col("j"),
-        expr("CAST(CASE WHEN w = 0 THEN 41 ELSE 41 - length(bin(w)) END" +
-          " AS BIGINT)").as("mr"))
-      .groupBy("j").agg(max("mr").as("mr"))
-    val regFiles = ivmManifestFiles(outDir, batchId - 1, "regs")
-    val stored = (if (regFiles.nonEmpty) s.read.parquet(regFiles: _*)
-      else emptyDf(s, "j BIGINT, mr BIGINT"))
-      .groupBy("j").agg(max("mr").as("mr0"))
-    // register DELTA: only registers this batch RAISES — a no-news
-    // batch writes zero rows (idempotence made visible in the files)
-    val delta = bregs.join(stored, Seq("j"), "left_outer")
-      .filter(col("mr0").isNull || col("mr") > col("mr0"))
-      .select("j", "mr")
-    val compact = batchId > 0 && batchId % ccIncCompactEvery == 0
-    (if (compact)
-       stored.select(col("j"), col("mr0").as("mr")).unionByName(delta)
-         .groupBy("j").agg(max("mr").as("mr"))
-     else delta)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId/regs")
-    def fresh(section: String): Seq[String] = {
-      val d = new java.io.File(s"$outDir/batch_id=$batchId/$section")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => s"$section|${f.getPath}").sorted.toSeq
-    }
-    publishManifest(outDir, batchId,
+  def hllIncSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { _ =>
+      val s = batch.sparkSession
+      val h = md5(col("key").cast("string"))
+      val bregs = batch.select(
+          (graft.functions.VectorExprs.hexSlice(h, 1, 2) % 64).as("j"),
+          graft.functions.VectorExprs.hexSlice(h, 3, 10).as("w"))
+        .select(col("j"),
+          expr("CAST(CASE WHEN w = 0 THEN 41 ELSE 41 - length(bin(w)) END" +
+            " AS BIGINT)").as("mr"))
+        .groupBy("j").agg(max("mr").as("mr"))
+      val regFiles = manifestFiles(outDir, batchId - 1, "regs")
+      val stored = readOrEmpty(s, regFiles, "j BIGINT, mr BIGINT")
+        .groupBy("j").agg(max("mr").as("mr0"))
+      // register DELTA: only registers this batch RAISES — a no-news
+      // batch writes zero rows (idempotence made visible in the files)
+      val delta = bregs.join(stored, Seq("j"), "left_outer")
+        .filter(col("mr0").isNull || col("mr") > col("mr0"))
+        .select("j", "mr")
+      val compact = compacting(batchId)
+      (if (compact)
+         stored.select(col("j"), col("mr0").as("mr")).unionByName(delta)
+           .groupBy("j").agg(max("mr").as("mr"))
+       else delta)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId/regs")
       (if (compact) Seq.empty else regFiles.map(f => s"regs|$f")) ++
-        fresh("regs"))
-  }
+        sectionLines(outDir, batchId, "regs")
+    }
 
   /** The register table AT a published version — register-wise MAX
     * over the manifest's files (order-free by the algebra). */
   def hllRegsRead(s: SparkSession, outDir: String, version: Long): DataFrame =
-    s.read.parquet(ivmManifestFiles(outDir, version, "regs"): _*)
+    s.read.parquet(manifestFiles(outDir, version, "regs"): _*)
       .groupBy("j").agg(max("mr").as("mr"))
 
   // ------------------------------------------------------ st_topk_sketch
@@ -1825,65 +1736,55 @@ object Streams {
 
   final case class HHItem(k: Long)
 
-  def topkSketchSink(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$outDir/manifest-$batchId"))) return
-    val s = batch.sparkSession
-    def readOrEmpty(files: Seq[String], schema: String): DataFrame =
-      if (files.nonEmpty) s.read.parquet(files: _*)
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-    val c0 = readOrEmpty(ivmManifestFiles(outDir, batchId - 1, "counters"),
-      "shard BIGINT, key BIGINT, cnt BIGINT")
-    val d0 = readOrEmpty(ivmManifestFiles(outDir, batchId - 1, "dec"),
-      "shard BIGINT, dec BIGINT")
-    val bc = batch.select(pmod(col("k"), lit(mgShards)).as("shard"),
-        col("k").as("key"))
-      .groupBy("shard", "key").agg(count(lit(1)).as("cnt"))
-    val merged = c0.unionByName(bc)
-      .groupBy("shard", "key").agg(sum("cnt").as("cnt"))
-    val w = Window.partitionBy("shard").orderBy(col("cnt").desc, col("key"))
-    val ranked = merged.withColumn("rn", row_number().over(w)).cache()
-    // the (k+1)-th largest IS the MG decrement; shards holding ≤ k
-    // keys decrement by 0 (left join + coalesce)
-    val dk = ranked.filter(col("rn") === mgK + 1)
-      .select(col("shard"), col("cnt").as("d"))
-    val c1 = ranked.join(dk, Seq("shard"), "left_outer")
-      .select(col("shard"), col("key"),
-        (col("cnt") - coalesce(col("d"), lit(0L))).as("cnt"))
-      .filter(col("cnt") > 0)
-    // cumulative decrement per shard — every shard EVER seen keeps its
-    // row (a shard absent from this batch decrements by 0, not by NULL)
-    val shards = d0.select("shard")
-      .union(ranked.select("shard")).distinct()
-    val d1 = shards
-      .join(d0, Seq("shard"), "left_outer")
-      .join(dk, Seq("shard"), "left_outer")
-      .select(col("shard"),
-        (coalesce(col("dec"), lit(0L)) + coalesce(col("d"), lit(0L)))
-          .as("dec"))
-    c1.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/batch_id=$batchId/counters")
-    d1.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/batch_id=$batchId/dec")
-    ranked.unpersist()
-    def fresh(section: String): Seq[String] = {
-      val d = new java.io.File(s"$outDir/batch_id=$batchId/$section")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => s"$section|${f.getPath}").sorted.toSeq
+  def topkSketchSink(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    manifestSink(outDir, batchId) { keep =>
+      val s = batch.sparkSession
+      val c0 = readOrEmpty(s, manifestFiles(outDir, batchId - 1, "counters"),
+        "shard BIGINT, key BIGINT, cnt BIGINT")
+      val d0 = readOrEmpty(s, manifestFiles(outDir, batchId - 1, "dec"),
+        "shard BIGINT, dec BIGINT")
+      val bc = batch.select(pmod(col("k"), lit(mgShards)).as("shard"),
+          col("k").as("key"))
+        .groupBy("shard", "key").agg(count(lit(1)).as("cnt"))
+      val merged = c0.unionByName(bc)
+        .groupBy("shard", "key").agg(sum("cnt").as("cnt"))
+      val w = Window.partitionBy("shard").orderBy(col("cnt").desc, col("key"))
+      val ranked = keep(merged.withColumn("rn", row_number().over(w)))
+      // the (k+1)-th largest IS the MG decrement; shards holding ≤ k
+      // keys decrement by 0 (left join + coalesce)
+      val dk = ranked.filter(col("rn") === mgK + 1)
+        .select(col("shard"), col("cnt").as("d"))
+      val c1 = ranked.join(dk, Seq("shard"), "left_outer")
+        .select(col("shard"), col("key"),
+          (col("cnt") - coalesce(col("d"), lit(0L))).as("cnt"))
+        .filter(col("cnt") > 0)
+      // cumulative decrement per shard — every shard EVER seen keeps its
+      // row (a shard absent from this batch decrements by 0, not by NULL)
+      val shards = d0.select("shard")
+        .union(ranked.select("shard")).distinct()
+      val d1 = shards
+        .join(d0, Seq("shard"), "left_outer")
+        .join(dk, Seq("shard"), "left_outer")
+        .select(col("shard"),
+          (coalesce(col("dec"), lit(0L)) + coalesce(col("d"), lit(0L)))
+            .as("dec"))
+      c1.coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/batch_id=$batchId/counters")
+      d1.coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/batch_id=$batchId/dec")
+      // both sections are REPLACED each version (the fold already
+      // carries the history)
+      sectionLines(outDir, batchId, "counters") ++
+        sectionLines(outDir, batchId, "dec")
     }
-    // both sections are REPLACED each version (the fold already
-    // carries the history)
-    publishManifest(outDir, batchId, fresh("counters") ++ fresh("dec"))
-  }
 
   /** The sketch AT a version: (shard, key, lo, hi) with the validity
     * invariant exact ∈ [lo, hi] for stored keys, ≤ hi − lo for absent. */
   def topkSketchRead(s: SparkSession, outDir: String,
       version: Long): DataFrame = {
     val c = s.read.parquet(
-      ivmManifestFiles(outDir, version, "counters"): _*)
-    val d = s.read.parquet(ivmManifestFiles(outDir, version, "dec"): _*)
+      manifestFiles(outDir, version, "counters"): _*)
+    val d = s.read.parquet(manifestFiles(outDir, version, "dec"): _*)
     c.join(d, Seq("shard"))
       .select(col("shard"), col("key"), col("cnt").as("lo"),
         (col("cnt") + col("dec")).as("hi"))
