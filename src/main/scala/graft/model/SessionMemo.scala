@@ -22,15 +22,24 @@ import scala.collection.concurrent.TrieMap
   * are JVM-global, and a driver cycling sessions (notebook, test
   * matrix) would otherwise pin one dead entry per (session, dir)
   * forever.
+  *
+  * `counted = false` keeps a memo's builds out of
+  * `SessionMemo.buildCount` (the source-table reads of `Tables`, which
+  * every query's first call in a session makes and which are not
+  * shared family builds).
   */
-final class SessionMemo[V] {
+final class SessionMemo[V] private[graft] (counted: Boolean) {
+  def this() = this(true)
+
   private val cache = TrieMap.empty[(SparkSession, String), V]
 
   def apply(s: SparkSession, dir: String)(build: => V): V =
     synchronized {
       cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      cache.getOrElseUpdate((s, dir),
-        { SessionMemo.buildCount.incrementAndGet(); build })
+      cache.getOrElseUpdate((s, dir), {
+        if (counted) SessionMemo.buildCount.incrementAndGet()
+        build
+      })
     }
 }
 

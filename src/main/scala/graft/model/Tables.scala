@@ -7,16 +7,29 @@ import org.apache.spark.sql.types.{LongType, StructField, TimestampNTZType, Time
 /** Parquet table access for the driver-generated star schema.
   * Reads are lazy scans — Catalyst pushes filters/projections into the
   * parquet reader, so callers should never pre-materialize.
+  *
+  * One read per source table per session: the frame of
+  * `$dir/$name.parquet` is built once per session (its parquet schema
+  * inference is a Spark job, its file listing a driver round-trip) and
+  * every later call returns that same frame. Input tables are therefore
+  * IMMUTABLE for the life of a session: a file added to or replaced in
+  * a table directory after its first read is not seen until a new
+  * session reads it. Reads do not count as memo builds
+  * (`SessionMemo.buildCount`). A self-join of one table must alias its
+  * sides, since both are the same frame.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events") normalizeTs(df) else df
-  }
+  private val read = new SessionMemo[DataFrame](counted = false)
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet") {
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      if (name == "events") normalizeTs(df) else df
+    }
 
   /** Every events consumer does INTEGER time arithmetic on `ts` as
     * BIGINT NANOS since epoch (codegen-friendly, no timezone

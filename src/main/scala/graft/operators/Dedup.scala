@@ -1962,8 +1962,7 @@ object Dedup {
   val erGramCap = 20
 
   def entityResolution: Q = (s, dir) => {
-    val sup = docs(s, dir).sparkSession.read
-      .parquet(s"$dir/supplier.parquet")
+    val sup = Tables(s, dir, "supplier")
       .select(col("s_suppkey").as("id"), col("s_name").as("name"))
     // corrupt ONE character (4th from the end) — lev(dirty, true) == 1
     val dirty = sup.select(col("id"),

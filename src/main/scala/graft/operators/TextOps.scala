@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.{SessionMemo, Tables}
+import graft.model.{PropertyGraph, SessionMemo, Tables}
 
 /** Text analysis operators (SURVEY.md §2 D-block): language id, quality
   * scoring, token counting, fingerprinting — all per-document linear
@@ -453,24 +453,26 @@ object TextOps {
     * surrogate family, chosen because BOTH engines compute the same
     * exact arithmetic — ln would put a float on the engine boundary.
     *
-    * Scale shape: term-frequency groupBy is the map-side-combine
-    * wordcount (shuffle = distinct (doc,term) pairs); the df side
-    * aggregates (term → df) and re-joins on term — vocabulary-sized,
-    * so AQE broadcast-converts it when small and hash-joins otherwise
-    * (no hint: vocab size is data-dependent); the top-3 window
-    * shuffles once on doc_id. Ties broken (score DESC, term ASC) —
+    * Scale shape: one tokenization pass. The term-frequency groupBy is
+    * the map-side-combine wordcount (exchange on (doc_id, term),
+    * shuffle = distinct (doc, term) pairs); df is `count(1) OVER
+    * (PARTITION BY term)` on that tf frame (exchange on term), so the
+    * corpus is never tokenized twice and no vocabulary-side join runs.
+    * A hot term's window group is buffered in the window operator's
+    * spillable row array; a vocabulary-side sort-merge join would route
+    * the same skewed key to one task. N is one `rowCount` of the
+    * document frame, inlined as a BIGINT literal. The top-3 window
+    * exchanges once on doc_id. Ties broken (score DESC, term ASC) —
     * fully deterministic. */
   def tfidf: Q = (s, dir) => {
-    val td = docs(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val df = td.groupBy("term").agg(count(lit(1)).as("df"))
-    val n = docs(s, dir).agg(count(lit(1)).as("n_docs"))
+    val nDocs = PropertyGraph.rowCount(docs(s, dir))
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score").desc, col("term"))
-    td.join(df, "term")
-      .crossJoin(broadcast(n)) // 1-row scalar
-      .withColumn("score", col("tf") * expr("(n_docs * 1000) div df"))
+    docs(s, dir)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+      .withColumn("score", col("tf") * expr(s"(${nDocs}L * 1000) div df"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("doc_id"), col("rank"), col("term"), col("score"))

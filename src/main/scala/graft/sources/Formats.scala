@@ -344,11 +344,13 @@ object Formats {
   /** The concurrent-writer half of the snapshot protocol (the
     * reference's `runInTransaction` implies concurrent mutators —
     * neo4j/Neo4jGraph.scala:532): a writer commits version n+1 by
-    * atomically CREATING manifest-(n+1) with CREATE_NEW (POSIX
-    * O_CREAT|O_EXCL; on an object store the same shape is a
+    * writing its complete file list to a unique tmp file and
+    * HARD-LINKING it to manifest-(n+1) (`Streams.linkOnce`: link(2)
+    * fails when the target exists, so a reader sees a complete
+    * manifest or none; on an object store the same shape is a
     * conditional / put-if-absent PUT — the primitive lakehouse
     * transaction logs are built on). Two writers racing for n+1 cannot
-    * both succeed: the loser's create throws, the collision is
+    * both succeed: the loser's link fails, the collision is
     * DETECTED — never a silent overwrite — and the loser re-reads the
     * winner's manifest, REBASES its file list on top (append-only
     * data files make rebase a pure list union) and retries at n+2.
@@ -376,16 +378,9 @@ object Formats {
   private[graft] def tryPublishManifest(path: String, basedOn: Int,
       newFiles: Seq[String]): Either[Int, Int] = {
     val files = readManifestFiles(path, basedOn) ++ newFiles
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$path/manifest-${basedOn + 1}"),
-        files.mkString("\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      Right(basedOn + 1)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Left(currentManifestVersion(path))
-    }
+    if (Streams.linkOnce(java.nio.file.Paths.get(s"$path/manifest-${basedOn + 1}"),
+        files.mkString("\n").getBytes("UTF-8"))) Right(basedOn + 1)
+    else Left(currentManifestVersion(path))
   }
 
   /** Rebase-and-retry until committed; exhausting `attempts` surfaces
@@ -404,7 +399,7 @@ object Formats {
   def manifestSnapshot: Q = (s, dir) => {
     val path = scratch(s, dir, "manifest")
     // fresh table per run: the generations below must publish versions
-    // 1 and 2 deterministically (CREATE_NEW would otherwise rebase a
+    // 1 and 2 deterministically (the CAS publish would otherwise rebase a
     // re-run in the same session onto the previous run's chain)
     Option(new java.io.File(path).listFiles()).toSeq.flatten
       .filter(f => manifestName.pattern.matcher(f.getName).matches())
@@ -1077,10 +1072,9 @@ object Formats {
     // main's chain has no reference to it until the fast-forward
     d.filter(col("doc_id") % 4 === 3)
       .write.mode("overwrite").parquet(s"$path/gen3")
-    java.nio.file.Files.write(branchManifestPath(path, "audit", 1),
+    require(Streams.linkOnce(branchManifestPath(path, "audit", 1),
       (readManifestFiles(path, 2) ++ Streams.parquetFiles(s"$path/gen3"))
-        .mkString("\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+        .mkString("\n").getBytes("UTF-8")), "branch audit v1 already published")
     // WAP publish: fast-forward main to the audited branch tip
     publishManifest(path, Streams.parquetFiles(s"$path/gen3")) // main v3
     def branchFiles(name: String, v: Int): Seq[String] =

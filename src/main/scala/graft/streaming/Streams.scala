@@ -792,31 +792,34 @@ object Streams {
     * unpersisted when the body returns or throws, so neither a
     * long-running stream nor a failed batch leaves cached blocks behind.
     * The manifest lines the body returns are published through
-    * `publishManifest`; a body that throws publishes nothing, and the
-    * stream retries the batch. */
+    * `linkOnce`; a body that throws publishes nothing, and the stream
+    * retries the batch. A racer that slipped past the exists-check
+    * loses the link race and treats "already committed" as a no-op,
+    * which is safe because a batch id's content is deterministic
+    * (byte-identical replay). */
   private def manifestSink(outDir: String, batchId: Long)(
       body: (DataFrame => DataFrame) => Seq[String]): Unit =
     if (!java.nio.file.Files.exists(manifestPath(outDir, batchId))) {
       val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      try publishManifest(outDir, batchId,
-        body { df => cached += df; df.cache() })
+      try linkOnce(manifestPath(outDir, batchId),
+        body { df => cached += df; df.cache() }.mkString("\n").getBytes("UTF-8"))
       finally cached.foreach(_.unpersist(false))
     }
 
   private def manifestPath(outDir: String, version: Long): java.nio.file.Path =
     java.nio.file.Paths.get(s"$outDir/manifest-$version")
 
-  /** Hard-link CAS publish of `manifest-<batchId>`: write the complete
-    * bytes to a tmp name, then HARD-LINK it to the manifest name.
-    * link(2) is the true create-if-absent commit: it FAILS with EEXIST
-    * when the target exists, unlike rename(2), which under ATOMIC_MOVE
-    * silently REPLACES an existing target on POSIX. Because the tmp
-    * file is fully written before the link, a reader never observes a
-    * torn manifest: it sees the complete manifest or the previous one.
-    * A racer that slipped past the frame's exists-check loses the link
-    * race and treats "already committed" as a no-op, which is safe
-    * because a batch id's content is deterministic (byte-identical
-    * replay).
+  /** Hard-link CAS publish of `bytes` at `target`, the one manifest
+    * commit primitive (the stream sinks here, Formats' snapshot
+    * manifests): write the complete bytes to a tmp name, then
+    * HARD-LINK it to `target`. link(2) is the true create-if-absent
+    * commit: it FAILS with EEXIST when the target exists, unlike
+    * rename(2), which under ATOMIC_MOVE silently REPLACES an existing
+    * target on POSIX. Because the tmp file is fully written before the
+    * link, a reader never observes a torn manifest: it sees the
+    * complete manifest or none, and a write that fails midway publishes
+    * nothing. Returns true when this call created `target`, false when
+    * another writer already had; the caller decides what a loss means.
     *
     * The tmp name is UNIQUE PER ATTEMPT (UUID suffix). With a shared
     * tmp path, one racer's CREATE+TRUNCATE could tear the bytes another
@@ -824,22 +827,23 @@ object Streams {
     * yank a racer's tmp out from under its createLink. With unique tmps
     * each attempt links its own complete file; exactly one link wins,
     * the rest observe EEXIST. Any other FileSystemException counts as
-    * "already committed" ONLY if the manifest verifiably exists;
-    * otherwise the publish truly failed and is rethrown, so the batch
-    * fails and the stream retries instead of silently committing its
-    * offsets. On an object store this publish becomes a conditional
-    * PUT (if-none-match), the same protocol. */
-  private def publishManifest(outDir: String, batchId: Long,
-      lines: Seq[String]): Unit = {
-    val tmp = java.nio.file.Paths.get(
-      s"$outDir/.manifest-$batchId.${java.util.UUID.randomUUID()}.tmp")
-    java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    val target = manifestPath(outDir, batchId)
-    try java.nio.file.Files.createLink(target, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException => ()
+    * a loss ONLY if `target` verifiably exists; otherwise the publish
+    * truly failed and is rethrown. The tmp is deleted whether the link
+    * won, lost or failed. On an object store this publish becomes a
+    * conditional PUT (if-none-match), the same protocol. */
+  private[graft] def linkOnce(target: java.nio.file.Path,
+      bytes: Array[Byte]): Boolean = {
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      java.nio.file.Files.write(tmp, bytes)
+      java.nio.file.Files.createLink(target, tmp)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
       case e: java.nio.file.FileSystemException =>
         if (!java.nio.file.Files.exists(target)) throw e
+        false
     } finally
       java.nio.file.Files.deleteIfExists(tmp): Unit
   }
@@ -876,10 +880,15 @@ object Streams {
       section: String): Seq[String] =
     parquetFiles(s"$outDir/batch_id=$batchId/$section").map(p => s"$section|$p")
 
-  /** The parquet `files`, or an empty frame of `schema` when there are none. */
+  /** The parquet `files` read with the DDL `schema` they were written
+    * with (no schema-inference job), or an empty frame of `schema` when
+    * there are none. */
   private def readOrEmpty(s: SparkSession, files: Seq[String],
       schema: String): DataFrame =
-    if (files.nonEmpty) s.read.parquet(files: _*) else emptyDf(s, schema)
+    if (files.nonEmpty)
+      s.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
+        .parquet(files: _*)
+    else emptyDf(s, schema)
 
   private def emptyDf(s: SparkSession, schema: String): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
