@@ -431,9 +431,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame) {
 object PropertyGraph {
   // one snapshot per (session, dir): every operator in a session shares
   // the SAME cached nodes/edges DataFrames instead of re-deriving
-  // plan-identical copies (correct either way via the cache manager's
-  // canonicalized-plan lookup, but re-deriving spammed an "already
-  // cached" warning per query in the bench)
+  // plan-identical copies and caching them again
   private val loaded = new SessionMemo[PropertyGraph]
 
   /** Release the block-manager storage behind a localCheckpoint-ed
@@ -577,10 +575,10 @@ object PropertyGraph {
             lit("supplier").as("dst_label"), col("l_suppkey").cast("long").as("dst_key"),
             col("weight")))
 
-    // cache(): Spark's cache manager keys on the canonicalized plan, so
-    // every query loading the same graph in one session shares ONE
-    // materialization of the union + lineitem aggregations (nodes/edges
-    // are a few MB even at sf0.1; at 100 TB you'd persist the graph as
+    // cache(): the snapshot is the session memo `loaded`, so every query
+    // loading the same graph in one session shares ONE materialization
+    // of the union + lineitem aggregations (nodes/edges are a few MB
+    // even at sf0.1; at 100 TB you'd persist the graph as
     // bucketed tables instead — see SURVEY.md §6). The edge cache is
     // hash-partitioned on the traversal key (src_label, src_key) so the
     // hop-expansion joins (pathsTo / ego / traversals) reuse the cached

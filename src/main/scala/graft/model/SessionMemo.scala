@@ -9,6 +9,16 @@ import scala.collection.concurrent.TrieMap
   * (session, dir), built at most once. Declare one per shared frame and
   * read it as `memo(s, dir)(build)`.
   *
+  * THE way to share a frame across queries: a frame that more than one
+  * query reads is a memo whose build ends in its storage (`.cache()`,
+  * or an eager `localCheckpoint` for a collapsed result), and callers
+  * read the memo's frame. Re-deriving a plan-equal frame and calling
+  * `.cache()` again to hit the cache manager's plan-matched entry is
+  * not a sharing mechanism here: the build is invisible to
+  * `buildCount` and the caching decision spreads to every call site.
+  * A bare `.cache()` is for INTRA-query reuse only — a frame read by
+  * two branches of one query's plan.
+  *
   * `TrieMap.getOrElseUpdate` alone may evaluate the value thunk more
   * than once under concurrent first access — the LOSING build's
   * cached/checkpointed blocks would then sit in the block manager with

@@ -148,30 +148,11 @@ object Analytics {
                        base: org.apache.spark.sql.Column,
                        sparse: Boolean,
                        weighted: Boolean = false): DataFrame = {
-    val graph = g(s, dir)
-    val nodes = graph.nodes.select("label", "key")
-    // weighted: rank splits over outgoing edges proportionally to the
-    // BIGINT edge weight (floor per edge) instead of uniformly — same
-    // fixed-point contract, denominators become the weighted outdegree.
-    // The unweighted path keeps its original count/outdeg plan so the
-    // session-shared eod cache entry (and oracle) are unchanged.
-    val e = graph.edges.select(
-      (Seq(col("src_label"), col("src_key"),
-        col("dst_label").as("label"), col("dst_key").as("key")) ++
-        (if (weighted) Seq(col("weight").as("w")) else Nil)): _*)
-    val od =
-      if (weighted)
-        e.groupBy("src_label", "src_key").agg(sum(col("w")).as("outdeg"))
-      else
-        e.groupBy("src_label", "src_key").agg(count(lit(1)).as("outdeg"))
+    val nodes = g(s, dir).nodes.select("label", "key")
     val contribExpr =
       if (weighted) "(85 * r * w) div (100 * outdeg)"
       else "(85 * r) div (100 * outdeg)"
-    // loop-invariant: cache so each iteration joins a materialized edge
-    // list instead of re-reading parquet + re-aggregating degrees; ONE
-    // session-bounded entry shared by pagerank AND ppr (same
-    // canonicalized plan by construction — they call this same code)
-    val eod = e.join(od, Seq("src_label", "src_key")).cache()
+    val eod = prEdges(s, dir, weighted)
     // rank/contribution sides are node-bounded: gate their hints on the
     // cached node count (one cheap job) — below the cap the explicit
     // hint gives a deterministic iteration plan; above it the hint is
@@ -193,15 +174,33 @@ object Analytics {
         .select(col("label"), col("key"),
           (base + coalesce(col("s"), lit(0L))).as("r"))
     }
-    // NO release() here, deliberately: (1) the eod cache is BOUNDED
-    // session-wide — the cache manager keys on the canonicalized plan,
-    // so every call reuses this one entry (unlike pathsTo, whose
-    // per-call parameters make distinct plans that would accumulate);
-    // (2) eagerly checkpointing the 5-iteration nested-broadcast
-    // lineage re-executes the broadcast subtrees as separate driver
-    // jobs — measured 0.9 s lazy vs 12.7 s checkpointed at sf0.1.
+    // NO eager checkpoint of the result, deliberately: checkpointing
+    // the 5-iteration nested-broadcast lineage re-executes the
+    // broadcast subtrees as separate driver jobs — measured 0.9 s lazy
+    // vs 12.7 s checkpointed at sf0.1.
     r.orderBy("label", "key")
   }
+
+  /** The loop-invariant PageRank edge frame `e ⋈ od`: every edge with
+    * its source's out-degree (`outdeg`; the weighted variant also
+    * carries the edge weight `w`, and `outdeg` is the weighted
+    * out-degree). A cached session memo per variant, so each round
+    * joins a materialized edge list instead of re-reading the edges
+    * and re-aggregating degrees: the unweighted one is read by
+    * pagerank, ppr and prConvergence. */
+  private val eodMemo = new SessionMemo[DataFrame]
+
+  private def prEdges(s: SparkSession, dir: String,
+                      weighted: Boolean): DataFrame =
+    eodMemo(s, if (weighted) s"$dir#w" else dir) {
+      val e = g(s, dir).edges.select(
+        (Seq(col("src_label"), col("src_key"),
+          col("dst_label").as("label"), col("dst_key").as("key")) ++
+          (if (weighted) Seq(col("weight").as("w")) else Nil)): _*)
+      val od = e.groupBy("src_label", "src_key").agg(
+        (if (weighted) sum(col("w")) else count(lit(1))).as("outdeg"))
+      e.join(od, Seq("src_label", "src_key")).cache()
+    }
 
   /** Shared oracle generator for the family — `r0Expr` (unqualified,
     * over nodes) seeds the vector, `baseExpr(p)` is the restart term
@@ -310,19 +309,15 @@ object Analytics {
     * publish the table that justifies its rounds): per round, the L1
     * delta mass Σ|r_i − r_{i−1}| and the total mass Σ r_i, in the
     * SAME exact fixed-point integers as g_pagerank (identical init,
-    * damping, floor-div contribution, shared eod cache plan). A
+    * damping, floor-div contribution, the shared `prEdges` memo). A
     * monotone-shrinking delta is the convergence evidence; where the
     * curve flattens is where more rounds stop buying rank movement.
     * Each round's vector is lazily checkpointed (read twice: next
     * round + its delta row — the LPA discipline); rounds' 1-row
     * aggregates union into the 5-row output. */
   def prConvergence: Q = (s, dir) => {
-    val graph = g(s, dir)
-    val nodes = graph.nodes.select("label", "key")
-    val e = graph.edges.select(col("src_label"), col("src_key"),
-      col("dst_label").as("label"), col("dst_key").as("key"))
-    val od = e.groupBy("src_label", "src_key").agg(count(lit(1)).as("outdeg"))
-    val eod = e.join(od, Seq("src_label", "src_key")).cache() // shared entry
+    val nodes = g(s, dir).nodes.select("label", "key")
+    val eod = prEdges(s, dir, weighted = false)
     val n = nodeRows(s, dir)
     var r = nodes.withColumn("r", lit(prScale / n))
     val base = lit((15L * prScale) / (100L * n))
@@ -445,8 +440,8 @@ object Analytics {
   private[graft] def warmShared(s: SparkSession, dir: String): Unit = {
     nodeRows(s, dir); rowCount(numericGraph(s, dir)._2)
     simpleUnd(s, dir)
-    // the co-purchase projection is shared by the triangle family
-    // (triangles / clustering_coef / ktruss / GraphX twin) the same way
+    // the co-purchase projection memo is shared by the triangle family
+    // (triangles / clustering_coef / ktruss / local bridges) the same way
     rowCount(coProjection(s, dir))
     // ... as is its per-edge support frame (ktruss round 1 + bridges)
     coSupport(s, dir): Unit
@@ -786,46 +781,59 @@ object Analytics {
     * Ordered ids (p1 < p2 < p3) — each triangle counted once, the
     * standard compact-forward shape whose wedge join stays bounded.
     */
-  /** The part co-purchase projection (p1 < p2, distinct), cached —
-    * shared by g_triangles, g_clustering_coef, g_ktruss, and GraphX's
-    * triangle twin via canonicalized-plan cache matching. Built here
-    * so warmShared can populate it: the projection's distinct shuffle
-    * is session state, not any single query's cost. */
-  private[operators] def coProjection(s: SparkSession, dir: String): DataFrame = {
-    val graph = g(s, dir)
-    val hp = graph.edges.filter(col("elabel") === "HAS_PART")
-      .select(col("src_key").as("o"), col("dst_key").as("p"))
-    hp.join(hp.select(col("o"), col("p").as("p2")), Seq("o"))
-      .filter(col("p") < col("p2"))
-      .select(col("p").as("p1"), col("p2")).distinct()
-      // row-derived width (r16, see edgeParts): the distinct pair set
-      // is the same magnitude as the base edge table, and its dozens
-      // of consumers' scans (densest's peel rounds especially) paid a
-      // shuffle.partitions-wide task wave each; coalesce adds no
-      // shuffle and the clamp restores full width at real scale.
-      .coalesce(edgeParts(s, edgeRows(s, dir)))
-      .cache()
+  /** The part co-purchase projection (p1 < p2, distinct): a cached
+    * session memo read by the triangle family (g_triangles,
+    * g_clustering_coef, g_ktruss, g_local_bridges, g_densest …) and
+    * built in warmShared: the projection's distinct shuffle is session
+    * state, not any single query's cost. GraphX's triangle twin builds
+    * its own projection (its plan has no `coalesce`) — it is the
+    * independent reference path. */
+  private val coMemo = new SessionMemo[DataFrame]
+
+  private[operators] def coProjection(s: SparkSession, dir: String): DataFrame =
+    coMemo(s, dir) {
+      val hp = g(s, dir).edges.filter(col("elabel") === "HAS_PART")
+        .select(col("src_key").as("o"), col("dst_key").as("p"))
+      hp.join(hp.select(col("o"), col("p").as("p2")), Seq("o"))
+        .filter(col("p") < col("p2"))
+        .select(col("p").as("p1"), col("p2")).distinct()
+        // row-derived width (r16, see edgeParts): the distinct pair set
+        // is the same magnitude as the base edge table, and its dozens
+        // of consumers' scans (densest's peel rounds especially) paid a
+        // shuffle.partitions-wide task wave each; coalesce adds no
+        // shuffle and the clamp restores full width at real scale.
+        .coalesce(edgeParts(s, edgeRows(s, dir)))
+        .cache()
+    }
+
+  /** Degree-ordered orientation (compact-forward) `(u, v)` of an
+    * undirected `(p1 < p2)` edge set: every edge points from its
+    * lower-(degree, id) endpoint, so per-node out-degree is O(√m) and
+    * the wedge join stays near-linear — the id-ordered naive 3-join
+    * wedges on high-degree hubs and blows up ~10× here. The oracles
+    * keep the naive formulation: any correct algorithm counts the same
+    * triangles. */
+  private def orient(e: DataFrame): DataFrame = {
+    val deg = e.select(col("p1").as("p")).union(e.select(col("p2").as("p")))
+      .groupBy("p").agg(count(lit(1)).as("d"))
+    val wd = e.join(deg.toDF("p1", "d1"), "p1").join(deg.toDF("p2", "d2"), "p2")
+    val low = col("d1") < col("d2") ||
+      (col("d1") === col("d2") && col("p1") < col("p2"))
+    wd.select(when(low, col("p1")).otherwise(col("p2")).as("u"),
+      when(low, col("p2")).otherwise(col("p1")).as("v"))
   }
+
+  /** The orientation of the co projection: a cached session memo read
+    * by g_triangles and g_clustering_coef (adjacency build + probe
+    * side). */
+  private val coOrientedMemo = new SessionMemo[DataFrame]
+
+  private def coOriented(s: SparkSession, dir: String): DataFrame =
+    coOrientedMemo(s, dir)(orient(coProjection(s, dir)).cache())
 
   def triangles: Q = (s, dir) => {
     val co = coProjection(s, dir)
-    // Degree-ordered orientation (compact-forward): orient every edge
-    // from the lower-(degree, id) endpoint, so per-node out-degree is
-    // O(√m) and the wedge join stays near-linear — the id-ordered naive
-    // 3-join wedges on high-degree hubs and blows up ~10× here. The
-    // oracle keeps the naive formulation: any correct algorithm counts
-    // the same triangles.
-    val deg = co.select(col("p1").as("p")).union(co.select(col("p2").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("d"))
-    val withDeg = co
-      .join(deg.toDF("p1", "d1"), "p1").join(deg.toDF("p2", "d2"), "p2")
-    val oriented = withDeg.select(
-      when(col("d1") < col("d2") ||
-        (col("d1") === col("d2") && col("p1") < col("p2")), col("p1"))
-        .otherwise(col("p2")).as("u"),
-      when(col("d1") < col("d2") ||
-        (col("d1") === col("d2") && col("p1") < col("p2")), col("p2"))
-        .otherwise(col("p1")).as("v")).cache() // feeds adj build + probe side
+    val oriented = coOriented(s, dir)
     // Node-iterator on adjacency ARRAYS instead of a 3-way self-join:
     // each oriented edge (u,v) contributes |N⁺(u) ∩ N⁺(v)| triangles
     // (every triangle a<b<c in (deg,id) order is counted exactly once,
@@ -843,10 +851,9 @@ object Analytics {
       .join(adj.toDF("v", "nv"), "v")
       .select(size(array_intersect(col("nu"), col("nv"))).cast("long").as("c"))
       .agg(coalesce(sum("c"), lit(0L)).as("n_triangles"))
-    // NO release(): the co/oriented caches are bounded session-wide
-    // (canonicalized-plan reuse — every call hits the same entries),
-    // and eagerly checkpointing this plan re-executes its broadcast
-    // subtrees as separate driver jobs (see the pagerank note).
+    // NO eager checkpoint of the result: it would re-execute the
+    // plan's broadcast subtrees as separate driver jobs (see the
+    // pagerank note).
     co.agg(count(lit(1)).as("n_edges")).crossJoin(tri)
   }
 
@@ -859,30 +866,20 @@ object Analytics {
     * the (u,v) corners take the intersection SIZE without enumerating
     * (two count rows per oriented edge), only the third corner w needs
     * the explode, so the shuffled volume is n_edges·2 + n_triangles,
-    * never the wedge set. The co/oriented/adj plans are canonically
-    * identical to g_triangles' — one session-wide cache entry serves
-    * both ops. Isolated parts (no co edge) have no degree and are out
-    * of scope, same as the projection itself. */
+    * never the wedge set. The co and oriented frames are g_triangles'
+    * session memos. Isolated parts (no co edge) have no degree and are
+    * out of scope, same as the projection itself. */
   def clusteringCoef: Q = (s, dir) => {
     val co = coProjection(s, dir)
     val deg = co.select(col("p1").as("p")).union(co.select(col("p2").as("p")))
       .groupBy("p").agg(count(lit(1)).as("d"))
-    val withDeg = co
-      .join(deg.toDF("p1", "d1"), "p1").join(deg.toDF("p2", "d2"), "p2")
-    val oriented = withDeg.select(
-      when(col("d1") < col("d2") ||
-        (col("d1") === col("d2") && col("p1") < col("p2")), col("p1"))
-        .otherwise(col("p2")).as("u"),
-      when(col("d1") < col("d2") ||
-        (col("d1") === col("d2") && col("p1") < col("p2")), col("p2"))
-        .otherwise(col("p1")).as("v")).cache()
+    val oriented = coOriented(s, dir)
     val adj = oriented.groupBy("u").agg(collect_list("v").as("nbrs"))
     val edgeTri = oriented
       .join(adj.toDF("u", "nu"), "u")
       .join(adj.toDF("v", "nv"), "v")
       .select(col("u"), col("v"), array_intersect(col("nu"), col("nv")).as("w"))
-      .cache() // feeds the two corner passes + the w explode; parameter-
-      // free plan → one bounded session-wide entry (file cache policy)
+      .cache() // feeds the two corner passes + the w explode
     val corners = edgeTri
       .select(col("u").as("p"), size(col("w")).cast("long").as("c"))
       .union(edgeTri.select(col("v").as("p"), size(col("w")).cast("long")))
@@ -5628,8 +5625,8 @@ object Analytics {
     * its three canonical edges for attribution — shuffled volume per
     * round = edges + 3·triangles, against the naive 3-way self-join
     * the oracle keeps (any correct enumeration finds the same
-    * triangles). The projection reuses g_triangles' session-cached
-    * `co` plan (canonicalized-plan cache hit). At 100× scale each
+    * triangles). Round 1 reads the co projection memo (through the
+    * `coSupport` memo). At 100× scale each
     * round is two node-keyed joins + one edge-keyed count — the same
     * bucketed-prepartition story as CC, with the edge set only
     * shrinking. */
@@ -5657,13 +5654,7 @@ object Analytics {
     * the degree-ordered adjacency intersection (triangles' enumeration)
     * with three-canonical-edge attribution. */
   private def edgeSupport(e: DataFrame): DataFrame = {
-    val deg = e.select(col("p1").as("p")).union(e.select(col("p2").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("d"))
-    val wd = e.join(deg.toDF("p1", "d1"), "p1").join(deg.toDF("p2", "d2"), "p2")
-    val low = col("d1") < col("d2") ||
-      (col("d1") === col("d2") && col("p1") < col("p2"))
-    val or = wd.select(when(low, col("p1")).otherwise(col("p2")).as("u"),
-      when(low, col("p2")).otherwise(col("p1")).as("v"))
+    val or = orient(e)
     val adj = or.groupBy("u").agg(collect_list("v").as("nbrs"))
     or.join(adj.toDF("u", "nu"), "u").join(adj.toDF("v", "nv"), "v")
       .select(col("u"), col("v"),

@@ -26,13 +26,16 @@ object Dedup {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  // Cache policy: every cache() in this file is on a PARAMETER-FREE
-  // plan, so the cache manager's canonicalized-plan lookup bounds it to
-  // ONE session-wide entry reused by every call — and shared ACROSS the
-  // ops (d_dedup_cluster reuses d_ngram_jaccard's shingle caches:
-  // measured 1.3 s warm vs 4.5 s when an eager checkpoint+release pass
-  // destroyed the sharing). Parameterized per-call plans (pathsTo) are
-  // the ones that must release — see PropertyGraph.pathsTo.
+  // Sharing rule: a frame that more than one query reads is a
+  // SessionMemo whose build ends in `.cache()` (signatures, the df-capped
+  // shingles + sizes, the cluster pair graph, the weighted tf and
+  // signature frames) or in an eager localCheckpoint (the collapsed
+  // jaccard and simhash pair sets); callers read the memo and never
+  // cache it again. Cache, not checkpoint, for the big frames: the ops
+  // stay fast together (d_dedup_cluster after d_ngram_jaccard measured
+  // 1.3 s warm vs 4.5 s when an eager checkpoint+release pass replaced
+  // the shared cache). A bare `.cache()` here is for reuse inside ONE
+  // query's plan (the simhash `sim`, dedupEmbedding's norms).
 
   // ------------------------------------------------------- d_dedup_exact
   /** Exact dedup: md5 content hash, canonical = min doc_id per hash.
@@ -296,7 +299,12 @@ object Dedup {
   private[graft] val mhB: IndexedSeq[Long] =
     Iterator.iterate(16807L)(x => x * 16807L % mhPrime).take(mhSeeds).toIndexedSeq
 
-  private def signatures(s: SparkSession, dir: String): DataFrame = {
+  /** The minhash signature table `(doc_id, mh0..mh8)`: a cached session
+    * memo read by every minhash consumer (band explode + both score
+    * sides) and the streaming probe's corpus index. */
+  private val sigMemo = new SessionMemo[DataFrame]
+
+  private def signatures(s: SparkSession, dir: String): DataFrame = sigMemo(s, dir) {
     // 60-bit integer from the first 15 md5 nibbles via the codegen'd
     // hexSlice expression (one byte pass — the composed instr(substr)
     // chain allocated 15 UTF8Strings per shingle; oracle keeps the
@@ -310,10 +318,9 @@ object Dedup {
       .agg(min((lit(mhA(0)) * col("h31") + lit(mhB(0))) % mhPrime).as("mh0"),
         (1 until mhSeeds).map(k =>
           min((lit(mhA(k)) * col("h31") + lit(mhB(k))) % mhPrime).as(s"mh$k")): _*)
+      .cache()
   }
 
-  /** Pair stage + its cache handle (PlanAuditSpec audits the plan and
-    * releases the cache between audits). */
   /** Band rows after the bucket cap — the LSH candidate-generation
     * stage shared by full minhash dedup and the incremental variant. */
   private def cappedBandRows(sig: DataFrame): DataFrame = {
@@ -333,16 +340,14 @@ object Dedup {
   }
 
   /** Static corpus band index for the streaming probe (st_dedup_probe):
-    * the capped band rows as a frozen lookup side. The cache on the
-    * signature stage is the same session-bounded, plan-keyed entry the
-    * batch ops share. */
+    * the capped band rows as a frozen lookup side, over the signature
+    * memo the batch ops share. */
   private[graft] def corpusBandIndex(s: SparkSession, dir: String): DataFrame =
-    cappedBandRows(signatures(s, dir).cache())
+    cappedBandRows(signatures(s, dir))
 
-  private[graft] def dedupMinhashRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // sig feeds three consumers (band explode + both pair sides) —
-    // cache so the shingle+md5 pipeline runs once
-    val sig = signatures(s, dir).cache()
+  /** The unsorted scored pair stage (PlanAuditSpec audits its plan). */
+  private[graft] def dedupMinhashRaw(s: SparkSession, dir: String): DataFrame = {
+    val sig = signatures(s, dir)
     val capped = cappedBandRows(sig)
     val cand = capped.alias("x")
       .join(capped.alias("y"),
@@ -351,7 +356,7 @@ object Dedup {
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    (scorePairs(sig, cand), sig)
+    scorePairs(sig, cand)
   }
 
   /** Exact signature-agreement scoring of candidate pairs — the n_match
@@ -384,7 +389,7 @@ object Dedup {
     * blocked-Jaccard truth memo; cost on top is one projection. */
   def minhashBBit: Q = (s, dir) => {
     val truth = jaccardPairs(s, dir)
-    val sig = signatures(s, dir).cache()
+    val sig = signatures(s, dir)
     val sa = sig.toDF("doc_a" +: (0 until mhSeeds).map(k => s"a$k"): _*)
     val sb = sig.toDF("doc_b" +: (0 until mhSeeds).map(k => s"b$k"): _*)
     truth.join(sa, "doc_a").join(sb, "doc_b")
@@ -442,7 +447,7 @@ object Dedup {
     * the report a pipeline uses to route "drop the new doc" vs "drop
     * which copy" decisions. */
   def dedupIncremental: Q = (s, dir) => {
-    val sig = signatures(s, dir).cache()
+    val sig = signatures(s, dir)
     // read twice (new side + corpus side) — eager per the multi-
     // reference checkpoint discipline
     val br = cappedBandRows(sig).localCheckpoint(eager = true)
@@ -485,7 +490,7 @@ object Dedup {
        |ORDER BY doc_a, doc_b""".stripMargin
 
   def dedupMinhash: Q = (s, dir) =>
-    dedupMinhashRaw(s, dir)._1.orderBy("doc_a", "doc_b")
+    dedupMinhashRaw(s, dir).orderBy("doc_a", "doc_b")
 
   /** CTE chain through `br` (capped band rows) + `sig` — the candidate-
     * generation stage, shared with the incremental variant. */
@@ -690,7 +695,7 @@ object Dedup {
     val wsz = tf.groupBy("doc_id").agg(sum("tf").as("wn"))
     val wEst = scorePairs(wSignatures(s, dir), jp)
       .withColumnRenamed("n_match", "n_wmh")
-    val fEst = scorePairs(signatures(s, dir).cache(), jp)
+    val fEst = scorePairs(signatures(s, dir), jp)
       .withColumnRenamed("n_match", "n_flat")
     jp.join(winter, Seq("doc_a", "doc_b"))
       .join(wsz.toDF("doc_a", "wna"), "doc_a")
@@ -754,31 +759,45 @@ object Dedup {
     * membership. */
   val jacDfCap = 50
 
-  /** Jaccard pair stage + its cache handles (PlanAuditSpec). */
-  private[graft] def jaccardPairsRaw(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    val ds = docShingles(s, dir)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
-      .filter(col("df") <= jacDfCap)
-      .drop("df")
-      .cache() // feeds both pair sides + sizes
-    val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("n")).cache()
-    val pairs = ds.alias("x")
+  /** The df-capped distinct shingles `(doc_id, sh)` and their per-doc
+    * set sizes `(doc_id, n)`: one cached session memo read by jaccard
+    * (both pair sides + sizes), containment and decontamination. */
+  private val cappedMemo = new SessionMemo[(DataFrame, DataFrame)]
+
+  private def cappedShingles(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    cappedMemo(s, dir) {
+      val ds = docShingles(s, dir)
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
+        .filter(col("df") <= jacDfCap)
+        .drop("df")
+        .cache()
+      (ds, ds.groupBy("doc_id").agg(count(lit(1)).as("n")).cache())
+    }
+
+  /** Doc pairs sharing a df-capped shingle `(doc_b, doc_a, inter, na,
+    * nb)`: the overlap and both set sizes — the blocked stage of
+    * jaccard and containment (`shinglePairsSqlCte` on the oracle side). */
+  private def shinglePairs(s: SparkSession, dir: String): DataFrame = {
+    val (ds, sizes) = cappedShingles(s, dir)
+    ds.alias("x")
       .join(ds.alias("y"), col("x.sh") === col("y.sh") &&
         col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    val jp = pairs
       .join(sizes.toDF("doc_a", "na"), "doc_a")
       .join(sizes.toDF("doc_b", "nb"), "doc_b")
+  }
+
+  /** The jaccard pair stage (PlanAuditSpec audits its plan). */
+  private[graft] def jaccardPairsRaw(s: SparkSession, dir: String): DataFrame =
+    shinglePairs(s, dir)
       .filter(lit(3) * col("inter") > col("na") + col("nb"))
       .select(col("doc_a"), col("doc_b"), col("inter"),
         (col("na") + col("nb") - col("inter")).as("uni"))
-    (jp, Seq(ds, sizes))
-  }
 
   /** The J > 1/2 pair set with sizes — shared by `d_ngram_jaccard`,
     * the cluster-canonicalization op, and SoftDeDup. The shingle frame
-    * is plan-cached, but the expensive stage is the sh-keyed SELF-JOIN
+    * is a cached memo, but the expensive stage is the sh-keyed SELF-JOIN
     * + pair aggregation, which cache() cannot absorb — so the RESULT is
     * session-memoized as one eager localCheckpoint (the nationBfs
     * pattern): the pair set is tiny by definition (near-dups only), and
@@ -788,19 +807,16 @@ object Dedup {
 
   private[operators] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     jpMemo(s, dir)(
-      jaccardPairsRaw(s, dir)._1.localCheckpoint(eager = true))
+      jaccardPairsRaw(s, dir).localCheckpoint(eager = true))
 
-  /** Populate the dedup family's session-shared frames (the
+  /** Build and materialize the dedup family's session memos (the
     * Analytics/Similarity warmShared pattern, called from Bench's
     * warmup): the jaccard pair memo feeds six ops and the minhash
-    * signature cache four — whichever ran first was absorbing the
-    * build (r6: d_source_overlap 3.3 s of which ~3 s was the pair
-    * memo). */
-  private[graft] def warmShared(s: SparkSession, dir: String): Unit = {
-    jaccardPairs(s, dir).count()
-    signatures(s, dir).cache().count()
-    simhashPairs(s, dir).count(): Unit
-  }
+    * signature memo more — whichever ran first was absorbing the build
+    * (r6: d_source_overlap 3.3 s of which ~3 s was the pair memo). */
+  private[graft] def warmShared(s: SparkSession, dir: String): Unit =
+    Seq(jaccardPairs(s, dir), signatures(s, dir), simhashPairs(s, dir))
+      .foreach(PropertyGraph.rowCount)
 
   def ngramJaccard: Q = (s, dir) =>
     jaccardPairs(s, dir).orderBy("doc_a", "doc_b")
@@ -873,25 +889,12 @@ object Dedup {
     * C > 0 pairs are a subset of the J > 0 pairs), threshold is the
     * integer cross-multiplication 4·inter ≥ 3·n (≥ 75% of the smaller
     * side's shingles shared — no float decides membership), and the
-    * per-pair direction labels which side is (near-)contained. Same
-    * plans as the jaccard stage → the session cache manager shares the
-    * shingle/size frames between the two ops. */
+    * per-pair direction labels which side is (near-)contained. Reads
+    * the jaccard stage's blocked pairs. */
   def containment: Q = (s, dir) => {
-    val ds = docShingles(s, dir)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
-      .filter(col("df") <= jacDfCap)
-      .drop("df")
-      .cache() // same canonicalized plan as jaccard's → shared entry
-    val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("n")).cache()
     val aIn = lit(4) * col("inter") >= lit(3) * col("na")
     val bIn = lit(4) * col("inter") >= lit(3) * col("nb")
-    ds.alias("x")
-      .join(ds.alias("y"), col("x.sh") === col("y.sh") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.toDF("doc_a", "na"), "doc_a")
-      .join(sizes.toDF("doc_b", "nb"), "doc_b")
+    shinglePairs(s, dir)
       .filter(aIn || bIn)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("na"), col("nb"),
         when(aIn && bIn, "both").when(aIn, "a_in_b").otherwise("b_in_a")
@@ -925,12 +928,18 @@ object Dedup {
     * oracle an unrolled chain. Docs in no pair are their own canon. */
   val clusterIters = 3
 
+  /** The near-dup pair graph `(id, nb)`, both directions: a cached
+    * session memo over the jaccard pair memo, read by every
+    * clusterAssign call. */
+  private val undMemo = new SessionMemo[DataFrame]
+
   /** Shared min-id contraction: (doc_id → canon_id) for every doc —
     * the assignment stage of d_dedup_cluster, reused by d_soft_dedup. */
   private def clusterAssign(s: SparkSession, dir: String): DataFrame = {
-    val jp = jaccardPairs(s, dir).select("doc_a", "doc_b")
-    val und = jp.union(jp.select(col("doc_b"), col("doc_a")))
-      .toDF("id", "nb").cache()
+    val und = undMemo(s, dir) {
+      val jp = jaccardPairs(s, dir).select("doc_a", "doc_b")
+      jp.union(jp.select(col("doc_b"), col("doc_a"))).toDF("id", "nb").cache()
+    }
     var comp = docs(s, dir).select(col("doc_id").as("id"),
       col("doc_id").as("canon_id"))
     for (_ <- 1 to clusterIters) {
@@ -1427,11 +1436,7 @@ object Dedup {
   val decontMinShared = 3
 
   def decontaminate: Q = (s, dir) => {
-    val sh = docShingles(s, dir)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
-      .filter(col("df") <= jacDfCap)
-      .drop("df")
-      .cache() // same canonicalized plan as jaccard's → shared entry
+    val sh = cappedShingles(s, dir)._1
     val isEval = col("doc_id") % 97 === 0
     val train = sh.filter(!isEval).toDF("train_doc", "sh")
     val eval_ = sh.filter(isEval).toDF("eval_doc", "sh")
@@ -1489,7 +1494,7 @@ object Dedup {
   val fuzzyDecontMin = 6
 
   def decontaminateFuzzy: Q = (s, dir) => {
-    val sig = signatures(s, dir).cache()
+    val sig = signatures(s, dir)
     // read twice (eval probe + train side) — eager per the multi-
     // reference checkpoint discipline
     val br = cappedBandRows(sig).localCheckpoint(eager = true)
@@ -1538,7 +1543,7 @@ object Dedup {
     * set — both stages are session-shared frames already warmed. */
   def minhashEstError: Q = (s, dir) => {
     val truth = jaccardPairs(s, dir)
-    scorePairs(signatures(s, dir).cache(), truth.select("doc_a", "doc_b"))
+    scorePairs(signatures(s, dir), truth.select("doc_a", "doc_b"))
       .join(truth, Seq("doc_a", "doc_b"))
       .select(col("doc_a"), col("doc_b"),
         expr("(inter * 1000000) div uni").as("exact_ppm"),
@@ -1693,7 +1698,7 @@ object Dedup {
 
   def dedupThresholdCurve: Q = (s, dir) => {
     graft.model.PropertyGraph.withCheckpoints { ck =>
-      val scored = ck.lazily(dedupMinhashRaw(s, dir)._1)
+      val scored = ck.lazily(dedupMinhashRaw(s, dir))
       val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       mhCurveTs.map { t =>
@@ -1740,7 +1745,7 @@ object Dedup {
     // pair sets with the scope (repeated eval calls would otherwise pin
     // a pred/truth copy per invocation)
     graft.model.PropertyGraph.withCheckpoints { ck =>
-      val pred = ck.lazily(dedupMinhashRaw(s, dir)._1
+      val pred = ck.lazily(dedupMinhashRaw(s, dir)
         .filter(col("n_match") >= mhEvalMatch)
         .select("doc_a", "doc_b"))
       val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
@@ -1847,7 +1852,7 @@ object Dedup {
   val lshConfigs: Seq[(String, Int)] = Seq(("b1r9", 9), ("b3r3", 3), ("b9r1", 1))
 
   def lshTuning: Q = (s, dir) => {
-    val sig = signatures(s, dir).cache()
+    val sig = signatures(s, dir)
     graft.model.PropertyGraph.withCheckpoints { ck =>
       val truth = ck.lazily(jaccardPairs(s, dir).select("doc_a", "doc_b"))
       // ONE pass over the signature table for all three configs: each

@@ -122,7 +122,7 @@ object GraphXAnalytics {
     val did = Analytics.nodeIdCol(col("dst_label"), col("dst_key"))
     val nodes = graph.nodes.select(col("label"), col("key"),
       Analytics.nodeIdCol(col("label"), col("key")).as("id"))
-    val n = nodes.count()
+    val n = PropertyGraph.rowCount(nodes)
     val init = Analytics.prScale / n
     val base = (15L * Analytics.prScale) / (100L * n)
     val vertices = nodes.select("id").rdd.map(r => (r.getLong(0), 0L))

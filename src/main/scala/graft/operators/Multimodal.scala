@@ -528,7 +528,7 @@ object Multimodal {
       expr("""sum(IF(bucket >= 32 AND cnt * 64 > total,
              |  shiftleft(1L, CAST(bucket AS INT) - 32), 0L))""".stripMargin)
         .as("sig_hi"))
-      .cache() // parameter-free plan → one session-wide entry; feeds both join sides
+      .cache() // feeds both join sides
     val bands = sig.select(col("doc_id"), col("sig_lo"), col("sig_hi"),
       expr("""explode(transform(sequence(0, 7), b -> struct(b AS bid,
              |  IF(b < 4, shiftright(sig_lo, b * 8),

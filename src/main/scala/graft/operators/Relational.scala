@@ -5491,8 +5491,7 @@ object Relational {
     val cust = broadcast(t(s, dir, "customer")
       .select(col("c_custkey").as("o_custkey"), col("c_nationkey")))
     // cells is read 4× (cells + both marginals + totals) — cache, not
-    // checkpoint: 125 rows, and the parameter-free plan means ONE
-    // session-bounded entry; caching keeps the logical plan visible to
+    // checkpoint: 125 rows, and caching keeps the logical plan visible to
     // the broadcast-audit spec (a checkpoint truncates it to an RDD scan)
     val cells = t(s, dir, "orders")
       .select(col("o_custkey"), col("o_orderpriority"))

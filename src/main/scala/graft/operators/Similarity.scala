@@ -41,28 +41,18 @@ object Similarity {
   private def dot(x: Column, y: Column): Column =
     graft.functions.VectorExprs.dotL(x, y) // codegen'd native expression
 
-  /** Populate the similarity family's SESSION-shared cached frames
-    * (the Analytics.warmShared pattern): the band table, the IVF and
-    * k-means assignments, and the 1-bit signature table are each read
-    * by several queries, and without prewarming whichever family member
+  /** Build and materialize the similarity family's session memos (the
+    * Analytics.warmShared pattern): the band table, the IVF and k-means
+    * assignments, the PQ codes, the 1-bit signature table, the kNN-graph
+    * adjacency and the two HNSW layer adjacencies are each read by
+    * several queries, and without prewarming whichever family member
     * Bench happened to run first absorbed the whole build into its own
     * number (r5: s_ann_ivf 0.8 → 4.2 s purely from run-order
-    * attribution). Builds are cache() entries keyed on the
-    * canonicalized plan, so re-deriving the same frames here hits the
-    * exact entries the queries use. */
-  private[graft] def warmShared(s: SparkSession, dir: String): Unit = {
-    lshBands(s, dir).cache().count()
-    ivfAssign(s, dir).count()
-    pqCodes(s, dir).count()
-    kmeansAssign(s, dir).count()
-    binarySig(s, dir).count()
-    // r11: the kNN-graph adjacency and the two HNSW layer adjacencies
-    // now have three consumers (s_graph_ann, s_hnsw, s_hnsw_recall) —
-    // without prewarming, whichever ran first absorbed the build
-    graphAnnAdj(s, dir).count()
-    hnswAdj(s, dir, 1).count()
-    hnswAdj(s, dir, 2).count(): Unit
-  }
+    * attribution). One `rowCount` job per frame fills its cache. */
+  private[graft] def warmShared(s: SparkSession, dir: String): Unit =
+    Seq(lshBands(s, dir), ivfAssign(s, dir), pqCodes(s, dir),
+      kmeansAssign(s, dir), binarySig(s, dir), graphAnnAdj(s, dir),
+      hnswAdj(s, dir, 1), hnswAdj(s, dir, 2)).foreach(PropertyGraph.rowCount)
 
   // ---------------------------------------------------------- s_ann_topk
   /** Top-5 neighbors for probes vec_id < 10. The probe side is tiny →
@@ -188,8 +178,12 @@ object Similarity {
     * sig = the band's sign-bit integer. Candidates join on (band, sig);
     * the vector itself is deliberately NOT carried (3 longs per row,
     * not 64 — the consumers re-attach vectors to the few candidates,
-    * never to every band row). */
-  def lshBands(s: SparkSession, dir: String): DataFrame = {
+    * never to every band row). Session memo, cached (3 longs per row):
+    * consumers read both join sides from it, so the 16 plane dot
+    * products per vector run once per session. */
+  private val lshMemo = new SessionMemo[DataFrame]
+
+  def lshBands(s: SparkSession, dir: String): DataFrame = lshMemo(s, dir) {
     val q = quantized(s, dir)
     // plane matrix as literal arrays: tiny, broadcast by value
     val bandStructs = (0 until lshNumBands).map { b =>
@@ -202,6 +196,7 @@ object Similarity {
     q.select(col("vec_id"),
         explode(array(bandStructs: _*)).as("bs"))
       .select(col("vec_id"), col("bs.band"), col("bs.sig"))
+      .cache()
   }
 
   /** DuckDB twin of `lshBands` — CTEs `q(vec_id, qe)` and
@@ -231,12 +226,9 @@ object Similarity {
     * ranking within the candidate set uses the same exact integer score
     * as annTopk. Probes with fewer than k candidates return fewer rows
     * — in both engines. */
-  /** Plan + the bands cache handle (PlanAuditSpec audits the plan). */
-  private[graft] def annTopkLshRaw(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // bands feeds BOTH join sides — cache (3 longs per row) so the
-    // 16 plane dot products per vector run once; parameter-free plan →
-    // one session-bounded entry shared with dedupEmbeddingLsh
-    val bands = lshBands(s, dir).cache()
+  /** The unsorted top-k stage (PlanAuditSpec audits its plan). */
+  private[graft] def annTopkLshRaw(s: SparkSession, dir: String): DataFrame = {
+    val bands = lshBands(s, dir)
     val pb = broadcast(bands.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("band"), col("sig")))
     val cb = bands.select(col("vec_id").as("cand_id"), col("band"), col("sig"))
@@ -257,19 +249,16 @@ object Similarity {
           " ELSE -((dp * dp * 1000) div nb) END").as("score"))
     val w = Window.partitionBy("probe_id")
       .orderBy(col("score").desc, col("cand_id"))
-    val topk = scored.withColumn("rn", row_number().over(w))
+    scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= annK)
       .select(col("probe_id"), col("rn"), col("cand_id"), col("score"))
-    (topk, bands)
   }
 
-  def annTopkLsh: Q = (s, dir) => {
-    // bands cache stays resident, deliberately: the plan is parameter-
-    // free, so the cache manager's canonicalized-plan lookup bounds it
-    // to ONE session-wide entry reused by every call (eager checkpoint+
-    // release measured slower — see the pagerank note in Analytics)
-    annTopkLshRaw(s, dir)._1.orderBy("probe_id", "rn")
-  }
+  /** The band memo stays resident for the session, deliberately (an
+    * eager checkpoint released per call measured slower — see the
+    * pagerank note in Analytics). */
+  def annTopkLsh: Q = (s, dir) =>
+    annTopkLshRaw(s, dir).orderBy("probe_id", "rn")
 
   val annTopkLshSql: String =
     s"""WITH $lshBandsSqlCte, cand AS (
@@ -308,7 +297,7 @@ object Similarity {
   val knnK = 3
 
   def knnJoin: Q = (s, dir) => {
-    val bands = lshBands(s, dir).cache() // shared session entry
+    val bands = lshBands(s, dir)
     val lbl = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"))
     val pb = bands.join(lbl.filter(col("label") === 1), "vec_id")
       .select(col("vec_id").as("probe_id"), col("band"), col("sig"))
@@ -364,7 +353,7 @@ object Similarity {
     * contract (pairs agreeing on no band are missed — by both engines,
     * identically). */
   def dedupEmbeddingLsh: Q = (s, dir) => {
-    val bands = lshBands(s, dir).cache() // feeds both pair sides
+    val bands = lshBands(s, dir)
     val a = bands.select(col("vec_id").as("vec_a"), col("band"), col("sig"))
     val c = bands.select(col("vec_id").as("vec_b"), col("band"), col("sig"))
     val cand = a.join(c, Seq("band", "sig"))
@@ -378,7 +367,7 @@ object Similarity {
         col("na"), col("nb"))
       .filter(col("dp") > 0 &&
         lit(400L) * col("dp") * col("dp") > lit(81L) * col("na") * col("nb"))
-      .orderBy("vec_a", "vec_b") // bands cache: session-bounded, see annTopkLsh
+      .orderBy("vec_a", "vec_b")
   }
 
   val dedupEmbeddingLshSql: String =
@@ -416,13 +405,13 @@ object Similarity {
       " ELSE -((dp * dp * 1000) div nb) END"
 
   /** IVF assignment frame `(vec_id, qe, vnb, cid)` — feeds the probe
-    * side AND the candidate side of annIvf; cached so the n×K
-    * assignment (cross join + window argmax) runs once, reused across
-    * calls (parameter-free plan → one session-bounded entry). In
-    * production the assignment is a materialized offline artifact.
-    * Named (not inline) so Bench's warmup can materialize it outside
-    * any single query's timing window. */
-  private def ivfAssign(s: SparkSession, dir: String): DataFrame = {
+    * side AND the candidate side of annIvf and the other IVF queries;
+    * a cached session memo, so the n×K assignment (cross join + window
+    * argmax) runs once per session. In production the assignment is a
+    * materialized offline artifact. */
+  private val ivfMemo = new SessionMemo[DataFrame]
+
+  private def ivfAssign(s: SparkSession, dir: String): DataFrame = ivfMemo(s, dir) {
     // self-norms precomputed per VECTOR (see quantizedWithNorm): the
     // assignment reuses the centroid's norm across all n×K pairs and
     // the probe stage reuses the candidate's across its cell pairs
@@ -454,7 +443,7 @@ object Similarity {
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= annK)
       .select(col("probe_id"), col("rn"), col("cand_id"), col("score"))
-      .orderBy("probe_id", "rn") // asg cache: session-bounded, see annTopkLsh
+      .orderBy("probe_id", "rn")
   }
 
   val annIvfSql: String = {
@@ -621,7 +610,7 @@ object Similarity {
       .filter(col("r_lex") <= hybridTopn)
       .select("probe_id", "cand_id", "r_lex")
 
-    val bands = lshBands(s, dir).cache() // the session-shared band entry
+    val bands = lshBands(s, dir)
     val pb = broadcast(bands.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("band"), col("sig")))
     val vcand = pb.join(bands.select(col("vec_id").as("cand_id"),
@@ -763,11 +752,13 @@ object Similarity {
   private def l2(a: Column, b: Column): Column =
     dot(a, a) + dot(b, b) - lit(2L) * dot(a, b)
 
-  /** PQ code table (vec_id, m, code) — the compressed index. CACHED:
-    * the n×M×K assignment scan is the expensive build step, shared by
-    * s_ann_pq and s_ivf_pq (parameter-free plan → one session entry;
-    * in production this is the offline index artifact). */
-  private def pqCodes(s: SparkSession, dir: String): DataFrame = {
+  /** PQ code table (vec_id, m, code) — the compressed index. A cached
+    * session memo: the n×M×K assignment scan is the expensive build
+    * step, shared by s_ann_pq and s_ivf_pq (in production this is the
+    * offline index artifact). */
+  private val pqMemo = new SessionMemo[DataFrame]
+
+  private def pqCodes(s: SparkSession, dir: String): DataFrame = pqMemo(s, dir) {
     val sub = pqSubs(s, dir)
     val cb = pqCodebook(s, dir)
     val wA = Window.partitionBy("vec_id", "m")
@@ -1222,11 +1213,6 @@ object Similarity {
   val kmIters = 2
   private val kmShift = 1024L // > max |quantized coord| (1000)
 
-  /** Shared final-assignment stage for d_kmeans_cluster / d_semdedup:
-    * (vec_id, qe, nb, cid, dist). cache(): parameter-free plan — the
-    * cache manager keys on the canonicalized plan, so both ops (and
-    * repeated calls) reuse one session-bounded entry, like s_ann_ivf's
-    * assignment. */
   /** The full Lloyd assignment TRAJECTORY — one frame per iteration
     * (1 to kmIters), each `(vec_id, qe, nb, cid, dist)`. The last is
     * what kmeansAssign caches; d_kmeans_eval reads the whole sequence
@@ -1262,8 +1248,13 @@ object Similarity {
     rounds.result()
   }
 
+  /** Shared final-assignment stage `(vec_id, qe, nb, cid, dist)` of
+    * d_kmeans_cluster and d_semdedup: a cached session memo, like
+    * s_ann_ivf's assignment. */
+  private val kmMemo = new SessionMemo[DataFrame]
+
   private def kmeansAssign(s: SparkSession, dir: String): DataFrame =
-    kmeansRounds(s, dir).last.cache()
+    kmMemo(s, dir)(kmeansRounds(s, dir).last.cache())
 
   /** Shared CTE chain ending in the final assignment `a$kmIters`
     * (vec_id, qe, nb, cid, dist). DuckDB `sum` returns HUGEINT —
@@ -1674,7 +1665,7 @@ object Similarity {
     * composes both chains. */
   def rangeRecall: Q = (s, dir) => {
     val truth = rangeSearch(s, dir).select("probe_id", "cand_id")
-    val bands = lshBands(s, dir).cache() // session-shared entry
+    val bands = lshBands(s, dir)
     val pb = broadcast(bands.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("band"), col("sig")))
     val cand = pb
@@ -1745,10 +1736,11 @@ object Similarity {
 
   /** 1-bit sign signature table `(vec_id, sig_lo, sig_hi)` — 16 bytes
     * per vector, feeds both sides of binaryQuant's probe scan and
-    * quantEval's chain; cached (parameter-free plan → one session
-    * entry) and named so Bench's warmup can pre-materialize it. */
+    * annRerank's; a cached session memo. */
+  private val bsigMemo = new SessionMemo[DataFrame]
+
   private def binarySig(s: SparkSession, dir: String): DataFrame =
-    quantized(s, dir)
+    bsigMemo(s, dir)(quantized(s, dir)
       .select(col("vec_id"), posexplode(col("qe")).as(Seq("pos", "v")))
       .groupBy("vec_id")
       .agg(
@@ -1756,7 +1748,7 @@ object Similarity {
           .as("sig_lo"),
         sum(expr("IF(pos >= 32 AND v > 0, shiftleft(1L, CAST(pos AS INT) - 32), 0L)"))
           .as("sig_hi"))
-      .cache()
+      .cache())
 
   def binaryQuant: Q = (s, dir) => {
     val sig = binarySig(s, dir)
@@ -2184,7 +2176,7 @@ object Similarity {
   def pcaPower: Q = (s, dir) => {
     val el = quantized(s, dir)
       .select(col("vec_id"), posexplode(col("qe")).as(Seq("i", "qi")))
-      .cache() // both sides of the Gram self-join; parameter-free plan
+      .cache() // both sides of the Gram self-join
     val g = el.toDF("vec_id", "i", "qi")
       .join(el.toDF("vec_id", "j", "qj"), Seq("vec_id"))
       .groupBy("i", "j")
@@ -2316,8 +2308,8 @@ object Similarity {
     * band table — exactly how NN-descent-style distributed graph
     * builds seed their neighbor lists (LSH buckets bound the pair
     * generation; never all-pairs). The neighbor argmax is one window
-    * over the banded pair set; the adjacency is `cache()`d
-    * session-wide like the band table itself (parameter-free plan).
+    * over the banded pair set; the adjacency is a cached session memo
+    * like the band table itself.
     *
     * SEARCH: from a single global entry point (min vec_id — a 1-row
     * broadcast aggregate, the planner-scalar idiom), `gHops` rounds of
@@ -2340,7 +2332,7 @@ object Similarity {
     * layer adjacencies (LSH buckets bound pair generation; never
     * all-pairs). */
   private def bandedScoredPairs(s: SparkSession, dir: String): DataFrame = {
-    val bands = lshBands(s, dir).cache() // session-shared entry
+    val bands = lshBands(s, dir)
     val pairs = bands.toDF("a", "band", "sig")
       .join(bands.toDF("b", "band", "sig"), Seq("band", "sig"))
       .filter(col("a") =!= col("b"))
@@ -2353,13 +2345,18 @@ object Similarity {
       .select(col("a"), col("b"), expr(scoreExpr).as("score"))
   }
 
-  private[graft] def graphAnnAdj(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("a").orderBy(col("score").desc, col("b"))
-    bandedScoredPairs(s, dir).withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= gK)
-      .select(col("a").as("node"), col("b").as("nbr"))
-      .cache() // parameter-free plan: one session-wide entry
-  }
+  /** The kNN-graph adjacency `(node, nbr)`: a cached session memo read
+    * by s_graph_ann, s_hnsw's base layer and s_beam_curve. */
+  private val gAdjMemo = new SessionMemo[DataFrame]
+
+  private[graft] def graphAnnAdj(s: SparkSession, dir: String): DataFrame =
+    gAdjMemo(s, dir) {
+      val w = Window.partitionBy("a").orderBy(col("score").desc, col("b"))
+      bandedScoredPairs(s, dir).withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= gK)
+        .select(col("a").as("node"), col("b").as("nbr"))
+        .cache()
+    }
 
   def graphAnn: Q = (s, dir) => {
     val probes = broadcast(quantized(s, dir)
@@ -2483,19 +2480,22 @@ object Similarity {
           .otherwise(0L).as("lvl"))
 
   /** Layer-L adjacency: top-gK banded candidates among level-≥L nodes
-    * (both endpoints in the layer). Cached: s_hnsw + s_hnsw_recall. */
-  private def hnswAdj(s: SparkSession, dir: String, minLvl: Int): DataFrame = {
-    val members = hnswLevels(s, dir).filter(col("lvl") >= minLvl)
-      .select("vec_id")
-    val w = Window.partitionBy("a").orderBy(col("score").desc, col("b"))
-    bandedScoredPairs(s, dir)
-      .join(members.toDF("a"), Seq("a"), "left_semi")
-      .join(members.toDF("b"), Seq("b"), "left_semi")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= gK)
-      .select(col("a").as("node"), col("b").as("nbr"))
-      .cache()
-  }
+    * (both endpoints in the layer). A cached session memo per layer. */
+  private val hAdjMemo = new SessionMemo[DataFrame]
+
+  private def hnswAdj(s: SparkSession, dir: String, minLvl: Int): DataFrame =
+    hAdjMemo(s, s"$dir#$minLvl") {
+      val members = hnswLevels(s, dir).filter(col("lvl") >= minLvl)
+        .select("vec_id")
+      val w = Window.partitionBy("a").orderBy(col("score").desc, col("b"))
+      bandedScoredPairs(s, dir)
+        .join(members.toDF("a"), Seq("a"), "left_semi")
+        .join(members.toDF("b"), Seq("b"), "left_semi")
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= gK)
+        .select(col("a").as("node"), col("b").as("nbr"))
+        .cache()
+    }
 
   /** The final 50-row result is session-memoized as one eager
     * localCheckpoint (the jaccardPairs pattern): the descent + beam

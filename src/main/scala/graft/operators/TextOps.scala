@@ -737,9 +737,8 @@ object TextOps {
     // `ex` (explode + md5 over every shingle occurrence) into BOTH the
     // bottom-k and the exact countDistinct with no cache, paying the
     // expensive subtree twice — most of its 9.3 s. Both aggregates now
-    // derive from this distinct-shingle frame (parameter-free plan ⇒
-    // one session-bounded cache entry); the exact count is a plain
-    // count over it and the sketch hashes it. (At 100 TB the exact
+    // derive from this distinct-shingle frame (an intra-query cache);
+    // the exact count is a plain count over it and the sketch hashes it. (At 100 TB the exact
     // count IS the full-shuffle path the sketch exists to replace —
     // it's here as the sketch's ground truth.)
     val dd = ex.distinct().cache()
@@ -1756,9 +1755,9 @@ object TextOps {
       .withColumn("n", count(lit(1)).over(bySrc))
       .groupBy("source")
       .agg(max(when(col("rn") === expr("(n + 1) div 2"), col("n_chars"))).as("med"))
-    // dev feeds BOTH the MAD rank pass and the final aggregate — cache
-    // per the file's policy (parameter-free plan ⇒ one bounded
-    // session-wide entry) so the scan + median pipeline runs once
+    // dev feeds BOTH the MAD rank pass and the final aggregate — an
+    // intra-query cache (frames shared ACROSS queries are SessionMemos,
+    // like dsir's) so the scan + median pipeline runs once
     val dev = base.join(med, Seq("source"))
       .withColumn("dev", abs(col("n_chars") - col("med")))
       .cache()

@@ -778,7 +778,8 @@ object Streams {
         parquetFiles(s"$outDir/batch_id=$batchId")
     }
 
-  /** Read the table AT a published manifest version. */
+  /** Read the table AT a published manifest version. The commit sink is
+    * generic (its schema is the caller's), so this read infers it. */
   def manifestVersionRead(s: SparkSession, outDir: String, version: Long): DataFrame =
     s.read.parquet(manifestLines(outDir, version): _*)
 
@@ -993,10 +994,9 @@ object Streams {
     }
 
   /** The maintained view AT a published version (pinned, isolated). */
-  def ivmViewRead(s: SparkSession, outDir: String, version: Long): DataFrame = {
-    val files = manifestFiles(outDir, version, "view")
-    s.read.parquet(files: _*)
-  }
+  def ivmViewRead(s: SparkSession, outDir: String, version: Long): DataFrame =
+    readOrEmpty(s, manifestFiles(outDir, version, "view"),
+      "o_orderpriority STRING, rev_cents BIGINT, n_pairs BIGINT")
 
   // ------------------------------------------------------ st_ivm_signed
   /** st_ivm_signed: streaming IVM under RETRACTIONS — st_ivm_join's
@@ -1397,7 +1397,8 @@ object Streams {
         val files = prunedManifestFiles(outDir, batchId - 1, "edges", bkts)
         val e0p = keep(
           readOrEmpty(s, files, "a BIGINT, b BIGINT").select("a", "b"))
-        (maybeDup.join(e0p, Seq("a", "b"), "left_anti"), e0p.count())
+        (maybeDup.join(e0p, Seq("a", "b"), "left_anti"),
+          PropertyGraph.rowCount(e0p))
       }
     val dE = keep(flagged.filter(!col("maybe")).select("a", "b")
       .unionByName(confirmNew))
@@ -1427,7 +1428,7 @@ object Streams {
     val newPos = dE.select(explode(pairPosArr).as("pos")).distinct()
     val bloomFiles = manifestFiles(outDir, batchId - 1, "bloom")
     (if (compact && bloomFiles.nonEmpty)
-       s.read.parquet(bloomFiles: _*).select("pos").unionByName(newPos)
+       readOrEmpty(s, bloomFiles, "pos BIGINT").unionByName(newPos)
          .distinct()
      else newPos)
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId/bloom")
@@ -1495,7 +1496,9 @@ object Streams {
       val (_, c1, f1) = stack(stack.size - 2)
       val md = s"$outDir/batch_id=$batchId/${section}_m$k"
       val in = f1 ++ f2
-      (if (in.nonEmpty) s.read.parquet(in: _*)
+      // every segment was written from a frame of `fresh`'s schema, so
+      // the read takes it instead of running a schema-inference job
+      (if (in.nonEmpty) s.read.schema(fresh.schema).parquet(in: _*)
        else fresh.limit(0))
         .withColumn(bktName, bkt).repartition(col(bktName))
         .write.mode("overwrite").partitionBy(bktName).parquet(md)
@@ -1604,7 +1607,7 @@ object Streams {
 
   /** The triangle census AT a published version (pinned, isolated). */
   def triCensusRead(s: SparkSession, outDir: String, version: Long): DataFrame =
-    s.read.parquet(manifestFiles(outDir, version, "census"): _*)
+    readOrEmpty(s, manifestFiles(outDir, version, "census"), "n_triangles BIGINT")
 
   // ----------------------------------------------- st_degree_incremental
   /** st_degree_incremental: STREAMING degree view under SUM-merge
@@ -1658,7 +1661,7 @@ object Streams {
   /** The degree table AT a published version — associative SUM over
     * the manifest's delta files (no version ordering needed). */
   def degreesRead(s: SparkSession, outDir: String, version: Long): DataFrame =
-    s.read.parquet(manifestFiles(outDir, version, "deg"): _*)
+    readOrEmpty(s, manifestFiles(outDir, version, "deg"), "id BIGINT, d BIGINT")
       .groupBy("id").agg(sum("d").as("d"))
 
   // ------------------------------------------------- st_hll_incremental
@@ -1717,7 +1720,7 @@ object Streams {
   /** The register table AT a published version — register-wise MAX
     * over the manifest's files (order-free by the algebra). */
   def hllRegsRead(s: SparkSession, outDir: String, version: Long): DataFrame =
-    s.read.parquet(manifestFiles(outDir, version, "regs"): _*)
+    readOrEmpty(s, manifestFiles(outDir, version, "regs"), "j BIGINT, mr BIGINT")
       .groupBy("j").agg(max("mr").as("mr"))
 
   // ------------------------------------------------------ st_topk_sketch
@@ -1791,9 +1794,10 @@ object Streams {
     * invariant exact ∈ [lo, hi] for stored keys, ≤ hi − lo for absent. */
   def topkSketchRead(s: SparkSession, outDir: String,
       version: Long): DataFrame = {
-    val c = s.read.parquet(
-      manifestFiles(outDir, version, "counters"): _*)
-    val d = s.read.parquet(manifestFiles(outDir, version, "dec"): _*)
+    val c = readOrEmpty(s, manifestFiles(outDir, version, "counters"),
+      "shard BIGINT, key BIGINT, cnt BIGINT")
+    val d = readOrEmpty(s, manifestFiles(outDir, version, "dec"),
+      "shard BIGINT, dec BIGINT")
     c.join(d, Seq("shard"))
       .select(col("shard"), col("key"), col("cnt").as("lo"),
         (col("cnt") + col("dec")).as("hi"))

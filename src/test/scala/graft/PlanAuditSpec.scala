@@ -56,14 +56,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("minhash/jaccard candidate joins are equi-joins, not cartesian") {
-    val (mhDf, sig) = Dedup.dedupMinhashRaw(spark, sf)
-    val mh = plan(mhDf)
-    sig.unpersist(blocking = false)
+    val mh = plan(Dedup.dedupMinhashRaw(spark, sf))
     assert(!mh.contains("CartesianProduct"),
       s"minhash pair stage degenerated to a cartesian product:\n$mh")
-    val (jcDf, caches) = Dedup.jaccardPairsRaw(spark, sf)
-    val jc = plan(jcDf)
-    caches.foreach(_.unpersist(blocking = false))
+    val jc = plan(Dedup.jaccardPairsRaw(spark, sf))
     assert(!jc.contains("CartesianProduct"),
       s"jaccard pair stage degenerated to a cartesian product:\n$jc")
   }
@@ -86,9 +82,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // based broadcasts the optimizer adds at tiny sf are fine: those
     // disappear on their own when the table outgrows the threshold.
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, BROADCAST}
-    val (raw, bands) = Similarity.annTopkLshRaw(spark, sf)
-    val op = raw.queryExecution.optimizedPlan
-    bands.unpersist(blocking = false) // uniform cache state across audits
+    val op = Similarity.annTopkLshRaw(spark, sf).queryExecution.optimizedPlan
     var hinted = 0
     op.foreach {
       case j: Join =>
