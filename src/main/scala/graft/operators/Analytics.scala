@@ -53,6 +53,12 @@ import graft.model.PropertyGraph.{Checkpoints, edgeParts, gated, nodeParts,
   * drop. Their deltas are keyed by node id, so the node count bounds
   * every one of them and is the gate operand of an unprobed round; the
   * probe runs on even rounds only (see `deltaFixpoint`).
+  * `multiSourceBfs` runs the frontier/visited BFS (g_bfs_depth from its
+  * one seed, the nation BFS memo, influence spread; betweenness' σ
+  * forward pass is another recurrence) and owns their level step
+  * (`bfsLevel`), lazy checkpoints and gate: no probe, and the gate
+  * operand is the caller's bound, seeds × nodes (the node count for
+  * one seed). Its oracle twin is `bfsChainSql`.
   * Every loop registers its checkpoints in one
   * `PropertyGraph.withCheckpoints` scope, which frees them when the
   * operator returns or throws.
@@ -973,58 +979,27 @@ object Analytics {
 
   /** Session memo for the BFS depth frame — two consumers (g_bfs_depth
     * itself and g_bipartite_check's parity classification) share one
-    * frontier-loop run, the s_graph_ann/s_hnsw adjacency-memo
-    * discipline; the memoized frame is an eager localCheckpoint, so
-    * the second consumer reads materialized rows, not a replayed
-    * lineage. */
+    * run of `multiSourceBfs` from the single seed region:0; the
+    * memoized frame is an eager localCheckpoint, so the second consumer
+    * reads materialized rows, not a replayed lineage. */
   private val bfsDepthCache = new SessionMemo[DataFrame]
 
   def bfsDepth: Q = (s, dir) =>
     bfsDepthCache(s, dir) {
-      bfsDepthBuild(s, dir)
-    }
-
-  private def bfsDepthBuild(s: SparkSession, dir: String): DataFrame = {
-    // Frontier-driven in NUMERIC-ID space: each level joins only the
-    // NEW nodes against the shared edge cache (total work ≈ Σ frontier
-    // sizes ≈ N); per-level distinct + visited anti-join hash a single
-    // BIGINT instead of a (string, long) composite.
-    val (nodes, undW) = numericGraph(s, dir)
-    val und = undW.select("a", "b")
-    // frontier and visited set are both NODE-bounded, so one cached
-    // node count gates every hint — no per-level eager counting (which
-    // measured 2.7× slower than trusting AQE). Below the cap both joins
-    // build broadcast maps and the only shuffle per level is the
-    // frontier distinct; above it (100×) the hints drop and AQE plans
-    // from runtime sizes.
-    val n = nodeRows(s, dir)
-    var dist = nodes
-      .filter(col("label") === "region" && col("key") === 0L)
-      .select(col("id"), lit(0).as("depth"))
-    var frontier = dist.select("id")
-    withCheckpoints { ck =>
-      for (i <- 1 to bfsIters) {
-        val next = ck.lazily(bfsLevelStep(und, frontier, dist, n, i))
-        dist = ck.lazily(dist.unionByName(next))
-        frontier = next.select("id")
+      val (nodes, undW) = numericGraph(s, dir)
+      val seed = nodes
+        .filter(col("label") === "region" && col("key") === 0L)
+        .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
+      withCheckpoints { ck =>
+        // one seed: every (seed, node) frame is node-bounded
+        val vis = multiSourceBfs(ck, undW.select("a", "b"), seed, bfsIters,
+          nodeRows(s, dir))
+        nodes.join(vis.select(col("node").as("id"), col("d").as("depth")),
+          Seq("id"))
+          .select("label", "key", "depth").orderBy("label", "key")
+          .localCheckpoint(eager = true)
       }
-      nodes.join(dist, Seq("id"))
-        .select("label", "key", "depth").orderBy("label", "key")
-        .localCheckpoint(eager = true)
     }
-  }
-
-  /** One BFS depth level (un-checkpointed) — extracted, like
-    * `bcForwardStep`, so specs can audit the gate's join strategy: the
-    * loop checkpoints every level, so the returned frame never shows
-    * these joins. frontier(id), dist(id, depth); `n` is the node count
-    * that gates both hints. */
-  private[graft] def bfsLevelStep(und: DataFrame, frontier: DataFrame,
-      dist: DataFrame, n: Long, i: Int): DataFrame =
-    und.join(gated(frontier.withColumnRenamed("id", "a"), n), Seq("a"))
-      .select(col("b").as("id")).distinct()
-      .join(gated(dist.select("id"), n), Seq("id"), "left_anti")
-      .withColumn("depth", lit(i))
 
   // --------------------------------------------------------------- g_mis
   /** MAXIMAL INDEPENDENT SET — Luby's algorithm (1986), THE distributed
@@ -1191,29 +1166,8 @@ object Analytics {
           .as("is_bipartite_ball"))
   }
 
-  val bipartiteCheckSql: String = {
-    // the bfsDepth unrolled chain, reused verbatim up to the dist union
-    val b = new StringBuilder(cte)
-    b ++= """, und AS (
-            | SELECT src_label AS al, src_key AS ak, dst_label AS bl, dst_key AS bk FROM edges
-            | UNION ALL
-            | SELECT dst_label, dst_key, src_label, src_key FROM edges
-            |), d0 AS (
-            | SELECT label, key, 0 AS depth FROM nodes WHERE label = 'region' AND key = 0
-            |)""".stripMargin
-    for (i <- 1 to bfsIters) {
-      val seen = (0 until i).map(j => s"SELECT label, key FROM d$j").mkString(" UNION ALL ")
-      b ++= s""", d$i AS (
-               | SELECT DISTINCT u.bl AS label, u.bk AS key, $i AS depth
-               | FROM und u JOIN d${i - 1} f ON u.al = f.label AND u.ak = f.key
-               | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
-               |                   WHERE s.label = u.bl AND s.key = u.bk)
-               |)""".stripMargin
-    }
-    b ++= ", dist AS (" +
-      (0 to bfsIters).map(i => s"SELECT * FROM d$i").mkString(" UNION ALL ") +
-      ")"
-    b ++= """
+  val bipartiteCheckSql: String =
+    cte + bfsDepthCtesSql + """
             |, ec AS (
             | SELECT da.depth AS pa, db.depth AS pb
             | FROM edges e
@@ -1227,32 +1181,46 @@ object Analytics {
             | CAST(sum(CASE WHEN (pa + pb) % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_conflict_edges,
             | CAST(CASE WHEN sum(CASE WHEN (pa + pb) % 2 = 0 THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT) AS is_bipartite_ball
             |FROM ec""".stripMargin
-    b.toString
-  }
 
-  val bfsDepthSql: String = {
-    val b = new StringBuilder(cte)
-    b ++= """, und AS (
-            | SELECT src_label AS al, src_key AS ak, dst_label AS bl, dst_key AS bk FROM edges
-            | UNION ALL
-            | SELECT dst_label, dst_key, src_label, src_key FROM edges
-            |), d0 AS (
-            | SELECT label, key, 0 AS depth FROM nodes WHERE label = 'region' AND key = 0
-            |)""".stripMargin
-    for (i <- 1 to bfsIters) {
-      val seen = (0 until i).map(j => s"SELECT label, key FROM d$j").mkString(" UNION ALL ")
-      b ++= s""", d$i AS (
-               | SELECT DISTINCT u.bl AS label, u.bk AS key, $i AS depth
-               | FROM und u JOIN d${i - 1} f ON u.al = f.label AND u.ak = f.key
-               | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
-               |                   WHERE s.label = u.bl AND s.key = u.bk)
-               |)""".stripMargin
-    }
-    b ++= "\nSELECT label, key, depth FROM (" +
-      (0 to bfsIters).map(i => s"SELECT * FROM d$i").mkString(" UNION ALL ") +
-      ") ORDER BY label, key"
-    b.toString
-  }
+  val bfsDepthSql: String =
+    s"$cte$bfsDepthCtesSql\nSELECT label, key, depth FROM dist ORDER BY label, key"
+
+  /** Shared oracle twin of the `bfsDepth` memo (g_bfs_depth and
+    * g_bipartite_check): CTEs und/ids/d0..d<bfsIters> from region:0 and
+    * `dist(label, key, depth)`. */
+  private lazy val bfsDepthCtesSql: String =
+    s""", und AS (
+       | SELECT $undSqlPair
+       |), ids AS (
+       | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
+       |), d0 AS (
+       | SELECT id AS seed, id AS node, 0 AS d FROM ids
+       | WHERE label = 'region' AND key = 0
+       |)${bfsChainSql("und", "d", bfsIters)}, dist AS (
+       | SELECT ids.label, ids.key, v.d AS depth
+       | FROM (${bfsLevelsSql("d", 0, bfsIters)}) v JOIN ids ON ids.id = v.node
+       |)""".stripMargin
+
+  /** The oracle twin of `multiSourceBfs`: CTEs `<p>1 … <p>hops` over the
+    * edge CTE `edges(a, b)` from a caller-defined `<p>0(seed, node, d)`,
+    * in numeric-id space (`nodeIdSqlOf`). Level i holds the DISTINCT
+    * (seed, node) pairs one edge from level i − 1 that no earlier level
+    * holds. */
+  private def bfsChainSql(edges: String, p: String, hops: Int): String =
+    (1 to hops).map { i =>
+      val seen = (0 until i).map(j => s"SELECT seed, node FROM $p$j")
+        .mkString(" UNION ALL ")
+      s""", $p$i AS (
+         | SELECT DISTINCT f.seed, u.b AS node, $i AS d
+         | FROM $edges u JOIN $p${i - 1} f ON u.a = f.node
+         | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
+         |                   WHERE s.seed = f.seed AND s.node = u.b)
+         |)""".stripMargin
+    }.mkString
+
+  /** Levels `<p>from … <p>to` of a `bfsChainSql` chain as one union. */
+  private def bfsLevelsSql(p: String, from: Int, to: Int): String =
+    (from to to).map(i => s"SELECT * FROM $p$i").mkString(" UNION ALL ")
 
   // ---------------------------------------------------- g_sssp_weighted
   /** Single-source shortest paths with EDGE WEIGHTS (Bellman-Ford,
@@ -2006,50 +1974,59 @@ object Analytics {
   val closenessHops = 2
 
   /** Multi-source bounded BFS frame `vis(seed, node, d)` for the 25
-    * nation seeds — built once per (session, dir) and shared by
-    * g_closeness and g_eccentricity (memo pattern of lpaLabels: the
-    * second consumer reads the checkpointed frame instead of re-running
-    * the k distinct-frontier rounds). */
+    * nation seeds — built once per (session, dir) by `multiSourceBfs`
+    * and shared by g_closeness, g_eccentricity and g_radius_diameter
+    * (the second and third consumers read the checkpointed frame
+    * instead of re-running the k distinct-frontier rounds). */
   private val nationBfsCache = new SessionMemo[DataFrame]
 
   private def nationBfs(s: SparkSession, dir: String): DataFrame =
     nationBfsCache(s, dir) {
       val (nodes, undW) = numericGraph(s, dir)
-      val und = undW.select("a", "b")
       // per-level frames are only needed until the final eager
       // checkpoint collapses the chain — free their blocks after
       // (pathsTo discipline; the memo pins ONLY the collapsed frame)
       withCheckpoints { ck =>
-        val seeds = ck.own(nodes.filter(col("label") === "nation")
-          .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
-          .localCheckpoint(eager = true))
-        multiSourceBfs(ck, und, seeds, closenessHops)
+        val seeds = ck.lazily(nodes.filter(col("label") === "nation")
+          .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d")))
+        multiSourceBfs(ck, undW.select("a", "b"), seeds, closenessHops,
+          rowCount(seeds) * nodeRows(s, dir))
           .localCheckpoint(eager = true)
       }
     }
 
-  /** Multi-source bounded BFS: from `seeds(seed, node, d = 0)` over the
-    * edge frame `edges(a, b)`, `hops` levels of (seed, node) DISTINCT
-    * pairs — frontier join, distinct, anti-join against the visited
-    * set — with every level and visited union checkpointed lazily in
-    * `ck`. No gate and no probe. Returns the visited frame
-    * `(seed, node, d)`; the caller materializes it (computing every
-    * level) before the scope ends. */
+  /** THE BFS round (g_bfs_depth, nation BFS, influence spread): from
+    * `seeds(seed, node, d = 0)` over the edge frame `edges(a, b)`,
+    * `hops` levels of `bfsLevel`, every level and visited union
+    * checkpointed lazily in `ck`. `bound` is a real upper bound on every
+    * frontier and visited frame (seeds × nodes; the node count for one
+    * seed) and the `gated` operand of both joins. No probe. Returns the
+    * visited frame `(seed, node, d)`; the caller materializes it
+    * (computing every level) before the scope ends. */
   private def multiSourceBfs(ck: Checkpoints, edges: DataFrame,
-      seeds: DataFrame, hops: Int): DataFrame = {
+      seeds: DataFrame, hops: Int, bound: Long): DataFrame = {
     var vis = seeds
     var frontier = seeds
     for (i <- 1 to hops) {
-      val next = ck.lazily(
-        edges.join(frontier.withColumnRenamed("node", "a"), Seq("a"))
-        .select(col("seed"), col("b").as("node")).distinct()
-        .join(vis.select("seed", "node"), Seq("seed", "node"), "left_anti")
-        .withColumn("d", lit(i)))
+      val next = ck.lazily(bfsLevel(edges, frontier, vis, bound, i))
       vis = ck.lazily(vis.unionByName(next))
       frontier = next
     }
     vis
   }
+
+  /** One BFS level (un-checkpointed) — extracted, like `bcForwardStep`,
+    * so specs can audit the gate's join strategy: the loop checkpoints
+    * every level, so the returned frame never shows these joins. The
+    * (seed, node) pairs one edge from `frontier` that `vis` does not
+    * hold, at depth `i`; `bound` gates both hints. */
+  private[graft] def bfsLevel(edges: DataFrame, frontier: DataFrame,
+      vis: DataFrame, bound: Long, i: Int): DataFrame =
+    edges.join(gated(frontier.withColumnRenamed("node", "a"), bound), Seq("a"))
+      .select(col("seed"), col("b").as("node")).distinct()
+      .join(gated(vis.select("seed", "node"), bound), Seq("seed", "node"),
+        "left_anti")
+      .withColumn("d", lit(i))
 
   def closeness: Q = (s, dir) => {
     val (nodes, _) = numericGraph(s, dir)
@@ -2165,11 +2142,12 @@ object Analytics {
             greatest(col("a"), col("b")).cast("string"))), 1, 8)
           % 100 < icP)
         .localCheckpoint(eager = true))
-      val seeds = ck.own(nodes.filter(col("label") === "nation" &&
+      val seeds = ck.lazily(nodes.filter(col("label") === "nation" &&
           col("key") < icSeeds)
-        .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d"))
-        .localCheckpoint(eager = true))
-      val out = multiSourceBfs(ck, live, seeds, icHops).filter(col("d") > 0)
+        .select(col("id").as("seed"), col("id").as("node"), lit(0).as("d")))
+      val out = multiSourceBfs(ck, live, seeds, icHops,
+          rowCount(seeds) * nodeRows(s, dir))
+        .filter(col("d") > 0)
         .groupBy(col("seed"), col("d").cast("long").as("hop"))
         .agg(count(lit(1)).as("n_new"))
       nodes.join(out, col("id") === col("seed"))
@@ -2183,36 +2161,21 @@ object Analytics {
     val coin = graft.operators.OracleSql.hexToLong(
       s"md5('$icSalt:' || CAST(least(a, b) AS VARCHAR) || ':' || " +
         "CAST(greatest(a, b) AS VARCHAR))", 1, 8)
-    val b = new StringBuilder(cte)
-    b ++= s""", und AS (
-             | SELECT ${nodeIdSqlOf("src")} AS a, ${nodeIdSqlOf("dst")} AS b FROM edges
-             | UNION ALL
-             | SELECT ${nodeIdSqlOf("dst")}, ${nodeIdSqlOf("src")} FROM edges
-             |), live AS (
-             | SELECT a, b FROM und WHERE ($coin) % 100 < $icP
-             |), ids AS (
-             | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
-             |), v0 AS (
-             | SELECT id AS seed, id AS node, 0 AS d FROM ids
-             | WHERE label = 'nation' AND key < $icSeeds
-             |)""".stripMargin
-    for (i <- 1 to icHops) {
-      val seen = (0 until i).map(j => s"SELECT seed, node FROM v$j")
-        .mkString(" UNION ALL ")
-      b ++= s""", v$i AS (
-               | SELECT DISTINCT f.seed, u.b AS node, $i AS d
-               | FROM live u JOIN v${i - 1} f ON u.a = f.node
-               | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
-               |                   WHERE s.seed = f.seed AND s.node = u.b)
-               |)""".stripMargin
-    }
-    b ++= s"""
-             |SELECT i.key AS seed_key, CAST(v.d AS BIGINT) AS hop,
-             | count(*) AS n_new
-             |FROM (${(1 to icHops).map(i => s"SELECT * FROM v$i").mkString(" UNION ALL ")}) v
-             |JOIN ids i ON i.id = v.seed
-             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    b.toString
+    s"""$cte, und AS (
+       | SELECT $undSqlPair
+       |), live AS (
+       | SELECT a, b FROM und WHERE ($coin) % 100 < $icP
+       |), ids AS (
+       | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
+       |), v0 AS (
+       | SELECT id AS seed, id AS node, 0 AS d FROM ids
+       | WHERE label = 'nation' AND key < $icSeeds
+       |)${bfsChainSql("live", "v", icHops)}
+       |SELECT i.key AS seed_key, CAST(v.d AS BIGINT) AS hop,
+       | count(*) AS n_new
+       |FROM (${bfsLevelsSql("v", 1, icHops)}) v
+       |JOIN ids i ON i.id = v.seed
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
   // ---------------------------------------------------- g_eccentricity
@@ -2233,35 +2196,13 @@ object Analytics {
       .select("label", "key", "ecc_k", "n_reached").orderBy("label", "key")
   }
 
-  val eccentricitySql: String = {
-    val b = new StringBuilder(cte)
-    b ++= s""", und AS (
-             | SELECT ${nodeIdSqlOf("src")} AS a, ${nodeIdSqlOf("dst")} AS b FROM edges
-             | UNION ALL
-             | SELECT ${nodeIdSqlOf("dst")}, ${nodeIdSqlOf("src")} FROM edges
-             |), ids AS (
-             | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
-             |), v0 AS (
-             | SELECT id AS seed, id AS node, 0 AS d FROM ids WHERE label = 'nation'
-             |)""".stripMargin
-    for (i <- 1 to closenessHops) {
-      val seen = (0 until i).map(j => s"SELECT seed, node FROM v$j")
-        .mkString(" UNION ALL ")
-      b ++= s""", v$i AS (
-               | SELECT DISTINCT f.seed, u.b AS node, $i AS d
-               | FROM und u JOIN v${i - 1} f ON u.a = f.node
-               | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
-               |                   WHERE s.seed = f.seed AND s.node = u.b)
-               |)""".stripMargin
-    }
-    b ++= s"""
-             |SELECT i.label, i.key, CAST(max(v.d) AS INTEGER) AS ecc_k,
-             | count(*) AS n_reached
-             |FROM (${(0 to closenessHops).map(i => s"SELECT * FROM v$i").mkString(" UNION ALL ")}) v
-             |JOIN ids i ON i.id = v.seed
-             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    b.toString
-  }
+  val eccentricitySql: String =
+    s"""$cte$nationBfsCtesSql
+       |SELECT i.label, i.key, CAST(max(v.d) AS INTEGER) AS ecc_k,
+       | count(*) AS n_reached
+       |FROM (${bfsLevelsSql("v", 0, closenessHops)}) v
+       |JOIN ids i ON i.id = v.seed
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // ------------------------------------------------- g_cc_size_histogram
   /** COMPONENT-SIZE HISTOGRAM — the one-page answer to "is this graph
@@ -2333,71 +2274,39 @@ object Analytics {
           .as("n_peripheral"))
   }
 
-  val radiusDiameterSql: String = {
-    val b = new StringBuilder(cte)
-    b ++= s""", und AS (
-             | SELECT ${nodeIdSqlOf("src")} AS a, ${nodeIdSqlOf("dst")} AS b FROM edges
-             | UNION ALL
-             | SELECT ${nodeIdSqlOf("dst")}, ${nodeIdSqlOf("src")} FROM edges
-             |), ids AS (
-             | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
-             |), v0 AS (
-             | SELECT id AS seed, id AS node, 0 AS d FROM ids WHERE label = 'nation'
-             |)""".stripMargin
-    for (i <- 1 to closenessHops) {
-      val seen = (0 until i).map(j => s"SELECT seed, node FROM v$j")
-        .mkString(" UNION ALL ")
-      b ++= s""", v$i AS (
-               | SELECT DISTINCT f.seed, u.b AS node, $i AS d
-               | FROM und u JOIN v${i - 1} f ON u.a = f.node
-               | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
-               |                   WHERE s.seed = f.seed AND s.node = u.b)
-               |)""".stripMargin
-    }
-    b ++= s""", ecc AS (
-             | SELECT seed, max(d) AS ecc
-             | FROM (${(0 to closenessHops).map(i => s"SELECT * FROM v$i").mkString(" UNION ALL ")})
-             | GROUP BY seed
-             |), ext AS (SELECT min(ecc) AS radius, max(ecc) AS diam FROM ecc)
-             |SELECT count(*) AS n_seeds,
-             | CAST(max(radius) AS BIGINT) AS radius_k,
-             | CAST(max(diam) AS BIGINT) AS diameter_k,
-             | CAST(sum(CASE WHEN ecc = radius THEN 1 ELSE 0 END) AS BIGINT)
-             |  AS n_central,
-             | CAST(sum(CASE WHEN ecc = diam THEN 1 ELSE 0 END) AS BIGINT)
-             |  AS n_peripheral
-             |FROM ecc, ext""".stripMargin
-    b.toString
-  }
+  val radiusDiameterSql: String =
+    s"""$cte$nationBfsCtesSql, ecc AS (
+       | SELECT seed, max(d) AS ecc
+       | FROM (${bfsLevelsSql("v", 0, closenessHops)})
+       | GROUP BY seed
+       |), ext AS (SELECT min(ecc) AS radius, max(ecc) AS diam FROM ecc)
+       |SELECT count(*) AS n_seeds,
+       | CAST(max(radius) AS BIGINT) AS radius_k,
+       | CAST(max(diam) AS BIGINT) AS diameter_k,
+       | CAST(sum(CASE WHEN ecc = radius THEN 1 ELSE 0 END) AS BIGINT)
+       |  AS n_central,
+       | CAST(sum(CASE WHEN ecc = diam THEN 1 ELSE 0 END) AS BIGINT)
+       |  AS n_peripheral
+       |FROM ecc, ext""".stripMargin
 
-  val closenessSql: String = {
-    val b = new StringBuilder(cte)
-    b ++= s""", und AS (
-             | SELECT ${nodeIdSqlOf("src")} AS a, ${nodeIdSqlOf("dst")} AS b FROM edges
-             | UNION ALL
-             | SELECT ${nodeIdSqlOf("dst")}, ${nodeIdSqlOf("src")} FROM edges
-             |), ids AS (
-             | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
-             |), v0 AS (
-             | SELECT id AS seed, id AS node, 0 AS d FROM ids WHERE label = 'nation'
-             |)""".stripMargin
-    for (i <- 1 to closenessHops) {
-      val seen = (0 until i).map(j => s"SELECT seed, node FROM v$j")
-        .mkString(" UNION ALL ")
-      b ++= s""", v$i AS (
-               | SELECT DISTINCT f.seed, u.b AS node, $i AS d
-               | FROM und u JOIN v${i - 1} f ON u.a = f.node
-               | WHERE NOT EXISTS (SELECT 1 FROM ($seen) s
-               |                   WHERE s.seed = f.seed AND s.node = u.b)
-               |)""".stripMargin
-    }
-    b ++= s"""
-             |SELECT i.label, i.key, CAST(sum($closenessHops // v.d) AS BIGINT) AS score
-             |FROM (${(1 to closenessHops).map(i => s"SELECT * FROM v$i").mkString(" UNION ALL ")}) v
-             |JOIN ids i ON i.id = v.seed
-             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    b.toString
-  }
+  val closenessSql: String =
+    s"""$cte$nationBfsCtesSql
+       |SELECT i.label, i.key, CAST(sum($closenessHops // v.d) AS BIGINT) AS score
+       |FROM (${bfsLevelsSql("v", 1, closenessHops)}) v
+       |JOIN ids i ON i.id = v.seed
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** Shared oracle twin of the `nationBfs` memo (g_closeness,
+    * g_eccentricity, g_radius_diameter): CTEs und/ids/v0..v<closenessHops>
+    * from the nation seeds. */
+  private lazy val nationBfsCtesSql: String =
+    s""", und AS (
+       | SELECT $undSqlPair
+       |), ids AS (
+       | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
+       |), v0 AS (
+       | SELECT id AS seed, id AS node, 0 AS d FROM ids WHERE label = 'nation'
+       |)${bfsChainSql("und", "v", closenessHops)}""".stripMargin
 
   // ----------------------------------------------------- g_betweenness
   /** Bounded-radius BETWEENNESS (Brandes dependency accumulation, ppm-
@@ -3614,8 +3523,9 @@ object Analytics {
     val (undHp, wait0) = coloringPrio(s, dir)
     // AQE OFF for the loop (restored in finally): every per-round frame
     // is either checkpointed or broadcast-gated already, and AQE's
-    // per-shuffle query-stage barriers added ~0.15 s of driver latency
-    // per round here (measured 9.4 → 8.5 s over 7 rounds at sf0.1)
+    // per-shuffle query-stage barriers cost driver latency per round
+    // here (44 vs 59 jobs; paired in one JVM at sf0.1, off 4.49 s vs
+    // on 4.93 s median, off faster in 6 of 6 pairs)
     val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.adaptive.enabled", "false")
     try withCheckpoints { ck =>
@@ -3957,24 +3867,27 @@ object Analytics {
     }
   }
 
+  /** Oracle pointer-jump resolve of the Louvain family (louvainSql,
+    * louvainHierarchyCtes, resolutionSweepSql): hook + 2-cycle resolve +
+    * fixed pointer jumps over a (id, ptr) table named `<p>hook` — the
+    * mstSql machinery, one instance per level; ends in CTE
+    * `<p>r$louvainJumps(id, ptr)`. */
+  private def louvainResolveSql(p: String): String = {
+    val b = new StringBuilder(
+      s""", ${p}hk AS (
+         | SELECT h.id, CASE WHEN h2.ptr = h.id THEN least(h.id, h.ptr)
+         |  ELSE h.ptr END AS ptr
+         | FROM ${p}hook h JOIN ${p}hook h2 ON h2.id = h.ptr
+         |), ${p}r0 AS (SELECT id, ptr FROM ${p}hk)""".stripMargin)
+    for (j <- 1 to louvainJumps)
+      b ++= s""", ${p}r$j AS (
+               | SELECT a.id, b.ptr FROM ${p}r${j - 1} a
+               | JOIN ${p}r${j - 1} b ON b.id = a.ptr
+               |)""".stripMargin
+    b.toString
+  }
+
   val louvainSql: String = {
-    // hook + 2-cycle resolve + fixed pointer jumps over a (id, ptr)
-    // table named `<p>hook` — the mstSql machinery, one instance per
-    // level; ends in CTE `<p>r$louvainJumps(id, ptr)`
-    def resolve(p: String): String = {
-      val b = new StringBuilder(
-        s""", ${p}hk AS (
-           | SELECT h.id, CASE WHEN h2.ptr = h.id THEN least(h.id, h.ptr)
-           |  ELSE h.ptr END AS ptr
-           | FROM ${p}hook h JOIN ${p}hook h2 ON h2.id = h.ptr
-           |), ${p}r0 AS (SELECT id, ptr FROM ${p}hk)""".stripMargin)
-      for (j <- 1 to louvainJumps)
-        b ++= s""", ${p}r$j AS (
-                 | SELECT a.id, b.ptr FROM ${p}r${j - 1} a
-                 | JOIN ${p}r${j - 1} b ON b.id = a.ptr
-                 |)""".stripMargin
-      b.toString
-    }
     val b = new StringBuilder(cte)
     b ++= s""", ids AS (
              | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
@@ -4005,7 +3918,7 @@ object Analytics {
              | SELECT ids.id, COALESCE(best.c, ids.id) AS ptr
              | FROM ids LEFT JOIN best ON best.id = ids.id
              |)""".stripMargin
-    b ++= resolve("l1")
+    b ++= louvainResolveSql("l1")
     b ++= s""", c1 AS (
              | SELECT id, ptr AS c1 FROM l1r$louvainJumps
              |), und2 AS (
@@ -4038,7 +3951,7 @@ object Analytics {
              | FROM (SELECT DISTINCT c1 AS id FROM c1) s
              | LEFT JOIN best2 ON best2.id = s.id
              |)""".stripMargin
-    b ++= resolve("l2")
+    b ++= louvainResolveSql("l2")
     b ++= s"""
              |SELECT ids.label, ids.key,
              | CAST(COALESCE(r2.ptr, c1.c1) AS BIGINT) AS comm
@@ -4200,20 +4113,6 @@ object Analytics {
     // (ids = distinct comm of c(ℓ−1)) → resolve → composed map cℓ.
     // A converged level's best CTE is empty and every downstream CTE
     // is the identity — unrolling past convergence is a no-op.
-    def resolve(p: String): String = {
-      val b = new StringBuilder(
-        s""", ${p}hk AS (
-           | SELECT h.id, CASE WHEN h2.ptr = h.id THEN least(h.id, h.ptr)
-           |  ELSE h.ptr END AS ptr
-           | FROM ${p}hook h JOIN ${p}hook h2 ON h2.id = h.ptr
-           |), ${p}r0 AS (SELECT id, ptr FROM ${p}hk)""".stripMargin)
-      for (j <- 1 to louvainJumps)
-        b ++= s""", ${p}r$j AS (
-                 | SELECT a.id, b.ptr FROM ${p}r${j - 1} a
-                 | JOIN ${p}r${j - 1} b ON b.id = a.ptr
-                 |)""".stripMargin
-      b.toString
-    }
     val b = new StringBuilder(cte)
     b ++= s""", ids AS (
              | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
@@ -4251,7 +4150,7 @@ object Analytics {
                | FROM (SELECT DISTINCT comm AS id FROM hc${l - 1}) s
                | LEFT JOIN ${p}best ON ${p}best.id = s.id
                |)""".stripMargin
-      b ++= resolve(p)
+      b ++= louvainResolveSql(p)
       b ++= s""", hc$l AS (
                | SELECT c.id, COALESCE(r.ptr, c.comm) AS comm
                | FROM hc${l - 1} c
@@ -4568,11 +4467,17 @@ object Analytics {
     // sums. Same (level, ca, cb, w) multiset per level, same integers.
     val maps = louvainLevelMaps(s, dir)
     val idx = maps.indices
-    val levelsW = maps.zipWithIndex
-      .map { case (m, i) => m.toDF("id", s"c$i") }
-      .reduce((x, y) => x.join(gated(y, n), Seq("id")))
-      .localCheckpoint(eager = true) // read by the edge pass + counts
-    try {
+    withCheckpoints { ck =>
+      // read by the edge pass + counts. The inner reduce-join keeps a
+      // node only if EVERY level map holds it, so it is total only
+      // because each louvainLevelMaps entry covers every node id; the
+      // count that materializes the checkpoint checks that.
+      val levelsW = ck.lazily(maps.zipWithIndex
+        .map { case (m, i) => m.toDF("id", s"c$i") }
+        .reduce((x, y) => x.join(gated(y, n), Seq("id"))))
+      val covered = rowCount(levelsW)
+      require(covered == n,
+        s"hierarchy level maps cover $covered of $n nodes")
       val caW = gated(levelsW.toDF(("a" +: idx.map(i => s"ca$i")): _*), n)
       val cbW = gated(levelsW.toDF(("b" +: idx.map(i => s"cb$i")): _*), n)
       val per = undW
@@ -4601,7 +4506,7 @@ object Analytics {
         .select(col("level"), col("n_communities"), col("q_ppm"))
         .orderBy("level")
         .localCheckpoint(eager = true)
-    } finally graft.model.PropertyGraph.freeLocalCheckpoint(levelsW)
+    }
   }
 
   val hierarchyCurveSql: String = {
@@ -4775,20 +4680,6 @@ object Analytics {
   }
 
   val resolutionSweepSql: String = {
-    def resolve(p: String): String = {
-      val b = new StringBuilder(
-        s""", ${p}hk AS (
-           | SELECT h.id, CASE WHEN h2.ptr = h.id THEN least(h.id, h.ptr)
-           |  ELSE h.ptr END AS ptr
-           | FROM ${p}hook h JOIN ${p}hook h2 ON h2.id = h.ptr
-           |), ${p}r0 AS (SELECT id, ptr FROM ${p}hk)""".stripMargin)
-      for (j <- 1 to louvainJumps)
-        b ++= s""", ${p}r$j AS (
-                 | SELECT a.id, b.ptr FROM ${p}r${j - 1} a
-                 | JOIN ${p}r${j - 1} b ON b.id = a.ptr
-                 |)""".stripMargin
-      b.toString
-    }
     val b = new StringBuilder(cte)
     b ++= s""", ids AS (
              | SELECT label, key, $nodeIdSqlExpr AS id FROM nodes
@@ -4820,7 +4711,7 @@ object Analytics {
                | SELECT ids.id, COALESCE(${p}best.c, ids.id) AS ptr
                | FROM ids LEFT JOIN ${p}best ON ${p}best.id = ids.id
                |)""".stripMargin
-      b ++= resolve(p)
+      b ++= louvainResolveSql(p)
       b ++= s""", ${p}c AS (
                | SELECT id, ptr AS comm FROM ${p}r$louvainJumps
                |), ${p}st AS (
@@ -5383,35 +5274,23 @@ object Analytics {
       .orderBy("hop")
   }
 
-  val effectiveDiameterSql: String = {
-    val b = new StringBuilder(cte)
-    b ++= anfSketchCtesSql
-    for (r <- 1 to anfRounds) {
-      b ++= s""", est$r AS (
-               | SELECT CAST($r AS BIGINT) AS hop,
-               |  CAST(sum(CASE WHEN n_sketch < $anfK THEN n_sketch
-               |   ELSE ${(anfK - 1).toLong * anfM} // greatest(1, hk) END)
-               |   AS BIGINT) AS n_pairs_est
-               | FROM (SELECT id, count(*) AS n_sketch, max(h) AS hk
-               |       FROM sk$r GROUP BY id)
-               |)""".stripMargin
-    }
-    b ++= s""", curve AS (
-             |${(1 to anfRounds).map(r => s" SELECT hop, n_pairs_est FROM est$r").mkString(" UNION ALL\n")}
-             |), cov AS (
-             | SELECT hop, n_pairs_est,
-             |  CAST((n_pairs_est * 1000000) //
-             |   (SELECT n_pairs_est FROM curve ORDER BY hop DESC LIMIT 1)
-             |   AS BIGINT) AS coverage_ppm
-             | FROM curve
-             |)
-             |SELECT hop, n_pairs_est, coverage_ppm,
-             | CAST(CASE WHEN hop = (SELECT min(hop) FROM cov
-             |   WHERE coverage_ppm >= 900000) THEN 1 ELSE 0 END AS BIGINT)
-             |   AS is_effective
-             |FROM cov ORDER BY hop""".stripMargin
-    b.toString
-  }
+  /** Oracle: g_neighborhood_function's query as the curve subquery (the
+    * ccSizeHistogramSql shape), then the same coverage and 90 % cut. */
+  lazy val effectiveDiameterSql: String =
+    s"""WITH curve AS (
+       | SELECT hop, n_pairs_est FROM ($neighborhoodFunctionSql)
+       |), cov AS (
+       | SELECT hop, n_pairs_est,
+       |  CAST((n_pairs_est * 1000000) //
+       |   (SELECT n_pairs_est FROM curve ORDER BY hop DESC LIMIT 1)
+       |   AS BIGINT) AS coverage_ppm
+       | FROM curve
+       |)
+       |SELECT hop, n_pairs_est, coverage_ppm,
+       | CAST(CASE WHEN hop = (SELECT min(hop) FROM cov
+       |   WHERE coverage_ppm >= 900000) THEN 1 ELSE 0 END AS BIGINT)
+       |   AS is_effective
+       |FROM cov ORDER BY hop""".stripMargin
 
   // ---------------------------------------------------------------- g_mst
   /** MINIMUM SPANNING FOREST via BORŮVKA — the canonical parallel MST

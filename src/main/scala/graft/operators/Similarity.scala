@@ -2865,12 +2865,16 @@ object Similarity {
         .join(ex, Seq("probe_id", "cand_id"), "left_semi")
         .groupBy("beam").agg(count(lit(1)).as("hits"))
       // left join from the config spine: a beam whose walk missed the
-      // exact set entirely still emits its row (hits = 0)
+      // exact set entirely still emits its row (hits = 0). `hits` has at
+      // most one row per beam and is broadcast from the plan's start: as
+      // a sort-merge join, AQE's re-plan to a broadcast raced the
+      // spine's shuffle and the job count varied between calls
       ex.sparkSession.range(0, 1)
         .select(explode(array(beamSweep.map(b => lit(b.toLong)): _*))
           .as("beam"))
         .crossJoin(ex.agg(count(lit(1)).as("n_exact"))) // 1-row scalar
-        .join(hits, Seq("beam"), "left_outer")
+        .join(PropertyGraph.gated(hits, beamSweep.size), Seq("beam"),
+          "left_outer")
         .select(col("beam"), col("n_exact"),
           coalesce(col("hits"), lit(0L)).as("hits"))
         .orderBy("beam")

@@ -284,15 +284,32 @@ class Round5Spec extends AnyFunSuite {
     // its joins must plan as broadcasts; past it the hints must drop
     import spark.implicits._
     val und = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
-    val dist = Seq((1L, 0)).toDF("id", "depth")
-    val frontier = dist.select("id")
-    val plan = Analytics.bfsLevelStep(und, frontier, dist, 1L, 1)
+    val vis = Seq((1L, 1L, 0)).toDF("seed", "node", "d")
+    val plan = Analytics.bfsLevel(und, vis, vis, 1L, 1)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"gated frontier broadcast missing at small scale:\n$plan")
-    val ungated = Analytics.bfsLevelStep(und, frontier, dist, 500001L, 1)
+    val ungated = Analytics.bfsLevel(und, vis, vis, 500001L, 1)
       .queryExecution.optimizedPlan.toString
     assert(!ungated.toLowerCase.contains("broadcast"),
       s"level step past the cap still hints broadcast:\n$ungated")
+  }
+
+  test("multiSourceBfs: a seeds x nodes bound past the cap drops the hints") {
+    // the multi-seed consumers gate on seeds × nodes: 25 nation seeds
+    // over 18,630 nodes (sf0.01) stay under the 500k cap, over 20,001
+    // nodes they pass it and the level plans without a broadcast hint
+    import spark.implicits._
+    val und = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
+    val vis = Seq((1L, 1L, 0), (3L, 3L, 0)).toDF("seed", "node", "d")
+    val under = Analytics.bfsLevel(und, vis, vis, 25L * 18630L, 1)
+    assert(under.queryExecution.optimizedPlan.toString.toLowerCase
+      .contains("broadcast"), "bound under the cap lost its hints")
+    val over = Analytics.bfsLevel(und, vis, vis, 25L * 20001L, 1)
+    val plan = over.queryExecution.optimizedPlan.toString
+    assert(!plan.toLowerCase.contains("broadcast"),
+      s"multi-seed bound past the cap still hints broadcast:\n$plan")
+    assert(over.as[(Long, Long, Int)].collect().toSet ==
+      Set((1L, 2L, 1), (3L, 1L, 1)), "level rows changed with the gate")
   }
 }
